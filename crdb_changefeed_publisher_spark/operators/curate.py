@@ -369,8 +369,7 @@ def curate_corpus(
     output for these docs (must carry doc_id + contamination) — the
     corpus-wide 8-gram pass is the expensive stage, and a production run
     computes it once per corpus snapshot and feeds every consumer
-    (plans/llm.py persists one per session/sf_dir, shared with the
-    standalone doc_decontamination query)."""
+    (plans/llm.py persists one per session/sf_dir)."""
     quotas = DEFAULT_LANG_QUOTAS if lang_quotas is None else lang_quotas
 
     # gate 1: exact dedup — canonical copy = min doc_id per exact text.

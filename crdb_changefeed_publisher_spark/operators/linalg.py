@@ -5,7 +5,7 @@ like the Gram matrix X^T X, the dimension sums, and the covariance are tiny
 (d=64 -> 4096 numbers) while X is the 100 TB side — so each partition GEMMs
 its own rows into a local d x d partial (numpy, Arrow-batched) and only the
 partials are shuffled. The wire cost is (partitions * d^2) rows, independent
-of corpus size; this is exactly how IVF/PQ/PCA/whitening training reads a
+of corpus size; this is exactly how IVF/PCA/whitening training reads a
 petabyte corpus once.
 """
 
@@ -23,98 +23,6 @@ from pyspark.sql import functions as F
 # sentinel index used to multiplex dimension-sum rows (j == SUMS) and the
 # row-count row (i == j == SUMS) through the same (i, j, val) partial stream
 _SUMS = -1
-
-
-def pca_project(
-    emb: DataFrame,
-    components: list[list[float]],
-    mean: list[float],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Project each vector onto frozen PCA components (mean-centered):
-    ``p_c = sum_i v_i * comp_c_i - offset_c`` with the offset
-    ``sum_i mean_i * comp_c_i`` precomputed in Python and embedded as ONE
-    literal — the projection is a per-row codegen expression (64 explicit
-    multiply-adds per component, no interpreted lambda, no Python worker),
-    so dimensionality reduction of a 100 TB embedding corpus is a pure map
-    over the scan.
-
-    Components come from tools/train_pca.py (covariance via the one-pass
-    distributed Gram reduction, d x d eigh on the driver, frozen literals
-    shared with the oracle — the learned-codebook convention)."""
-    outs = []
-    for c_idx, comp in enumerate(components):
-        off = float(sum(m * c for m, c in zip(mean, comp)))
-        term = F.lit(0.0)
-        for i, c in enumerate(comp):
-            term = term + F.element_at(F.col(vec_col), i + 1).cast("double") * F.lit(c)
-        outs.append(F.round(term - F.lit(off), 4).alias(f"p{c_idx}"))
-    return emb.select(id_col, *outs)
-
-
-def pca_prefilter_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    components: list[list[float]],
-    mean: list[float],
-    k: int = 5,
-    n_candidates: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN with PCA prefiltering: candidates are the `n_candidates` nearest
-    per query in the k'-dim PROJECTED space (squared L2 on the codegen
-    projections — 4 dims instead of 64, so the coarse distance costs ~6%
-    of a full cosine and the scan reads 4 doubles/vector, not the
-    embedding), then exact cosine reranks the bounded candidate set.
-
-    Determinism contract (what keeps an approximate index value-verified):
-    coarse distances round to 6 with an id tiebreak, so the CANDIDATE SET
-    is reproducible on any engine; the rerank rounds + tiebreaks the same
-    way. Candidate recall is a function of how much variance the frozen
-    components capture — at scale the projected table is the thing you
-    store sorted/clustered, and n_candidates dials recall vs rerank cost.
-
-    Output matches the other top-k operators: (query_id, neighbor_id,
-    score, rnk).
-    """
-    from pyspark.sql import Window
-
-    from crdb_changefeed_publisher_spark.functions.vectors import as_double, cosine_arrow
-
-    kk = len(components)
-    qp = pca_project(queries, components, mean, vec_col, id_col).select(
-        F.col(id_col).alias("query_id"), *[F.col(f"p{i}").alias(f"q{i}") for i in range(kk)]
-    )
-    cp = pca_project(corpus, components, mean, vec_col, id_col)
-    d = None
-    for i in range(kk):
-        t = (F.col(f"q{i}") - F.col(f"p{i}")) * (F.col(f"q{i}") - F.col(f"p{i}"))
-        d = t if d is None else d + t
-    cand = (
-        cp.join(F.broadcast(qp), F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), F.round(d, 6).alias("dpca"))
-    )
-    w_c = Window.partitionBy("query_id").orderBy(F.col("dpca").asc(), F.col("neighbor_id").asc())
-    topc = (
-        cand.withColumn("crnk", F.row_number().over(w_c))
-        .filter(F.col("crnk") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qe"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("ce"))
-    scored = (
-        topc.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine_arrow(F.col("qe"), F.col("ce")).alias("score"))
-    )
-    w_r = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w_r))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score", "rnk")
-    )
 
 
 def quantize_vec(vec, scale: int = 1024):
@@ -423,9 +331,8 @@ def kmeans_train(
 ) -> list[list[int]]:
     """Distributed Lloyd k-means in EXACT INTEGER arithmetic — the learned
     clustering is deterministic and engine-exact, so even the training
-    loop is oracle-verifiable (the property that lets the frozen-codebook
-    convention in functions/codebooks.py be replaced by in-engine
-    training at scale).
+    loop is oracle-verifiable (the property that lets in-engine training
+    replace frozen-literal codebooks at scale).
 
     Scheme: quantize components to ``floor(x * scale)`` (int64), seed k
     centroids by hash order (kmeans_seeds), then per iteration one
@@ -567,13 +474,16 @@ def kmeans_train_two_level(
     if cents1 is None:
         cents1 = kmeans_train(emb, k=k1, n_iters=n_iters, scale=scale,
                               vec_col=vec_col, id_col=id_col)
-    elif len(cents1) != k1:
+    elif len(cents1) != min(k1, n):
         # r14: callers may hand in level-1 cells trained elsewhere (the
         # fused kmeans_train_multi pass) — but ONLY the dial-sized set;
-        # a mismatched k1 would silently change cell populations.
+        # a mismatched k1 would silently change cell populations. A
+        # corpus smaller than the dial seeds one cell per vector
+        # (kmeans_seeds returns at most n rows), as the internal
+        # trainer does.
         raise ValueError(
             f"kmeans_train_two_level: provided cents1 has {len(cents1)} "
-            f"cells but kmeans_k1_for(n={n}) = {k1}"
+            f"cells but min(kmeans_k1_for(n={n}), n) = {min(k1, n)}"
         )
 
     # tag each vector with its coarse cell IN the scan that reads it —
@@ -818,7 +728,7 @@ def kmeans_assign_two_level(
     tag-pass pattern), then COGROUPED with the codebook on the cell
     key: one full-corpus exchange — the same exchange the level-2
     trainer pays, and at write time it IS the (cell, sub)-partitioned
-    index layout (tools/build_ann_index.py) — while the codebook
+    index layout (similarity.build_two_level_index) — while the codebook
     shuffles alongside as k_total tiny rows. The closure-collect form
     this replaces pickled the whole codebook into every task (~134 MB
     per task at the 50M point) and capped out where the driver's memory

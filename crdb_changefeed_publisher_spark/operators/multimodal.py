@@ -48,13 +48,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = "media_id long, kind string, n_bytes int, feature array<float>"
-# double variant for oracle-compared paths: float32 quantization of k/997
-# values lands within rounding distance of 4-decimal boundaries often
-# enough to flip value hashes
-FEATURE_SCHEMA_F64 = "media_id long, kind string, n_bytes int, feature array<double>"
-
-
 def synthetic_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table for plumbing tests: payload bytes are a
     seeded function of media_id (stands in for real image/audio blobs)."""
@@ -266,68 +259,6 @@ def decode_compressed(payload: bytes, mime: str) -> "object":  # pragma: no cove
     """Compressed-media boundary — JPEG/PNG/MP3/H.264 decode requires codec
     libraries (Pillow/ffmpeg) that are not available in this container."""
     raise NotImplementedError(f"no codec library available for {mime}")
-
-
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a decoded-media feature vector: bytes are
-    summed into `dim` buckets mod 997. This scalar form is the semantic
-    reference (and what the DuckDB oracle reproduces); the hot path is the
-    batch-vectorized `_fake_features_batch` below. Replace with real
-    decode+embed when codecs are available."""
-    acc = [0] * dim
-    for i, b in enumerate(payload or b""):
-        acc[i % dim] = (acc[i % dim] + b) % 997
-    return [v / 997.0 for v in acc]
-
-
-def _fake_features_batch(payloads: "pd.Series", dim: int = 8) -> "np.ndarray":
-    """Whole-Arrow-batch formulation of `_fake_feature`: concatenate the
-    batch's payload bytes once, then one bincount over composite buckets
-    (row * dim + position % dim). Identical values to the scalar form —
-    (a+b) % m applied per step equals sum % m, and float64 sums of byte
-    values are exact far beyond any realistic payload size. No per-row or
-    per-byte Python."""
-    n = len(payloads)
-    lens = np.fromiter(
-        (len(p) if p is not None else 0 for p in payloads), dtype=np.int64, count=n
-    )
-    total = int(lens.sum())
-    if total == 0:
-        return np.zeros((n, dim), dtype=np.float64)
-    data = np.frombuffer(b"".join(p for p in payloads if p), dtype=np.uint8)
-    row = np.repeat(np.arange(n, dtype=np.int64), lens)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    pos = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-    buckets = row * dim + (pos % dim)
-    acc = np.bincount(buckets, weights=data, minlength=n * dim)
-    return (acc.reshape(n, dim) % 997) / 997.0
-
-
-def extract_features(
-    media: DataFrame, batch_size_hint: int = 256, feature_type: str = "float"
-) -> DataFrame:
-    """Arrow-batched feature extraction over the payload column.
-
-    mapInPandas keeps the blobs executor-side in Arrow batches; the returned
-    features are small, so everything downstream (similarity joins, dedup)
-    operates on compact vectors. `feature_type="double"` for oracle-compared
-    paths (see FEATURE_SCHEMA_F64).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = _fake_features_batch(pdf["payload"])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "feature": list(feats),
-                }
-            )
-
-    schema = FEATURE_SCHEMA_F64 if feature_type == "double" else FEATURE_SCHEMA
-    return media.mapInPandas(run, schema)
 
 
 # Deterministic real-media fixture parameters — shared by media_payloads,

@@ -313,8 +313,9 @@ def repetition_signals(
     # moves to the scan side, so the split+explode runs at session width
     # instead of the scan's (one task on a single-row-group fixture file)
     # and the exchange carries whole texts instead of word rows. Exchange
-    # count unchanged; no-op on a production-width scan.
-    words = fan_out_scan(docs.select(id_col, text_col), id_col).select(
+    # count unchanged. always=True because the window needs this exchange
+    # whatever the input width: the byte-sized width would narrow it.
+    words = fan_out_scan(docs.select(id_col, text_col), id_col, always=True).select(
         F.col(id_col).alias("doc_id"),
         F.length(F.trim(F.col(text_col))).alias("n_chars"),
         F.posexplode(F.split(F.trim(F.col(text_col)), " ")).alias("pos", "w0"),

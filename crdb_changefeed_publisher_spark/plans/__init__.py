@@ -17,7 +17,6 @@ from crdb_changefeed_publisher_spark.plans import (  # noqa: F401,E402
     cdc,
     events,
     extra,
-    funcs2,
     llm,
     realism,
     scalar,

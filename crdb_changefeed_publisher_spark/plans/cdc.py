@@ -103,46 +103,6 @@ def cdc_resolved_cursors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "cdc_envelopes_orders",
-    retired=True,  # second-table fan-out; cdc_envelopes + fan-out stats are registered
-    oracle="""
-    WITH wire AS (
-        SELECT 'orders' AS "table",
-               '[' || CAST(o_orderkey AS VARCHAR) || ']' AS key,
-               '{"after": {"o_orderkey": ' || CAST(o_orderkey AS VARCHAR)
-                  || ', "o_custkey": ' || CAST(o_custkey AS VARCHAR)
-                  || ', "o_orderdate": "' || strftime(o_orderdate, '%Y-%m-%d') || '"}}' AS value
-        FROM orders WHERE o_orderkey % 10 = 0
-    )
-    SELECT '{"table":"' || "table" || '","key":"' || key || '","value":' || value || '}'
-               AS envelope
-    FROM wire
-    """,
-    doc="Envelope pipeline over a second watched table (orders) — the "
-    "multi-table fan-out the reference cannot do (single --table by "
-    "construction, cli.yml:6-9); one pipeline instance per table here "
-    "shares all the transform code.",
-)
-def cdc_envelopes_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    wire = o.select(
-        F.lit("orders").alias("table"),
-        F.concat(F.lit("["), F.col("o_orderkey").cast("string"), F.lit("]")).alias("key"),
-        F.concat(
-            F.lit('{"after": {"o_orderkey": '),
-            F.col("o_orderkey").cast("string"),
-            F.lit(', "o_custkey": '),
-            F.col("o_custkey").cast("string"),
-            F.lit(', "o_orderdate": "'),
-            F.date_format("o_orderdate", "yyyy-MM-dd"),
-            F.lit('"}}'),
-        ).alias("value"),
-    )
-    envelopes, _ = changefeed_pipeline(wire)
-    return envelopes
-
-
-@query(
     "cdc_change_counts_by_table",
     oracle=f"""
     WITH wire AS ({_WIRE_SQL})

@@ -168,43 +168,6 @@ def events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "asof_purchase_last_click",
-    retired=True,  # ranked-join variant; the merge_asof scale form is registered
-    oracle=ASOF_ORACLE,
-    doc="As-of join (declarative form): ranked inequality join; Catalyst "
-    "plans it as a shuffled join + per-key top-1 window.",
-)
-def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_event_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    w = Window.partitionBy("p_event_id").orderBy(F.col("c_ts").desc(), F.col("click_event_id").desc())
-    return (
-        p.join(c, (F.col("c_user") == F.col("p_user")) & (F.col("c_ts") < F.col("p_ts")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "p_event_id",
-            "click_event_id",
-            (
-                F.floor(
-                    (F.unix_micros("p_ts") - F.unix_micros("c_ts") + F.lit(500)) / 1000
-                )
-                / F.lit(1000.0)
-            ).alias("gap_seconds"),
-        )
-    )
-
-
-@query(
     "asof_purchase_last_click_merge",
     oracle=ASOF_ORACLE,
     doc="As-of join (scale form): repartition both sides by user_id, then ONE "
@@ -371,123 +334,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crdb_changefeed_publisher_spark.operators.funnel import funnel_counts
 
     return funnel_counts(load_table(spark, sf_dir, "events"), ["view", "click", "purchase"])
-
-
-@query(
-    "events_funnel_windowed",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle="""
-    WITH s1 AS (
-        SELECT user_id, min(ts) AS t FROM events WHERE event_type = 'signup' GROUP BY 1
-    ),
-    s2 AS (
-        SELECT e.user_id, min(e.ts) AS t
-        FROM events e JOIN s1 p ON p.user_id = e.user_id
-        WHERE e.event_type = 'view' AND e.ts > p.t
-          AND epoch_us(e.ts) - epoch_us(p.t) <= 604800000000
-        GROUP BY 1
-    ),
-    s3 AS (
-        SELECT e.user_id, min(e.ts) AS t
-        FROM events e JOIN s2 p ON p.user_id = e.user_id
-        WHERE e.event_type = 'click' AND e.ts > p.t
-          AND epoch_us(e.ts) - epoch_us(p.t) <= 604800000000
-        GROUP BY 1
-    ),
-    s4 AS (
-        SELECT e.user_id, min(e.ts) AS t
-        FROM events e JOIN s3 p ON p.user_id = e.user_id
-        WHERE e.event_type = 'purchase' AND e.ts > p.t
-          AND epoch_us(e.ts) - epoch_us(p.t) <= 604800000000
-        GROUP BY 1
-    )
-    SELECT 1 AS step, 'signup' AS event_type, count(*) AS users FROM s1
-    UNION ALL SELECT 2, 'view', count(*) FROM s2
-    UNION ALL SELECT 3, 'click', count(*) FROM s3
-    UNION ALL SELECT 4, 'purchase', count(*) FROM s4
-    """,
-    doc="Gap-windowed 4-step funnel (signup -> view -> click -> purchase, "
-    "each step within 7 days of the previous): the parameterized form of "
-    "events_funnel — greedy earliest-qualifying semantics (the standard "
-    "windowFunnel trade, documented), N chained partial-agg min(ts) "
-    "passes, exact integer-microsecond gap predicate "
-    "(operators/funnel.py::funnel_counts).",
-)
-def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.operators.funnel import funnel_counts
-
-    return funnel_counts(
-        load_table(spark, sf_dir, "events"),
-        ["signup", "view", "click", "purchase"],
-        max_gap_seconds=7 * 86400,
-    )
-
-
-@query(
-    "events_retention_cohorts",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle="""
-    WITH cohort AS (
-        SELECT user_id,
-               CAST(epoch_us(min(ts)) // (86400000000 * 7) AS BIGINT) AS cohort_week
-        FROM events WHERE event_type = 'signup' GROUP BY 1
-    ),
-    activity AS (
-        SELECT DISTINCT e.user_id, c.cohort_week,
-               CAST(epoch_us(e.ts) // (86400000000 * 7) AS BIGINT) - c.cohort_week
-                   AS week_offset
-        FROM events e JOIN cohort c ON c.user_id = e.user_id
-        WHERE epoch_us(e.ts) // (86400000000 * 7) >= c.cohort_week
-    ),
-    sizes AS (SELECT cohort_week, count(*) AS cohort_users FROM cohort GROUP BY 1)
-    SELECT a.cohort_week, a.week_offset,
-           count(*) AS active_users,
-           s.cohort_users,
-           round(count(*) / CAST(s.cohort_users AS DOUBLE), 4) AS retention
-    FROM activity a JOIN sizes s ON s.cohort_week = a.cohort_week
-    GROUP BY a.cohort_week, a.week_offset, s.cohort_users
-    """,
-    doc="Cohort retention: users grouped by first-signup epoch-week, then "
-    "the share of each cohort active in week N after signup. Shapes: one "
-    "partial-agg min per user for cohort assignment, a distinct on (user, "
-    "week) — both shuffle on user_id and reuse the exchange — and a "
-    "broadcast-size cohort-sizes join; epoch-week arithmetic is exact "
-    "integer division on both engines (plans/events.py).",
-)
-def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    week_us = 86400000000 * 7
-    week = lambda c: F.floor(F.unix_micros(c) / week_us).cast("long")  # noqa: E731
-    cohort = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(week(F.min("ts")).alias("cohort_week"))
-    )
-    activity = (
-        ev.join(cohort, "user_id")
-        .filter(week(F.col("ts")) >= F.col("cohort_week"))
-        .select(
-            "user_id",
-            "cohort_week",
-            (week(F.col("ts")) - F.col("cohort_week")).alias("week_offset"),
-        )
-        .distinct()
-    )
-    sizes = cohort.groupBy("cohort_week").agg(F.count(F.lit(1)).alias("cohort_users"))
-    return (
-        activity.groupBy("cohort_week", "week_offset")
-        .agg(F.count(F.lit(1)).alias("active_users"))
-        .join(F.broadcast(sizes), "cohort_week")
-        .select(
-            "cohort_week",
-            "week_offset",
-            "active_users",
-            "cohort_users",
-            F.round(F.col("active_users") / F.col("cohort_users").cast("double"), 4).alias(
-                "retention"
-            ),
-        )
-    )
 
 
 @query(

@@ -17,53 +17,6 @@ from crdb_changefeed_publisher_spark.tables import load_table
 
 
 @query(
-    "pivot_returnflag_linestatus",
-    retired=True,  # r8 swap: pivot shape stays value-verified in pytest;
-    # q1_pricing_summary + part_type_brand_cube cover the wide-agg surface
-    oracle="""
-    SELECT l_returnflag,
-           round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS "O",
-           round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS "F"
-    FROM lineitem GROUP BY l_returnflag
-    """,
-    doc="Pivot (wide aggregation); with explicit pivot values Spark plans a "
-    "single-pass aggregate, no extra job to discover values.",
-)
-def pivot_returnflag_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    return (
-        l.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-    )
-
-
-@query(
-    "left_join_order_counts",
-    retired=True,  # r6 swap: outer-join family keeps full_outer_nation_activity
-    oracle="""
-    SELECT c.c_custkey,
-           count(o.o_orderkey)                         AS n_orders,
-           round(coalesce(sum(o.o_totalprice), 0), 2)  AS total_spend
-    FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey
-    """,
-    doc="Left outer join preserving customers with zero orders.",
-)
-def left_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.join(o, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("total_spend"),
-        )
-    )
-
-
-@query(
     "full_outer_nation_activity",
     oracle="""
     WITH cn AS (SELECT c_nationkey AS nk, count(*) AS n_customers FROM customer GROUP BY 1),
@@ -84,154 +37,6 @@ def full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("cnk", "snk").alias("nationkey"),
         F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
         F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
-    )
-
-
-@query(
-    "orders_above_avg",
-    retired=True,  # registry cap: its scalar-subquery/broadcast-cross-join
-    # pattern is also exercised inside doc_perplexity_proxy's corpus total;
-    # slot goes to corpus_curation_report (r4 verdict #5)
-    oracle="""
-    SELECT o_orderkey, o_totalprice
-    FROM orders
-    WHERE o_totalprice > (SELECT round(avg(o_totalprice), 2) FROM orders)
-    """,
-    doc="Scalar subquery via broadcast cross join (no global window — that "
-    "would single-partition at scale). Avg rounded before comparing so the "
-    "boundary is engine-stable.",
-)
-def orders_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    avg_df = o.agg(F.round(F.avg("o_totalprice"), 2).alias("avg_price"))
-    return (
-        o.crossJoin(F.broadcast(avg_df))
-        .filter(F.col("o_totalprice") > F.col("avg_price"))
-        .select("o_orderkey", "o_totalprice")
-    )
-
-
-@query(
-    "grouping_sets_revenue",
-    retired=True,  # grouping-sets surface; ROLLUP/CUBE registered queries cover the family
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_extendedprice), 2) AS revenue,
-           CAST(grouping(l_returnflag) AS INT)  AS g_flag,
-           CAST(grouping(l_linestatus) AS INT)  AS g_status
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-    doc="Explicit GROUPING SETS with grouping() indicators (SQL surface).",
-)
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_extendedprice), 2) AS revenue,
-               CAST(grouping(l_returnflag) AS INT)  AS g_flag,
-               CAST(grouping(l_linestatus) AS INT)  AS g_status
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
-
-
-@query(
-    "order_price_percentiles",
-    retired=True,  # r9 swap round 6: subsumed by order_price_quantile_sketch
-    oracle="""
-    SELECT o_orderpriority,
-           round(quantile_cont(o_totalprice, 0.25), 2) AS p25,
-           round(quantile_cont(o_totalprice, 0.50), 2) AS p50,
-           round(quantile_cont(o_totalprice, 0.75), 2) AS p75
-    FROM orders GROUP BY o_orderpriority
-    """,
-    doc="Continuous percentiles (linear interpolation on both engines). "
-    "Exact percentile needs a per-group sort; approx_percentile is the "
-    "documented swap at extreme scale.",
-)
-def order_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.percentile("o_totalprice", F.lit(0.25)), 2).alias("p25"),
-        F.round(F.percentile("o_totalprice", F.lit(0.50)), 2).alias("p50"),
-        F.round(F.percentile("o_totalprice", F.lit(0.75)), 2).alias("p75"),
-    )
-
-
-@query(
-    "lineitem_stats_agg",
-    retired=True,  # swapped out r7 for kmv_shard_distinct; stat aggs stay oracle-verified here
-    oracle="""
-    SELECT l_returnflag,
-           round(stddev_samp(l_extendedprice), 2)             AS price_stddev,
-           round(var_samp(l_discount), 6)                     AS disc_var,
-           round(corr(l_extendedprice, l_quantity), 4)        AS price_qty_corr,
-           round(covar_samp(l_extendedprice, l_quantity), 2)  AS price_qty_covar
-    FROM lineitem GROUP BY l_returnflag
-    """,
-    doc="Statistical aggregates: stddev/variance/correlation/covariance.",
-)
-def lineitem_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.round(F.stddev_samp("l_extendedprice"), 2).alias("price_stddev"),
-        F.round(F.var_samp("l_discount"), 6).alias("disc_var"),
-        F.round(F.corr("l_extendedprice", "l_quantity"), 4).alias("price_qty_corr"),
-        F.round(F.covar_samp("l_extendedprice", "l_quantity"), 2).alias("price_qty_covar"),
-    )
-
-
-@query(
-    "order_ship_latency",
-    retired=True,  # r7 swap: date-diff microquery; date surface kept by
-    # date_funcs_orders (retired oracle) + events/asof rows
-    oracle="""
-    SELECT o.o_orderpriority,
-           round(avg(date_diff('day', CAST(o.o_orderdate AS DATE),
-                               CAST(l.l_shipdate AS DATE))), 2) AS avg_latency_days,
-           max(date_diff('day', CAST(o.o_orderdate AS DATE),
-                         CAST(l.l_shipdate AS DATE)))           AS max_latency_days
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderpriority
-    """,
-    doc="Date arithmetic (calendar-day difference) across a join.",
-)
-def order_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    latency = F.datediff(F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date"))
-    return (
-        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.round(F.avg(latency), 2).alias("avg_latency_days"),
-            F.max(latency).cast("long").alias("max_latency_days"),
-        )
-    )
-
-
-@query(
-    "best_order_per_customer",
-    retired=True,  # argmax-via-join variant; window top-k form is registered
-    oracle="""
-    WITH m AS (SELECT o_custkey, max(o_totalprice) AS best_price FROM orders GROUP BY 1)
-    SELECT m.o_custkey, m.best_price, min(o.o_orderkey) AS best_orderkey
-    FROM m JOIN orders o ON o.o_custkey = m.o_custkey AND o.o_totalprice = m.best_price
-    GROUP BY m.o_custkey, m.best_price
-    """,
-    doc="Argmax via self-join-back (two partial aggregates + one equi-join) "
-    "— the shuffle-bounded alternative to a ranking window.",
-)
-def best_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    m = o.groupBy(F.col("o_custkey").alias("mk")).agg(F.max("o_totalprice").alias("best_price"))
-    return (
-        o.join(m, (F.col("o_custkey") == F.col("mk")) & (F.col("o_totalprice") == F.col("best_price")))
-        .groupBy("o_custkey", "best_price")
-        .agg(F.min("o_orderkey").alias("best_orderkey"))
     )
 
 
@@ -618,127 +423,4 @@ def bloom_semijoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return bloom.bloom_semijoin_stats(
         li, orders, "l_orderkey", "o_orderkey", "l_returnflag"
-    )
-
-
-_REACHABILITY_SQL = """
-WITH RECURSIVE
-trade AS (
-    SELECT DISTINCT s.s_nationkey AS src, c.c_nationkey AS dst
-    FROM {lineitem} l
-    JOIN {orders} o ON o.o_orderkey = l.l_orderkey
-    JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
-    JOIN {customer} c ON c.c_custkey = o.o_custkey
-    WHERE s.s_nationkey <> c.c_nationkey
-),
-ud AS (SELECT src, dst FROM trade UNION SELECT dst, src FROM trade),
-reach(node, hops) AS (
-    SELECT CAST(0 AS BIGINT) AS node, 0 AS hops
-    UNION ALL
-    SELECT ud.dst, r.hops + 1
-    FROM reach r JOIN ud ON ud.src = r.node
-    WHERE r.hops < 3
-)
-SELECT CAST(node AS BIGINT) AS nationkey, CAST(min(hops) AS BIGINT) AS hops
-FROM reach GROUP BY node
-"""
-
-
-@query(
-    "nation_trade_reachability",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=_REACHABILITY_SQL.format(
-        lineitem="lineitem", orders="orders",
-        supplier="supplier", customer="customer",
-    ),
-    doc="ITERATIVE traversal via WITH RECURSIVE (new in Spark 4): BFS "
-    "min-hop distances from nation 0 over the cross-nation trade graph. "
-    "The corpus-sized work is the edge CONTRACTION (lineitem x orders x "
-    "dims -> distinct nation pairs, one distributed join tree with "
-    "broadcast dims); the recursion then iterates on the 25-node "
-    "contracted graph, so UNION ALL path growth is bounded by "
-    "25 * deg^3, never by corpus size — the same iterate-on-the-"
-    "contraction posture as pagerank's unrolled rounds. Spark supports "
-    "only UNION ALL in the recursive step (probed: "
-    "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), so dedup happens in the "
-    "final min() — identical multiset semantics in DuckDB.",
-)
-def nation_trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("lineitem", "orders", "supplier", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_reach")
-    return spark.sql(_REACHABILITY_SQL.format(
-        lineitem="lineitem_reach", orders="orders_reach",
-        supplier="supplier_reach", customer="customer_reach",
-    ))
-
-
-@query(
-    "lineitem_unpivot_measures",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle="""
-    WITH long AS (
-        SELECT l_returnflag, 'l_quantity' AS metric,
-               CAST(round(l_quantity * 100, 0) AS BIGINT) AS cents
-        FROM lineitem
-        UNION ALL
-        SELECT l_returnflag, 'l_extendedprice',
-               CAST(round(l_extendedprice * 100, 0) AS BIGINT) FROM lineitem
-        UNION ALL
-        SELECT l_returnflag, 'l_discount',
-               CAST(round(l_discount * 100, 0) AS BIGINT) FROM lineitem
-        UNION ALL
-        SELECT l_returnflag, 'l_tax',
-               CAST(round(l_tax * 100, 0) AS BIGINT) FROM lineitem
-    )
-    SELECT l_returnflag, metric, count(*) AS n, sum(cents) AS total_cents
-    FROM long GROUP BY 1, 2
-    """,
-    doc="UNPIVOT/melt (wide -> long) — the missing inverse of the pivot "
-    "row: four lineitem measures melt into (metric, value) pairs via "
-    "Spark's native `unpivot` (an Expand node: one scan, rows x 4, no "
-    "shuffle until the partial-agg), then aggregate per (flag, metric). "
-    "Values flow as integer CENTS (round-then-cast on both engines) so "
-    "the melted sums are order-exact; the oracle is the UNION ALL "
-    "desugaring, which is exactly what Expand computes.",
-)
-def lineitem_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    measures = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    long = li.select(
-        "l_returnflag",
-        *[F.round(F.col(m) * 100, 0).cast("long").alias(m) for m in measures],
-    ).unpivot(["l_returnflag"], measures, "metric", "cents")
-    return long.groupBy("l_returnflag", "metric").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("total_cents")
-    )
-
-
-_LATERAL_TOP_SQL = """
-    SELECT n.n_nationkey, n.n_name, t.s_name AS top_supplier,
-           round(t.s_acctbal, 2) AS acctbal
-    FROM {nation} n, LATERAL (
-        SELECT s_name, s_acctbal FROM {supplier} s
-        WHERE s.s_nationkey = n.n_nationkey
-        ORDER BY s_acctbal DESC, s_name LIMIT 1
-    ) t
-"""
-
-
-@query(
-    "lateral_top_supplier_per_nation",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=_LATERAL_TOP_SQL.format(nation="nation", supplier="supplier"),
-    doc="Correlated LATERAL join (Spark 4 SQL surface): per-nation top-1 "
-    "supplier via a correlated ORDER BY ... LIMIT 1 subquery — the "
-    "per-row-subquery SHAPE users port from Postgres/DuckDB, planned by "
-    "Catalyst as a rewritten join (no per-row re-execution; semantically "
-    "the window top-k of top_orders_per_customer). Deterministic "
-    "tiebreak (acctbal DESC, name); inner-lateral drops supplier-less "
-    "nations in both engines.",
-)
-def lateral_top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_lat")
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_lat")
-    return spark.sql(
-        _LATERAL_TOP_SQL.format(nation="nation_lat", supplier="supplier_lat")
     )

@@ -1,10 +1,10 @@
 """LLM-training-data pipeline queries: deduplication (incl. cluster
-resolution), similarity search (brute-force / SRP-LSH / IVF / PQ), text
+resolution), similarity search (brute-force / SRP-LSH / trained IVF), text
 analysis (stats, quality, perplexity proxy, chunking, fingerprints), and
 multimodal feature plumbing — each wired to the operators package, with
 engine-portable DuckDB oracles. Only `dedup_minhash_lsh` (engine-native
 xxhash64 by design) is rows-only; every other query — including the
-approximate LSH/PQ ops, via seeded+rounded literals — is value-verified.
+approximate LSH/IVF ops, via seeded+rounded literals — is value-verified.
 """
 
 from __future__ import annotations
@@ -404,50 +404,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "multimodal_fake_features",
-    retired=True,  # superseded by multimodal_real_features (actual decode);
-    # the Arrow plumbing + byte-bucket arithmetic stay pytest-oracle-tested
-    oracle="""
-    SELECT doc_id AS media_id,
-           'text' AS kind,
-           CAST(strlen(text) AS INT) AS n_bytes,
-           CAST(j AS INT) AS dim_idx,
-           round(CAST(list_sum(list_transform(range(1, length(text) + 1),
-                     i -> CASE WHEN (i - 1) % 8 = j
-                          THEN ascii(substr(text, i, 1)) ELSE 0 END)) % 997
-                 AS DOUBLE) / 997.0, 4) AS feature_val
-    FROM documents, range(0, 8) t(j)
-    """,
-    doc="Multimodal plumbing under the correctness gate: documents' text is "
-    "treated as an opaque binary payload (media frame), pushed through the "
-    "Arrow-batched mapInPandas feature extractor with the deterministic "
-    "byte-bucket stand-in feature (operators/multimodal.py::_fake_feature; "
-    "real decode is stubbed — no codec libs in this container). The oracle "
-    "reproduces the byte-bucket arithmetic per dimension, so the batch "
-    "plumbing, payload byte handling, and feature layout are all "
-    "value-verified (exploded to scalars: the value-hash compare cannot "
-    "sort array columns). ASCII payloads by fixture construction "
-    "(byte == codepoint).",
-)
-def multimodal_fake_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("text").alias("kind"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-    )
-    feats = multimodal.extract_features(media, feature_type="double")
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.posexplode(F.col("feature")).alias("dim_idx", "feature_val"),
-    ).withColumn("feature_val", F.round("feature_val", 4))
-
-
-@query(
     "multimodal_real_features",
     oracle=f"""
     WITH ids AS (SELECT doc_id AS media_id FROM documents),
@@ -782,42 +738,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.embedding_cosine_pairs(emb, threshold=0.3)
 
 
-# portable RE2/Java alternation (no lookarounds): words | numbers | single
-# non-space symbol — the BPE-pretokenizer-shaped split (counted per document
-# inside `doc_text_stats`)
-BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-@query(
-    "top_shingles_corpus",
-    retired=True,
-    oracle="""
-    WITH words AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-    grams AS (
-        SELECT unnest(list_transform(range(1, greatest(len(w) - 1, 1)),
-                      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-        FROM words
-    )
-    SELECT shingle, count(*) AS n_occurrences
-    FROM grams GROUP BY shingle
-    ORDER BY n_occurrences DESC, shingle
-    LIMIT 20
-    """,
-    doc="Corpus-level top-20 word trigrams: explode (lateral) + aggregate + "
-    "deterministic top-k — the explode/flatten surface at scale (partial "
-    "counts map-side, TakeOrdered for the limit).",
-)
-def top_shingles_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        dedup.shingle_rows(docs)  # duplicates preserved => true occurrence counts
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), "shingle")
-        .limit(20)
-    )
-
-
 @query(
     "doc_repetition_signals",
     oracle="""
@@ -871,8 +791,7 @@ def top_shingles_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "catches boilerplate/looping text. One scan builds all five gram sizes "
     "(flatten of transforms), one explode, one partial-agg shuffle on "
     "(doc_id, n, gram); windows and pivots stay doc-keyed "
-    "(operators/text.py::repetition_signals). Replaces the retired "
-    "top_shingles_corpus as the registered explode/flatten surface.",
+    "(operators/text.py::repetition_signals).",
 )
 def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1107,344 +1026,7 @@ def embedding_topk_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- learned (Spark ML KMeans) codebooks, frozen as literals -----------------
-# Trained once by tools/train_codebooks.py; the SAME constants parameterize
-# the Spark plans and the DuckDB oracles (the srp_planes pattern), so the
-# learned-ANN queries stay value-verifiable at any scale factor.
-from crdb_changefeed_publisher_spark.functions import codebooks as _cb
-
-# Shared ANN index (VERDICT r4 #2): ivf and ivfpq both consume ONE persisted
-# encode_learned pass per (session, sf_dir) — cell assignment + PQ codes +
-# vector in a single Arrow sweep, computed on first use, reused by every
-# later run of either query in the same session. This is the local miniature
-# of the production layout, where encoding happens once at write time (the
-# corpus is stored cell-partitioned with codes) and queries never re-encode.
-_ENCODED_INDEX: dict[tuple[str, str], DataFrame] = {}
-
-
-def _encoded_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _ENCODED_INDEX.get(key)
-    if df is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        df = similarity.encode_learned(emb, _cb.CELL_CENTROIDS, _cb.PQ_CODEBOOKS).persist()
-        _ENCODED_INDEX[key] = df
-    return df
-
-
-def _duck_rows_2(items) -> str:
-    return ",\n".join(f"({i}, {list(c)})" for i, c in enumerate(items))
-
-
-_CENT_CTE = (
-    "cent AS (SELECT cell, c::DOUBLE[] AS c FROM (VALUES\n"
-    + _duck_rows_2(_cb.CELL_CENTROIDS)
-    + ") t(cell, c))"
-)
-_BOOK_CTE = (
-    "book AS (SELECT s, code, bc::DOUBLE[] AS bc FROM (VALUES\n"
-    + ",\n".join(
-        f"({s}, {code}, {list(c)})"
-        for s, book in enumerate(_cb.PQ_CODEBOOKS)
-        for code, c in enumerate(book)
-    )
-    + ") t(s, code, bc))"
-)
-# nearest learned centroid per corpus vector: rounded L2, smallest-cell tiebreak
-_ASSIGN_CTE = """
-    assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT v.vec_id, cent.cell,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY round(list_dot_product(v.e, v.e)
-                                - 2 * list_dot_product(v.e, cent.c)
-                                + list_dot_product(cent.c, cent.c), 6),
-                                cent.cell) AS rn
-            FROM v, cent
-        ) WHERE rn = 1
-    )"""
-_PROBES_CTE = """
-    probes AS (
-        SELECT query_id, cell FROM (
-            SELECT q.vec_id AS query_id, cent.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_dot_product(q.e, cent.c)
-                                / (sqrt(list_dot_product(q.e, q.e))
-                                   * sqrt(list_dot_product(cent.c, cent.c))), 6) DESC,
-                                cent.cell) AS rn
-            FROM q, cent
-        ) WHERE rn <= 4
-    )"""
-
-
-@query(
-    "embedding_topk_ivf",
-    retired=True,  # swap round 5: superseded by embedding_topk_ivf_trained
-    oracle=f"""
-    WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    q AS (SELECT * FROM v WHERE vec_id % 25 = 0),
-    {_CENT_CTE},
-    {_ASSIGN_CTE},
-    {_PROBES_CTE},
-    scored AS (
-        SELECT p.query_id, c.vec_id AS neighbor_id,
-               round(list_dot_product(q.e, c.e)
-                     / (sqrt(list_dot_product(q.e, q.e))
-                        * sqrt(list_dot_product(c.e, c.e))), 6) AS score
-        FROM probes p
-        JOIN q ON q.vec_id = p.query_id
-        JOIN assign a ON a.cell = p.cell
-        JOIN v c ON c.vec_id = a.vec_id AND c.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, score, rnk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored
-    ) WHERE rnk <= 5
-    """,
-    doc="IVF approximate top-5 with LEARNED cells: 16 Spark-ML-KMeans "
-    "centroids (tools/train_codebooks.py, frozen in functions/codebooks.py "
-    "so the oracle shares them as literals), corpus vectors assigned to "
-    "nearest centroid, queries probe 4 nearest cells — the "
-    "partition-pruning ANN path for 100 TB corpora. Cell assignment comes "
-    "from the session-cached shared index (one encode pass feeds ivf AND "
-    "ivfpq). Deterministic (rounded distances/scores, id tiebreaks), so "
-    "even the learned approximation is oracle-verified.",
-)
-def embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    return similarity.ivf_topk(
-        queries,
-        emb,
-        k=5,
-        n_probe=4,
-        cell_centroids=_cb.CELL_CENTROIDS,
-        encoded=_encoded_index(spark, sf_dir),
-    )
-
-
-_PQ_DIST = (
-    "round(list_dot_product(list_slice(v.e, s*8+1, s*8+8), list_slice(v.e, s*8+1, s*8+8)) "
-    "- 2 * list_dot_product(list_slice(v.e, s*8+1, s*8+8), list_slice(cent.c, s*8+1, s*8+8)) "
-    "+ list_dot_product(list_slice(cent.c, s*8+1, s*8+8), list_slice(cent.c, s*8+1, s*8+8)), 6)"
-)
-
-
-@query(
-    "embedding_topk_pq",
-    retired=True,  # plain-PQ variant; the IVF-PQ composition is registered
-    oracle=f"""
-    WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    q AS (SELECT * FROM v WHERE vec_id % 25 = 0),
-    cent AS (
-        SELECT label AS cell, list(m ORDER BY pos) AS c FROM (
-            SELECT label, pos, avg(e[pos]) AS m
-            FROM v, range(1, 65) t(pos)
-            GROUP BY label, pos
-        ) GROUP BY label
-    ),
-    subs AS (SELECT s FROM range(0, 8) t(s)),
-    codes AS (
-        SELECT vec_id, s, cell AS code FROM (
-            SELECT v.vec_id, subs.s, cent.cell,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id, subs.s
-                       ORDER BY {_PQ_DIST}, cent.cell) AS rn
-            FROM v, subs, cent
-        ) WHERE rn = 1
-    ),
-    lut AS (
-        SELECT q.vec_id AS query_id, subs.s, cent.cell AS code,
-               round(list_dot_product(list_slice(q.e, s*8+1, s*8+8),
-                                      list_slice(cent.c, s*8+1, s*8+8)), 6) AS t
-        FROM q, subs, cent
-    ),
-    adc AS (
-        SELECT l.query_id, c.vec_id AS neighbor_id, round(sum(l.t), 6) AS adc
-        FROM codes c JOIN lut l ON l.s = c.s AND l.code = c.code
-        WHERE c.vec_id <> l.query_id
-        GROUP BY 1, 2
-    ),
-    cand AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY adc DESC, neighbor_id) AS crnk
-            FROM adc
-        ) WHERE crnk <= 200
-    ),
-    scored AS (
-        SELECT cand.query_id, cand.neighbor_id,
-               round(list_dot_product(q.e, n.e)
-                     / (sqrt(list_dot_product(q.e, q.e))
-                        * sqrt(list_dot_product(n.e, n.e))), 6) AS score
-        FROM cand
-        JOIN q ON q.vec_id = cand.query_id
-        JOIN v n ON n.vec_id = cand.neighbor_id
-    )
-    SELECT query_id, neighbor_id, score, rnk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored
-    ) WHERE rnk <= 5
-    """,
-    doc="Approximate top-5 via PRODUCT QUANTIZATION + asymmetric-distance "
-    "scoring: 8 subspace codes per vector (deterministic label-mean "
-    "codebook), per-query lookup table, ADC = code-join + partial-agg sum, "
-    "exact cosine rerank of the top-200 (recall 0.93 vs exact top-5 at sf0.01; the 10-entry label codebook is fixture-bound — production PQ uses 256-entry k-means codebooks per subspace). The 100 TB memory story: the scan "
-    "reads 8 small codes per vector instead of a 256-byte float vector "
-    "(32x), and ADC does table lookups instead of vector math per pair. "
-    "Fully deterministic (rounded distances/scores, id/label tiebreaks), "
-    "so the whole quantize-score-rerank pipeline is oracle-verified.",
-)
-def embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    return similarity.pq_topk(queries, emb, k=5, n_candidates=200)
-
-
-@query(
-    "embedding_topk_ivfpq",
-    # swap round 10 (r11 verdict #2): retired in trade for the promoted
-    # two-level trained lifecycle (embedding_topk_ivf_two_level) — the
-    # frozen-codebook PQ composition stays oracle-verified in pytest
-    retired=True,
-    oracle=f"""
-    WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    q AS (SELECT * FROM v WHERE vec_id % 25 = 0),
-    {_CENT_CTE},
-    {_BOOK_CTE},
-    {_ASSIGN_CTE},
-    {_PROBES_CTE},
-    codes AS (
-        SELECT vec_id, cell, s, code FROM (
-            SELECT v.vec_id, a.cell, b.s, b.code,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id, b.s
-                       ORDER BY round(
-                           list_dot_product(list_slice(v.e, b.s*8+1, b.s*8+8),
-                                            list_slice(v.e, b.s*8+1, b.s*8+8))
-                           - 2 * list_dot_product(list_slice(v.e, b.s*8+1, b.s*8+8), b.bc)
-                           + list_dot_product(b.bc, b.bc), 6), b.code) AS rn
-            FROM v JOIN assign a ON a.vec_id = v.vec_id, book b
-        ) WHERE rn = 1
-    ),
-    lut AS (
-        SELECT q.vec_id AS query_id, b.s, b.code,
-               round(list_dot_product(list_slice(q.e, b.s*8+1, b.s*8+8), b.bc), 6) AS t
-        FROM q, book b
-    ),
-    adc AS (
-        SELECT p.query_id, c.vec_id AS neighbor_id, round(sum(l.t), 6) AS adc
-        FROM codes c
-        JOIN probes p ON p.cell = c.cell
-        JOIN lut l ON l.query_id = p.query_id AND l.s = c.s AND l.code = c.code
-        WHERE c.vec_id <> p.query_id
-        GROUP BY 1, 2
-    ),
-    cand AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY adc DESC, neighbor_id) AS crnk
-            FROM adc
-        ) WHERE crnk <= 100
-    ),
-    scored AS (
-        SELECT cand.query_id, cand.neighbor_id,
-               round(list_dot_product(q.e, n.e)
-                     / (sqrt(list_dot_product(q.e, q.e))
-                        * sqrt(list_dot_product(n.e, n.e))), 6) AS score
-        FROM cand
-        JOIN q ON q.vec_id = cand.query_id
-        JOIN v n ON n.vec_id = cand.neighbor_id
-    )
-    SELECT query_id, neighbor_id, score, rnk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored
-    ) WHERE rnk <= 5
-    """,
-    doc="IVF-PQ approximate top-5 with LEARNED codebooks — the production "
-    "ANN composition: 16 Spark-ML-KMeans cells prune the scan (4 probes "
-    "per query) over a PQ/ADC compressed scan with 64-entry per-subspace "
-    "KMeans codebooks (8 codes per vector, lookup-table scoring), then "
-    "exact cosine rerank of the top-100. Codebooks are trained once "
-    "(tools/train_codebooks.py) and frozen as literals shared by plan and "
-    "oracle; codes come from the session-cached shared index (one encode "
-    "pass feeds ivf AND ivfpq) and the corpus side runs zero Python. At "
-    "100 TB the corpus is written partitioned by cell: the probe prunes "
-    "partitions at the scan AND the scan reads codes instead of vectors — "
-    "pruning x compression compose. Production sizing is 256 "
-    "codes/subspace; 64 matches the 500-vector training fixture.",
-)
-def embedding_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    return similarity.ivf_pq_topk(
-        queries,
-        emb,
-        k=5,
-        n_probe=4,
-        n_candidates=100,
-        cell_centroids=_cb.CELL_CENTROIDS,
-        codebooks=_cb.PQ_CODEBOOKS,
-        encoded=_encoded_index(spark, sf_dir),
-    )
-
-
 # --- text analysis ---------------------------------------------------------
-
-
-@query(
-    "doc_text_stats",
-    retired=True,  # r6 swap: overlaps repetition/perplexity/fingerprint rows
-    oracle="""
-    WITH q AS (
-        SELECT doc_id, lang, text,
-               length(text) AS n_chars,
-               len(string_split(trim(text), ' ')) AS n_words,
-               length(replace(trim(text), ' ', ''))
-                   / len(string_split(trim(text), ' ')) AS awl,
-               (length(text) - length(replace(text, '.', ''))) / 1.0
-                 + (length(text) - length(replace(text, ',', ''))) / 1.0 AS punct
-        FROM documents
-    )
-    SELECT doc_id, lang,
-           n_chars                                             AS n_chars_computed,
-           n_words                                             AS n_tokens,
-           round(awl, 4)                                       AS avg_token_len,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))
-                                                               AS n_bpe_tokens,
-           round(0.4 * least(n_chars / 500.0, 1.0)
-                 + 0.3 * (CASE WHEN awl >= 3 AND awl <= 10 THEN 1.0 ELSE 0.5 END)
-                 + 0.3 * greatest(0.0, 1.0 - punct / greatest(n_words, 1)),
-                 4) AS quality
-    FROM q
-    """,
-    doc="Per-document text analysis in one row-local projection: whitespace "
-    "token stats, BPE-ish regex-pretokenizer counts (words/numbers/symbols), "
-    "and the composite quality heuristic (length band, word-length sanity, "
-    "punctuation density). Zero shuffles — pure map over the scan.",
-)
-def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    n_words = text.word_count(t)
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.length(t).alias("n_chars_computed"),
-        n_words.cast("long").alias("n_tokens"),
-        F.round(
-            (F.length(F.replace(F.trim(t), F.lit(" "), F.lit(""))) / n_words).cast("double"), 4
-        ).alias("avg_token_len"),
-        F.size(F.regexp_extract_all("text", F.lit(BPE_ISH_PATTERN), F.lit(0))).alias(
-            "n_bpe_tokens"
-        ),
-        text.quality_score(t).alias("quality"),
-    )
 
 
 def _marker_sql(markers: list[str]) -> str:
@@ -1544,10 +1126,10 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared contamination stats (the corpus-wide 8-gram pass is the expensive
-# stage of both doc_decontamination and corpus_curation_report): computed
-# once per (session, sf_dir), persisted, consumed by both — the production
-# posture, where decontamination stats are materialized once per corpus
-# snapshot and every downstream gate reads them.
+# stage of corpus_curation_report): computed once per (session, sf_dir),
+# persisted, and timed by bench as its own row — the production posture,
+# where decontamination stats are materialized once per corpus snapshot
+# and every downstream gate reads them.
 _CONTAM_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -1568,7 +1150,6 @@ def _contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consumer rows read as MARGINAL cost regardless of run order.
 SHARED_PASSES = {
     "contamination": _contamination,
-    "ann_encode": lambda spark, sf_dir: _encoded_index(spark, sf_dir),
     "minhash_pairs": lambda spark, sf_dir: _minhash_pairs(spark, sf_dir),
     # k-means training is eager (the Lloyd loop collects k-row updates
     # inside _kmeans_cents), and r13 adds the one-time PERSISTED flat
@@ -1598,7 +1179,7 @@ SHARED_PASSES = {
     ),
     # the 500k-tier realism pair table (plans/realism.py): built once per
     # session, consumed by realism_minhash_degrees (registered) and the
-    # retired pair/recall rows. Deferred import — llm is imported before
+    # planted-truth recall test. Deferred import — llm is imported before
     # realism during plans package init. Ignores sf_dir by design (the
     # realistic corpus is its own fixture).
     "realism_pairs": lambda spark, sf_dir: __import__(
@@ -1627,48 +1208,6 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).persist()
         _PAIRS_CACHE[key] = df
     return df
-
-
-@query(
-    "doc_decontamination",
-    retired=True,  # r10 swap round 7: the flag-only gate is subsumed by
-    # doc_decontaminate_excise (same broadcast-probe core, rewrite output)
-    # + corpus_curation_report's contamination gate; excision promoted
-    oracle="""
-    WITH words AS (
-        SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents
-    ),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(w) - 7, 0) + 1),
-                                     i -> array_to_string(w[i:i+7], ' '))) AS g
-        FROM words
-    ),
-    bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 97 = 0),
-    stats AS (
-        SELECT grams.doc_id,
-               count(*) AS n_grams,
-               sum(CASE WHEN b.g IS NULL THEN 0 ELSE 1 END) AS n_contaminated
-        FROM grams LEFT JOIN bench b ON b.g = grams.g
-        GROUP BY 1
-    )
-    SELECT doc_id, n_grams,
-           CAST(n_contaminated AS BIGINT) AS n_contaminated,
-           round(n_contaminated / n_grams, 4) AS contamination,
-           (n_contaminated = 0) AS clean
-    FROM stats
-    """,
-    doc="Benchmark decontamination: per-document overlap of distinct word-"
-    "8-grams against a benchmark corpus's n-gram set (deterministic subset "
-    "doc_id % 97 == 0 standing in for held-out eval suites). The benchmark "
-    "set is tiny by contract, so it broadcasts; the corpus side explodes "
-    "to distinct per-doc grams and left-joins the broadcast set — per-doc "
-    "partial agg, no corpus-side pair shuffle. The standard hygiene gate "
-    "before training-data release (operators/text.py::benchmark_"
-    "contamination).",
-)
-def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _contamination(spark, sf_dir)
 
 
 @query(
@@ -1901,35 +1440,6 @@ def _seeded_hash_fold(expr: str) -> str:
 
 
 @query(
-    "doc_train_split",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=f"""
-    WITH seeded AS (
-        SELECT doc_id, 'split-v1:' || CAST(doc_id AS VARCHAR) AS s FROM documents
-    ),
-    b AS (
-        SELECT doc_id, {_seeded_hash_fold('s')} % 10000 AS bucket FROM seeded
-    )
-    SELECT doc_id, bucket,
-           CASE WHEN bucket < 9000 THEN 'train'
-                WHEN bucket < 9500 THEN 'val'
-                ELSE 'test' END AS split
-    FROM b
-    """,
-    doc="Deterministic train/val/test split assignment (90/5/5): portable "
-    "seeded sha2-256 bucket of the doc id into 10k buckets, cumulative-"
-    "weight thresholds — pure per-row codegen, zero shuffle; adding "
-    "documents to the corpus never moves an existing document's split "
-    "(operators/curate.py::hash_split).",
-)
-def doc_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.operators import curate
-
-    docs = load_table(spark, sf_dir, "documents")
-    return curate.hash_split(docs).select("doc_id", "bucket", "split")
-
-
-@query(
     "multimodal_image_quality",
     retired=True,  # registry at the 50 cap; oracle-verified in pytest
     oracle=f"""
@@ -2054,103 +1564,6 @@ def embedding_gram_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gram_covariance(load_table(spark, sf_dir, "embeddings"))
 
 
-def _pca_project_sql() -> str:
-    """Oracle projection mirroring operators/linalg.py::pca_project term for
-    term (same literals, same left-to-right addition order, same one-literal
-    mean offset), so the doubles agree bit-for-bit before rounding."""
-    from crdb_changefeed_publisher_spark.functions.pca_components import (
-        PCA_COMPONENTS,
-        PCA_MEAN,
-    )
-
-    cols = []
-    for c_idx, comp in enumerate(PCA_COMPONENTS):
-        off = float(sum(m * c for m, c in zip(PCA_MEAN, comp)))
-        chain = " + ".join(
-            f"CAST(embedding[{i + 1}] AS DOUBLE) * {c!r}" for i, c in enumerate(comp)
-        )
-        cols.append(f"round((0.0 + {chain}) - {off!r}, 4) AS p{c_idx}")
-    return ",\n           ".join(cols)
-
-
-@query(
-    "embedding_pca_project",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=f"""
-    SELECT vec_id,
-           {_pca_project_sql()}
-    FROM embeddings
-    """,
-    doc="PCA dimensionality reduction: project every embedding onto the "
-    "top-4 frozen components (mean-centered) — per-row codegen multiply-"
-    "adds, zero shuffle; training reads the corpus once via the one-pass "
-    "Gram reduction + driver-local d x d eigh (tools/train_pca.py, "
-    "operators/linalg.py::pca_project).",
-)
-def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.functions.pca_components import (
-        PCA_COMPONENTS,
-        PCA_MEAN,
-    )
-    from crdb_changefeed_publisher_spark.operators.linalg import pca_project
-
-    return pca_project(load_table(spark, sf_dir, "embeddings"), PCA_COMPONENTS, PCA_MEAN)
-
-
-@query(
-    "embedding_topk_pca",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    proj AS (SELECT vec_id,
-           {_pca_project_sql()}
-    FROM embeddings),
-    qp AS (SELECT * FROM proj WHERE vec_id % 25 = 0),
-    cand AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round((q.p0-c.p0)*(q.p0-c.p0) + (q.p1-c.p1)*(q.p1-c.p1)
-                     + (q.p2-c.p2)*(q.p2-c.p2) + (q.p3-c.p3)*(q.p3-c.p3), 6) AS dpca
-        FROM qp q JOIN proj c ON q.vec_id <> c.vec_id
-    ),
-    topc AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY dpca ASC, neighbor_id) AS crnk
-            FROM cand) WHERE crnk <= 50
-    ),
-    scored AS (
-        SELECT t.query_id, t.neighbor_id,
-               round(list_dot_product(q.e, c.e)
-                     / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))),
-                     6) AS score
-        FROM topc t
-        JOIN v q ON q.vec_id = t.query_id
-        JOIN v c ON c.vec_id = t.neighbor_id
-    )
-    SELECT query_id, neighbor_id, score, rnk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored) WHERE rnk <= 5
-    """,
-    doc="ANN via PCA prefiltering: coarse top-50 per query by squared L2 in "
-    "the frozen 4-dim projected space (codegen per-row projections — the "
-    "coarse scan reads 4 doubles/vector, not the 64-dim embedding), exact "
-    "cosine rerank on the bounded candidates; coarse distances and scores "
-    "round-then-tiebreak so the approximate path stays value-verified "
-    "(operators/linalg.py::pca_prefilter_topk).",
-)
-def embedding_topk_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.functions.pca_components import (
-        PCA_COMPONENTS,
-        PCA_MEAN,
-    )
-    from crdb_changefeed_publisher_spark.operators.linalg import pca_prefilter_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    return pca_prefilter_topk(queries, emb, PCA_COMPONENTS, PCA_MEAN, k=5, n_candidates=50)
-
-
 # --- in-engine clustering (exact-arithmetic k-means) -------------------------
 
 KMEANS_ITERS = 3
@@ -2263,8 +1676,8 @@ def _train_flat_and_level1(spark: SparkSession, sf_dir: str) -> None:
 
 def _kmeans_cents(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     """Session-cached trained centroids (keyed on (applicationId, sf_dir)
-    like _encoded_index): one training run feeds embedding_kmeans,
-    dedup_semantic AND embedding_topk_ivf_trained — centroids are k*d
+    like _contamination): one training run feeds dedup_semantic AND
+    embedding_topk_ivf_trained — centroids are k*d
     ints, so the cache is KB-sized. k SELF-SIZES from a cheap corpus
     count via kmeans_k_for (the srp_bits_for convention; the oracle
     derives the identical k from COUNT(*) in its kdial CTE), so cell
@@ -2303,40 +1716,6 @@ def _kmeans_index_path(spark: SparkSession, sf_dir: str) -> str:
         similarity.build_trained_index(emb, cents, path, scale=KMEANS_SCALE)
         _KMEANS_INDEX_PATHS[key] = path
     return path
-
-
-@query(
-    "embedding_kmeans",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=f"""
-    WITH {_kmeans_ctes()}
-    SELECT vec_id, cluster, sq_dist FROM (
-        SELECT vec_id, cid AS cluster, sq_dist,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY sq_dist, cid) AS rn
-        FROM (
-            SELECT v.vec_id, c.cid, {_KM_DIST} AS sq_dist
-            FROM v, c{KMEANS_ITERS} c
-        )
-    ) WHERE rn = 1
-    """,
-    doc="Distributed Lloyd k-means TRAINED IN-ENGINE in exact integer "
-    "arithmetic (components floor-quantized at scale=1024, centroids as "
-    "element-wise floor means, hash-order seeds): 3 iterations, k SELF-"
-    "SIZED from COUNT(*) by kmeans_k_for (~250 vectors/cell: k=8 up to "
-    "sf0.1, 128 at sf1 — both engines derive the identical dial), and "
-    "the LEARNED result is value-exact against the unrolled-SQL oracle — "
-    "the training loop itself is verified, not just a frozen artifact. "
-    "Each assignment pass is a codegen map (k*d literal multiply-adds, no "
-    "shuffle); each update is one partial-agg groupBy collecting k rows "
-    "(KB) to the driver — n_iters scans total, driver state independent "
-    "of corpus size (operators/linalg.py::kmeans_quantized).",
-)
-def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.operators.linalg import kmeans_assign
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_assign(emb, _kmeans_cents(spark, sf_dir), scale=KMEANS_SCALE)
 
 
 # final-centroid argmin assignment, shared by every consumer of the
@@ -2386,7 +1765,7 @@ _KM_ASSIGN_CTE = f"""assign AS MATERIALIZED (
     """,
     doc="SemDeDup (Abbas et al. 2023): semantic near-dups found INSIDE "
     "LEARNED k-means cells — the published scale recipe for embedding "
-    "dedup, here with the cells trained in-engine (embedding_kmeans) "
+    "dedup, here with the cells trained in-engine (_kmeans_cents) "
     "instead of taken from the fixture's label column "
     "(dedup_embedding_cosine's blocking key). One GEMM per cell via "
     "applyInPandas; the cell key bounds the candidate set so no all-pairs "
@@ -2552,43 +1931,6 @@ def _kmeans2_codebook_df(spark: SparkSession, sf_dir: str):
     return _KMEANS2_CACHE[key]
 
 
-@query(
-    "embedding_kmeans_two_level",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=f"""
-    WITH {_kmeans2_ctes()}
-    SELECT vec_id, cell, sub, sq_dist FROM (
-        SELECT l.vec_id, l.cell, c.sub, {_KM2_DIST} AS sq_dist,
-               row_number() OVER (PARTITION BY l.vec_id
-                                  ORDER BY {_KM2_DIST}, c.sub) AS rn
-        FROM l1 l JOIN s{KMEANS_ITERS} c ON c.cell = l.cell
-    ) WHERE rn = 1
-    """,
-    doc="TWO-LEVEL exact-integer Lloyd (the seventh-decade trainer, r10 "
-    "verdict #1): flat Lloyd is n*k per iteration with k ~ n/250 — "
-    "quadratic in corpus size, measured as the scaling wall at 2M "
-    "vectors (607 s, docs/SCALE.md). This trains k1 ~ sqrt(n/250) "
-    "coarse cells flat, shuffles vectors ONCE on the learned cell key, "
-    "then trains each cell's k2 sub-centroids cell-locally via "
-    "applyInPandas — both levels ~n*sqrt(n/250) per iteration, capacity "
-    "8192^2*250 = 16.8e12 vectors, and EVERY step stays in the exact "
-    "integer domain (hash-order seeds, argmin with id ties, floor "
-    "means, carry-forward) so the unrolled two-level SQL twin is "
-    "value-exact — no sampling tolerance contract needed "
-    "(operators/linalg.py::kmeans_train_two_level).",
-)
-def embedding_kmeans_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.operators.linalg import (
-        kmeans_assign_two_level,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents1, codebook = _kmeans2_codebook_df(spark, sf_dir)
-    return kmeans_assign_two_level(emb, cents1, codebook, scale=KMEANS_SCALE)
-
-
-
-
 def _ivf_two_level_oracle(
     query_mod: int = 25,
     topk: int = 5,
@@ -2691,8 +2033,7 @@ def _kmeans2_index_path(spark: SparkSession, sf_dir: str) -> str:
     "embedding_topk_ivf_two_level",
     # PROMOTED in swap round 10 (r11 verdict #2): the seventh-decade
     # two-level lifecycle is the repo's flagship scale result and now
-    # holds the driver row; embedding_topk_ivfpq retired in trade (its
-    # frozen-codebook composition stays oracle-verified in pytest).
+    # has a registered row.
     # Round 13: the row serves FROM THE PERSISTED INDEX (build once per
     # session, directory-pruned scans) so the registered surface is the
     # scale path; the in-memory serve stays pinned row-identical at 2 SFs
@@ -2701,7 +2042,7 @@ def _kmeans2_index_path(spark: SparkSession, sf_dir: str) -> str:
     oracle=_ivf_two_level_oracle(),
     doc="The two-level ANN lifecycle served end-to-end IN-ENGINE from the "
     "PERSISTED (cell, sub)-partitioned index: the seventh-decade "
-    "trainer's codebook (embedding_kmeans_two_level, session-shared) "
+    "trainer's codebook (session-shared) "
     "assigns the corpus hierarchically and the assignment exchange lands "
     "ON DISK partitioned by coarse cell (build_two_level_index, once per "
     "session); queries rank the k1 ~ sqrt(k_total) COARSE cells by exact "
@@ -2889,17 +2230,13 @@ def _ivf_trained_oracle(
 
 @query(
     "embedding_topk_ivf_trained",
-    # PROMOTED in swap round 5 (third r8 session): the in-engine-trained
-    # lifecycle supersedes the frozen-codebook embedding_topk_ivf as the
-    # registered IVF row; that variant retires but stays oracle-verified.
     oracle=_ivf_trained_oracle(),
     doc="The COMPLETE ANN lifecycle value-verified: cells trained in-engine "
-    "(embedding_kmeans's exact-arithmetic Lloyd, session-shared), corpus "
+    "(exact-arithmetic Lloyd, session-shared), corpus "
     "indexed by exact int64 nearest-centroid assignment, queries probe "
     "their 3 nearest cells by the SAME exact integer distance, exact "
     "cosine ranks only the probed cells' vectors — no frozen-literal "
-    "codebook anywhere (contrast embedding_topk_ivf, whose centroids are "
-    "offline literals). Candidates come from an equi-join on the cell id; "
+    "codebook anywhere. Candidates come from an equi-join on the cell id; "
     "at 100 TB the assignment is the write-time cell-partitioned layout "
     "and the probe prunes partitions at the scan "
     "(operators/similarity.py::ivf_topk_trained). The cell count SELF-"
@@ -2972,42 +2309,6 @@ def doc_shuffle_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crdb_changefeed_publisher_spark.operators import curate
 
     return curate.shuffle_layout(load_table(spark, sf_dir, "documents"))
-
-
-@query(
-    "doc_weighted_sample",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle=f"""
-    WITH seeded AS (
-        SELECT doc_id, len(string_split(trim(text), ' ')) AS n_tokens,
-               'wsample-v1:' || CAST(doc_id AS VARCHAR) AS s
-        FROM documents
-    ),
-    p AS (
-        SELECT doc_id, n_tokens,
-               round(-ln(((({_seeded_hash_fold('s')}) // 256) + 0.5)
-                         / {float(2**52)!r})
-                     / n_tokens, 10) AS priority
-        FROM seeded
-    )
-    SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, priority
-    FROM p ORDER BY priority, doc_id LIMIT 200
-    """,
-    doc="Exact-k weighted sampling WITHOUT replacement (Efraimidis-Spirakis "
-    "exponential race, weight = token count): k smallest seeded "
-    "-ln(u)/w priorities — deterministic, rerun-identical, plans as "
-    "per-partition top-k + TakeOrderedAndProject "
-    "(operators/curate.py::weighted_sample_k).",
-)
-def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crdb_changefeed_publisher_spark.operators import curate, text
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = text.word_count(F.col("text")).cast("double")
-    out = curate.weighted_sample_k(docs.withColumn("_w", w), k=200, weight=F.col("_w"))
-    return out.select(
-        "doc_id", F.col("_w").cast("long").alias("n_tokens"), "priority"
-    )
 
 
 @query(
@@ -3244,41 +2545,6 @@ def corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return text.token_vocab(docs, top_v=100)
-
-
-@query(
-    "embedding_hard_negatives",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle="""
-    WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS neg_label,
-               round(list_dot_product(q.e, c.e)
-                     / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))),
-                     6) AS score
-        FROM v q JOIN v c ON q.vec_id <> c.vec_id AND q.label <> c.label
-        WHERE q.vec_id % 25 = 0
-    )
-    SELECT query_id, neighbor_id, neg_label, score, rnk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY score DESC, neighbor_id) AS rnk
-        FROM scored
-    ) WHERE rnk <= 5
-    """,
-    doc="HARD-NEGATIVE MINING for contrastive training: for each sampled "
-    "query, the top-5 most-similar vectors with a DIFFERENT label — the "
-    "brute-force GEMM top-k plan with a batch-local group mask "
-    "(operators/similarity.py::brute_force_topk(neg_group_col='label')); "
-    "at scale the same mask composes with the IVF/LSH candidate paths.",
-)
-def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    out = similarity.brute_force_topk(queries, emb, k=5, neg_group_col="label")
-    labels = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("label").alias("neg_label"))
-    return out.join(F.broadcast(labels), "neighbor_id").select(
-        "query_id", "neighbor_id", "neg_label", "score", "rnk"
-    )
 
 
 # DuckDB twin of operators/sketches.py::kmv_hash — the first 13 hex digits
@@ -3624,8 +2890,7 @@ def _qsk_fold52_sql(expr: str) -> str:
     "rank statistics; ~1/sqrt(k) rank error, merge = distinct+truncate "
     "like kmv_union). Estimates use type-7-FLOOR selection on the "
     "value-sorted sample — an actual data value, no interpolation, no "
-    "float-half boundary. Retired order_price_percentiles is the "
-    "exact counterpart (operators/sketches.py::quantile_sketch).",
+    "float-half boundary (operators/sketches.py::quantile_sketch).",
 )
 def order_price_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crdb_changefeed_publisher_spark.operators import sketches
@@ -3865,7 +3130,7 @@ def doc_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Decontamination by EXCISION: scrub from every training document "
     "each >= 8-word span overlapping the eval benchmark (the doc_id % 97 "
-    "holdout, the doc_decontamination convention) and KEEP the rest — "
+    "holdout, the benchmark_contamination convention) and KEEP the rest — "
     "real pipelines remove the leaked passage, not the document; the "
     "excised kept_text is value-compared. Benchmark grams reduce to "
     "distinct 32-byte digests and BROADCAST onto the corpus's positional "

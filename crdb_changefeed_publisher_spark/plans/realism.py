@@ -329,25 +329,6 @@ def _realism_ctes() -> str:
 
 
 @query(
-    "realism_minhash_pairs",
-    retired=True,  # the 500k-tier pair stream backs the registered degree
-    # view; value-verified here every round (r10 verdict #2)
-    oracle=f"""
-    WITH {_realism_ctes()}
-    SELECT doc_a, doc_b, est_jaccard FROM qual
-    """,
-    doc="Near-dup candidate pairs (16-hash/4-band portable MinHash, est "
-    "Jaccard >= 0.2) on the 500k-doc realistic Zipfian corpus — the tier "
-    "where recall is measurable against planted truth (flat 0.89 across "
-    "three decades, docs/near_dup_realism_r10.json). Ignores sf_dir by "
-    "design: the corpus IS the fixture (crdb_changefeed_publisher_spark/"
-    "fixtures.py, deterministic).",
-)
-def realism_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return realism_pairs(spark)
-
-
-@query(
     "realism_minhash_degrees",
     # r11 swap round 9 PROMOTION (r10 verdict #6): the only near-dup row
     # whose recall is certified against planted ground truth, registered
@@ -371,8 +352,7 @@ def realism_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output bounded by n_docs. The banded pair recall of this exact "
     "pipeline is pinned against planted truth at >= 0.85 "
     "(tests/test_realism_fixture.py; measured 0.89 flat across decades). "
-    "Shares the session pair table with realism_minhash_pairs "
-    "(_shared:realism_pairs in bench.py).",
+    "Reads the session pair table (_shared:realism_pairs in bench.py).",
 )
 def realism_minhash_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_portable_degrees(

@@ -44,16 +44,13 @@ COST_HINTS: dict[str, float] = {
     "cdc_change_counts_by_table": 0.4,
     "asof_purchase_last_click_merge": 0.43,
     "customer_semi_anti": 0.45,
-    "top_shingles_corpus": 0.45,
     "q3_shipping_priority": 0.47,
-    "order_ship_latency": 0.49,
     "events_time_windows": 0.5,
     "nation_setops": 0.52,
     "embedding_topk_bruteforce": 0.51,
     "lang_id_confusion": 0.57,
     "q5_region_revenue": 0.59,
     "semi_structured_events": 0.68,
-    "order_price_percentiles": 0.61,
     "doc_fingerprints": 0.96,
     "dedup_minhash_portable": 0.1,  # r6: pairs now a session-shared pass
     "dedup_ngram_jaccard": 1.75,  # r6 idle measure
@@ -63,20 +60,15 @@ COST_HINTS: dict[str, float] = {
     "orders_matview_totals": 1.0,  # r9 swap promotion
     "order_price_quantile_sketch": 0.7,  # r9 swap promotion
     "doc_chunks": 0.6,
-    "doc_decontamination": 1.0,
     "salted_skew_agg": 0.8,
     "doc_perplexity_proxy": 1.1,
     "embedding_topk_srp_lsh": 1.76,
-    # r5: shared persisted encode pass + ADC/masked-GEMM scans — warm cost
-    # is ~0.9/1.2 s, first run pays the one-time index build
-    "embedding_topk_ivf": 1.0,
-    "embedding_topk_ivfpq": 1.3,
     # r8 swap round 5: trained lifecycle; first run pays the shared kmeans
     # training pass (~2 s at sf0.1), probe+rerank is ~1 s warm
     "embedding_topk_ivf_trained": 2.5,
     "dedup_cluster_keep_list": 0.6,  # r6: consumes the shared pair pass
-    # r5 additions: curation pays the one-time contamination pass that
-    # doc_decontamination then reuses (session-persisted)
+    # r5 additions: curation pays the one-time contamination pass
+    # (session-persisted)
     "corpus_curation_report": 2.5,
     "multimodal_real_features": 0.6,
     "doc_repetition_signals": 2.0,

@@ -15,114 +15,6 @@ from crdb_changefeed_publisher_spark.tables import load_table
 
 
 @query(
-    "string_funcs_part",
-    retired=True,  # r7 swap: string-scalar microquery; string surface kept
-    # by the doc_* text family + semi_structured_events driver rows
-    oracle="""
-    SELECT p_partkey,
-           upper(substr(p_name, 1, 8))         AS name_prefix,
-           length(p_name)                      AS name_len,
-           replace(p_brand, 'Brand#', 'B')     AS brand_short,
-           concat(p_type, '/', p_brand)        AS type_brand,
-           CAST(contains(p_name, 'widget') AS INT) AS is_widget,
-           lpad(p_brand, 12, '*')              AS brand_padded,
-           reverse(p_name)                     AS name_reversed,
-           left(p_name, 4)                     AS name_left,
-           right(p_name, 4)                    AS name_right,
-           repeat(p_type, 2)                   AS type_doubled,
-           split_part(p_name, ' ', 2)          AS second_word,
-           CAST(position(' ' IN p_name) AS INT) AS space_pos,
-           regexp_extract(p_name, '^(\\w+)', 1) AS first_word,
-           CAST(regexp_matches(p_name, '^[a-z]+ [a-z]+$') AS INT) AS two_words,
-           CAST(regexp_matches(p_name, '(ring|bolt)') AS INT)     AS has_ring_bolt
-    FROM part
-    WHERE p_name LIKE '%e%'
-    """,
-    doc="The string-function surface in one row-local projection: substr/"
-    "upper/length/replace/concat/contains/LIKE plus lpad/reverse/left/right/"
-    "repeat/split_part/position plus regexp extract/match — all built-in "
-    "JVM expressions inside one whole-stage-codegen span over the scan.",
-)
-def string_funcs_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part")
-    return p.filter(F.col("p_name").like("%e%")).select(
-        "p_partkey",
-        F.upper(F.substring("p_name", 1, 8)).alias("name_prefix"),
-        F.length("p_name").alias("name_len"),
-        F.regexp_replace("p_brand", "Brand#", "B").alias("brand_short"),
-        F.concat(F.col("p_type"), F.lit("/"), F.col("p_brand")).alias("type_brand"),
-        F.col("p_name").contains("widget").cast("int").alias("is_widget"),
-        F.lpad("p_brand", 12, "*").alias("brand_padded"),
-        F.reverse("p_name").alias("name_reversed"),
-        F.substring("p_name", 1, 4).alias("name_left"),
-        F.col("p_name").substr(F.length("p_name") - 3, F.lit(4)).alias("name_right"),
-        F.repeat("p_type", 2).alias("type_doubled"),
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(2)).alias("second_word"),
-        F.instr("p_name", " ").alias("space_pos"),
-        F.regexp_extract("p_name", r"^(\w+)", 1).alias("first_word"),
-        F.col("p_name").rlike("^[a-z]+ [a-z]+$").cast("int").alias("two_words"),
-        F.col("p_name").rlike("(ring|bolt)").cast("int").alias("has_ring_bolt"),
-    )
-
-
-@query(
-    "date_funcs_orders",
-    retired=True,  # swapped out r7 for corpus_lang_drift; date scalars stay oracle-verified here
-    oracle="""
-    SELECT CAST(extract(year FROM o_orderdate) AS INT)  AS order_year,
-           CAST(extract(month FROM o_orderdate) AS INT) AS order_month,
-           count(*)                                     AS n_orders,
-           round(sum(o_totalprice), 2)                  AS revenue
-    FROM orders
-    GROUP BY 1, 2
-    """,
-    doc="Date part extraction + aggregate by (year, month).",
-)
-def date_funcs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.year("o_orderdate").alias("order_year"),
-            F.month("o_orderdate").alias("order_month"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
-
-
-@query(
-    "math_funcs_lineitem",
-    retired=True,  # r6 swap: scalar library keeps string/date/array/json rows
-    oracle="""
-    SELECT l_orderkey, l_linenumber,
-           round(sqrt(l_extendedprice), 6)            AS price_sqrt,
-           round(ln(l_extendedprice + 1), 6)          AS price_ln,
-           round(pow(l_discount, 2), 6)               AS disc_sq,
-           CAST(ceil(l_quantity) AS BIGINT)           AS qty_ceil,
-           CAST(floor(l_quantity) AS BIGINT)          AS qty_floor,
-           abs(l_quantity - 25.0)                     AS qty_dev
-    FROM lineitem
-    WHERE l_orderkey % 50 = 0
-    """,
-    doc="Math functions: sqrt/ln/pow/ceil/floor/abs (rounded for cross-libm parity).",
-)
-def math_funcs_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.filter(F.col("l_orderkey") % 50 == 0).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.sqrt("l_extendedprice"), 6).alias("price_sqrt"),
-        F.round(F.log(F.col("l_extendedprice") + 1), 6).alias("price_ln"),
-        F.round(F.pow("l_discount", F.lit(2)), 6).alias("disc_sq"),
-        F.ceil("l_quantity").cast("long").alias("qty_ceil"),
-        F.floor("l_quantity").cast("long").alias("qty_floor"),
-        F.abs(F.col("l_quantity") - 25.0).alias("qty_dev"),
-    )
-
-
-@query(
     "array_funcs_embeddings",
     oracle="""
     SELECT vec_id,
@@ -202,34 +94,3 @@ def semi_structured_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return map_side.unionByName(json_side)
 
-
-@query(
-    "events_variant_stats",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle="""
-    SELECT event_type,
-           count(*) AS n_events,
-           round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 4) AS avg_k,
-           min(CAST(json_extract_string(props, '$.k') AS INT)) AS min_k,
-           max(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
-    FROM events GROUP BY event_type
-    """,
-    doc="VARIANT-native semi-structured access (Spark 4 VariantType): props "
-    "parse once into the binary variant encoding and fields extract with "
-    "typed variant_get — the engine path that replaces repeated "
-    "get_json_object string re-parses; downstream aggregation is ordinary "
-    "codegen. The oracle reads the same JSON with DuckDB's JSON functions.",
-)
-def events_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    k = F.expr("variant_get(parse_json(props), '$.k', 'int')")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.avg("k"), 4).alias("avg_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-    )

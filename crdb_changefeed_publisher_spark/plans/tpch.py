@@ -161,35 +161,6 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "running_revenue_by_customer",
-    retired=True,  # r8 swap round 4: window family keeps the rank row
-    # (supplier_acctbal_rank) and the top-k row (top_orders_per_customer);
-    # the running-sum frame stays pytest-oracle-verified
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate, o_orderkey
-                                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-               AS running_total
-    FROM orders
-    """,
-    doc="Running-total window: deterministic sequential fold per partition.",
-)
-def running_revenue_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
-    )
-
-
-@query(
     "supplier_acctbal_rank",
     oracle="""
     SELECT s_suppkey, s_nationkey, s_acctbal,
@@ -240,50 +211,6 @@ def supplier_acctbal_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("s_suppkey").over(zoo).alias("richest"),
         F.lag("s_suppkey").over(zoo).alias("prev_supp"),
         F.lead("s_suppkey", 1, -1).over(zoo).alias("next_supp"),
-    )
-
-
-@query(
-    "orderpriority_distinct_customers",
-    retired=True,  # r8 swap: COUNT DISTINCT expand shape stays pytest-
-    # verified; kmv_shard_distinct + customer_semi_anti cover the surface
-    oracle="""
-    SELECT o_orderpriority,
-           count(*)                  AS n_orders,
-           count(DISTINCT o_custkey) AS n_customers,
-           round(sum(o_totalprice), 2) AS total_value
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-    doc="Aggregate with COUNT DISTINCT (expand + two-phase agg in Spark).",
-)
-def orderpriority_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-        F.round(F.sum("o_totalprice"), 2).alias("total_value"),
-    )
-
-
-@query(
-    "sales_rollup",
-    retired=True,  # r8 swap round 4: grouping-sets family shape covered by
-    # part_type_brand_cube; still pytest-oracle-verified
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_extendedprice), 2) AS sum_price,
-           count(*)                       AS n_items
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    doc="ROLLUP grouping sets (partial aggregation handles margins in one pass).",
-)
-def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    return l.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-        F.count(F.lit(1)).alias("n_items"),
     )
 
 
@@ -390,111 +317,3 @@ def nation_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = lambda df, op: df.select(F.lit(op).alias("op"), "nationkey")  # noqa: E731
     return tag(u, "union").unionByName(tag(i, "intersect")).unionByName(tag(e, "except"))
 
-
-@query(
-    "top_expensive_orders",
-    retired=True,  # swapped out r7: top-k surface covered by top_orders_per_customer
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 20
-    """,
-    doc="Global top-k: TakeOrderedAndProject, no full sort at scale.",
-)
-def top_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(20)
-    )
-
-
-@query(
-    "order_value_buckets",
-    retired=True,  # CASE-WHEN bucketing also exercised inside registered aggs
-    oracle="""
-    SELECT CASE WHEN o_totalprice < 100000 THEN 'small'
-                WHEN o_totalprice < 250000 THEN 'medium'
-                ELSE 'large' END          AS bucket,
-           count(*)                       AS n_orders,
-           round(avg(o_totalprice), 2)    AS avg_price
-    FROM orders
-    GROUP BY 1
-    """,
-    doc="CASE WHEN bucketing + aggregate.",
-)
-def order_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    bucket = (
-        F.when(F.col("o_totalprice") < 100000, "small")
-        .when(F.col("o_totalprice") < 250000, "medium")
-        .otherwise("large")
-    )
-    return (
-        o.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.avg("o_totalprice"), 2).alias("avg_price"),
-        )
-    )
-
-
-@query(
-    "q21_waiting_suppliers",
-    retired=True,  # registry at the 50 cap; oracle-verified in pytest
-    oracle="""
-    SELECT s_name, count(*) AS numwait
-    FROM supplier, lineitem l1, orders
-    WHERE s_suppkey = l1.l_suppkey
-      AND o_orderkey = l1.l_orderkey
-      AND o_orderstatus = 'F'
-      AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-      AND EXISTS (
-          SELECT 1 FROM lineitem l2
-          WHERE l2.l_orderkey = l1.l_orderkey
-            AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (
-          SELECT 1 FROM lineitem l3
-          WHERE l3.l_orderkey = l1.l_orderkey
-            AND l3.l_suppkey <> l1.l_suppkey
-            AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-    GROUP BY s_name
-    """,
-    doc="TPC-H Q21 shape (suppliers who kept orders waiting) adapted to the "
-    "fixture's columns: late = shipped more than 60 days after the order "
-    "date, on finalized ('F') orders. The ORACLE is the literal doubly-"
-    "correlated EXISTS / NOT-EXISTS form; the Spark plan is the SCALE "
-    "REWRITE — one per-order aggregation pass (distinct suppliers, "
-    "distinct LATE suppliers) replaces both correlated self-joins, so "
-    "lineitem is shuffled once on l_orderkey and the semi/anti semantics "
-    "fall out of two integer comparisons (n_supps > 1, n_late = 1). The "
-    "driver-style row equality proves the rewrite. Supplier names join "
-    "broadcast (dim-sized); all boundaries are integer days.",
-)
-def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_orderdate")
-    )
-    jf = li.join(o, li.l_orderkey == o.o_orderkey).withColumn(
-        "is_late", F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 60)
-    )
-    per_order = jf.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.countDistinct(F.when(F.col("is_late"), F.col("l_suppkey"))).alias("n_late"),
-    )
-    sole_late = jf.filter("is_late").join(
-        per_order.filter((F.col("n_supps") > 1) & (F.col("n_late") == 1)),
-        "l_orderkey",
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        sole_late.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_name", "numwait")
-    )

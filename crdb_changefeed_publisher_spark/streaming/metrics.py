@@ -2,9 +2,10 @@
 increasing ``rabbitmq_messages_sent`` counter exposed as a Prometheus text
 endpoint (default 0.0.0.0:8001, env PROMETHEUS_ADDR — src/main.rs:57).
 
-Spark-side wiring: the publish sink increments a driver-side counter via a
-Spark accumulator-free path (foreachBatch returns per-partition counts), and
-a StreamingQueryListener tracks per-batch progress for observability.
+Spark-side wiring: the publish sink increments this driver-side counter
+without an accumulator (each publish job collects its per-partition counts
+and the driver adds them up). No StreamingQueryListener is registered;
+per-batch progress is only what ``StreamingQuery.lastProgress`` reports.
 """
 
 from __future__ import annotations

@@ -135,24 +135,6 @@ def publish_batch(
     MESSAGES_SENT.inc(sum(r.n for r in counts))
 
 
-def publish_batch_to_dir(
-    batch: DataFrame,
-    out_dir: str,
-    key_col: str = "key",
-    envelope_col_name: str = "envelope",
-    seq_col: str | None = None,
-) -> None:
-    """Back-compat wrapper: publish_batch with the dir queue."""
-    publish_batch(
-        batch,
-        queue_kind="dir",
-        out_dir=out_dir,
-        key_col=key_col,
-        envelope_col_name=envelope_col_name,
-        seq_col=seq_col,
-    )
-
-
 def make_foreach_batch(
     out_dir: str | None,
     cursor_store: CursorStore | None = None,

@@ -122,9 +122,12 @@ def fan_out_scan(df: DataFrame, *key_cols: str, always: bool = False) -> DataFra
     width = n
     est = _plan_size_bytes(df)
     if est is not None and est >= 0:
-        floor = int(
-            os.environ.get(_FAN_OUT_BYTES_PER_TASK_ENV, _FAN_OUT_BYTES_PER_TASK_DEFAULT)
-        )
+        try:
+            floor = int(
+                os.environ.get(_FAN_OUT_BYTES_PER_TASK_ENV, _FAN_OUT_BYTES_PER_TASK_DEFAULT)
+            )
+        except ValueError:  # a typo must not break every caller
+            floor = _FAN_OUT_BYTES_PER_TASK_DEFAULT
         if floor > 0:
             width = min(n, max(1, est // floor))
     if width <= n_in:

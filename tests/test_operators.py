@@ -88,52 +88,6 @@ def test_gram_covariance_matches_numpy(spark):
         assert got[(j, i)] == (g, c)
 
 
-def test_pca_prefilter_full_candidates_equals_bruteforce(spark, sf_dir):
-    """With n_candidates >= corpus size the PCA prefilter passes everything
-    through, so the exact rerank must reproduce brute-force top-k row for
-    row — the invariant separating 'approximate candidates' from 'wrong'."""
-    from crdb_changefeed_publisher_spark.functions.pca_components import (
-        PCA_COMPONENTS,
-        PCA_MEAN,
-    )
-    from crdb_changefeed_publisher_spark.operators.linalg import pca_prefilter_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    full = pca_prefilter_topk(
-        queries, emb, PCA_COMPONENTS, PCA_MEAN, k=5, n_candidates=10_000_000
-    )
-    bf = similarity.brute_force_topk(queries, emb, k=5)
-    got = {(r.query_id, r.rnk): (r.neighbor_id, r.score) for r in full.collect()}
-    want = {(r.query_id, r.rnk): (r.neighbor_id, r.score) for r in bf.collect()}
-    assert got == want and len(want) > 0
-
-
-def test_pca_project_matches_numpy_and_orders_variance(spark, sf_dir):
-    import numpy as np
-
-    from crdb_changefeed_publisher_spark.functions.pca_components import (
-        EXPLAINED_VARIANCE,
-        PCA_COMPONENTS,
-        PCA_MEAN,
-    )
-    from crdb_changefeed_publisher_spark.operators.linalg import pca_project
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    got = pca_project(emb, PCA_COMPONENTS, PCA_MEAN).orderBy("vec_id").collect()
-    X = np.stack([np.array(r.embedding, dtype=np.float64) for r in emb.orderBy("vec_id").collect()])
-    P = (X - np.array(PCA_MEAN)) @ np.array(PCA_COMPONENTS).T
-    for k, r in enumerate(got):
-        for c in range(4):
-            assert abs(getattr(r, f"p{c}") - P[k, c]) < 1e-3
-    # on the training fixture the projection variances track the frozen
-    # eigenvalues in order (components were trained on sf0.01)
-    if sf_dir.rstrip("/").endswith("sf0.01"):
-        var = P.var(axis=0)
-        assert all(var[i] >= var[i + 1] for i in range(3))
-        assert np.allclose(var, EXPLAINED_VARIANCE, rtol=0.05)
-
-
 def test_incremental_dedup_report_flags(spark):
     corpus = docs_df(
         spark,
@@ -239,15 +193,6 @@ def test_srp_lsh_topk_deterministic(spark, sf_dir):
     assert all(r.rnk <= 3 and -1.0 <= r.score <= 1.0 for r in a)
 
 
-def test_ivf_topk_subset_of_cells(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") == 0)
-    got = similarity.ivf_topk(queries, emb, k=3, n_probe=2).collect()
-    assert len(got) == 3
-    labels = {r.label for r in emb.select("label").distinct().collect()}
-    assert len(labels) == 10  # sanity: cells exist
-
-
 def test_lang_id_markers(spark):
     df = spark.createDataFrame(
         [
@@ -265,28 +210,6 @@ def test_fingerprint_deterministic(spark):
     fp = df.select(text.fingerprint(F.col("t")).alias("fp")).collect()[0].fp
     # fold: ((0*31+97)*31+98)*31+99 mod 1e9+7
     assert fp == ((97 * 31 + 98) * 31 + 99) % 1_000_000_007
-
-
-def test_multimodal_feature_plumbing(spark):
-    media = multimodal.synthetic_media(spark, 32)
-    feats = multimodal.extract_features(media).collect()
-    assert len(feats) == 32
-    assert all(len(r.feature) == 8 for r in feats)
-    assert all(r.n_bytes == 64 for r in feats)  # sha2-256 hex -> 64 bytes
-    # deterministic: same id => same feature
-    again = multimodal.extract_features(media).collect()
-    assert {r.media_id: r.feature for r in feats} == {r.media_id: r.feature for r in again}
-
-
-def test_fake_feature_batch_matches_scalar():
-    import pandas as pd
-
-    payloads = pd.Series(
-        [b"", None, b"a", bytes(range(256)) * 5, b"hello world" * 37, b"\x00" * 16]
-    )
-    batch = multimodal._fake_features_batch(payloads)
-    for i, p in enumerate(payloads):
-        assert list(batch[i]) == multimodal._fake_feature(p), f"payload {i}"
 
 
 def test_multimodal_decode_boundaries():
@@ -993,6 +916,78 @@ def test_kmeans_assign_tiebreak_and_exactness(spark):
         for r in kmeans_assign(df, cents, scale=4).collect()
     }
     assert got == {1: (0, 32), 2: (1, 0)}
+
+
+def _small_embeddings(spark, n, d=3, seed=7):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = [(100 + i, [float(x) for x in rng.normal(size=d)]) for i in range(n)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_kmeans_seeds_are_prefixes_of_the_largest_seed_set(spark):
+    """The fused session trainer draws ONE seed list at max(k, k1) and
+    slices it per dial; that is only sound if seeds(k) == seeds(kmax)[:k]."""
+    from crdb_changefeed_publisher_spark.operators.linalg import kmeans_seeds
+
+    emb = _small_embeddings(spark, 40)
+    kmax = kmeans_seeds(emb, 16, scale=64)
+    assert len(kmax) == 16
+    for k in (1, 3, 8):
+        assert kmeans_seeds(emb, k, scale=64) == kmax[:k]
+
+
+def test_kmeans_train_multi_matches_separate_trainers(spark):
+    """Lockstep training of several seed sets over one scan is
+    bit-identical to training each set alone, and identical seed sets
+    fan one result back to every position."""
+    from crdb_changefeed_publisher_spark.operators.linalg import (
+        kmeans_seeds,
+        kmeans_train,
+        kmeans_train_multi,
+    )
+
+    emb = _small_embeddings(spark, 40)
+    seeds = kmeans_seeds(emb, 8, scale=64)
+    sets = [seeds[:3], seeds[:8], seeds[:3]]
+    fused = kmeans_train_multi(emb, sets, n_iters=3, scale=64)
+    alone = [kmeans_train(emb, k=len(s), n_iters=3, scale=64, seeds=s) for s in sets]
+    assert fused == alone
+    assert fused[0] == fused[2]
+    assert kmeans_train(emb, k=8, n_iters=3, scale=64) == alone[1]
+
+
+def test_kmeans_two_level_corpus_smaller_than_min_dial(spark):
+    """n < the smallest level-1 dial (8): kmeans_seeds returns n rows, so
+    the fused pass hands in n level-1 cells. The trainer must accept them
+    and build the same codebook as when it trains level 1 itself."""
+    from crdb_changefeed_publisher_spark.operators.linalg import (
+        KMEANS_K_CHOICES,
+        kmeans_k1_for,
+        kmeans_seeds,
+        kmeans_train_multi,
+        kmeans_train_two_level,
+    )
+
+    n = 5
+    assert n < KMEANS_K_CHOICES[0] == kmeans_k1_for(n)
+    emb = _small_embeddings(spark, n)
+    seeds = kmeans_seeds(emb, kmeans_k1_for(n), scale=64)
+    assert len(seeds) == n
+    (lvl1,) = kmeans_train_multi(emb, [seeds], n_iters=3, scale=64)
+    fused_c1, fused_book = kmeans_train_two_level(emb, n=n, scale=64, cents1=lvl1)
+    own_c1, own_book = kmeans_train_two_level(emb, n=n, scale=64)
+    try:
+        assert fused_c1 == own_c1 == lvl1
+        rows = lambda book: sorted(  # noqa: E731
+            (r.cell, r.sub, tuple(r.c), r.n_members) for r in book.collect()
+        )
+        assert rows(fused_book) == rows(own_book)
+        assert sum(r[3] for r in rows(own_book)) == n
+    finally:
+        fused_book.unpersist()
+        own_book.unpersist()
 
 
 # --- alternating-star connected components ----------------------------------

@@ -30,11 +30,6 @@ def test_q5_broadcasts_dimensions(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 4  # nation/region/customer/supplier
 
 
-def test_top_k_uses_take_ordered(spark, sf_dir):
-    plan = physical_plan(spark, "top_expensive_orders", sf_dir)
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_semi_anti_join_operators(spark, sf_dir):
     plan = physical_plan(spark, "customer_semi_anti", sf_dir)
     assert "LeftSemi" in plan
@@ -48,8 +43,7 @@ def test_cdc_envelopes_no_python_no_shuffle(spark, sf_dir):
 
 
 def test_text_ops_stay_jvm_side(spark, sf_dir):
-    for name in ["doc_text_stats", "lang_id_confusion"]:
-        assert "EvalPython" not in physical_plan(spark, name, sf_dir), name
+    assert "EvalPython" not in physical_plan(spark, "lang_id_confusion", sf_dir)
     # doc_fingerprints moved to the Arrow-vectorized portable hash in round 2
     # (HOF char-fold was interpreted + 2.5 s); Arrow batches are sanctioned,
     # row-at-a-time Python is not.
@@ -70,7 +64,9 @@ def test_similarity_uses_arrow_batches(spark, sf_dir):
 
 
 def test_decontamination_broadcasts_benchmark_set(spark, sf_dir):
-    plan = physical_plan(spark, "doc_decontamination", sf_dir)
+    from crdb_changefeed_publisher_spark.plans.llm import _contamination
+
+    plan = _contamination(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     # the benchmark n-gram set (tiny by contract) must be the build side of
     # a broadcast join — the corpus side never shuffles against it
     assert "BroadcastHashJoin" in plan
@@ -78,30 +74,28 @@ def test_decontamination_broadcasts_benchmark_set(spark, sf_dir):
 
 
 def test_session_caches_are_shared_and_keyed(spark, sf_dir):
-    """The ANN index and the contamination stats materialize ONCE per
-    (session, sf_dir) and are shared across their consumer queries: the
-    cache returns the identical persisted frame, a different sf_dir gets
-    its own entry, and the consumers' plans read the cached relation
-    (InMemoryTableScan) instead of re-encoding."""
-    from crdb_changefeed_publisher_spark.plans.llm import _contamination, _encoded_index
+    """The MinHash pair table and the contamination stats materialize ONCE
+    per (session, sf_dir) and are shared across their consumer queries:
+    the cache returns the identical persisted frame, a different sf_dir
+    gets its own entry, and the consumers' plans read the cached relation
+    (InMemoryTableScan) instead of recomputing it."""
+    from crdb_changefeed_publisher_spark.plans.llm import _contamination, _minhash_pairs
 
-    idx1 = _encoded_index(spark, sf_dir)
-    assert _encoded_index(spark, sf_dir) is idx1
+    pairs1 = _minhash_pairs(spark, sf_dir)
+    assert _minhash_pairs(spark, sf_dir) is pairs1
     c1 = _contamination(spark, sf_dir)
     assert _contamination(spark, sf_dir) is c1
-    assert idx1.storageLevel.useMemory or idx1.storageLevel.useDisk
+    assert pairs1.storageLevel.useMemory or pairs1.storageLevel.useDisk
 
     other_sf = (
         "/root/testdata/sf0.01"
         if sf_dir.rstrip("/") != "/root/testdata/sf0.01"
         else "/root/testdata/sf0.001"
     )
-    assert _encoded_index(spark, other_sf) is not idx1
+    assert _minhash_pairs(spark, other_sf) is not pairs1
 
-    # embedding_topk_ivf retired in swap round 5 — resolve via get_spec so
-    # the shared-index invariant keeps covering it
-    for q in ("embedding_topk_ivf", "embedding_topk_ivfpq", "doc_decontamination"):
-        plan = plans.get_spec(q).fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for q in ("dedup_minhash_portable", "corpus_curation_report"):
+        plan = physical_plan(spark, q, sf_dir)
         assert "InMemoryTableScan" in plan, q
 
 
@@ -114,25 +108,24 @@ def test_plan_digest_ceilings_for_shape_critical_queries(spark, sf_dir):
     before it costs anything at scale."""
     import re
 
+    from crdb_changefeed_publisher_spark.plans.llm import SHARED_PASSES
+
     # query -> (max exchanges, min broadcast joins)
     ceilings = {
         "cdc_envelopes": (0, 0),          # pure map over the scan
         "q1_pricing_summary": (2, 0),     # one partial-agg shuffle (+AQE read)
         "q5_region_revenue": (3, 4),      # star join: dims broadcast, never shuffled
-        "doc_decontamination": (6, 1),    # benchmark set must broadcast
+        "_shared:contamination": (6, 1),  # benchmark set must broadcast
         "salted_skew_agg": (3, 0),        # two-phase salted agg
-        # retired in the r7 swap but still shape-pinned: TakeOrderedAndProject
-        # with no exchange is the whole point of the spec
-        "top_expensive_orders": (0, 0),
         # r6 swap promotion: the incremental-dedup probes must broadcast
         # the shard-side band/hash tables; digest row 8 exch / 3 bcast
         "dedup_incremental": (10, 2),
     }
-    specs = dict(plans.all_specs())
-    specs.update(plans.retired_specs())
+    builders = {name: spec.fn for name, spec in plans.all_specs().items()}
+    builders["_shared:contamination"] = SHARED_PASSES["contamination"]
     problems = []
     for name, (max_exch, min_bcast) in ceilings.items():
-        df = specs[name].fn(spark, sf_dir)
+        df = builders[name](spark, sf_dir)
         df.collect()  # drive AQE to the final plan
         plan = df._jdf.queryExecution().executedPlan().toString()
         plan = plan.split("== Initial Plan ==")[0]

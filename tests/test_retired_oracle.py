@@ -46,13 +46,8 @@ def test_retired_set_is_the_expected_one():
     # Guard against silently retiring something new without updating
     # SURVEY.md's coverage table.
     assert RETIRED == [
-        "asof_purchase_last_click",
-        "best_order_per_customer",
-        "cdc_envelopes_orders",
         "cdc_scd2_history",
         "cdc_upsert_view",
-        "conditional_aggs_orders",
-        "date_funcs_orders",
         "dedup_components_altstar",
         "dedup_embedding_cosine",
         "dedup_minhash_lsh",
@@ -63,72 +58,33 @@ def test_retired_set_is_the_expected_one():
         "doc_boilerplate_report",
         "doc_budget_selection",
         "doc_decontaminate_excise",
-        "doc_decontamination",
         "doc_duplicate_spans",
         "doc_exact_substring_dedup_sliced",
         "doc_pii_scrub",
         "doc_quality_classifier",
         "doc_seq_packing",
         "doc_shuffle_layout",
-        "doc_text_stats",
         "doc_tfidf_top_terms",
-        "doc_train_split",
-        "doc_weighted_sample",
         "domain_mixture_sample",
         "embedding_gram_covariance",
-        "embedding_hard_negatives",
-        "embedding_kmeans",
-        "embedding_kmeans_two_level",
-        "embedding_pca_project",
-        "embedding_topk_ivf",
-        # embedding_topk_ivf_two_level PROMOTED in swap round 10 (r12);
-        # embedding_topk_ivfpq retired in trade
-        "embedding_topk_ivfpq",
-        "embedding_topk_pca",
-        "embedding_topk_pq",
-        "events_funnel_windowed",
         "events_hourly_interp",
         "events_hourly_locf",
         "events_purchase_click_pairs",
-        "events_retention_cohorts",
         "events_rolling_zscore",
         "events_user_skew",
-        "events_variant_stats",
         "events_weighted_median",
         "graph_triangle_counts",
-        "grouping_sets_revenue",
         "kmv_shard_overlap",
         "lang_id_confusion",
         "lang_mixture_weights",
-        "lateral_top_supplier_per_nation",
-        "left_join_order_counts",
-        "lineitem_stats_agg",
-        "lineitem_unpivot_measures",
-        "math_funcs_lineitem",
-        "multimodal_fake_features",
         "multimodal_image_quality",
-        "nation_trade_reachability",
-        "order_price_percentiles",
-        "order_ship_latency",
-        "order_value_buckets",
-        "orderpriority_distinct_customers",
-        "orders_above_avg",
         "orders_price_drift",
         "orders_profile",
         "orders_zorder_key",
-        "pivot_returnflag_linestatus",
-        "q21_waiting_suppliers",
-        "realism_minhash_pairs",
-        "running_revenue_by_customer",
-        "sales_rollup",
         "spanedit_exact_substring",
         "spanedit_passjoin_pairs",
-        "string_funcs_part",
         "supplier_customer_pagerank",
         "token_vocab_coverage",
-        "top_expensive_orders",
-        "top_shingles_corpus",
-        "window_rank_family",
         "word_heavy_hitters",
     ]
 

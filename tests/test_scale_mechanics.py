@@ -214,6 +214,11 @@ def test_fan_out_scan_width_is_data_adaptive(spark, sf_dir, monkeypatch):
     width = adaptive.rdd.getNumPartitions()
     assert 1 <= width <= n_cores
 
+    # A malformed knob falls back to the default instead of raising in
+    # every caller.
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_BYTES_PER_TASK", "32k")
+    assert fan_out_scan(docs, "doc_id").rdd.getNumPartitions() == width
+
     # always=True keeps the unconditional core-count exchange (it replaces
     # a downstream keyed exchange, so width costs nothing new).
     always = fan_out_scan(docs, "doc_id", always=True)

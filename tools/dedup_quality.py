@@ -2,8 +2,8 @@
 """Candidate-quality study for the near-dup detectors: precision/recall of
 each LSH/blocking path against EXACT 3-gram Jaccard ground truth.
 
-The ANN recall study (tools/ann_recall.py) answers "does the index find
-the true neighbors"; this answers the same question for dedup: of the
+The ANN recall study (tools/ivf_dial_study.py) answers "does the index
+find the true neighbors"; this answers the same question for dedup: of the
 document pairs whose TRUE shingle-Jaccard is >= the threshold, how many
 does each candidate generator surface (recall), and how much of what it
 surfaces is real (precision)? Both numbers are properties of the

@@ -14,8 +14,8 @@ Two studies, one JSON line each:
    probes (fraction decay 1/sqrt(n) at sqrt(n) cost) is the chosen
    frontier point.
 
-2. --study clustered: the 16-cluster fixture (tools/ann_recall.py
-   convention: unit-norm centers + 0.35 noise, seed 11) at n=2000 and
+2. --study clustered: the 16-cluster fixture (clustered_fixture:
+   unit-norm centers + 0.35 noise, seed 11) at n=2000 and
    n=20000 through the REAL pipeline — in-engine kmeans_train with both
    dials self-sized (kmeans_k_for / n_probe_for) — demonstrating LEVEL
    recall (measured 1.000 at both scales: 3/8 then 12/128 cells probed)

@@ -189,9 +189,8 @@ def measure_exactsubstr(spark, tier_dir: str, n_docs: int) -> dict:
 def measure_minhash16(spark, tier_dir: str, n_docs: int) -> dict:
     """Decade curve for the REGISTERED realism family (r11 swap round 9):
     the 16-hash/4-band PORTABLE MinHash pair build + degree view, the
-    exact entry points behind realism_minhash_pairs /
-    realism_minhash_degrees (which run only at the 500k tier under their
-    DuckDB twins). Records wall time, rows, and planted recall per tier
+    exact entry points behind realism_minhash_degrees (which runs only at
+    the 500k tier under its DuckDB twin). Records wall time, rows, and planted recall per tier
     so the registered row carries its own scaling story like every other
     near-dup path."""
     import time as _time

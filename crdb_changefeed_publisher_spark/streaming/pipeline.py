@@ -4,11 +4,16 @@ publish in foreachBatch + resolved-cursor mirroring.
 
 Reference lifecycle parity (SURVEY.md §3.1):
 - scan+filter pushed to the source      -> custom source / file replay
-- per-row demux Row|Cursor              -> two filters on the micro-batch
+- per-row demux Row|Cursor              -> one select: a change row gets an
+  (main.rs:211-235, read once)             envelope, a cursor row its
+                                           resolved mark; one read per epoch
 - sequential confirmed publish          -> per-partition sequential publish
-  (main.rs:226-227)                        after repartition by key
+  (main.rs:226-227)                        after repartition by key; the
+                                           publish tasks skip cursor rows
+                                           and hand their marks back
 - cursor UPSERT at resolved marks       -> Spark commit log (authoritative)
-  (cursors.rs:45-57)                       + optional CursorStore mirror
+  (cursors.rs:45-57)                       + optional CursorStore mirror of
+                                           the last mark in feed order
 
 Delivery semantics: at-least-once, exactly like the reference (§2.2 of
 SURVEY.md): publishes happen during the batch; offsets commit after. A crash
@@ -40,42 +45,43 @@ def publish_batch(
     out_dir: str | None = None,
     amqp_addr: str | None = None,
     amqp_queue: str | None = None,
-    key_col: str = "key",
-    envelope_col_name: str = "envelope",
-    seq_col: str | None = None,
     table_col: str | None = None,
     batch_id: int | None = None,
-) -> None:
+) -> list[str]:
     """Publish one micro-batch with per-key ordering: repartition on key so
     all messages for a key land in one partition, then each partition opens
     its queue and publishes sequentially with confirm-on-write.
+
+    `batch` carries `key`, `_seq` (feed order), `envelope` and `resolved`.
+    A row with a non-null envelope is a change and is published; a row with
+    a null envelope is a resolved-cursor row, which is not published (a
+    partition holding only such rows opens no queue) and whose non-null
+    `resolved` mark is handed back. Rows are sorted within each partition
+    by (key, _seq) — a *provable* per-key order (the shuffle alone only
+    preserves arrival order per upstream partition).
 
     `queue_kind` selects the sink per the QueueType registry: 'rabbitmq'
     (reference default, AMQP with publisher confirms) or 'dir' (fsync-confirm
     file queue). 'memory' is rejected here — an executor-side in-memory list
     is invisible to the driver, so silently accepting it would drop data.
 
-    When `seq_col` is given, rows are additionally sorted within each
-    partition by (key, seq) — a *provable* per-key order (the shuffle alone
-    only preserves arrival order per upstream partition).
-
     `batch_id` opts into the idempotent/exactly-once-ish layouts: DirQueue
     truncates its (batch, partition)-keyed file on a replay; RabbitMQQueue
-    stamps (x-batch-id, x-partition-id, x-seq) dedup headers. Requires
-    `seq_col` so the per-partition sequence is deterministic across
-    replays (Spark re-runs a failed batch under the same batch_id with the
-    same content and partitioning).
+    stamps (x-batch-id, x-partition-id, x-seq) dedup headers. The `_seq`
+    sort makes the per-partition sequence deterministic across replays
+    (Spark re-runs a failed batch under the same batch_id with the same
+    content and partitioning).
 
     `table_col` switches on MULTI-TABLE FAN-OUT (a Spark upgrade over the
     reference's one-table/one-queue design, src/cli.yml:6-9): each table's
     envelopes route to their own destination — ``out_dir/<table>/`` for the
     dir queue, queue ``"<amqp_queue>.<table>"`` for AMQP. The shuffle key
     becomes (table, key), preserving per-key order within each table; a
-    partition opens one queue per table it sees."""
+    partition opens one queue per table it sees.
+
+    Returns the resolved marks in `_seq` (feed) order."""
     if queue_kind == "dir" and out_dir is None:
         raise ValueError("queue_kind='dir' requires out_dir")
-    if batch_id is not None and seq_col is None:
-        raise ValueError("batch_id (idempotent publish) requires seq_col for a deterministic replay order")
     if queue_kind not in ("dir", "rabbitmq"):
         raise ValueError(
             f"queue_kind {queue_kind!r} is not publishable from executors; use 'dir' or 'rabbitmq'"
@@ -106,7 +112,17 @@ def publish_batch(
 
         queues: dict[str | None, MessageQueue] = {}
         n = 0
+        seqs: list[int] = []
+        marks: list[str] = []
         for pdf in pdfs:
+            is_change = pdf["envelope"].notna()
+            if not is_change.all():
+                cursors = pdf[~is_change & pdf["resolved"].notna()]
+                seqs.extend(cursors["_seq"].tolist())
+                marks.extend(cursors["resolved"].tolist())
+                pdf = pdf[is_change]
+            if pdf.empty:
+                continue
             if table_col:
                 groups = pdf.groupby(table_col, sort=False)
             else:
@@ -115,24 +131,32 @@ def publish_batch(
                 q = queues.get(t)
                 if q is None:
                     q = queues[t] = open_queue(t)
-                q.publish_many([s.encode() for s in grp[envelope_col_name]])
+                q.publish_many([s.encode() for s in grp["envelope"]])
                 n += len(grp)
         for q in queues.values():
             q.close()
-        yield pd.DataFrame({"n": [n]})
+        # one row carries the count; one row per resolved mark after it
+        yield pd.DataFrame(
+            {
+                "n": [n] + [0] * len(marks),
+                "seq": pd.array([None] + seqs, dtype="Int64"),
+                "resolved": [None] + marks,
+            }
+        )
 
-    cols = [key_col, envelope_col_name] + ([seq_col] if seq_col else [])
+    cols = ["key", "envelope", "_seq", "resolved"]
     if table_col:
         cols.append(table_col)
-        shuffled = batch.repartition(F.col(table_col), F.col(key_col)).select(*cols)
-        sort_cols = [table_col, key_col] + ([seq_col] if seq_col else [])
+        shuffled = batch.repartition(F.col(table_col), F.col("key")).select(*cols)
+        sort_cols = [table_col, "key", "_seq"]
     else:
-        shuffled = batch.repartition(F.col(key_col)).select(*cols)
-        sort_cols = [key_col] + ([seq_col] if seq_col else [])
-    if seq_col:
-        shuffled = shuffled.sortWithinPartitions(*sort_cols)
-    counts = shuffled.mapInPandas(publish_partition, "n long").collect()
-    MESSAGES_SENT.inc(sum(r.n for r in counts))
+        shuffled = batch.repartition(F.col("key")).select(*cols)
+        sort_cols = ["key", "_seq"]
+    shuffled = shuffled.sortWithinPartitions(*sort_cols)
+    rows = shuffled.mapInPandas(publish_partition, "n long, seq long, resolved string").collect()
+    MESSAGES_SENT.inc(sum(r.n for r in rows))
+    marks = sorted((r for r in rows if r.resolved is not None), key=lambda r: r.seq)
+    return [r.resolved for r in marks]
 
 
 def make_foreach_batch(
@@ -146,13 +170,18 @@ def make_foreach_batch(
     idempotent: bool = False,
     on_batch_timing: Callable[[int, float, float], None] | None = None,
 ):
-    """foreachBatch function: demux the micro-batch via the shared transform,
-    publish change-envelopes (with key for ordering) to the selected queue,
-    and mirror the *last* resolved timestamp in feed order to the cursor
-    store (reference main.rs:229-235 persists each resolved mark as it
-    arrives; persisting the batch's last one in feed order reaches the same
-    end state — note HLC strings must NOT be compared lexicographically:
-    '9.x' > '10.x' as strings)."""
+    """foreachBatch function: one pass over the micro-batch. A single select
+    over the decoded batch gives each change row its envelope (with key for
+    ordering) and each resolved-cursor row its mark; the publish job sends
+    the envelopes to the selected queue and hands the marks back, so the
+    mirrored cursor comes from the same read as the published rows.
+
+    The cursor store mirrors the *last* resolved timestamp in feed order
+    (reference main.rs:229-235 persists each resolved mark as it arrives;
+    persisting the batch's last one in feed order reaches the same end
+    state — note HLC strings must NOT be compared lexicographically:
+    '9.x' > '10.x' as strings). `on_batch` gets every mark of the batch in
+    feed order."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         import time as _time
@@ -161,40 +190,33 @@ def make_foreach_batch(
         from crdb_changefeed_publisher_spark.operators.changefeed import (
             decode_changefeed,
             envelope_col,
-            split_changes,
+            is_cursor_row,
         )
 
         # _seq stamps the batch's arrival order (monotonic within each input
         # partition — exact feed order for single-partition sources like the
-        # changefeed reader) so the publish can sort per key.
+        # changefeed reader) so the publish can sort per key and order the
+        # resolved marks. A cursor row gets a null envelope (a malformed
+        # change row still raises in envelope_col).
         decoded = decode_changefeed(batch_df).withColumn(
             "_seq", F.monotonically_increasing_id()
         )
-        changes, cursors = split_changes(decoded)
-        env_cols = ["key", "_seq", envelope_col().alias("envelope")] + (
-            ["table"] if fan_out_tables else []
-        )
-        with_env = changes.select(*env_cols)
-        publish_batch(
-            with_env,
+        cursor = is_cursor_row()
+        cols = [
+            "key",
+            "_seq",
+            F.when(~cursor, envelope_col()).alias("envelope"),
+            F.when(cursor, F.get_json_object(F.col("value"), "$.resolved")).alias("resolved"),
+        ] + (["table"] if fan_out_tables else [])
+        resolved = publish_batch(
+            decoded.select(*cols),
             queue_kind=queue_kind,
             out_dir=out_dir,
             amqp_addr=amqp_addr,
             amqp_queue=amqp_queue,
-            seq_col="_seq",
             table_col="table" if fan_out_tables else None,
             batch_id=batch_id if idempotent else None,
         )
-
-        resolved = [
-            r.resolved
-            for r in cursors.select(
-                F.get_json_object(F.col("value"), "$.resolved").alias("resolved"), "_seq"
-            )
-            .filter(F.col("resolved").isNotNull())
-            .orderBy("_seq")
-            .collect()
-        ]
         if resolved and cursor_store is not None:
             cursor_store.set(resolved[-1])
         if on_batch_timing is not None:

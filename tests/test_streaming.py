@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from crdb_changefeed_publisher_spark.streaming.cursors import (
@@ -14,7 +15,7 @@ from crdb_changefeed_publisher_spark.streaming.cursors import (
     MemoryCursorStore,
 )
 from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT, serve_metrics
-from crdb_changefeed_publisher_spark.streaming.pipeline import run_pipeline
+from crdb_changefeed_publisher_spark.streaming.pipeline import make_foreach_batch, run_pipeline
 from crdb_changefeed_publisher_spark.streaming.queues import DirQueue
 
 
@@ -240,6 +241,132 @@ def test_midrun_kill_resume_idempotent_sink_no_duplicates(spark, tmp_path):
     keys = [json.loads(m)["key"] for m in msgs]
     assert len(set(keys)) == n_changes
     assert len(msgs) == n_changes  # replay overwrote, not appended
+
+
+WIRE_SCHEMA = "table string, key binary, value binary"
+
+
+def change_row(table: str, i: int) -> tuple:
+    return (table, f"[{i}]".encode(), json.dumps({"after": {"a": i}}).encode())
+
+
+def cursor_row(value: dict) -> tuple:
+    return (None, None, json.dumps(value).encode())
+
+
+def run_batch(spark, rows, out_dir, partitions: int = 3, batch_id: int = 0, **kwargs):
+    """One make_foreach_batch call on `rows`, sliced in order over
+    `partitions` input partitions; returns (resolved list, mirrored cursor,
+    messages sent)."""
+    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), WIRE_SCHEMA)
+    store, seen = MemoryCursorStore(), []
+    before = MESSAGES_SENT.value
+    make_foreach_batch(
+        out_dir, store, on_batch=lambda _b, _n, resolved: seen.append(resolved), **kwargs
+    )(batch, batch_id)
+    return seen[0], store.get(), MESSAGES_SENT.value - before
+
+
+def published(out_dir: str) -> list[bytes]:
+    """Every message under out_dir, whether in one queue or fanned out."""
+    out = []
+    for dirpath, _, names in os.walk(out_dir):
+        if names:
+            out.extend(DirQueue.read_all(dirpath))
+    return out
+
+
+def test_fused_publish_matches_two_pass(spark, tmp_path):
+    """The one-pass foreachBatch hands back the same resolved marks, and
+    mirrors the same cursor, as the two-pass extraction (demux, then the
+    cursor rows ordered by _seq) on the same decoded batch; its envelopes
+    are the two-pass envelopes, byte for byte, with and without fan-out.
+    Feed order, string max and numeric max of the marks all disagree."""
+    from crdb_changefeed_publisher_spark.operators.changefeed import (
+        decode_changefeed,
+        extract_resolved,
+        split_changes,
+        to_envelopes,
+    )
+
+    marks = {2: "10.0,0", 21: "95.0,0", 40: "100.0,0", 59: "9.0,0"}
+    rows = [
+        cursor_row({"resolved": marks[i]}) if i in marks
+        else change_row("orders" if i % 2 else "lineitem", i % 7)
+        for i in range(60)
+    ]
+    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), WIRE_SCHEMA)
+    decoded = decode_changefeed(batch).withColumn("_seq", F.monotonically_increasing_id())
+    changes, cursors = split_changes(decoded)
+    two_pass = [r.resolved for r in extract_resolved(cursors.orderBy("_seq")).collect()]
+    assert two_pass == ["10.0,0", "95.0,0", "100.0,0", "9.0,0"]
+    envelopes = sorted(r.envelope.encode() for r in to_envelopes(changes).collect())
+
+    plain, fanned = str(tmp_path / "plain"), str(tmp_path / "fanned")
+    assert run_batch(spark, rows, plain) == (two_pass, "9.0,0", 56)
+    assert run_batch(spark, rows, fanned, fan_out_tables=True) == (two_pass, "9.0,0", 56)
+    assert sorted(os.listdir(fanned)) == ["lineitem", "orders"]
+    assert sorted(published(plain)) == sorted(published(fanned)) == envelopes
+
+
+ALL_RESOLVED = [cursor_row({"resolved": f"{v}.0,0"}) for v in (10, 11, 9)]
+
+
+@pytest.mark.parametrize(
+    "rows, idempotent, expected",
+    [
+        (ALL_RESOLVED, False, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0)),
+        (ALL_RESOLVED, True, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0)),
+        ([], False, ([], None, 0)),
+    ],
+    ids=["all-resolved", "all-resolved-idempotent", "empty"],
+)
+def test_batch_without_changes_opens_no_queue(spark, tmp_path, rows, idempotent, expected):
+    """An all-resolved batch mirrors its last mark and an empty one sets no
+    cursor; neither publishes or creates a queue file (not even an empty
+    batch-keyed one)."""
+    out = str(tmp_path / "out")
+    assert run_batch(spark, rows, out, idempotent=idempotent) == expected
+    assert not os.path.exists(out)
+
+
+def test_cursor_row_without_resolved_is_skipped(spark, tmp_path):
+    rows = [change_row("t", 1), cursor_row({"resolved": "5.0,0"}), change_row("t", 2),
+            cursor_row({"other": "6.0,0"})]
+    out = str(tmp_path / "out")
+    assert run_batch(spark, rows, out) == (["5.0,0"], "5.0,0", 2)
+    assert len(published(out)) == 2
+
+
+def test_change_row_with_null_key_raises(spark, tmp_path):
+    rows = [change_row("t", 1), cursor_row({"resolved": "5.0,0"}),
+            ("t", None, json.dumps({"after": {"a": 3}}).encode())]
+    with pytest.raises(Exception, match="malformed change row"):
+        run_batch(spark, rows, str(tmp_path / "out"))
+
+
+def test_foreach_batch_reads_the_batch_once(spark, tmp_path):
+    """One pass per micro-batch, counted rather than timed: a Python UDF on
+    `value` counts every row the epoch evaluates, and the epoch runs at
+    most two jobs (the shuffle map stage and the publish stage)."""
+    sc = spark.sparkContext
+    evaluated = sc.accumulator(0)
+
+    @F.udf("binary")
+    def counted(value):
+        evaluated.add(1)
+        return value
+
+    base = wire_feed_df(spark, 200, 10)
+    batch = base.select("table", "key", counted("value").alias("value"))
+    group = "test-foreach-batch-reads-once"
+    sc.setJobGroup(group, "one epoch")
+    try:
+        make_foreach_batch(str(tmp_path / "out"), MemoryCursorStore())(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert evaluated.value == 200
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_metrics_endpoint(tmp_path):

@@ -9,7 +9,11 @@ harness — see BASELINE.md); its structural ceiling is one in-flight message
 per publish confirm, so micro-batched partition-parallel publishing wins on
 shape. This tool records our side of that comparison.
 
-Prints ONE JSON line: {"metric": "cdc_stream_rows_per_sec", ...}.
+Prints ONE JSON line: {"metric": "cdc_stream_rows_per_sec", ...}. Beside
+the rows/s it carries the micro-batch phases: the median over the epochs
+that read rows of each phase in the query's progress reports
+(``phase_ms_median``), the number of those epochs, and the Spark jobs the
+query ran per epoch.
 
 Usage: python tools/stream_bench.py [--rows 50000] [--batch-limit 10000]
 """
@@ -59,6 +63,27 @@ def write_feed(
     return changes
 
 
+PHASES = ("latestOffset", "addBatch", "walCommit", "commitOffsets")
+
+
+def epoch_phases(spark, query) -> dict:
+    """Per-phase medians, epoch count and jobs per epoch of a finished
+    streaming query. Streaming jobs run under the query's runId as their
+    job group."""
+    from statistics import median
+
+    epochs = [p for p in query.recentProgress if p.numInputRows > 0]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    return {
+        "phase_ms_median": {
+            name: median(p.durationMs.get(name, 0) for p in epochs) if epochs else None
+            for name in PHASES
+        },
+        "epochs": len(epochs),
+        "jobs_per_epoch": round(len(jobs) / len(epochs), 2) if epochs else None,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=50_000)
@@ -79,12 +104,19 @@ def main() -> None:
     from crdb_changefeed_publisher_spark.streaming.pipeline import run_pipeline
     from crdb_changefeed_publisher_spark.streaming.queues import DirQueue
 
+    # keep every job in the status store, so jobs_per_epoch counts all of
+    # them (Spark keeps the last 1000); must be set before the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.ui.retainedJobs=1000000 " + os.environ.get(
+        "PYSPARK_SUBMIT_ARGS", "pyspark-shell"
+    )
     work = tempfile.mkdtemp(prefix="stream_bench_")
     try:
         feed = os.path.join(work, "feed.jsonl")
         n_changes = write_feed(feed, args.rows, args.resolved_every)
 
         spark = get_spark("stream-bench")
+        # keep every epoch's progress report (Spark keeps the last 100)
+        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
         register(spark)
         reader = (
             spark.readStream.format("crdb_changefeed")
@@ -100,7 +132,7 @@ def main() -> None:
         stream = reader.load()
         out_dir = os.path.join(work, "out")
         t0 = time.time()
-        run_pipeline(stream, out_dir, os.path.join(work, "ckpt"), drain_all=True)
+        query = run_pipeline(stream, out_dir, os.path.join(work, "ckpt"), drain_all=True)
         wall = time.time() - t0
 
         published = len(DirQueue.read_all(out_dir))
@@ -116,6 +148,7 @@ def main() -> None:
                     "batch_limit": args.batch_limit,
                     "partitioned": args.partitioned,
                     "wall_sec": round(wall, 2),
+                    **epoch_phases(spark, query),
                 }
             )
         )

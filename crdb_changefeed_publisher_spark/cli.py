@@ -49,10 +49,9 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--epoch-rows",
         type=int,
         default=0,
-        help="partitioned-reader admission cap: max feed lines per steady-"
-        "state micro-batch (0 = all available; bounds the at-least-once "
-        "replay window and per-epoch state cost — the first epoch after a "
-        "checkpoint restart is always unbounded)",
+        help="partitioned-reader admission cap: max feed lines per "
+        "micro-batch (0 = all available; bounds the at-least-once replay "
+        "window and per-epoch state cost)",
     )
     p.add_argument(
         "--idempotent",

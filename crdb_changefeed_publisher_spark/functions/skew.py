@@ -35,19 +35,3 @@ def salted_agg(
     return phase1.groupBy(*key_cols).agg(
         *[F.sum(f"_p_{name}").alias(name) for name in aggs]
     )
-
-
-def salted_join_broadcast_hot_keys(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    hot_keys: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Split a join into (hot, cold) paths: rows with keys in `hot_keys`
-    (small, e.g. from a frequency pre-scan) join via broadcast; the rest
-    join normally. Union the two results. Returns (hot_part, cold_part)."""
-    hot = F.broadcast(hot_keys.select(F.col(key).alias("_hot_key")).distinct())
-    fact_tagged = fact.join(hot, fact[key] == F.col("_hot_key"), "left")
-    hot_fact = fact_tagged.filter(F.col("_hot_key").isNotNull()).drop("_hot_key")
-    cold_fact = fact_tagged.filter(F.col("_hot_key").isNull()).drop("_hot_key")
-    return hot_fact.join(F.broadcast(dim), key), cold_fact.join(dim, key)

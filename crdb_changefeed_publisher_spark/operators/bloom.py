@@ -178,61 +178,6 @@ def bloom_pass_flags_join(
     )
 
 
-def bloom_block_states(
-    df: DataFrame,
-    col: str,
-    n_blocks: int = 256,
-    block_words: int = 8,
-    k: int = 5,
-) -> DataFrame:
-    """Blocked-Bloom states for a batch corpus: (block int, words
-    array<long>), one row per non-empty block — the BOOTSTRAP artifact for
-    streaming/stateful.py::bloom_seen_filter(initial_states=...).
-
-    Bit-identical to folding the corpus through the streaming filter's own
-    insertion arithmetic (same kmv_hash content hash, same block
-    assignment, same affine bit positions, same signed int64 packing), so
-    a streaming query seeded with this state treats every corpus content
-    as already-seen — the crawl/ingest pattern where yesterday's corpus is
-    a batch table and today's arrivals are a stream, without replaying the
-    corpus through the stream. One JVM aggregation pass (explode k probes
-    -> bit_or per (block, word_idx) -> dense-pack); the corpus text never
-    leaves the scan stage.
-    """
-    _check_dials(block_words * 64, k)
-    m_block = block_words * 64
-    h = kmv_hash(F.col(col), seed=BLOOM_SEED)
-    masks = F.array(*[F.lit(v) for v in _POW2])
-    pos = [
-        F.pmod(F.pmod(h * F.lit(a) + F.lit(b), F.lit(BLOOM_MOD)), F.lit(m_block))
-        for a, b in BLOOM_COEFFS[:k]
-    ]
-    probes = df.select(
-        F.pmod(h, F.lit(n_blocks)).cast("int").alias("block"),
-        F.explode(F.array(*pos)).alias("pos"),
-    ).select(
-        "block",
-        F.shiftright("pos", 6).alias("word_idx"),
-        F.element_at(masks, (F.pmod(F.col("pos"), F.lit(64)) + 1).cast("int")).alias(
-            "mask"
-        ),
-    )
-    per_word = probes.groupBy("block", "word_idx").agg(F.bit_or("mask").alias("word"))
-    return (
-        per_word.groupBy("block")
-        .agg(F.map_from_entries(F.collect_list(F.struct("word_idx", "word"))).alias("m"))
-        .select(
-            "block",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(block_words - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("m"), i.cast("long")), F.lit(0).cast("long")
-                ),
-            ).alias("words"),
-        )
-    )
-
-
 def bloom_m_bits_for(n_keys: int, bits_per_key: int = 16, lo: int = 10, hi: int = 26) -> int:
     """Executable sizing rule: the smallest power of two >= n_keys *
     bits_per_key (16 bits/key with k=5 gives ~3.6e-4 fp — the classic

@@ -34,19 +34,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
 
 def synthetic_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table for plumbing tests: payload bytes are a

@@ -172,7 +172,6 @@ def pack_sequences(
     capacity: int = 512,
     text_col: str = "text",
     id_col: str = "doc_id",
-    tokens_col: str | None = None,
 ) -> DataFrame:
     """Concat-and-split SEQUENCE PACKING — the standard layout step of an
     LLM pretraining pipeline: documents are laid end to end in a
@@ -191,11 +190,8 @@ def pack_sequences(
     into one task; here the only unpartitioned window is over the tiny
     per-partition stats frame. Deterministic, so the packing is
     reproducible across runs/restarts (resumable shard builds).
-
-    `tokens_col`: use a precomputed token-count column instead of
-    whitespace `word_count(text_col)` (e.g. real tokenizer counts).
     """
-    n_tok = (F.col(tokens_col) if tokens_col else word_count(F.col(text_col))).cast("long")
+    n_tok = word_count(F.col(text_col)).cast("long")
     base = docs.select(F.col(id_col).alias("doc_id"), n_tok.alias("n_tokens"))
     parted = base.repartitionByRange("doc_id").withColumn("_pid", F.spark_partition_id())
     w_local = (
@@ -580,19 +576,6 @@ def token_vocab(
             "coverage", F.round(F.sum("n_occurrences").over(w_cum) / F.col("_t"), 6)
         )
         .select("word", "n_occurrences", "rnk", "coverage")
-    )
-
-
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    t = F.col(text_col)
-    n_words = word_count(t)
-    return docs.select(
-        F.col(id_col),
-        F.length(t).alias("n_chars_computed"),
-        n_words.alias("n_tokens"),
-        F.round(
-            (F.length(F.replace(F.trim(t), F.lit(" "), F.lit(""))) / n_words).cast("double"), 4
-        ).alias("avg_token_len"),
     )
 
 
@@ -1045,11 +1028,8 @@ def exact_substring_excise_sliced(
     # convention used everywhere else — where pmod(id, n) would throw.
     # Slices accumulate in an .inprogress dir that RENAMES into place after
     # the last slice, so a mid-run crash never leaves a partial corpus
-    # readable at out_path (a rerun starts clean). At 100 TB this rewrite
-    # lands in the manifest-committed lakehouse sink instead
-    # (streaming/table_sink.py::write_batch — readers see only committed
-    # snapshots); the rename gives the same reader-facing atomicity on a
-    # plain directory.
+    # readable at out_path (a rerun starts clean): readers see either the
+    # previous output or the complete new one.
     tmp_out = f"{out_path}.inprogress"
     shutil.rmtree(tmp_out, ignore_errors=True)
     for s in range(n_slices):

@@ -323,15 +323,17 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
     Offsets are {"pos": <line count>}; by default each micro-batch claims
     ALL lines available at planning time. `epoch_rows` caps the rows
     ADMITTED per micro-batch (the maxOffsetsPerTrigger analog the Python
-    stream API lacks a ReadLimit hook for): latestOffset advances an
-    internal high-water mark by at most epoch_rows per plan. The mark is
-    reset on restart — a stateful cap that forgot the committed position
-    could hand Spark an offset BEHIND the checkpoint — so the FIRST epoch
-    after a restart is unbounded (one catch-up batch covering the gap);
-    every steady-state epoch is bounded, which is what bounds the
-    at-least-once replay window and the per-epoch commit/state cost on a
-    long-running query. `batch_limit` is a simple-reader option; it is
-    ignored here.
+    stream API lacks a ReadLimit hook for): latestOffset returns at most
+    epoch_rows past the high-water mark, the highest end offset Spark has
+    planned through `partitions` in this run, or the initial offset 0 when
+    it has planned none. The mark is never behind the checkpoint: on
+    pyspark 4.1 a restarted query calls `partitions(c, c)`, c being the
+    offset log's last end, before its first latestOffset (then re-plans an
+    uncommitted batch, if any), while a clean start calls latestOffset
+    before initialOffset with nothing planned. So every epoch is bounded,
+    the first one of a clean start or a restart included, which bounds
+    the at-least-once replay window and the per-epoch commit cost.
+    `batch_limit` is a simple-reader option; it is ignored here.
 
     Driver memory: the line index stores one byte offset per `index_stride`
     lines (default 256) — O(lines/stride), not O(lines) — and that strided
@@ -368,7 +370,7 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
         # admission control: max lines per planned micro-batch (0 = all
         # available); see class docstring for the restart semantics
         self.epoch_rows = int(options.get("epoch_rows", "0") or 0)
-        self._hwm: int | None = None  # last planned end offset (this run)
+        self._hwm = 0  # highest planned end offset (this run)
         # _stride_bytes[j] = byte offset of line (j * stride)'s start
         self._stride_bytes: list[int] = [0]
         self._n_lines = 0
@@ -399,16 +401,11 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
         return f.tell()
 
     def initialOffset(self) -> dict:
-        # only called on a FRESH start (a restart resumes from the
-        # checkpoint instead) — so arming the admission cap here bounds
-        # every epoch of a clean run, while a restarted run keeps its
-        # first (catch-up) epoch unbounded because _hwm is still None
-        self._hwm = 0
         return {"pos": 0}
 
     def latestOffset(self) -> dict:
         self._extend_index()
-        if self.epoch_rows > 0 and self._hwm is not None:
+        if self.epoch_rows > 0:
             return {"pos": min(self._n_lines, self._hwm + self.epoch_rows)}
         return {"pos": self._n_lines}
 
@@ -418,8 +415,9 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
         s, e = start["pos"], end["pos"]
         # high-water mark for epoch_rows admission: the next latestOffset
         # advances from this batch's planned end (monotone within a run;
-        # reset to None by restart, which re-creates the reader)
-        self._hwm = max(self._hwm or 0, e)
+        # a restart re-creates the reader, and Spark re-plans from its
+        # checkpoint here before asking for the next latestOffset)
+        self._hwm = max(self._hwm, e)
         if s < self.gc_floor:
             import logging
 

@@ -277,15 +277,3 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str, buckets: int = 8) -
             "overwrite"
         ).saveAsTable(table)
     return out
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each fixture table as a temp view (for the SQL-first plans)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

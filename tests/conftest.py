@@ -8,21 +8,6 @@ import pytest
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-# transformWithStateInPandas needs google.protobuf in the Spark-spawned
-# Python workers. The container has no protobuf install, but the Cloud SDK
-# bundles a pure-Python runtime; vendor/pbshim/sitecustomize.py wires it up
-# in every child interpreter. Must happen BEFORE the JVM starts so workers
-# inherit the env (see that file's docstring).
-_PBSHIM = os.path.join(REPO_ROOT, "vendor", "pbshim")
-_SDK_PB = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    if os.path.isdir(_SDK_PB):
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in (_PBSHIM, os.environ.get("PYTHONPATH")) if p
-        )
-
 # session.get_spark defaults the driver heap to 48g. On a machine with less
 # RAM than that the test JVM's heap grows until the kernel OOM-kills it part
 # way through the suite, so cap the default at half the physical memory, and

@@ -288,35 +288,6 @@ def test_repetition_gate_is_optional_and_drops_loop_docs(spark):
     assert {r.doc_id for r in gated.collect()} == {1}
 
 
-def test_pack_sequences_composes_with_bpe_token_counts(spark):
-    """pack_sequences(tokens_col=...) over REAL tokenizer counts from
-    apply_bpe: bins cut on BPE token totals, not whitespace counts."""
-    from pyspark.sql import functions as F2
-
-    from crdb_changefeed_publisher_spark.operators import text as t
-    from crdb_changefeed_publisher_spark.operators import tokenize as bpe
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    merges = bpe.learn_bpe(docs, n_merges=32)
-    toks = bpe.apply_bpe(docs, merges).select("doc_id", "n_tokens")
-    packed = t.pack_sequences(
-        docs.join(toks, "doc_id"), capacity=512, tokens_col="n_tokens"
-    )
-    rows = {r.doc_id: r for r in packed.collect()}
-    assert len(rows) == docs.count()
-    # exact check: recompute the concat-and-split layout in Python
-    cum = 0
-    for i in sorted(rows):
-        r = rows[i]
-        assert (r.bin_id, r.offset_in_bin) == (cum // 512, cum % 512), i
-        assert r.spans_bins == (cum % 512 + r.n_tokens > 512), i
-        cum += r.n_tokens
-    # BPE counts differ from whitespace counts -> packing differs too
-    ws = t.pack_sequences(docs, capacity=512)
-    ws_rows = {r.doc_id: r.bin_id for r in ws.collect()}
-    assert any(ws_rows[i] != rows[i].bin_id for i in rows)
-
-
 def test_source_scorecard_verdict_semantics(spark):
     """Hand-built sources pin the verdict thresholds: a high-quality
     original source keeps, a mostly-duplicated one fails the dup gate

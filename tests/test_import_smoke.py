@@ -4,6 +4,7 @@ leaves a dangling import fails here in seconds."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -47,3 +48,69 @@ def test_every_module_and_tool_imports_without_spark():
     assert proc.returncode != 2, "an import started a SparkContext"
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert not proc.stdout.strip(), proc.stdout
+
+
+PKG = "crdb_changefeed_publisher_spark"
+# The live entry points: the CDC publisher CLI, the query registry (its
+# package __init__ imports every spec module) and the changefeed source.
+ENTRY_POINTS = (f"{PKG}.cli", f"{PKG}.plans", f"{PKG}.sources.crdb_changefeed")
+
+
+def _package_modules() -> dict[str, str]:
+    """Dotted module name -> file path for every .py file in the package;
+    a package's __init__.py maps to the package name itself."""
+    mods = {}
+    for dirpath, _, files in os.walk(os.path.join(REPO_ROOT, PKG)):
+        rel = os.path.relpath(dirpath, REPO_ROOT).split(os.sep)
+        for f in files:
+            if f.endswith(".py"):
+                parts = rel if f == "__init__.py" else rel + [f[:-3]]
+                mods[".".join(parts)] = os.path.join(dirpath, f)
+    return mods
+
+
+def _imported_names(name: str, path: str, is_pkg: bool):
+    """Every module name an `import` / `from ... import` anywhere in the file
+    (function-local ones included) may load; `from a import b` yields both
+    `a` and `a.b`, since b may be a submodule."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    here = name.split(".") if is_pkg else name.split(".")[:-1]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                anchor = here[: len(here) - node.level + 1]
+                base = ".".join(anchor + ([base] if base else []))
+            yield base
+            yield from (f"{base}.{a.name}" for a in node.names)
+
+
+def _import_closure(mods: dict[str, str]) -> set[str]:
+    seen: set[str] = set()
+    todo = list(ENTRY_POINTS)
+    while todo:
+        name = todo.pop()
+        if name in seen or name not in mods:
+            continue
+        seen.add(name)
+        # importing a.b.c runs a/__init__ and a/b/__init__ first
+        todo.extend(name.rsplit(".", i)[0] for i in range(1, name.count(".") + 1))
+        is_pkg = mods[name].endswith("__init__.py")
+        todo.extend(_imported_names(name, mods[name], is_pkg))
+    return seen
+
+
+def test_every_package_module_is_reached_from_a_live_entry_point():
+    """Static, Spark-free: a package module that neither the CLI, the query
+    registry nor the changefeed source imports (transitively) is code no
+    query, CDC path or benchmark runs. Package __init__s count as reached."""
+    mods = _package_modules()
+    assert all(e in mods for e in ENTRY_POINTS), ENTRY_POINTS
+    reached = _import_closure(mods)
+    unreached = sorted(
+        m for m, p in mods.items() if m not in reached and not p.endswith("__init__.py")
+    )
+    assert not unreached, f"modules outside the live import closure: {unreached}"

@@ -744,42 +744,6 @@ def test_linkage_degrees_bounded_and_consistent(spark, sf_dir):
     pairs.unpersist()
 
 
-def test_bloom_block_states_matches_python_fold(spark, sf_dir):
-    """operators/bloom.bloom_block_states: the one-pass JVM builder's
-    per-block words equal a Python insertion fold with the same hash /
-    block / position arithmetic, signed int64 packing included."""
-    import hashlib
-
-    from crdb_changefeed_publisher_spark.operators import bloom
-
-    n_blocks, block_words, k = 64, 8, 5
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    got = {
-        int(r.block): [int(w) for w in r.words]
-        for r in bloom.bloom_block_states(
-            docs, "text", n_blocks=n_blocks, block_words=block_words, k=k
-        ).collect()
-    }
-
-    def h52(text: str) -> int:
-        return int(hashlib.sha256(f"bloom-v1:{text}".encode()).hexdigest()[:13], 16)
-
-    m_block = block_words * 64
-    want: dict[int, list[int]] = {}
-    for (text,) in docs.collect():
-        h = h52(text)
-        b = h % n_blocks
-        words = want.setdefault(b, [0] * block_words)
-        for a, c in bloom.BLOOM_COEFFS[:k]:
-            p = ((h * a + c) % bloom.BLOOM_MOD) % m_block
-            words[p >> 6] |= 1 << (p & 63)
-    want_signed = {
-        b: [w - (1 << 64) if w >= 1 << 63 else w for w in ws]
-        for b, ws in want.items()
-    }
-    assert got == want_signed and len(got) > 0
-
-
 def test_block_saturation_diagnostic(spark, sf_dir):
     from crdb_changefeed_publisher_spark.operators import linkage
 

@@ -359,24 +359,6 @@ def test_chunk_documents_windows_and_strides(spark):
     assert [(r.chunk_idx, r.chunk_text, r.n_tokens) for r in one] == [(0, "a b", 2)]
 
 
-def test_word_ngrams_udtf_matches_relational_shingles(spark):
-    from crdb_changefeed_publisher_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    docs = load_table(spark, SF, "documents").limit(20)
-    docs.createOrReplaceTempView("udtf_docs")
-    via_udtf = {
-        (r.doc_id, r.gram)
-        for r in spark.sql(
-            "SELECT d.doc_id, g.gram FROM udtf_docs d, LATERAL word_ngrams(d.text, 3) g"
-        ).collect()
-    }
-    via_relational = {
-        (r.doc_id, r.shingle) for r in dedup.shingle_rows(docs, n=3).collect()
-    }
-    assert via_udtf == via_relational and via_udtf
-
-
 def test_global_rank_matches_naive_window(spark):
     """Two-phase global rank == single-partition window for every kind,
     including ties, on a fact-sized (orders) input."""
@@ -772,82 +754,6 @@ def test_hard_negatives_exclude_query_label(spark):
     # without the mask, at least one same-label neighbor appears somewhere
     plain = similarity.brute_force_topk(q, emb, k=3)
     assert any(labels[r.neighbor_id] == labels[r.query_id] for r in plain.collect())
-
-
-def test_bpe_learn_toy_corpus_and_lossless_apply(spark):
-    """Classic BPE toy: 'low' x5, 'lower' x2, 'newest' x6, 'widest' x3 —
-    frequent pairs merge first, ties break lexicographically; applying the
-    merges is lossless and deterministic."""
-    from crdb_changefeed_publisher_spark.operators import tokenize as bpe
-
-    corpus = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
-    docs = docs_df(spark, [(0, corpus)])
-    merges = bpe.learn_bpe(docs, n_merges=10)
-    assert merges == bpe.learn_bpe(docs, n_merges=10)  # deterministic
-    # 'es' (9), 'est' (9), 'est</w>' (9) dominate; 'lo' and 'low' follow
-    assert merges[0] == ("e", "s")
-    assert ("es", "t") in merges and ("l", "o") in merges
-    out = {r.doc_id: r for r in bpe.apply_bpe(docs, merges).collect()}
-    r = out[0]
-    assert r.n_words == 16
-    assert r.n_tokens < sum(len(w) + 1 for w in corpus.split(" "))  # compressed
-    rebuilt = "".join(r.tokens).replace(bpe.END, " ").strip()
-    assert rebuilt == corpus
-
-
-def test_bpe_matches_python_reference(spark):
-    """learn_bpe + apply_bpe == a direct single-process implementation of
-    the published algorithm on the same corpus."""
-    from collections import Counter
-
-    from crdb_changefeed_publisher_spark.operators import tokenize as bpe
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "the quick brown cat naps under the warm sun",
-        "quick thinking wins the slow race every time",
-    ]
-
-    def ref_learn(texts, n):
-        vocab = Counter()
-        for t in texts:
-            for w in t.strip().split(" "):
-                vocab[tuple(w) + (bpe.END,)] += 1
-        merges = []
-        for _ in range(n):
-            pairs = Counter()
-            for syms, f in vocab.items():
-                for p in zip(syms, syms[1:]):
-                    pairs[p] += f
-            if not pairs:
-                break
-            best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            if pairs[best] < 2:
-                break
-            merges.append(best)
-            vocab = Counter({bpe._merge_word(s, best): f for s, f in vocab.items()})
-        return merges
-
-    docs = docs_df(spark, list(enumerate(texts)))
-    got = bpe.learn_bpe(docs, n_merges=30)
-    assert got == ref_learn(texts, 30)
-
-    ranks = {p: i for i, p in enumerate(got)}
-    applied = {r.doc_id: r.tokens for r in bpe.apply_bpe(docs, got).collect()}
-    for i, t in enumerate(texts):
-        want = [tok for w in t.split(" ") for tok in bpe.encode_word(w, ranks)]
-        assert applied[i] == want
-
-
-def test_bpe_lossless_on_fixture_corpus(spark):
-    from crdb_changefeed_publisher_spark.operators import tokenize as bpe
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    merges = bpe.learn_bpe(docs, n_merges=64)
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    for r in bpe.apply_bpe(docs, merges).collect():
-        rebuilt = "".join(r.tokens).replace(bpe.END, " ").strip()
-        assert rebuilt == " ".join(texts[r.doc_id].strip().split(" ")), r.doc_id
 
 
 def test_range_join_buckets_property_random_timestamps(spark):

@@ -399,25 +399,21 @@ def test_partitioned_reader_checkpoint_resume(spark, tmp_path):
 
 
 def test_partitioned_reader_epoch_rows_admission(tmp_path):
-    """epoch_rows bounds every steady-state micro-batch of a CLEAN run
-    (initialOffset arms the high-water mark at 0) but leaves the first
-    epoch of a RESTARTED run unbounded (no initialOffset call -> the cap
-    cannot hand Spark an offset behind the checkpoint; the catch-up batch
-    covers the whole gap instead)."""
+    """epoch_rows bounds every micro-batch, driven in Spark's clean-start
+    call order: latestOffset BEFORE initialOffset, with nothing planned
+    yet, so the cap must already be armed at the initial offset 0."""
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
         ChangefeedPartitionedStreamReader,
     )
 
     feed = str(tmp_path / "feed.jsonl")
     write_feed(feed, 100, 10)
-
-    # clean start: epochs advance epoch_rows at a time
     r = ChangefeedPartitionedStreamReader(
         {"replay": feed, "read_partitions": "2", "epoch_rows": "30"}
     )
-    assert r.initialOffset() == {"pos": 0}
     e1 = r.latestOffset()
     assert e1 == {"pos": 30}
+    assert r.initialOffset() == {"pos": 0}
     r.partitions({"pos": 0}, e1)
     e2 = r.latestOffset()
     assert e2 == {"pos": 60}
@@ -429,12 +425,53 @@ def test_partitioned_reader_epoch_rows_admission(tmp_path):
     r.partitions({"pos": 90}, {"pos": 100})
     assert r.latestOffset() == {"pos": 100}  # no new data: no progress
 
-    # restart (fresh reader, checkpoint at 40): Spark does NOT call
-    # initialOffset, so the first latestOffset claims everything available
-    r2 = ChangefeedPartitionedStreamReader(
-        {"replay": feed, "read_partitions": "2", "epoch_rows": "30"}
-    )
-    assert r2.latestOffset() == {"pos": 100}
-    r2.partitions({"pos": 40}, {"pos": 100})
-    # ...and the cap re-arms from the planned end
-    assert r2.latestOffset() == {"pos": 100}
+
+def test_epoch_rows_bounds_clean_start_and_restarts(spark, tmp_path):
+    """Through real queries: a clean start of 40 lines at epoch_rows=10 runs
+    4 epochs; restarts from the checkpoint, after a full drain and after a
+    crash that left one batch uncommitted in the offset log, stay bounded
+    and read no committed line again (only the uncommitted batch replays)."""
+    from crdb_changefeed_publisher_spark.streaming.pipeline import run_pipeline
+    from crdb_changefeed_publisher_spark.streaming.queues import DirQueue
+
+    feed = str(tmp_path / "feed.jsonl")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    register(spark)
+
+    def run(on_batch=None):
+        sdf = (
+            spark.readStream.format("crdb_changefeed")
+            .option("replay", feed)
+            .option("read_partitions", "2")
+            .option("epoch_rows", "10")
+            .load()
+        )
+        q = run_pipeline(sdf, out, ckpt, drain_all=True, on_batch=on_batch)
+        return [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+
+    def keys():
+        return sorted(int(json.loads(m)["key"][1:-1]) for m in DirQueue.read_all(out))
+
+    def changes(lo, hi):  # change-row keys of feed lines [lo, hi)
+        return [i for i in range(lo, hi) if i % 10 != 0]
+
+    write_feed(feed, 40, 10)
+    assert run() == [10, 10, 10, 10]
+    assert keys() == changes(0, 40)
+
+    write_feed(feed, 70, 10)  # restart after a committed drain
+    assert run() == [10, 10, 10]
+    assert keys() == changes(0, 70)
+
+    write_feed(feed, 100, 10)
+    seen = []
+
+    def crash_second_batch(batch_id, n, resolved):
+        seen.append(batch_id)
+        if len(seen) == 2:  # lines [80, 90) published, epoch not committed
+            raise RuntimeError("injected crash")
+
+    with pytest.raises(Exception, match="injected crash"):
+        run(crash_second_batch)
+    assert run() == [10, 10]  # replays [80, 90), then [90, 100)
+    assert keys() == sorted(changes(0, 100) + changes(80, 90))

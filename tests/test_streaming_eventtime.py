@@ -433,97 +433,6 @@ def test_custom_stateful_running_user_totals(spark, events_stream_dir):
     assert got == batch
 
 
-def test_transform_with_state_running_user_totals(spark, events_stream_dir):
-    """transformWithStateInPandas (the Spark-4 successor of
-    applyInPandasWithState): the same per-user running totals through the
-    StatefulProcessor API — ValueState persisting across micro-batches,
-    final state equal to the batch aggregate."""
-    import pytest as _pytest
-
-    try:
-        from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    except ImportError:  # pragma: no cover - older Spark
-        _pytest.skip("transformWithStateInPandas not available")
-    # the TWS state-server protocol needs protobuf IN THE SPARK-SPAWNED
-    # WORKERS: either a real install, or the Cloud-SDK runtime wired in by
-    # vendor/pbshim/sitecustomize.py via PYTHONPATH (set in conftest.py
-    # before the JVM started)
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        import os as _os
-
-        shimmed = "vendor" + _os.sep + "pbshim" in _os.environ.get("PYTHONPATH", "")
-        if not shimmed:
-            _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    sdf = read_stream(spark, events_stream_dir)
-    out = sdf.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    # TWS state lives in named column families, which the default
-    # HDFS-backed provider can't create — RocksDB (bundled rocksdbjni) is
-    # the production provider for TWS. Scoped to this query; restored after.
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_totals")
-            .outputMode("update")
-            .start()
-        )
-        drain(q)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
-    got = {
-        r.user_id: (r.n_events, round(r.total_value, 6))
-        for r in spark.sql(
-            """
-            select user_id, n_events, total_value from (
-              select *, row_number() over (partition by user_id order by n_events desc) rn
-              from tws_totals
-            ) where rn = 1
-            """
-        ).collect()
-    }
-    batch = {
-        r.user_id: (r.n, round(r.total, 6))
-        for r in spark.read.parquet(events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert got == batch
-
-
 def test_stream_stream_interval_join_matches_batch_range_join(spark, sf_dir, events_stream_dir):
     """Stream-stream INTERVAL join (watermarks on both sides + time-range
     join condition): purchases joined to clicks within the previous 30
@@ -643,471 +552,6 @@ def test_upsert_view_composes_with_typed_changes(spark, sf_dir):
         assert f"[{r.user_id}]" == k
 
 
-def _tws_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        import os
-
-        return "vendor" + os.sep + "pbshim" in os.environ.get("PYTHONPATH", "")
-
-
-def test_tws_dedup_on_ingest_survives_across_batches(spark, sf_dir, tmp_path):
-    """streaming/stateful.dedup_on_ingest: TWS ValueState keyed on the
-    content hash — the first arrival of each DISTINCT content is emitted,
-    every later copy is swallowed, INCLUDING copies arriving in a later
-    micro-batch (the case dropDuplicatesWithinWatermark forgets once the
-    watermark passes — here there is no watermark; state is for life)."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        dedup_on_ingest,
-        rocksdb_state,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = str(tmp_path / "arrivals")
-    # batch 1: the even-id half (contains its own duplicate contents)
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(d)
-
-    sdf = spark.readStream.schema("doc_id long, text string").parquet(d)
-    out = dedup_on_ingest(sdf)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_dedup")
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        n_after_b1 = spark.sql("select count(*) n from tws_dedup").collect()[0].n
-        # batch 2: the FULL corpus re-arrives — every content already seen
-        # in batch 1 must be swallowed by state, not re-emitted
-        docs.coalesce(1).write.mode("append").parquet(d)
-        q.processAllAvailable()
-        q.stop()
-
-    got = spark.sql("select * from tws_dedup").collect()
-    even_contents = {
-        r.k
-        for r in docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.sha2("text", 256).alias("k"))
-        .distinct()
-        .collect()
-    }
-    all_contents = {
-        r.k for r in docs.select(F.sha2("text", 256).alias("k")).distinct().collect()
-    }
-    assert n_after_b1 == len(even_contents)
-    # exactly one row per distinct content across the whole stream history
-    assert len(got) == len(all_contents)
-    assert {r.content_key for r in got} == all_contents
-    # batch-2 emissions are only the contents batch 1 had never seen
-    assert len(got) - n_after_b1 == len(all_contents - even_contents)
-
-
-def test_tws_running_totals_library_operator(spark, events_stream_dir):
-    """streaming/stateful.running_totals equals the batch aggregate at end
-    of stream (the library-grade form of the inline processor above)."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        rocksdb_state,
-        running_totals,
-    )
-
-    sdf = read_stream(spark, events_stream_dir)
-    out = running_totals(sdf, key_col="user_id", value_col="value")
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_lib_totals")
-            .outputMode("update")
-            .start()
-        )
-        drain(q)
-    got = {
-        r.key: (r.n, round(r.total, 6))
-        for r in spark.sql(
-            """
-            select key, n, total from (
-              select *, row_number() over (partition by key order by n desc) rn
-              from tws_lib_totals
-            ) where rn = 1
-            """
-        ).collect()
-    }
-    batch = {
-        r.user_id: (r.n, round(r.total, 6))
-        for r in spark.read.parquet(events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert got == batch
-
-
-def test_tws_event_time_sessionize_with_timers(spark, tmp_path):
-    """streaming/stateful.sessionize: ListState sessions + EVENT-TIME TIMERS
-    — a session row is emitted exactly when the watermark passes its
-    last-event + gap. Cross-validated row for row against the built-in
-    session_window batch aggregation on the same events (session_window's
-    window.end == last event + gap by definition)."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from datetime import datetime
-
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        rocksdb_state,
-        sessionize,
-    )
-
-    base = datetime(2024, 1, 1)
-    real = [
-        # user 1, session A: 10:00 + 10:10 ; session B: 12:00
-        (1, base.replace(hour=10, minute=0), 2.0),
-        (1, base.replace(hour=10, minute=10), 3.0),
-        (1, base.replace(hour=12, minute=0), 5.0),
-        # user 2: one session, one event
-        (2, base.replace(hour=10, minute=5), 7.0),
-    ]
-    schema = "user_id long, ts timestamp, value double"
-    d = str(tmp_path / "sess_stream")
-    spark.createDataFrame(real, schema).coalesce(1).write.mode("overwrite").parquet(d)
-
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(d)
-        .withWatermark("ts", "1 hour")
-    )
-    out = sessionize(sdf, gap_minutes=30)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_sessions")
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        # watermark advances between batches: two sentinel waves (far-future
-        # events for a throwaway user) push it past every real session close
-        for h, mi in ((20, 0), (20, 1)):
-            spark.createDataFrame(
-                [(99, base.replace(hour=h, minute=mi), 0.0)], schema
-            ).coalesce(1).write.mode("append").parquet(d)
-            q.processAllAvailable()
-        q.stop()
-
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, round(r.total_value, 6))
-        for r in spark.sql("select * from tws_sessions").collect()
-    }
-    batch = spark.createDataFrame(real, schema)
-    want = {
-        (
-            r.user_id,
-            r.w.start.replace(tzinfo=None),
-            r.w.end.replace(tzinfo=None),
-            r.n,
-            round(r.total, 6),
-        )
-        for r in batch.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    # our session_end is the LAST EVENT time (micros); session_window.end is
-    # last event + gap — normalize both to (start_us, last_event_us)
-    import calendar
-
-    def us(dt):
-        return calendar.timegm(dt.timetuple()) * 1_000_000 + dt.microsecond
-
-    want_norm = {
-        (u, us(s), us(e) - 30 * 60_000_000, n, t) for (u, s, e, n, t) in want
-    }
-    assert got == want_norm
-    assert len(got) == 3  # 1A, 1B, 2
-
-
-def test_tws_dedup_on_ingest_with_corpus_bootstrap(spark, sf_dir, tmp_path):
-    """dedup_on_ingest(corpus=...): TWS initial state loads the corpus's
-    content hashes into the state store BEFORE the first micro-batch —
-    streamed documents whose content already exists in the corpus are
-    swallowed; only genuinely-new contents emit. The streaming twin of
-    incremental_dedup_report's exact tier."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        dedup_on_ingest,
-        rocksdb_state,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    # the arriving shard: the %5==0 docs PLUS re-arrivals of 20 corpus
-    # texts under new ids (guaranteed corpus overlap at any fixture SF)
-    rearrivals = corpus.orderBy("doc_id").limit(20).select(
-        (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text"
-    )
-    shard = docs.filter(F.col("doc_id") % 5 == 0).unionByName(rearrivals)
-    d = str(tmp_path / "shard_arrivals")
-    shard.coalesce(1).write.mode("overwrite").parquet(d)
-
-    sdf = spark.readStream.schema("doc_id long, text string").parquet(d)
-    out = dedup_on_ingest(sdf, corpus=corpus)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_bootstrap_dedup")
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    got = {r.content_key for r in spark.sql("select * from tws_bootstrap_dedup").collect()}
-    corpus_keys = {
-        r.k for r in corpus.select(F.sha2("text", 256).alias("k")).distinct().collect()
-    }
-    shard_keys = {
-        r.k for r in shard.select(F.sha2("text", 256).alias("k")).distinct().collect()
-    }
-    want = shard_keys - corpus_keys
-    assert got == want and len(want) > 0
-    # sanity: the bootstrap actually suppressed something
-    assert len(shard_keys & corpus_keys) > 0
-
-
-def test_tws_mapstate_category_counts(spark, events_stream_dir):
-    """streaming/stateful.keyed_category_counts: MapState category->count
-    per user; final per-(user, event_type) totals equal the batch
-    groupBy count."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        keyed_category_counts,
-        rocksdb_state,
-    )
-
-    sdf = read_stream(spark, events_stream_dir)
-    out = keyed_category_counts(sdf)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_cat_counts")
-            .outputMode("update")
-            .start()
-        )
-        drain(q)
-    got = {
-        (r.key, r.cat): r.n
-        for r in spark.sql(
-            """
-            select key, cat, n from (
-              select *, row_number() over (partition by key, cat order by n desc) rn
-              from tws_cat_counts
-            ) where rn = 1
-            """
-        ).collect()
-    }
-    want = {
-        (r.user_id, r.event_type): r.n
-        for r in spark.read.parquet(events_stream_dir)
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_tws_session_merge_property_vs_bruteforce():
-    """The sessionizer's pure interval-merge (_EventTimeSessions._merge)
-    against a brute-force union-find over the 'within gap' relation:
-    identical session spans, counts and totals for random span sets —
-    including chains where A-B and B-C are within gap but A-C is not."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from crdb_changefeed_publisher_spark.streaming.stateful import _EventTimeSessions
-
-    gap = 100
-
-    def brute(spans):
-        items = [list(s) for s in spans]
-        changed = True
-        while changed:
-            changed = False
-            for i in range(len(items)):
-                for j in range(i + 1, len(items)):
-                    a, b = items[i], items[j]
-                    if a and b and not (b[0] > a[1] + gap or a[0] > b[1] + gap):
-                        a[0], a[1] = min(a[0], b[0]), max(a[1], b[1])
-                        a[2] += b[2]
-                        a[3] += b[3]
-                        items[j] = []
-                        changed = True
-        return sorted(tuple(x) for x in items if x)
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.integers(0, 2000), st.integers(0, 50), st.integers(1, 3)),
-            max_size=12,
-        )
-    )
-    def check(raw):
-        spans = [(t, t + w, n, float(n)) for (t, w, n) in raw]
-        proc = _EventTimeSessions(gap)
-        got = sorted(tuple(s) for s in proc._merge(list(spans)))
-        assert got == brute(spans)
-
-    check()
-
-
-def test_tws_keyed_top_k_matches_batch_window(spark, events_stream_dir):
-    """streaming/stateful.keyed_top_k: per-key top-3 (value desc,
-    event_type asc) with ListState bounded at k. The LATEST emission per
-    key (max n_seen) must equal the batch row_number() window over the
-    same data with the same tie-break — but only on keys where the
-    per-item scores are distinct enough that the streaming tie-break
-    (which sees event ORDER, not the global sort) is deterministic:
-    duplicate (item, score) pairs are fine, equal scores on DIFFERENT
-    items resolve by item name on both sides."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        keyed_top_k,
-        rocksdb_state,
-    )
-
-    sdf = read_stream(spark, events_stream_dir)
-    out = keyed_top_k(sdf, k=3)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_top_k")
-            .outputMode("update")
-            .start()
-        )
-        drain(q)
-    got = {
-        (r.key, r.rnk): (r.item, r.score)
-        for r in spark.sql(
-            """
-            select key, rnk, item, score from (
-              select *, row_number() over (partition by key, rnk
-                                           order by n_seen desc, item) rn
-              from tws_top_k
-            ) where rn = 1
-            """
-        ).collect()
-    }
-    from pyspark.sql import Window
-
-    batch = spark.read.parquet(events_stream_dir).select(
-        F.col("user_id").alias("key"),
-        F.col("event_type").alias("item"),
-        F.col("value").cast("double").alias("score"),
-    )
-    w = Window.partitionBy("key").orderBy(F.desc("score"), F.asc("item"))
-    want = {
-        (r.key, r.rnk): (r.item, r.score)
-        for r in batch.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .collect()
-    }
-    assert set(got) == set(want)
-    for k_ in got:
-        # scores must agree everywhere; items may differ only on exact
-        # score ties between different items ordered the same by name
-        assert got[k_][1] == want[k_][1], (k_, got[k_], want[k_])
-    # and at least the vast majority of items agree outright
-    same = sum(1 for k_ in got if got[k_][0] == want[k_][0])
-    assert same >= 0.95 * len(got)
-
-
-def test_tws_idle_flush_totals_processing_time_timers(spark, tmp_path):
-    """streaming/stateful.idle_flush_totals: processing-time timers flush
-    a key's accumulated (n, total) only after >= idle_seconds of no
-    arrivals, then CLEAR it (a later burst re-accumulates from zero).
-
-    Drive: a CONTINUOUSLY-triggered query (500 ms trigger) over a file
-    source — no-data micro-batches keep firing, which is what lets the
-    timers expire with no new input. (availableNow is the wrong drive for
-    ProcessingTime TWS: with timers pending the engine keeps scheduling
-    batches and the query never self-terminates — measured 55+ epochs.)"""
-    import time
-
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        idle_flush_totals,
-        rocksdb_state,
-    )
-
-    src = str(tmp_path / "src")
-    schema = "user_id long, value double"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-
-    def poll(predicate, timeout=90.0):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            rows = spark.sql("select * from tws_idle_flush").collect()
-            if predicate(rows):
-                return rows
-            time.sleep(0.5)
-        raise AssertionError(f"condition not reached; sink rows: {rows}")
-
-    # burst 1 on keys 1 and 2, before the query starts (first batch)
-    write_batch([(1, 10.0), (1, 5.0), (2, 7.0)])
-    sdf = spark.readStream.schema(schema).parquet(src)
-    out = idle_flush_totals(sdf, idle_seconds=1.5)
-    # a 500 ms trigger commits state every batch; rocksdb_state() now
-    # defaults changelog checkpointing ON (r6 verdict #3), which is what
-    # keeps those commits from racing RocksDB snapshot maintenance
-    # (measured: CANNOT_COMMIT at version ~12 without it)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_idle_flush")
-            .outputMode("append")
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        try:
-            # idle passes -> both keys flush exactly their burst-1 sums
-            rows = poll(lambda rs: len(rs) >= 2)
-            got = {r.key: (r.n, r.total) for r in rows}
-            assert got == {1: (2, 15.0), 2: (1, 7.0)}
-
-            # key 1 returns: state was CLEARED, so the next flush carries
-            # only the new burst
-            write_batch([(1, 100.0)])
-            rows = poll(lambda rs: len(rs) >= 3)
-            burst2 = [r for r in rows if r.key == 1]
-            assert sorted((r.n, r.total) for r in burst2) == [(1, 100.0), (2, 15.0)]
-        finally:
-            q.stop()
-
-
 def test_streaming_windowed_hll_distinct_equals_batch(spark, events_stream_dir):
     """Sketches compose with streaming event-time windows: approx distinct
     users per (1h tumbling window, event_type) via hll_sketch_agg in a
@@ -1150,60 +594,6 @@ def test_streaming_windowed_hll_distinct_equals_batch(spark, events_stream_dir):
     }
     assert got == want
     assert len(got) > 10  # fixture spans many windows/types
-
-
-def test_tws_kmv_on_stream_bit_identical_to_batch(spark, events_stream_dir):
-    """streaming/stateful.kmv_on_stream: stream-lifetime per-key distinct
-    estimation with KMV state. Same portable hash JVM-side, same exact
-    int64 estimator in the merge — so the LATEST emission per key must
-    equal operators/sketches.kmv_sketch + kmv_estimate over the same
-    data BIT-FOR-BIT, not within a tolerance."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.operators.sketches import (
-        kmv_estimate,
-        kmv_sketch,
-    )
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        kmv_on_stream,
-        rocksdb_state,
-    )
-
-    sdf = read_stream(spark, events_stream_dir)
-    out = kmv_on_stream(sdf, key_col="event_type", value_col="user_id", k=64)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_kmv")
-            .outputMode("update")
-            .start()
-        )
-        drain(q)
-    got = {
-        r.key: r.est_distinct
-        for r in spark.sql(
-            """
-            select key, est_distinct from (
-              select *, row_number() over (partition by key order by n_seen desc) rn
-              from tws_kmv
-            ) where rn = 1
-            """
-        ).collect()
-    }
-    batch = spark.read.parquet(events_stream_dir).select(
-        F.col("event_type").cast("string").alias("key"),
-        F.col("user_id").alias("v"),
-    )
-    want = {
-        r.key: r.est
-        for r in kmv_sketch(batch, "v", ["key"], k=64)
-        .select("key", kmv_estimate("ks", 64).alias("est"))
-        .collect()
-    }
-    assert got == want
-    assert len(got) >= 3
 
 
 def test_streaming_psi_drift_monitor_stream_static(spark, events_stream_dir):
@@ -1257,420 +647,6 @@ def test_streaming_psi_drift_monitor_stream_static(spark, events_stream_dir):
     assert got_counts
     for dim, (nb, nc) in got_counts.items():
         assert (want[dim].n_base, want[dim].n_cur) == (nb, nc), dim
-
-
-def test_tws_streaming_funnel_equals_batch(spark, sf_dir, tmp_path):
-    """streaming/stateful.streaming_funnel vs operators/funnel.funnel_counts
-    on a drained stream of the REAL events fixture: greedy-earliest over a
-    time-sorted final stream never revises a decision, so the watermark-
-    finalized streaming chain must equal the batch chain exactly — both
-    per-step user counts AND every (user, step, reached_ts) row, for the
-    plain funnel and the max-gap variant.
-
-    Arrival order: events are chunked by ts into 8 files (so the watermark
-    advances across batches and the pending buffer + event-time timers do
-    real work) but SHUFFLED within each chunk (so the in-fold ts sort does
-    real work too)."""
-    import pytest as _pytest
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.operators.funnel import funnel_counts
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        rocksdb_state,
-        streaming_funnel,
-    )
-
-    steps = ["view", "click", "purchase"]
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    pdf = events.orderBy("ts").toPandas()
-    d = str(tmp_path / "funnel_stream")
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    n_chunks = 8
-    chunk = -(-len(pdf) // n_chunks)
-    for i in range(n_chunks):
-        part = pdf.iloc[i * chunk : (i + 1) * chunk].sample(frac=1.0, random_state=i)
-        spark.createDataFrame(part, schema).coalesce(1).write.mode("append").parquet(d)
-
-    for gap in (None, 6 * 3600):
-        name = f"tws_funnel_{'nogap' if gap is None else 'gap'}"
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-            .withWatermark("ts", "1 hour")
-        )
-        out = streaming_funnel(sdf, steps, max_gap_seconds=gap)
-        with rocksdb_state(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            q.processAllAvailable()
-            # sentinel waves: far-future non-step events advance the
-            # watermark past every buffered event (the type filter sits
-            # AFTER the watermark node, so they never enter state)
-            base = pdf["ts"].max()
-            for k in (1, 2):
-                late = pd.DataFrame(
-                    {
-                        "event_id": [10_000_000 + k],
-                        "ts": [base + pd.Timedelta(days=30 * k)],
-                        "user_id": [999_999],
-                        "event_type": ["sentinel"],
-                    }
-                )
-                spark.createDataFrame(late, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(d)
-                q.processAllAvailable()
-            q.stop()
-
-        got = spark.sql(f"select * from {name}").toPandas()
-        # 1) per-step user counts == batch funnel_counts
-        batch = {
-            r.step: r.users
-            for r in funnel_counts(events, steps, max_gap_seconds=gap).collect()
-        }
-        stream_counts = got.groupby("step")["user_id"].nunique().to_dict()
-        assert {s: stream_counts.get(s, 0) for s in batch} == batch
-        # no duplicate emissions either
-        assert len(got) == len(got[["user_id", "step"]].drop_duplicates())
-
-        # 2) every (user, step, reached_ts) matches a pandas re-derivation
-        # of the greedy chain over the full sorted event list
-        want = set()
-        for uid, g in pdf[pdf["event_type"].isin(steps)].groupby("user_id"):
-            g = g.sort_values("ts")
-            chain: dict[int, int] = {}
-            for _, row in g.iterrows():
-                s = steps.index(row["event_type"]) + 1
-                t = int(row["ts"].value) // 1000  # ns -> us
-                if s in chain:
-                    continue
-                if s == 1:
-                    chain[1] = t
-                elif (s - 1) in chain and t > chain[s - 1] and (
-                    gap is None or t - chain[s - 1] <= gap * 1_000_000
-                ):
-                    chain[s] = t
-            want.update((int(uid), s, t) for s, t in chain.items())
-        have = {
-            (int(r.user_id), int(r.step), int(r.reached_ts))
-            for r in got.itertuples()
-        }
-        assert have == want
-
-
-def test_bloom_seen_filter_matches_driver_simulation(spark, sf_dir, tmp_path):
-    """streaming/stateful.bloom_seen_filter: the bounded-state approximate
-    seen-filter's emission set must equal a driver-side deterministic fold
-    over the same micro-batches EXACTLY — same content hash, same blocked
-    bit arithmetic, same (h, id)-sorted within-batch order — false-positive
-    swallows included. Also pins the filter semantics: emissions are unique
-    per content, duplicates are swallowed, and the swallow count is the
-    dup count plus the (small) fp count."""
-    import hashlib
-
-    if not _tws_available():
-        pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.operators.bloom import BLOOM_COEFFS, BLOOM_MOD
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        bloom_seen_filter,
-        rocksdb_state,
-    )
-
-    n_blocks, block_words, k = 64, 8, 5
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    src = str(tmp_path / "src")
-    # 3 original waves + 1 duplicate wave, one file per micro-batch
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    waves = [pdf.iloc[i::3] for i in range(3)] + [dups.toPandas()]
-    for w in waves:
-        spark.createDataFrame(w, "doc_id long, text string").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    sdf = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    out = bloom_seen_filter(
-        sdf, n_blocks=n_blocks, block_words=block_words, k=k
-    )
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("bloom_seen")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600)
-    got = {
-        (r.block, r.doc_id, r.content_h)
-        for r in spark.sql("select * from bloom_seen").collect()
-    }
-
-    # driver-side fold: same hash, same blocks, same order
-    def h52(text: str) -> int:
-        return int(hashlib.sha256(f"bloom-v1:{text}".encode()).hexdigest()[:13], 16)
-
-    m_block = block_words * 64
-    words = {b: [0] * block_words for b in range(n_blocks)}
-    want = set()
-    for w in waves:
-        by_block: dict[int, list] = {}
-        for _, row in w.iterrows():
-            h = h52(row["text"])
-            by_block.setdefault(h % n_blocks, []).append((h, int(row["doc_id"])))
-        for b, items in by_block.items():
-            for h, doc_id in sorted(items):
-                bits = [((h * a + c) % BLOOM_MOD) % m_block for a, c in BLOOM_COEFFS[:k]]
-                if all((words[b][p >> 6] >> (p & 63)) & 1 for p in bits):
-                    continue
-                for p in bits:
-                    words[b][p >> 6] |= 1 << (p & 63)
-                want.add((b, doc_id, h))
-    assert got == want
-
-    # semantics: one emission per distinct content at most; dups swallowed
-    n_distinct = docs.select("text").distinct().count()
-    assert len({h for _, _, h in got}) == len(got) <= n_distinct
-    # the filter is generously sized for the fixture: fp swallows are rare
-    assert len(got) >= n_distinct * 0.95
-    # every duplicate-wave id was swallowed (its content arrived earlier)
-    assert all(d < 1_000_000 for _, d, _ in got)
-
-
-def test_changelog_deltas_maintain_group_totals(spark, sf_dir, tmp_path):
-    """streaming/stateful.changelog_deltas: an after-only upsert stream
-    becomes a retraction stream whose per-group SUM equals the batch
-    aggregate of the final applied state — through inserts, a
-    group-migrating update, deletes, AND a stale-redelivery wave (old
-    versions re-arriving after the delete/update must fold to nothing:
-    the applied-version high-water survives deletes via tombstones)."""
-    if not _tws_available():
-        pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        changelog_deltas,
-        rocksdb_state,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    cents = o.select(
-        F.col("o_orderkey").alias("key"),
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100, 0).alias("v"),
-    ).toPandas()
-    inserts = cents.assign(version=1, deleted=False)
-    upd = cents[cents["key"] % 50 == 7].assign(
-        version=2, grp="3-MEDIUM", v=lambda d: d["v"] + 100000, deleted=False
-    )
-    dels = cents[cents["key"] % 50 == 13].assign(version=2, deleted=True)
-    stale = cents[(cents["key"] % 50 == 7) | (cents["key"] % 50 == 13)].assign(
-        version=1, deleted=False
-    )  # redelivery of the original inserts AFTER the update/delete
-    src = str(tmp_path / "src")
-    schema = "key long, grp string, v double, version long, deleted boolean"
-    cols = ["key", "grp", "v", "version", "deleted"]
-    for wave in (inserts, upd, dels, stale):
-        spark.createDataFrame(wave[cols], schema).coalesce(2).write.mode(
-            "append"
-        ).parquet(src)
-
-    sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", 2).parquet(src)
-    out = changelog_deltas(sdf)
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("changelog")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600)
-
-    deltas = spark.sql("select * from changelog").toPandas()
-    got = (
-        deltas.groupby("grp")[["dn", "dv"]].sum().query("dn != 0 or dv != 0")
-    )
-
-    # expected applied state: deletes gone, updates migrated, rest as-is
-    applied = cents[cents["key"] % 50 != 13].copy()
-    mig = applied["key"] % 50 == 7
-    applied.loc[mig, "grp"] = "3-MEDIUM"
-    applied.loc[mig, "v"] = applied.loc[mig, "v"] + 100000
-    want = applied.groupby("grp").agg(dn=("key", "count"), dv=("v", "sum"))
-
-    assert sorted(got.index) == sorted(want.index)
-    for g in want.index:
-        assert int(got.loc[g, "dn"]) == int(want.loc[g, "dn"])
-        assert float(got.loc[g, "dv"]) == float(want.loc[g, "dv"])  # cents: exact
-
-    # the stale wave contributed nothing: every net transition is one of
-    # insert (+1), migrate (-1 old grp / +1 new grp), delete (-1)
-    n_keys = len(cents)
-    n_upd = int((cents["key"] % 50 == 7).sum())
-    n_del = int((cents["key"] % 50 == 13).sum())
-    assert len(deltas) == n_keys + 2 * n_upd + n_del
-
-
-def test_bloom_seen_filter_bootstrap_from_batch_corpus(spark, sf_dir, tmp_path):
-    """bloom_seen_filter(initial_states=...): a batch-built blocked-Bloom
-    state (operators/bloom.bloom_block_states over yesterday's corpus)
-    seeds the streaming filter, so corpus contents test as already-seen
-    from the first micro-batch without replaying the corpus through the
-    stream. Exactness bar: the emission set equals a driver-side fold
-    whose words start from the SAME batch-built state."""
-    import hashlib
-
-    if not _tws_available():
-        pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.operators.bloom import (
-        BLOOM_COEFFS,
-        BLOOM_MOD,
-        bloom_block_states,
-    )
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        bloom_seen_filter,
-        rocksdb_state,
-    )
-
-    n_blocks, block_words, k = 64, 8, 5
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    init = bloom_block_states(
-        corpus, "text", n_blocks=n_blocks, block_words=block_words, k=k
-    ).persist()
-    init_rows = {int(r.block): [int(w) for w in r.words] for r in init.collect()}
-
-    # stream: every doc (evens re-arrive as corpus dups, odds are new)
-    src = str(tmp_path / "src")
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    waves = [pdf.iloc[i::2] for i in range(2)]
-    for w in waves:
-        spark.createDataFrame(w, "doc_id long, text string").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    sdf = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    out = bloom_seen_filter(
-        sdf,
-        n_blocks=n_blocks,
-        block_words=block_words,
-        k=k,
-        initial_states=init,
-    )
-    with rocksdb_state(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName("bloom_boot")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600)
-    got = {
-        (r.block, r.doc_id, r.content_h)
-        for r in spark.sql("select * from bloom_boot").collect()
-    }
-
-    def h52(text: str) -> int:
-        return int(hashlib.sha256(f"bloom-v1:{text}".encode()).hexdigest()[:13], 16)
-
-    m_block = block_words * 64
-    words = {
-        b: [w & ((1 << 64) - 1) for w in ws] for b, ws in init_rows.items()
-    }
-    want = set()
-    for w in waves:
-        by_block: dict[int, list] = {}
-        for _, row in w.iterrows():
-            h = h52(row["text"])
-            by_block.setdefault(h % n_blocks, []).append((h, int(row["doc_id"])))
-        for b, items in by_block.items():
-            ws = words.setdefault(b, [0] * block_words)
-            for h, doc_id in sorted(items):
-                bits = [((h * a + c) % BLOOM_MOD) % m_block for a, c in BLOOM_COEFFS[:k]]
-                if all((ws[p >> 6] >> (p & 63)) & 1 for p in bits):
-                    continue
-                for p in bits:
-                    ws[p >> 6] |= 1 << (p & 63)
-                want.add((b, doc_id, h))
-    assert got == want
-
-    # semantics: no corpus CONTENT is ever emitted (no false negatives);
-    # most genuinely-new odd-id contents do come through
-    corpus_h = {h52(t) for (t,) in corpus.select("text").distinct().collect()}
-    assert all(h not in corpus_h for _, _, h in got)
-    new_h = {
-        h52(t)
-        for (t,) in docs.filter(F.col("doc_id") % 2 == 1)
-        .select("text")
-        .distinct()
-        .collect()
-    } - corpus_h
-    assert len({h for _, _, h in got}) >= len(new_h) * 0.9
-    init.unpersist()
-
-
-def test_streaming_quality_gate_into_table_sink(spark, sf_dir, tmp_path):
-    """The distilled quality gate in the INGEST path: documents stream in
-    micro-batches, each batch is scored by the frozen hashed-trigram
-    classifier (per-doc margins are batch-local — a document arrives
-    whole, so the stateless-per-batch apply is exact) and lands in the
-    exactly-once table sink. The committed table must equal the one-shot
-    batch classification of the whole corpus, row for row — the
-    100 TB ingest pattern: score at write time, queryable immediately,
-    no second corpus pass."""
-    from crdb_changefeed_publisher_spark.functions import textclf_weights as tw
-    from crdb_changefeed_publisher_spark.operators.text import hashed_ngram_classifier
-    from crdb_changefeed_publisher_spark.streaming import table_sink
-    from crdb_changefeed_publisher_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    feed = str(tmp_path / "feed")
-    docs.repartition(4).write.mode("overwrite").parquet(feed)
-    root = str(tmp_path / "tbl")
-
-    def classify(df):
-        return hashed_ngram_classifier(
-            df, tw.WEIGHTS_INT, tw.W_DUP_INT, tw.BIAS_INT, tw.N_BUCKETS, tw.SCALE
-        )
-
-    def apply_batch(batch_df, batch_id):
-        table_sink.write_batch(classify(batch_df), batch_id, root)
-
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = sdf.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    await_done(q)
-
-    committed = table_sink.read_committed(spark, root)
-    got = {
-        r.doc_id: (r.n_grams, r.n_distinct, r.margin_int, r.repetitive_pred)
-        for r in committed.collect()
-    }
-    want = {
-        r.doc_id: (r.n_grams, r.n_distinct, r.margin_int, r.repetitive_pred)
-        for r in classify(docs).collect()
-    }
-    assert got == want and len(want) >= 400
-    # multiple micro-batches actually committed (the composition was
-    # incremental, not one big batch)
-    assert len(table_sink.table_history(root)) >= 2
 
 
 def test_streaming_decontamination_scrub_equals_batch(spark, sf_dir, tmp_path):

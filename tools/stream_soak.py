@@ -244,9 +244,8 @@ def main() -> None:
     )
     ap.add_argument(
         "--epoch-rows", type=int, default=0,
-        help="partitioned-reader admission cap: max lines per steady-state "
-        "micro-batch (0 = all available; the post-crash catch-up epoch is "
-        "always unbounded by design)",
+        help="partitioned-reader admission cap: max lines per micro-batch "
+        "(0 = all available)",
     )
     ap.add_argument(
         "--tables", type=int, default=1,

@@ -75,8 +75,10 @@ def ffd_bins(
     files: list[tuple[str, int]], target_bytes: int
 ) -> list[list[tuple[str, int]]]:
     """First-fit-decreasing binning of (file, bytes) pairs into bins of
-    <= target_bytes (oversized files become singleton bins); the
-    binning step of `compaction_plan`."""
+    <= target_bytes (oversized files become singleton bins). Shared by
+    the directory-level `compaction_plan` and the table sink's
+    manifest-scoped compaction (streaming/table_sink.py), which bins a
+    COMMITTED file list rather than a directory listing."""
     bins: list[list[tuple[str, int]]] = []
     room: list[int] = []
     for f, sz in sorted(files, key=lambda t: (-t[1], t[0])):

@@ -239,281 +239,6 @@ def test_snapshot_selection_parses_generation_as_int(tmp_path):
     assert names == ["compact-00001000-00000.parquet"]
 
 
-def test_tws_dedup_stream_into_table_sink_kill_resume(spark, sf_dir, tmp_path):
-    """Composition: a STATEFUL TWS operator (dedup_on_ingest) feeding the
-    exactly-once table sink through a kill+resume. The replayed batch
-    restarts from the batch's pre-state (RocksDB checkpoint), regenerates
-    the identical output, and overwrites its own table slot — so the
-    final committed table is the exact first-arrival dedup of the feed,
-    no dups, no losses."""
-    import pytest as _pytest
-
-    from tests.test_streaming_eventtime import _tws_available
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        dedup_on_ingest,
-        rocksdb_state,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # duplicate pressure: every 3rd doc re-arrives under a higher id
-    dups = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    feed = docs.unionByName(dups)
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    root = str(tmp_path / "tbl")
-    # docs first, dup wave second: 8 ts-ordered-ish files -> 8 batches
-    docs.repartition(4).write.mode("append").parquet(src)
-    dups.repartition(4).write.mode("append").parquet(src)
-
-    killed = {"done": False}
-
-    def apply(batch_df, batch_id):
-        table_sink.write_batch(batch_df, batch_id, root)
-        if batch_id == 2 and not killed["done"]:
-            killed["done"] = True
-            raise RuntimeError("injected kill after table commit")
-
-    def start():
-        sdf = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = dedup_on_ingest(sdf)
-        return (
-            out.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    with rocksdb_state(spark):
-        q = start()
-        with pytest.raises(Exception):
-            q.awaitTermination()
-        q2 = start()
-        assert q2.awaitTermination(600)
-
-    committed = table_sink.read_committed(spark, root)
-    assert committed is not None
-    got_keys = [r.content_key for r in committed.select("content_key").collect()]
-    # exactly one emission per distinct content — across batches AND the
-    # replayed batch
-    n_distinct_contents = feed.select(F.sha2("text", 256)).distinct().count()
-    assert len(got_keys) == len(set(got_keys)) == n_distinct_contents
-    # and every emission carries a first-wave id (the dup wave arrived
-    # strictly after all originals, so no 1M+ id can be a first arrival)
-    assert committed.filter(F.col("doc_id") >= 1_000_000).count() == 0
-
-
-def test_tws_funnel_stream_into_table_sink_kill_resume(spark, sf_dir, tmp_path):
-    """Composition (r7 verdict #5): the watermark-finalized streaming
-    funnel's emissions land in the exactly-once table sink through a
-    kill+resume, and the committed table equals the batch funnel exactly —
-    per-step distinct-user counts match `funnel_counts`, no (user, step)
-    is emitted twice despite the replayed batch, and every
-    (user, step, reached_ts) row matches a greedy-chain re-derivation over
-    the sorted event list."""
-    import pandas as pd
-    import pytest as _pytest
-
-    from tests.test_streaming_eventtime import _tws_available
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.operators.funnel import funnel_counts
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        rocksdb_state,
-        streaming_funnel,
-    )
-
-    steps = ["view", "click", "purchase"]
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    pdf = events.orderBy("ts").toPandas()
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    root = str(tmp_path / "tbl")
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    # 6 ts-ordered chunks (watermark advances across batches), shuffled
-    # within each chunk (the in-fold ts sort does real work)
-    n_chunks = 6
-    chunk = -(-len(pdf) // n_chunks)
-    for i in range(n_chunks):
-        part = pdf.iloc[i * chunk : (i + 1) * chunk].sample(frac=1.0, random_state=i)
-        spark.createDataFrame(part, schema).coalesce(1).write.mode("append").parquet(src)
-    # two trailing sentinel waves: far-future non-step events push the
-    # watermark past every buffered real event so the tail finalizes
-    # (filtered before state, they only advance the clock)
-    base = pdf["ts"].max()
-    for k in (1, 2):
-        late = pd.DataFrame(
-            {
-                "event_id": [10_000_000 + k],
-                "ts": [base + pd.Timedelta(days=30 * k)],
-                "user_id": [999_999],
-                "event_type": ["sentinel"],
-            }
-        )
-        spark.createDataFrame(late, schema).coalesce(1).write.mode("append").parquet(src)
-
-    killed = {"done": False}
-
-    def apply(batch_df, batch_id):
-        table_sink.write_batch(batch_df, batch_id, root)
-        if batch_id == 2 and not killed["done"]:
-            killed["done"] = True
-            raise RuntimeError("injected kill after table commit, before offsets")
-
-    def start():
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("ts", "1 hour")
-        )
-        out = streaming_funnel(sdf, steps)
-        return (
-            out.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    with rocksdb_state(spark):
-        q = start()
-        with pytest.raises(Exception):
-            q.awaitTermination()
-        q2 = start()
-        assert q2.awaitTermination(600)
-
-    committed = table_sink.read_committed(spark, root)
-    assert committed is not None
-    got = committed.toPandas()
-
-    # 1) no duplicate (user, step) despite the replayed batch
-    assert len(got) == len(got[["user_id", "step"]].drop_duplicates())
-
-    # 2) per-step distinct-user counts equal the batch funnel
-    batch = {
-        r.step: r.users
-        for r in funnel_counts(events, steps).collect()
-    }
-    stream_counts = got.groupby("step")["user_id"].nunique().to_dict()
-    assert {s: stream_counts.get(s, 0) for s in batch} == batch
-
-    # 3) exact (user, step, reached_ts) set vs the greedy-chain derivation
-    want = set()
-    for uid, g in pdf[pdf["event_type"].isin(steps)].groupby("user_id"):
-        g = g.sort_values("ts")
-        chain: dict[int, int] = {}
-        for _, row in g.iterrows():
-            s = steps.index(row["event_type"]) + 1
-            t = int(row["ts"].value) // 1000  # ns -> us
-            if s in chain:
-                continue
-            if s == 1:
-                chain[1] = t
-            elif (s - 1) in chain and t > chain[s - 1]:
-                chain[s] = t
-        want.update((int(uid), s, t) for s, t in chain.items())
-    have = {
-        (int(r.user_id), int(r.step), int(r.reached_ts)) for r in got.itertuples()
-    }
-    assert have == want
-
-
-def test_changelog_deltas_into_table_sink_maintained_view(spark, sf_dir, tmp_path):
-    """Full streaming-IVM composition: after-only upserts -> TWS
-    retraction deltas -> exactly-once table-sink delta LOG (through an
-    injected kill+resume) -> the maintained view is a plain group-SUM
-    over the committed log, equal to the batch recompute of the applied
-    state. The log form makes maintenance idempotent by construction:
-    the replayed batch overwrites its own delta slot, so no delta is
-    double-counted."""
-    import pytest as _pytest
-
-    from tests.test_streaming_eventtime import _tws_available
-
-    if not _tws_available():
-        _pytest.skip("google.protobuf unavailable; TWS state server cannot start")
-    from crdb_changefeed_publisher_spark.streaming.stateful import (
-        changelog_deltas,
-        rocksdb_state,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    cents = o.select(
-        F.col("o_orderkey").alias("key"),
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100, 0).alias("v"),
-    ).toPandas()
-    inserts = cents.assign(version=1, deleted=False)
-    upd = cents[cents["key"] % 50 == 7].assign(
-        version=2, grp="3-MEDIUM", v=lambda d: d["v"] + 100000, deleted=False
-    )
-    dels = cents[cents["key"] % 50 == 13].assign(version=2, deleted=True)
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    root = str(tmp_path / "delta_log")
-    schema = "key long, grp string, v double, version long, deleted boolean"
-    cols = ["key", "grp", "v", "version", "deleted"]
-    for wave in (inserts, upd, dels):
-        spark.createDataFrame(wave[cols], schema).coalesce(2).write.mode(
-            "append"
-        ).parquet(src)
-
-    killed = {"done": False}
-
-    def apply(batch_df, batch_id):
-        table_sink.write_batch(batch_df, batch_id, root)
-        if batch_id == 1 and not killed["done"]:
-            killed["done"] = True
-            raise RuntimeError("injected kill after delta-log commit")
-
-    def start():
-        sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", 2).parquet(src)
-        return (
-            changelog_deltas(sdf)
-            .writeStream.foreachBatch(apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    with rocksdb_state(spark):
-        q = start()
-        with pytest.raises(Exception):
-            q.awaitTermination()
-        q2 = start()
-        assert q2.awaitTermination(600)
-
-    log = table_sink.read_committed(spark, root)
-    assert log is not None
-    view = {
-        r.grp: (r.n_rows, r.total)
-        for r in log.groupBy("grp")
-        .agg(F.sum("dn").cast("long").alias("n_rows"), F.sum("dv").alias("total"))
-        .filter(F.col("n_rows") > 0)
-        .collect()
-    }
-    applied = cents[cents["key"] % 50 != 13].copy()
-    mig = applied["key"] % 50 == 7
-    applied.loc[mig, "grp"] = "3-MEDIUM"
-    applied.loc[mig, "v"] = applied.loc[mig, "v"] + 100000
-    want = {
-        g: (int(d["key"].count()), float(d["v"].sum()))
-        for g, d in applied.groupby("grp")
-    }
-    assert view == want  # cents: exact equality, no tolerance
-
-
 def test_as_of_batch_time_travel_and_retention_boundary(spark, sf_dir, tmp_path):
     """as_of_batch reconstructs every pre-compaction state exactly while
     the batch manifests live; after compaction the covered span is gone

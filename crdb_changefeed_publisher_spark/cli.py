@@ -28,7 +28,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         description="Publish CockroachDB changefeed rows to a message queue (Spark edition).",
     )
     p.add_argument("--table", required=True, help="table to watch")
-    p.add_argument("--queue", default="rabbitmq", choices=["rabbitmq", "dir", "memory"])
+    p.add_argument("--queue", default="rabbitmq", choices=["rabbitmq", "dir"])
     p.add_argument(
         "--cursor-store", default="cockroachdb", choices=["cockroachdb", "file", "memory"]
     )
@@ -39,19 +39,19 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--cursor-path", default=None, help="path for --cursor-store file")
     p.add_argument("--once", action="store_true", help="process available data then exit")
     p.add_argument(
-        "--partitioned",
-        action="store_true",
-        help="executor-parallel replay reads (requires --replay): micro-"
-        "batches are planned as line ranges read directly by executors",
+        "--read-partitions",
+        type=int,
+        default=None,
+        help="line ranges per --replay micro-batch (default: the machine's "
+        "parallelism)",
     )
-    p.add_argument("--read-partitions", type=int, default=4)
     p.add_argument(
         "--epoch-rows",
         type=int,
         default=0,
-        help="partitioned-reader admission cap: max feed lines per "
-        "micro-batch (0 = all available; bounds the at-least-once replay "
-        "window and per-epoch state cost)",
+        help="--replay admission cap: max feed lines per micro-batch "
+        "(0 = all available; bounds the at-least-once replay window and "
+        "per-epoch state cost)",
     )
     p.add_argument(
         "--idempotent",
@@ -82,12 +82,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.queue == "dir" and not args.out_dir:
         print("--queue dir requires --out-dir", file=sys.stderr)
         return 2
-    if args.queue == "memory":
-        # An executor-side in-memory queue is invisible to the driver; accepting
-        # it would silently drop every message. InMemoryQueue is a unit-test
-        # double only.
-        print("--queue memory is a test double; use 'rabbitmq' or 'dir'", file=sys.stderr)
-        return 2
     spark = get_spark(f"crdb-changefeed-{args.table}")
     register(spark)
     server = serve_metrics()  # PROMETHEUS_ADDR or 0.0.0.0:8001, main.rs:57
@@ -98,16 +92,12 @@ def main(argv: list[str] | None = None) -> int:
         .option("cursor_frequency", args.cursor_frequency)
     )
     if args.replay:
+        # a recorded feed is read by the executor-parallel partitioned reader
         reader = reader.option("replay", args.replay)
-        if args.partitioned:
-            reader = reader.option("partitioned", "true").option(
-                "read_partitions", str(args.read_partitions)
-            )
-            if args.epoch_rows > 0:
-                reader = reader.option("epoch_rows", str(args.epoch_rows))
-    elif args.partitioned:
-        print("--partitioned requires --replay (live changefeeds are one serial cursor)", file=sys.stderr)
-        return 2
+        if args.read_partitions is not None:
+            reader = reader.option("read_partitions", str(args.read_partitions))
+        if args.epoch_rows > 0:
+            reader = reader.option("epoch_rows", str(args.epoch_rows))
     else:
         reader = reader.option("database_url", os.environ.get("DATABASE_URL", ""))
 

@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 from crdb_changefeed_publisher_spark.operators.changefeed import (
     changefeed_pipeline,
-    envelope_col,
-    extract_resolved,
     split_changes,
 )
 from crdb_changefeed_publisher_spark.plans.registry import query

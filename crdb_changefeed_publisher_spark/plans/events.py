@@ -13,7 +13,6 @@ the 100 TB path when the ranked join's per-key fanout gets large.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window

@@ -26,6 +26,7 @@ only (pos carries across restarts via Spark's offset log either way).
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import re
@@ -97,91 +98,123 @@ class ChangefeedConnection(Protocol):
         ...
 
 
+# One byte offset is indexed per INDEX_STRIDE lines: O(lines / stride) driver
+# memory (a 100M-line feed keeps ~400k offsets, not 100M), and a seek to any
+# indexed line skips at most INDEX_STRIDE - 1 lines from the nearest offset.
+INDEX_STRIDE = 256
+
+
+class LineIndex:
+    """Strided byte-offset index of a line-oriented feed file, shared by
+    both replay readers. It covers the file's first `n_lines` lines, which
+    end at `end_byte` (the frontier); `stride_bytes[j]` is the byte offset
+    of line `j * stride`. Appended lines are indexed by `scan` without
+    invalidating earlier offsets. `lines_read` counts the lines `scan` and
+    `seek` pull off disk, and the replay connection adds the lines it reads
+    behind the frontier."""
+
+    def __init__(self) -> None:
+        self.stride = INDEX_STRIDE
+        self.stride_bytes: list[int] = [0]
+        self.n_lines = 0
+        self.end_byte = 0
+        self.lines_read = 0
+
+    def scan(self, f, limit: int | None = None, out: list[bytes] | None = None) -> None:
+        """Index up to `limit` lines past the frontier (all, if None),
+        appending them to `out` if given; stops early at EOF. A trailing
+        line without a newline still counts: replay feeds are written a
+        whole line at a time."""
+        f.seek(self.end_byte)
+        readline, stride, marks = f.readline, self.stride, self.stride_bytes
+        n = start = self.n_lines
+        stop = -1 if limit is None else n + limit
+        while n != stop:
+            line = readline()
+            if not line:
+                break
+            n += 1
+            if out is not None:
+                out.append(line)
+            if n % stride == 0:
+                marks.append(f.tell())
+        self.end_byte = f.tell()
+        self.n_lines = n
+        self.lines_read += n - start
+
+    def seek(self, f, line: int) -> int:
+        """Position `f` at the start of line `line` and return that byte
+        offset; a line past the frontier is reached by `scan`, which stops
+        at EOF if the file is shorter."""
+        if line >= self.n_lines:
+            self.scan(f, line - self.n_lines)
+            return self.end_byte
+        j = line // self.stride
+        f.seek(self.stride_bytes[j])
+        for _ in range(j * self.stride, line):
+            f.readline()
+        self.lines_read += line - j * self.stride
+        return f.tell()
+
+    def first_line_at(self, f, target: int) -> tuple[int, int]:
+        """(line, byte offset) of the first indexed line that starts at or
+        after byte `target` (the frontier if none): bisect the stride
+        offsets, then walk at most one stride of lines."""
+        j = bisect.bisect_right(self.stride_bytes, target) - 1
+        line, off = j * self.stride, self.stride_bytes[j]
+        f.seek(off)
+        while off < target and line < self.n_lines:
+            off += len(f.readline())
+            line += 1
+        return line, off
+
+
 class JsonlReplayConnection:
     """Replays changefeed rows from a JSONL file of ``[table, key, value]``
     triples (null table/key => resolved row). The test/bench double for a
     live changefeed; also how recorded changefeeds can be (re)processed.
 
-    Byte offsets are indexed every ``index_stride`` lines, so the
-    steady-state sequential fetch pattern (pos 0, then 1000, then 2000, ...)
-    seeks straight to the batch start instead of rescanning the file head —
-    O(batch) per micro-batch, O(n) total over a long recorded feed instead
-    of O(n^2) — while the index stays O(lines / stride) driver memory
-    instead of one entry per line (a 100M-row recorded feed indexes ~400k
-    offsets at the default stride, not 100M). A fetch at an arbitrary
-    position skips at most ``stride - 1`` lines from the nearest indexed
-    point. The reader instance lives on the driver across micro-batches
+    A `LineIndex` records the byte offset of every INDEX_STRIDE-th line the
+    fetches walk past, so the steady-state sequential fetch pattern (pos 0,
+    then 1000, then 2000, ...) continues from the index frontier instead of
+    rescanning the file head: O(batch) per micro-batch, O(n) over a long
+    recorded feed instead of O(n^2). A fetch behind the frontier skips at
+    most INDEX_STRIDE - 1 lines from the nearest indexed offset. The reader
+    instance lives on the driver across micro-batches
     (SimpleDataSourceStreamReader), so the index survives the whole run."""
 
-    def __init__(self, path: str, gc_floor: int = 0, index_stride: int = 256) -> None:
+    def __init__(self, path: str, gc_floor: int = 0) -> None:
         self.path = path
         # rows below this position are "garbage collected": fetching from
         # before the floor raises the CRDB GC error (for fallback tests)
         self.gc_floor = gc_floor
-        self._stride = max(1, index_stride)
-        # _stride_bytes[j] = byte offset of line (j * stride)'s start
-        self._stride_bytes: list[int] = [0]
-        # index frontier: every line below this is covered by the index
-        self._frontier_line = 0
-        self._frontier_byte = 0
-        # diagnostics: total lines pulled off disk (skips + consumed);
-        # tests assert this stays O(rows), not O(batches * rows)
-        self.lines_scanned = 0
+        self.index = LineIndex()
 
-    def _note_line_end(self, next_line: int, tell: int) -> None:
-        """Record that line `next_line - 1` ends at byte `tell` (only ever
-        called with contiguously increasing positions past the frontier)."""
-        if next_line > self._frontier_line:
-            self._frontier_line = next_line
-            self._frontier_byte = tell
-            j, r = divmod(next_line, self._stride)
-            if r == 0 and j == len(self._stride_bytes):
-                self._stride_bytes.append(tell)
-
-    def _seek_to(self, f, pos: int) -> None:
-        """Position `f` at the start of line `pos` (or EOF if shorter)."""
-        if pos >= self._frontier_line:
-            # extend the index while walking forward
-            f.seek(self._frontier_byte)
-            for i in range(self._frontier_line, pos):
-                if not f.readline():
-                    return
-                self.lines_scanned += 1
-                self._note_line_end(i + 1, f.tell())
-        else:
-            # behind the frontier: hop to the nearest indexed stride point,
-            # then skip at most stride-1 lines
-            j = min(pos // self._stride, len(self._stride_bytes) - 1)
-            f.seek(self._stride_bytes[j])
-            for _ in range(j * self._stride, pos):
-                if not f.readline():
-                    return
-                self.lines_scanned += 1
+    @property
+    def lines_scanned(self) -> int:
+        """Total lines pulled off disk (skips + consumed); tests assert this
+        stays O(rows), not O(batches * rows)."""
+        return self.index.lines_read
 
     def fetch(self, pos: int, cursor: str | None, limit: int) -> list[WireRow]:
         if pos < self.gc_floor:
             raise GcThresholdError(
                 f"batch timestamp {cursor or '0.0'} must be after replica GC threshold 1.0"
             )
-        out: list[WireRow] = []
+        idx = self.index
         with open(self.path, "rb") as f:
-            self._seek_to(f, pos)
-            i = pos
-            while len(out) < limit:
-                line = f.readline()
-                if not line:
-                    break
-                self.lines_scanned += 1
-                t, k, v = json.loads(line)
-                out.append(
-                    WireRow(
-                        t,
-                        k.encode() if k is not None else None,
-                        v.encode(),
-                    )
-                )
-                i += 1
-                self._note_line_end(i, f.tell())
+            idx.seek(f, pos)
+            if idx.n_lines < pos:
+                return []
+            # lines already indexed, then the rest indexed on the way
+            lines = [f.readline() for _ in range(min(limit, idx.n_lines - pos))]
+            idx.lines_read += len(lines)
+            if len(lines) < limit:
+                idx.scan(f, limit - len(lines), lines)
+        out = []
+        for line in lines:
+            t, k, v = json.loads(line)
+            out.append(WireRow(t, k.encode() if k is not None else None, v.encode()))
         return out
 
 
@@ -220,7 +253,6 @@ class CrdbConnection:
 
 class ChangefeedSimpleStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict) -> None:
-        self.options = options
         replay = options.get("replay")
         if replay:
             self.conn: ChangefeedConnection = JsonlReplayConnection(
@@ -279,9 +311,7 @@ class ChangefeedSimpleStreamReader(SimpleDataSourceStreamReader):
         rows, effective_start = self._fetch(start, end["pos"] - start["pos"])
         # After a fallback, rows begin at the GC floor, not start['pos'];
         # never hand Spark more rows than the committed offset range.
-        needed = end["pos"] - effective_start
-        if len(rows) > max(needed, 0):
-            rows = rows[: max(needed, 0)]
+        rows = rows[: max(end["pos"] - effective_start, 0)]
         return iter([(r.table, r.key, r.value) for r in rows])
 
     def commit(self, end: dict) -> None:
@@ -335,17 +365,16 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
     the at-least-once replay window and the per-epoch commit cost.
     `batch_limit` is a simple-reader option; it is ignored here.
 
-    Driver memory: the line index stores one byte offset per `index_stride`
-    lines (default 256) — O(lines/stride), not O(lines) — and that strided
-    list is all that rides the pickled reader into executor tasks.
+    Driver memory: the `LineIndex` stores one byte offset per INDEX_STRIDE
+    lines — O(lines/stride), not O(lines) — and that strided list is all
+    that rides the pickled reader into executor tasks.
 
     Skew robustness: ranges are split by BYTES, not line counts. A feed
     whose line sizes are 100x skewed (a fat-value table next to a thin one)
     would produce a straggler partition under equal line counts; equal byte
-    spans bound every task by I/O volume. Small batches (under ~32 strides)
-    split at exact line boundaries via a bounded walk; large batches split
-    at indexed stride points, so each range's byte size is balanced to
-    within one stride block.
+    spans bound every task by I/O volume. Cut i of n is the first line that
+    starts at or after the byte target `sb + span * i / n`, so each range's
+    byte size is within one line of its share.
     """
 
     def __init__(self, options: dict) -> None:
@@ -366,52 +395,24 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
         self.n_parts = max(
             1, int(options.get("read_partitions", str(default_parts)) or default_parts)
         )
-        self._stride = max(1, int(options.get("index_stride", "256") or 256))
         # admission control: max lines per planned micro-batch (0 = all
         # available); see class docstring for the restart semantics
         self.epoch_rows = int(options.get("epoch_rows", "0") or 0)
         self._hwm = 0  # highest planned end offset (this run)
-        # _stride_bytes[j] = byte offset of line (j * stride)'s start
-        self._stride_bytes: list[int] = [0]
-        self._n_lines = 0
-        self._end_byte = 0  # byte just past the last indexed line
-
-    def _extend_index(self) -> None:
-        with open(self.path, "rb") as f:
-            f.seek(self._end_byte)
-            while f.readline():
-                self._n_lines += 1
-                self._end_byte = f.tell()
-                j, r = divmod(self._n_lines, self._stride)
-                if r == 0 and j == len(self._stride_bytes):
-                    self._stride_bytes.append(self._end_byte)
-        # a trailing partial line (no newline yet) still counts: readline
-        # returned it; nothing to correct because replay feeds are
-        # line-complete by construction (each record is written with \n)
-
-    def _byte_of_line(self, f, i: int) -> int:
-        """Exact byte offset of line i: hop to the nearest indexed stride
-        point at or below, then skip at most stride-1 lines."""
-        if i >= self._n_lines:
-            return self._end_byte
-        j = min(i // self._stride, len(self._stride_bytes) - 1)
-        f.seek(self._stride_bytes[j])
-        for _ in range(j * self._stride, i):
-            f.readline()
-        return f.tell()
+        self.index = LineIndex()
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
 
     def latestOffset(self) -> dict:
-        self._extend_index()
+        with open(self.path, "rb") as f:
+            self.index.scan(f)
+        n_lines = self.index.n_lines
         if self.epoch_rows > 0:
-            return {"pos": min(self._n_lines, self._hwm + self.epoch_rows)}
-        return {"pos": self._n_lines}
+            return {"pos": min(n_lines, self._hwm + self.epoch_rows)}
+        return {"pos": n_lines}
 
     def partitions(self, start: dict, end: dict):
-        import bisect
-
         s, e = start["pos"], end["pos"]
         # high-water mark for epoch_rows admission: the next latestOffset
         # advances from this batch's planned end (monotone within a run;
@@ -428,48 +429,17 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
                 self.gc_floor,
             )
             s = min(self.gc_floor, e)
-        self._extend_index()
-        total = max(e - s, 0)
-        n = max(min(self.n_parts, total), 1)
+        n = max(min(self.n_parts, e - s), 1)
+        idx = self.index
         with open(self.path, "rb") as f:
-            sb = self._byte_of_line(f, s)
-            eb = self._byte_of_line(f, e)
-            span = eb - sb
-            lines = [s]
-            bytes_ = [sb]
-            if total <= 32 * self._stride:
-                # bounded exact walk: byte offset of every line in [s, e]
-                offs = [sb]
-                f.seek(sb)
-                for _ in range(total):
-                    f.readline()
-                    offs.append(f.tell())
-                for i in range(1, n):
-                    target = sb + (span * i) // n
-                    t = bisect.bisect_left(offs, target)
-                    t = min(max(t, lines[-1] - s + 1), total)
-                    lines.append(s + t)
-                    bytes_.append(offs[t])
-            else:
-                # stride-granular split: candidates are indexed stride lines
-                for i in range(1, n):
-                    target = sb + (span * i) // n
-                    j = bisect.bisect_left(self._stride_bytes, target)
-                    if j >= len(self._stride_bytes):
-                        line, byte = e, eb
-                    else:
-                        line, byte = j * self._stride, self._stride_bytes[j]
-                    if line <= lines[-1]:
-                        line, byte = lines[-1], bytes_[-1]
-                    if line > e:
-                        line, byte = e, eb
-                    lines.append(line)
-                    bytes_.append(byte)
-            lines.append(e)
-            bytes_.append(eb)
+            idx.scan(f)
+            sb, eb = idx.seek(f, s), idx.seek(f, e)
+            cuts = [(s, sb)]
+            cuts += [idx.first_line_at(f, sb + (eb - sb) * i // n) for i in range(1, n)]
+            cuts.append((e, eb))
         return [
-            FeedRangePartition(self.path, lines[i], lines[i + 1], bytes_[i])
-            for i in range(n)
+            FeedRangePartition(self.path, lo[0], hi[0], lo[1])
+            for lo, hi in zip(cuts, cuts[1:])
         ]
 
     def read(self, partition: FeedRangePartition) -> Iterator[tuple]:
@@ -491,16 +461,14 @@ class CrdbChangefeedDataSource(DataSource):
          .option("table", "foo")            # live mode (needs DATABASE_URL)
          .option("cursor_frequency", "10s")
          .option("replay", "/path/feed.jsonl")  # replay mode (tests/bench)
-         .option("partitioned", "true")     # force executor-parallel reads
          .option("read_partitions", "8")
 
-    Reader selection (VERDICT r4 #3 — partitioned is the DEFAULT for
-    file-backed feeds): a recorded feed gets the executor-parallel
-    partitioned reader unless `partitioned` is explicitly false or
-    `batch_limit` is set (that knob only exists on the serial simple
-    reader — setting it asks for driver-paced micro-batches). Live
-    changefeeds are inherently one serial cursor (reference parity,
-    src/main.rs:211-213) and always use the simple reader.
+    Reader selection: a recorded feed gets the executor-parallel
+    partitioned reader unless `batch_limit` is set (that knob only exists
+    on the serial simple reader — setting it asks for driver-paced
+    micro-batches). Live changefeeds are inherently one serial cursor
+    (reference parity, src/main.rs:211-213) and always use the simple
+    reader.
     """
 
     @classmethod
@@ -511,11 +479,6 @@ class CrdbChangefeedDataSource(DataSource):
         return WIRE_SCHEMA
 
     def _use_partitioned(self) -> bool:
-        flag = str(self.options.get("partitioned", "")).lower()
-        if flag in ("true", "1"):
-            return True
-        if flag in ("false", "0"):
-            return False
         return bool(self.options.get("replay")) and "batch_limit" not in self.options
 
     def streamReader(self, schema: StructType) -> ChangefeedPartitionedStreamReader:

@@ -33,10 +33,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crdb_changefeed_publisher_spark.operators.changefeed import changefeed_pipeline
 from crdb_changefeed_publisher_spark.streaming.cursors import CursorStore
 from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
-from crdb_changefeed_publisher_spark.streaming.queues import DirQueue, MessageQueue, make_queue
+from crdb_changefeed_publisher_spark.streaming.queues import MessageQueue, make_queue
 
 
 def publish_batch(
@@ -62,8 +61,7 @@ def publish_batch(
 
     `queue_kind` selects the sink per the QueueType registry: 'rabbitmq'
     (reference default, AMQP with publisher confirms) or 'dir' (fsync-confirm
-    file queue). 'memory' is rejected here — an executor-side in-memory list
-    is invisible to the driver, so silently accepting it would drop data.
+    file queue).
 
     `batch_id` opts into the idempotent/exactly-once-ish layouts: DirQueue
     truncates its (batch, partition)-keyed file on a replay; RabbitMQQueue
@@ -83,9 +81,7 @@ def publish_batch(
     if queue_kind == "dir" and out_dir is None:
         raise ValueError("queue_kind='dir' requires out_dir")
     if queue_kind not in ("dir", "rabbitmq"):
-        raise ValueError(
-            f"queue_kind {queue_kind!r} is not publishable from executors; use 'dir' or 'rabbitmq'"
-        )
+        raise ValueError(f"unknown queue type: {queue_kind!r}; use 'dir' or 'rabbitmq'")
 
     def publish_partition(pdfs):
         # Arrow path: each partition arrives as pandas batches (no per-row
@@ -238,7 +234,6 @@ def run_pipeline(
     checkpoint_dir: str,
     cursor_store: CursorStore | None = None,
     trigger_seconds: float | None = None,
-    available_now: bool = False,
     drain_all: bool = False,
     queue_kind: str = "dir",
     amqp_addr: str | None = None,
@@ -253,13 +248,12 @@ def run_pipeline(
     trigger_seconds is the cursor-frequency analog (reference default 10s,
     cli.yml:18-21): micro-batch cadence == resolved/commit cadence.
 
-    `available_now` uses Spark's Trigger.AvailableNow — correct for file
-    sources, but a Python SimpleDataSourceStreamReader silently degrades to
-    ONE micro-batch under it (probed on pyspark 4.1: 17/105 rows drained).
-    For the custom changefeed source use `drain_all=True` instead: run real
-    micro-batches, block until every row available at (and during) the run
-    is processed (`processAllAvailable`), then stop — the `--once` drain
-    semantics, with the final resolved cursor mirrored as usual.
+    `drain_all=True` runs real micro-batches, blocks until every row
+    available at (and during) the run is processed (`processAllAvailable`),
+    then stops — the `--once` drain semantics, with the final resolved
+    cursor mirrored as usual. (Trigger.AvailableNow is not offered: a
+    Python SimpleDataSourceStreamReader silently degrades to ONE
+    micro-batch under it; probed on pyspark 4.1: 17/105 rows drained.)
 
     `on_batch(batch_id, messages_sent_total, resolved_list)` runs at the
     END of each foreachBatch (after the publish, before Spark commits the
@@ -281,9 +275,7 @@ def run_pipeline(
             on_batch_timing=on_batch_timing,
         )
     ).option("checkpointLocation", checkpoint_dir)
-    if available_now and not drain_all:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
+    if trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     query = writer.start()
     if drain_all:
@@ -292,8 +284,3 @@ def run_pipeline(
         query.awaitTermination(60)
     return query
 
-
-def streaming_envelopes(stream_df: DataFrame) -> DataFrame:
-    """Pure-transform streaming view (for memory-sink tests): envelopes only."""
-    envelopes, _ = changefeed_pipeline(stream_df)
-    return envelopes

@@ -3,7 +3,6 @@
 at-least-once, publisher-confirmed semantics (src/queues.rs:44-65).
 
 Implementations:
-- InMemoryQueue: driver-side list — test double.
 - DirQueue: one file per partition under a directory, appended sequentially —
   a distributed-safe stand-in used by the streaming tests (executors write
   their own partition file, order within partition preserved like the
@@ -13,7 +12,7 @@ Implementations:
   confirms on (delivery confirmation == the double-await in queues.rs:55-56).
 
 The registry mirrors model.rs:6-16 QueueType (single variant "rabbitmq")
-plus the test doubles.
+plus the file queue.
 """
 
 from __future__ import annotations
@@ -31,22 +30,6 @@ class MessageQueue(Protocol):
     def publish_many(self, messages: "list[bytes]") -> None: ...
 
     def close(self) -> None: ...
-
-
-class InMemoryQueue:
-    """Driver-side capture queue for unit tests."""
-
-    def __init__(self) -> None:
-        self.messages: list[bytes] = []
-
-    def publish(self, message: bytes) -> None:
-        self.messages.append(message)
-
-    def publish_many(self, messages: list[bytes]) -> None:
-        self.messages.extend(messages)
-
-    def close(self) -> None:
-        pass
 
 
 class DirQueue:
@@ -126,7 +109,7 @@ class RabbitMQQueue:
             import pika  # type: ignore[import-not-found]
         except ImportError as e:  # pragma: no cover - pika not bundled
             raise RuntimeError(
-                "pika is not installed; use DirQueue/InMemoryQueue or install pika"
+                "pika is not installed; use DirQueue or install pika"
             ) from e
         self._pika = pika
         self._conn = pika.BlockingConnection(pika.URLParameters(amqp_addr))
@@ -176,8 +159,6 @@ def make_queue(kind: str, *, path: str | None = None, partition_id: int = 0,
     if kind == "dir":
         assert path is not None
         return DirQueue(path, partition_id, batch_id=batch_id)
-    if kind == "memory":
-        return InMemoryQueue()
     raise ValueError(f"unknown queue type: {kind}")
 
 

@@ -55,7 +55,7 @@ PKG = "crdb_changefeed_publisher_spark"
 # package __init__ imports every spec module) and the changefeed source.
 ENTRY_POINTS = (f"{PKG}.cli", f"{PKG}.plans", f"{PKG}.sources.crdb_changefeed")
 # Outside the closure and due for deletion in the next change (ROADMAP
-# direction 3): the table sink carries 52 tests, more than one change
+# direction 3): the table sink carries 50 tests, more than one change
 # retires alongside the rest of the cut. The test requires an exact match,
 # so this set can only shrink: a module that joins the closure, is deleted
 # or newly falls outside it fails the test until the set is updated.
@@ -124,3 +124,39 @@ def test_every_package_module_is_reached_from_a_live_entry_point():
         f"modules outside the live import closure: {unreached}; "
         f"pending deletion: {sorted(PENDING_DELETION)}"
     )
+
+
+def _unused_imports(path: str) -> list[tuple[int, str]]:
+    """Names an import statement anywhere in the file binds that no name
+    in the file reads (`import a.b` binds `a`); `__future__` imports and
+    lines marked `# noqa` are skipped."""
+    with open(path) as fh:
+        src = fh.read()
+    lines = src.splitlines()
+    tree = ast.parse(src, path)
+    bound: dict[str, int] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                if a.name == "*" or "# noqa" in lines[node.lineno - 1] + lines[a.lineno - 1]:
+                    continue
+                bound.setdefault(a.asname or a.name.split(".")[0], a.lineno)
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [(line, name) for name, line in bound.items() if name not in used]
+
+
+def test_no_unused_imports():
+    """Static, Spark-free: every import in the package, tools/ and tests/
+    is used by its module (package __init__ files re-export, so they are
+    not checked)."""
+    found = []
+    for top in (PKG, "tools", "tests"):
+        for dirpath, _, files in os.walk(os.path.join(REPO_ROOT, top)):
+            for f in sorted(files):
+                if f.endswith(".py") and f != "__init__.py":
+                    path = os.path.join(dirpath, f)
+                    rel = os.path.relpath(path, REPO_ROOT)
+                    found += [f"{rel}:{ln}: {name}" for ln, name in _unused_imports(path)]
+    assert not found, "unused imports:\n" + "\n".join(found)

@@ -8,7 +8,6 @@ from __future__ import annotations
 import glob
 
 import pyarrow.parquet as pq
-import pytest
 
 from pyspark.sql import functions as F
 

@@ -5,7 +5,6 @@ only prove the zero-violation path; these prove the counting)."""
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from crdb_changefeed_publisher_spark.operators.quality import profile_table, quality_checks
 

@@ -3,8 +3,6 @@ salted aggregation equivalence, and AQE behaviors the engine relies on."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from crdb_changefeed_publisher_spark.functions.skew import salted_agg

@@ -11,7 +11,6 @@ import subprocess
 import sys
 
 import duckdb
-import numpy as np
 import pytest
 
 TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")

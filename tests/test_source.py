@@ -8,6 +8,7 @@ import json
 
 import pytest
 
+from crdb_changefeed_publisher_spark.sources import crdb_changefeed
 from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
     ChangefeedSimpleStreamReader,
     GcThresholdError,
@@ -68,7 +69,7 @@ def test_simple_reader_offsets(tmp_path):
     assert [r[0] for r in again] == [r[0] for r in rows]
 
 
-def test_replay_fetch_seeks_not_rescans(tmp_path):
+def test_replay_fetch_seeks_not_rescans(tmp_path, monkeypatch):
     """Sequential micro-batches over a long feed must read each line once:
     the connection seeks to the cached byte offset of the batch start
     instead of rescanning lines 0..pos every fetch (O(n) total, not O(n^2))."""
@@ -84,16 +85,17 @@ def test_replay_fetch_seeks_not_rescans(tmp_path):
     assert conn.lines_scanned == 1000
 
     # a cold fetch at an unindexed position skips forward from the start,
-    # indexing every `index_stride`-th line; later fetches behind the
+    # indexing every INDEX_STRIDE-th line; later fetches behind the
     # frontier hop to the nearest stride point and skip < stride lines —
     # bounded work per fetch with O(lines/stride) index memory
-    cold = JsonlReplayConnection(feed, index_stride=100)
+    monkeypatch.setattr(crdb_changefeed, "INDEX_STRIDE", 100)
+    cold = JsonlReplayConnection(feed)
     cold.fetch(990, None, 50)
     assert cold.lines_scanned == 1000  # 990 skipped + 10 consumed
     cold.fetch(990, None, 50)
     # second time: hop to indexed line 900, skip 90, consume 10
     assert cold.lines_scanned == 1100
-    assert len(cold._stride_bytes) == 11  # lines 0, 100, ..., 1000 only
+    assert len(cold.index.stride_bytes) == 11  # lines 0, 100, ..., 1000 only
 
     # appended lines are visible without invalidating cached offsets
     with open(feed, "a", encoding="utf-8") as f:
@@ -209,11 +211,12 @@ def test_streaming_end_to_end(spark, tmp_path):
         .option("batch_limit", "7")
         .load()
     )
-    from crdb_changefeed_publisher_spark.streaming.pipeline import streaming_envelopes
+    from crdb_changefeed_publisher_spark.operators.changefeed import changefeed_pipeline
 
     # Python simple stream readers don't support availableNow (Spark falls
     # back to one batch); run real micro-batches and drain.
-    q = streaming_envelopes(sdf).writeStream.format("memory").queryName("cf_env").start()
+    envelopes, _ = changefeed_pipeline(sdf)
+    q = envelopes.writeStream.format("memory").queryName("cf_env").start()
     q.processAllAvailable()
     q.stop()
     got = [r.envelope for r in spark.sql("select envelope from cf_env").collect()]
@@ -268,12 +271,15 @@ def test_partitioned_reader_plans_ordered_ranges(tmp_path):
     assert sum(p.end_line - p.start_line for p in parts) == 60
 
 
-def test_partitioned_range_planner_balances_bytes_under_skew(tmp_path):
+def test_partitioned_range_planner_balances_bytes_under_skew(tmp_path, monkeypatch):
     """A feed with 100x line-length skew (fat JSON values up front) must
     still produce byte-balanced ranges: equal LINE counts would give the
     first executor ~100x the I/O of the last (the straggler a uniform-line
-    assumption creates at scale). Covers both planner paths: the exact
-    bounded walk (small batches) and the stride-granular split."""
+    assumption creates at scale). Every cut is the first line that starts
+    at or after its byte target, for 1-7 ranges and for batches spanning
+    less and more than one index stride."""
+    import bisect
+
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
         ChangefeedPartitionedStreamReader,
     )
@@ -283,37 +289,46 @@ def test_partitioned_range_planner_balances_bytes_under_skew(tmp_path):
         for i in range(400):
             fat = "x" * (2000 if i < 100 else 20)  # first quarter is ~100x fatter
             f.write(json.dumps(["t", f"[{i}]", json.dumps({"after": {"v": fat}})]) + "\n")
+    with open(feed, "rb") as f:
+        offs = [0]  # true byte offset of every line start, then EOF
+        while f.readline():
+            offs.append(f.tell())
+    with open(feed, encoding="utf-8") as f:
+        naive = [json.loads(line) for line in f]
 
-    for stride in ("256", "4"):  # exact-walk path, then stride-split path
-        r = ChangefeedPartitionedStreamReader(
-            {"replay": feed, "read_partitions": "4", "index_stride": stride}
-        )
-        end = r.latestOffset()
-        parts = r.partitions({"pos": 0}, end)
-        assert parts[0].start_line == 0 and parts[-1].end_line == 400
-        for a, b in zip(parts, parts[1:]):
-            assert a.end_line == b.start_line
-        # measure actual byte span per range
-        with open(feed, "rb") as f:
-            offs = [0]
-            while f.readline():
-                offs.append(f.tell())
+    monkeypatch.setattr(crdb_changefeed, "INDEX_STRIDE", 4)  # many strides
+    batches = [(0, 400), (50, 250), (98, 101), (5, 7), (0, 3), (399, 400)]
+    for n in range(1, 8):
+        r = ChangefeedPartitionedStreamReader({"replay": feed, "read_partitions": str(n)})
+        assert r.latestOffset() == {"pos": 400}
+        for s, e in batches:
+            parts = r.partitions({"pos": s}, {"pos": e})
+            assert len(parts) == max(min(n, e - s), 1)
+            assert parts[0].start_line == s and parts[-1].end_line == e
+            for a, b in zip(parts, parts[1:]):
+                assert a.end_line == b.start_line
+            sb, span = offs[s], offs[e] - offs[s]
+            for i, p in enumerate(parts):
+                assert p.start_byte == offs[p.start_line], (n, s, e, i)
+                if i:
+                    target = sb + span * i // len(parts)
+                    assert p.start_line == bisect.bisect_left(offs, target), (n, s, e, i)
+            # rows read exactly once, in order
+            rows = [row for p in parts for row in r.read(p)]
+            assert [x[1].decode() for x in rows] == [w[1] for w in naive[s:e]]
+        # equal-line split of the whole feed would give spans like
+        # [203k, 9k, 9k, 9k]; the byte cuts keep every range near the mean
+        parts = r.partitions({"pos": 0}, {"pos": 400})
         spans = [offs[p.end_line] - offs[p.start_line] for p in parts]
-        # equal-line split would give spans ~[203k, 9k, 9k, 9k]; byte-aware
-        # split keeps every range within ~2x of the mean
-        mean = sum(spans) / len(spans)
-        assert max(spans) <= 2.0 * mean, (stride, spans)
-        # rows still read exactly once, in order
-        rows = [row for p in parts for row in r.read(p)]
-        assert len(rows) == 400
+        assert max(spans) <= 2.0 * sum(spans) / len(spans), (n, spans)
         # index memory is strided, not per-line
-        assert len(r._stride_bytes) <= 400 // int(stride) + 1
+        assert len(r.index.stride_bytes) == 400 // 4 + 1
 
 
 def test_partitioned_is_default_for_recorded_feeds():
-    """VERDICT r4 #3: a file-backed feed defaults to the executor-parallel
-    reader; batch_limit (a simple-reader knob) or partitioned=false selects
-    the serial reader; live mode is always serial (one changefeed cursor)."""
+    """A file-backed feed uses the executor-parallel reader unless
+    batch_limit (a simple-reader knob) is set; live mode is always serial
+    (one changefeed cursor)."""
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
         CrdbChangefeedDataSource,
     )
@@ -322,22 +337,16 @@ def test_partitioned_is_default_for_recorded_feeds():
         return CrdbChangefeedDataSource(opts)
 
     assert src({"replay": "/tmp/f.jsonl"})._use_partitioned()
-    assert src({"replay": "/tmp/f.jsonl", "partitioned": "true"})._use_partitioned()
-    assert not src({"replay": "/tmp/f.jsonl", "partitioned": "false"})._use_partitioned()
+    assert src({"replay": "/tmp/f.jsonl", "epoch_rows": "100"})._use_partitioned()
     assert not src({"replay": "/tmp/f.jsonl", "batch_limit": "100"})._use_partitioned()
-    # explicit partitioned=true wins over batch_limit (which is then ignored)
-    assert src(
-        {"replay": "/tmp/f.jsonl", "partitioned": "true", "batch_limit": "100"}
-    )._use_partitioned()
     assert not src({"table": "foo"})._use_partitioned()  # live: serial cursor
+    assert not src({"table": "foo", "batch_limit": "100"})._use_partitioned()
 
 
 def test_partitioned_stream_matches_simple_reader(spark, tmp_path):
     """Same feed through both readers => identical published envelope sets
     (the partitioned path may interleave ranges across executors; the
     publish path's (key, seq) sort restores per-key order either way)."""
-    import glob as _glob
-
     from crdb_changefeed_publisher_spark.streaming.pipeline import run_pipeline
     from crdb_changefeed_publisher_spark.streaming.queues import DirQueue
 
@@ -346,13 +355,11 @@ def test_partitioned_stream_matches_simple_reader(spark, tmp_path):
     register(spark)
     outs = {}
     for mode in ("simple", "partitioned"):
-        reader = (
-            spark.readStream.format("crdb_changefeed")
-            .option("replay", feed)
-            .option("batch_limit", "60")
-        )
-        if mode == "partitioned":
-            reader = reader.option("partitioned", "true").option("read_partitions", "3")
+        reader = spark.readStream.format("crdb_changefeed").option("replay", feed)
+        if mode == "simple":
+            reader = reader.option("batch_limit", "60")
+        else:
+            reader = reader.option("read_partitions", "3")
         out = str(tmp_path / f"out_{mode}")
         run_pipeline(reader.load(), out, str(tmp_path / f"ckpt_{mode}"), drain_all=True)
         outs[mode] = sorted(DirQueue.read_all(out))
@@ -377,7 +384,6 @@ def test_partitioned_reader_checkpoint_resume(spark, tmp_path):
         sdf = (
             spark.readStream.format("crdb_changefeed")
             .option("replay", feed)
-            .option("partitioned", "true")
             .option("read_partitions", "3")
             .load()
         )

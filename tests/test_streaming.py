@@ -40,7 +40,7 @@ def wire_feed_df(spark, n_rows: int = 50, resolved_every: int = 10):
 
 def start_stream(spark, feed_dir: str, out_dir: str, ckpt: str, store):
     sdf = spark.readStream.schema("table string, key binary, value binary").parquet(feed_dir)
-    return run_pipeline(sdf, out_dir, ckpt, cursor_store=store, available_now=True)
+    return run_pipeline(sdf, out_dir, ckpt, cursor_store=store, drain_all=True)
 
 
 def test_publish_and_cursor_mirror(spark, tmp_path):
@@ -144,7 +144,7 @@ def test_midrun_kill_resume_at_least_once(spark, tmp_path):
             if mode == "simple":
                 r = r.option("batch_limit", "300")
             else:
-                r = r.option("partitioned", "true").option("read_partitions", "3")
+                r = r.option("read_partitions", "3")
             return r.load()
 
         write(1000)
@@ -206,7 +206,6 @@ def test_midrun_kill_resume_idempotent_sink_no_duplicates(spark, tmp_path):
         return (
             spark.readStream.format("crdb_changefeed")
             .option("replay", feed)
-            .option("partitioned", "true")
             .option("read_partitions", "3")
             .load()
         )

@@ -156,7 +156,6 @@ def test_funnel_ordering_semantics(spark):
     stops mid-funnel — only the ordered completion advances all 3 steps."""
     from datetime import datetime
 
-    from crdb_changefeed_publisher_spark.plans.events import events_funnel
     from crdb_changefeed_publisher_spark import plans
 
     base = datetime(2024, 1, 1)

@@ -45,10 +45,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 # Corpus generator + constants now live in the library
 # (crdb_changefeed_publisher_spark/fixtures.py) so the spec layer can
 # lazily build tiers; re-exported here for the existing CLI + tests.

@@ -4,9 +4,8 @@ Bridges the batch fixtures to the streaming path: each row becomes a CRDB
 core-changefeed wire tuple ``[table, "[<pk>]", {"after": {...}}]``
 (README.md:29-38 shape), with a resolved marker every `--resolved-every`
 rows. The output replays through
-``spark.readStream.format("crdb_changefeed").option("replay", ...)`` —
-optionally ``.option("partitioned", "true")`` — exactly like a recorded
-production feed.
+``spark.readStream.format("crdb_changefeed").option("replay", ...)``
+exactly like a recorded production feed.
 
 Rows are emitted in primary-key order so recordings are deterministic
 (byte-identical across runs), which keeps replay-based tests and benches

@@ -118,17 +118,12 @@ def main() -> None:
         # keep every epoch's progress report (Spark keeps the last 100)
         spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
         register(spark)
-        reader = (
-            spark.readStream.format("crdb_changefeed")
-            .option("replay", feed)
-            .option("batch_limit", str(args.batch_limit))
-        )
-        if args.partitioned:
-            reader = reader.option("partitioned", "true")
-            if args.read_partitions > 0:
-                reader = reader.option(
-                    "read_partitions", str(args.read_partitions)
-                )
+        reader = spark.readStream.format("crdb_changefeed").option("replay", feed)
+        if not args.partitioned:
+            # batch_limit selects the simple reader
+            reader = reader.option("batch_limit", str(args.batch_limit))
+        elif args.read_partitions > 0:
+            reader = reader.option("read_partitions", str(args.read_partitions))
         stream = reader.load()
         out_dir = os.path.join(work, "out")
         t0 = time.time()

@@ -102,7 +102,6 @@ def run_soak(spark, feed: str, work: str, mode: str, rows: int, batch_limit: int
         if mode == "simple":
             r = r.option("batch_limit", str(batch_limit))  # selects simple reader
         else:
-            r = r.option("partitioned", "true")
             if read_partitions > 0:
                 r = r.option("read_partitions", str(read_partitions))
             if epoch_rows > 0:

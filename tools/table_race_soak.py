@@ -130,7 +130,6 @@ def main() -> None:
         return (
             spark.readStream.format("crdb_changefeed")
             .option("replay", feed)
-            .option("partitioned", "true")
             .option("epoch_rows", str(epoch_rows))
             .load()
             .writeStream.foreachBatch(apply_batch)

@@ -139,7 +139,6 @@ def main() -> None:
         r = (
             spark.readStream.format("crdb_changefeed")
             .option("replay", feed)
-            .option("partitioned", "true")
             .option("epoch_rows", str(epoch_rows))
         )
         return (

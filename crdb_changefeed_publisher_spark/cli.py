@@ -82,6 +82,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.queue == "dir" and not args.out_dir:
         print("--queue dir requires --out-dir", file=sys.stderr)
         return 2
+    if not args.replay and (args.epoch_rows or args.read_partitions is not None):
+        print("--epoch-rows and --read-partitions require --replay", file=sys.stderr)
+        return 2
     spark = get_spark(f"crdb-changefeed-{args.table}")
     register(spark)
     server = serve_metrics()  # PROMETHEUS_ADDR or 0.0.0.0:8001, main.rs:57

@@ -40,15 +40,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-WIRE_SCHEMA = StructType(
-    [
-        StructField("table", StringType(), True),
-        StructField("key", BinaryType(), True),
-        StructField("value", BinaryType(), True),
-    ]
-)
+from crdb_changefeed_publisher_spark.operators.changefeed import CHANGEFEED_WIRE_SCHEMA
 
 # src/main.rs:188-203 — CRDB's "cursor older than GC window" message.
 GC_THRESHOLD_RE = re.compile(
@@ -476,7 +470,7 @@ class CrdbChangefeedDataSource(DataSource):
         return "crdb_changefeed"
 
     def schema(self) -> StructType:
-        return WIRE_SCHEMA
+        return CHANGEFEED_WIRE_SCHEMA
 
     def _use_partitioned(self) -> bool:
         return bool(self.options.get("replay")) and "batch_limit" not in self.options

@@ -18,14 +18,12 @@ plus the file queue.
 from __future__ import annotations
 
 import os
-from typing import Iterable, Protocol
+from typing import Protocol
 
 
 class MessageQueue(Protocol):
     """Parity with reference src/queues.rs:13-15 (publish_many is the
     Arrow-batch bulk form — semantically a loop of publishes)."""
-
-    def publish(self, message: bytes) -> None: ...
 
     def publish_many(self, messages: "list[bytes]") -> None: ...
 
@@ -60,9 +58,6 @@ class DirQueue:
         self._f = open(  # noqa: SIM115 - lifetime managed by close()
             os.path.join(path, name), mode
         )
-
-    def publish(self, message: bytes) -> None:
-        self._f.write(message + b"\n")
 
     def publish_many(self, messages: list[bytes]) -> None:
         # one buffered write per Arrow batch; group-commit fsync in close()
@@ -160,13 +155,3 @@ def make_queue(kind: str, *, path: str | None = None, partition_id: int = 0,
         assert path is not None
         return DirQueue(path, partition_id, batch_id=batch_id)
     raise ValueError(f"unknown queue type: {kind}")
-
-
-def publish_iter(queue: MessageQueue, messages: Iterable[bytes]) -> int:
-    """Sequential confirmed publish of an iterator (reference main.rs:226-227
-    publishes one in-flight message at a time). Returns count."""
-    n = 0
-    for m in messages:
-        queue.publish(m)
-        n += 1
-    return n

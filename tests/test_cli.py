@@ -36,6 +36,20 @@ def test_spark_extensions_parse():
     assert args.idempotent and args.fan_out_tables and args.once
 
 
+def test_replay_only_flags_rejected_on_a_live_feed(monkeypatch, capsys):
+    """--epoch-rows and --read-partitions shape the recorded-feed reader
+    only; on a live feed they exit 2 before any Spark session starts
+    instead of being dropped."""
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("main reached get_spark")
+
+    monkeypatch.setattr("crdb_changefeed_publisher_spark.session.get_spark", no_spark)
+    assert main(["--table", "foo", "--epoch-rows", "10"]) == 2
+    assert main(["--table", "foo", "--read-partitions", "4"]) == 2
+    assert "require --replay" in capsys.readouterr().err
+
+
 def test_replay_once_bounds_epochs_and_mirrors_cursor(spark, tmp_path, monkeypatch):
     """A real --replay --once run: --epoch-rows reaches the recorded-feed
     reader (40 lines at 10 per epoch publish under 4 batch ids with the

@@ -102,17 +102,15 @@ def test_idempotent_sink_batch_replay_no_duplicates(spark, tmp_path):
     sink truncates on open, so a replay overwrites its previous attempt
     instead of appending duplicates."""
     q = DirQueue(str(tmp_path / "q"), partition_id=0, batch_id=7)
-    q.publish(b"m1")
-    q.publish(b"m2")
+    q.publish_many([b"m1", b"m2"])
     q.close()
     # simulate the Spark retry: same batch, same partition, fresh attempt
     q2 = DirQueue(str(tmp_path / "q"), partition_id=0, batch_id=7)
-    q2.publish(b"m1")
-    q2.publish(b"m2")
+    q2.publish_many([b"m1", b"m2"])
     q2.close()
     assert DirQueue.read_all(str(tmp_path / "q")) == [b"m1", b"m2"]
     # a DIFFERENT batch gets its own file and both survive
     q3 = DirQueue(str(tmp_path / "q"), partition_id=0, batch_id=8)
-    q3.publish(b"m3")
+    q3.publish_many([b"m3"])
     q3.close()
     assert DirQueue.read_all(str(tmp_path / "q")) == [b"m1", b"m2", b"m3"]

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from crdb_changefeed_publisher_spark.operators.changefeed import CHANGEFEED_WIRE_SCHEMA
 from crdb_changefeed_publisher_spark.streaming.cursors import (
     FileCursorStore,
     MemoryCursorStore,
@@ -242,9 +243,6 @@ def test_midrun_kill_resume_idempotent_sink_no_duplicates(spark, tmp_path):
     assert len(msgs) == n_changes  # replay overwrote, not appended
 
 
-WIRE_SCHEMA = "table string, key binary, value binary"
-
-
 def change_row(table: str, i: int) -> tuple:
     return (table, f"[{i}]".encode(), json.dumps({"after": {"a": i}}).encode())
 
@@ -257,7 +255,9 @@ def run_batch(spark, rows, out_dir, partitions: int = 3, batch_id: int = 0, **kw
     """One make_foreach_batch call on `rows`, sliced in order over
     `partitions` input partitions; returns (resolved list, mirrored cursor,
     messages sent)."""
-    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), WIRE_SCHEMA)
+    batch = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, partitions), CHANGEFEED_WIRE_SCHEMA
+    )
     store, seen = MemoryCursorStore(), []
     before = MESSAGES_SENT.value
     make_foreach_batch(
@@ -294,7 +294,7 @@ def test_fused_publish_matches_two_pass(spark, tmp_path):
         else change_row("orders" if i % 2 else "lineitem", i % 7)
         for i in range(60)
     ]
-    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), WIRE_SCHEMA)
+    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), CHANGEFEED_WIRE_SCHEMA)
     decoded = decode_changefeed(batch).withColumn("_seq", F.monotonically_increasing_id())
     changes, cursors = split_changes(decoded)
     two_pass = [r.resolved for r in extract_resolved(cursors.orderBy("_seq")).collect()]
@@ -384,8 +384,7 @@ def test_metrics_endpoint(tmp_path):
 
 def test_dir_queue_partition_files_ordered(tmp_path):
     q = DirQueue(str(tmp_path / "q"), partition_id=3)
-    q.publish(b"a")
-    q.publish(b"b")
+    q.publish_many([b"a", b"b"])
     q.close()
     assert DirQueue.read_all(str(tmp_path / "q")) == [b"a", b"b"]
     assert os.listdir(str(tmp_path / "q")) == ["partition-00003.jsonl"]

@@ -4,7 +4,7 @@
   --table             watched table (required)
   --queue             queue type, default 'rabbitmq' (model.rs:6-16)
   --cursor-store      cursor store type, default 'cockroachdb' (model.rs:18-30)
-  --cursor-frequency  resolved cadence, default '10s' (cli.yml:18-21)
+  --cursor-frequency  resolved cadence <number>(ms|s|m|h), default '10s' (cli.yml:18-21)
 
   env: DATABASE_URL, AMQP_ADDR, AMQP_QUEUE, PROMETHEUS_ADDR (main.rs:57-69)
 
@@ -19,7 +19,16 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
+
+
+def frequency_seconds(value: str) -> float:
+    """``<number>(ms|s|m|h)`` in seconds; ValueError for any other value."""
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)(ms|s|m|h)", value)
+    if m is None:
+        raise ValueError(f"--cursor-frequency must be <number>(ms|s|m|h), got {value!r}")
+    return float(m.group(1)) * {"ms": 0.001, "s": 1, "m": 60, "h": 3600}[m.group(2)]
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -30,7 +39,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--table", required=True, help="table to watch")
     p.add_argument("--queue", default="rabbitmq", choices=["rabbitmq", "dir"])
     p.add_argument(
-        "--cursor-store", default="cockroachdb", choices=["cockroachdb", "file", "memory"]
+        "--cursor-store", default="cockroachdb", choices=["cockroachdb", "file"]
     )
     p.add_argument("--cursor-frequency", default="10s")
     p.add_argument("--replay", default=None, help="JSONL recorded feed (test/bench mode)")
@@ -85,6 +94,11 @@ def main(argv: list[str] | None = None) -> int:
     if not args.replay and (args.epoch_rows or args.read_partitions is not None):
         print("--epoch-rows and --read-partitions require --replay", file=sys.stderr)
         return 2
+    try:
+        freq = frequency_seconds(args.cursor_frequency)
+    except ValueError as e:
+        print(e, file=sys.stderr)
+        return 2
     spark = get_spark(f"crdb-changefeed-{args.table}")
     register(spark)
     server = serve_metrics()  # PROMETHEUS_ADDR or 0.0.0.0:8001, main.rs:57
@@ -109,8 +123,6 @@ def main(argv: list[str] | None = None) -> int:
         path=args.cursor_path or f"/tmp/crdb-cursor-{args.table}.json",
         database_url=os.environ.get("DATABASE_URL"),
     ) if args.cursor_store != "cockroachdb" or os.environ.get("DATABASE_URL") else None
-
-    freq = float(args.cursor_frequency.rstrip("s")) if args.cursor_frequency.endswith("s") else 10.0
     query = run_pipeline(
         reader.load(),
         out_dir=args.out_dir,

@@ -1001,13 +1001,16 @@ def exact_substring_excise_sliced(
     runs as a batch writing a table) and returns the union read back
     from scratch. Semantics are the one-shot form's to the byte: same
     digests, same min_count over ALL occurrences, same coverage merge —
-    pinned by a row-for-row equality test at a tier both forms run."""
+    pinned by a row-for-row equality test at a tier both forms run. The
+    default scratch lives as long as the session: the result reads it lazily."""
     import shutil
     import tempfile
 
+    from crdb_changefeed_publisher_spark.session import session_dir
+
     spark = docs.sparkSession
     if scratch_dir is None:
-        scratch_dir = tempfile.mkdtemp(prefix="exsub_sliced_")
+        scratch_dir = tempfile.mkdtemp(prefix="exsub_sliced_", dir=session_dir())
     dup_path = f"{scratch_dir}/dup_digests.parquet"
     out_path = f"{scratch_dir}/rewritten.parquet"
 

@@ -9,42 +9,32 @@ approximate LSH/IVF ops, via seeded+rounded literals — is value-verified.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crdb_changefeed_publisher_spark.operators import dedup, linkage, similarity, text
 from crdb_changefeed_publisher_spark.plans.registry import query
+from crdb_changefeed_publisher_spark.session import session_dir, session_pass
 from crdb_changefeed_publisher_spark.tables import load_table
 
-# Session-shared corpus row count: several guarded specs need n_docs to
+# Session-shared corpus row counts: several guarded specs need n_docs to
 # size their saturation budgets (dedup_simhash, doc_fuzzy_linkage_exact);
 # counting once per (session, sf_dir) keeps each guard to its count-aggs
-# instead of re-counting the corpus per spec (r10 verdict #4). Same cache
-# convention as _CONTAM_CACHE / _KMEANS_CACHE below.
-_DOC_COUNT_CACHE: dict[tuple[str, str], int] = {}
+# instead of re-counting the corpus per spec (r10 verdict #4).
 
 
 def _doc_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _DOC_COUNT_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _DOC_COUNT_CACHE[key] = n
-    return n
-
-
-_EMB_COUNT_CACHE: dict[tuple[str, str], int] = {}
+    return session_pass(
+        spark, "doc_count", sf_dir,
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
 
 
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _EMB_COUNT_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "embeddings").count()
-        _EMB_COUNT_CACHE[key] = n
-    return n
+    return session_pass(
+        spark, "emb_count", sf_dir,
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
 # --- deduplication ---------------------------------------------------------
@@ -1130,16 +1120,13 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # persisted, and timed by bench as its own row — the production posture,
 # where decontamination stats are materialized once per corpus snapshot
 # and every downstream gate reads them.
-_CONTAM_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CONTAM_CACHE.get(key)
-    if df is None:
-        df = text.benchmark_contamination(load_table(spark, sf_dir, "documents")).persist()
-        _CONTAM_CACHE[key] = df
-    return df
+    return session_pass(
+        spark, "contamination", sf_dir,
+        lambda: text.benchmark_contamination(load_table(spark, sf_dir, "documents")).persist(),
+    )
 
 
 # Session-shared build passes, exposed by name so bench.py can time each
@@ -1196,18 +1183,15 @@ SHARED_PASSES = {
 # is materialized once per corpus snapshot and the resolution/report
 # stages read it (same pattern as _contamination; bench times it as the
 # explicit `_shared:minhash_pairs` row).
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        df = dedup.minhash_portable_pairs(
+    return session_pass(
+        spark, "minhash_pairs", sf_dir,
+        lambda: dedup.minhash_portable_pairs(
             load_table(spark, sf_dir, "documents"), threshold=0.2
-        ).persist()
-        _PAIRS_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 @query(
@@ -1633,11 +1617,7 @@ def _kmeans_ctes(
     return ",\n    ".join(parts)
 
 
-_KMEANS_CACHE: dict[tuple[str, str], list[list[int]]] = {}
-_KMEANS1_CACHE: dict[tuple[str, str], list[list[int]]] = {}
-
-
-def _train_flat_and_level1(spark: SparkSession, sf_dir: str) -> None:
+def _train_flat_and_level1(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     """ONE corpus training pipeline for BOTH session codebooks (r14,
     guide §5 / r13 verdict #2): the flat IVF centroids (_kmeans_cents)
     and the two-level trainer's level-1 cells previously each ran their
@@ -1652,31 +1632,25 @@ def _train_flat_and_level1(spark: SparkSession, sf_dir: str) -> None:
     trainer's identical-seed dedup. Per-set arithmetic is untouched —
     centroids are bit-identical to the separate trainers (integer sums
     are order-independent), which the retired-oracle suite pins."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _KMEANS_CACHE and key in _KMEANS1_CACHE:
-        return
-    from crdb_changefeed_publisher_spark.operators.linalg import (
-        kmeans_k1_for,
-        kmeans_k_for,
-        kmeans_seeds,
-        kmeans_train_multi,
-    )
 
-    n = _emb_count(spark, sf_dir)
-    k = kmeans_k_for(n, cell_target=KMEANS_CELL_TARGET)
-    k1 = kmeans_k1_for(n, cell_target=KMEANS_CELL_TARGET)
-    emb = load_table(spark, sf_dir, "embeddings")
-    seeds = kmeans_seeds(emb, max(k, k1), KMEANS_SCALE)
-    flat, lvl1 = kmeans_train_multi(
-        emb, [seeds[:k], seeds[:k1]], n_iters=KMEANS_ITERS, scale=KMEANS_SCALE
-    )
-    _KMEANS_CACHE[key] = flat
-    _KMEANS1_CACHE[key] = lvl1
+    def build():
+        from crdb_changefeed_publisher_spark.operators import linalg
+
+        n = _emb_count(spark, sf_dir)
+        k = linalg.kmeans_k_for(n, cell_target=KMEANS_CELL_TARGET)
+        k1 = linalg.kmeans_k1_for(n, cell_target=KMEANS_CELL_TARGET)
+        emb = load_table(spark, sf_dir, "embeddings")
+        seeds = linalg.kmeans_seeds(emb, max(k, k1), KMEANS_SCALE)
+        return tuple(linalg.kmeans_train_multi(
+            emb, [seeds[:k], seeds[:k1]], n_iters=KMEANS_ITERS, scale=KMEANS_SCALE
+        ))
+
+    return session_pass(spark, "kmeans_train", sf_dir, build)
 
 
 def _kmeans_cents(spark: SparkSession, sf_dir: str) -> list[list[int]]:
-    """Session-cached trained centroids (keyed on (applicationId, sf_dir)
-    like _contamination): one training run feeds dedup_semantic AND
+    """Session-shared trained centroids (per (session, sf_dir), like
+    _contamination): one training run feeds dedup_semantic AND
     embedding_topk_ivf_trained — centroids are k*d
     ints, so the cache is KB-sized. k SELF-SIZES from a cheap corpus
     count via kmeans_k_for (the srp_bits_for convention; the oracle
@@ -1684,38 +1658,25 @@ def _kmeans_cents(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     population — and with it a fixed-probe query's candidate budget —
     stays ~KMEANS_CELL_TARGET at every corpus size instead of growing
     as n/8."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KMEANS_CACHE:
-        _train_flat_and_level1(spark, sf_dir)
-    return _KMEANS_CACHE[key]
-
-
-_KMEANS_INDEX_PATHS: dict[tuple[str, str], str] = {}
+    return _train_flat_and_level1(spark, sf_dir)[0]
 
 
 def _kmeans_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Session-cached PERSISTED flat-IVF index for the tier (the
+    """Session-shared PERSISTED flat-IVF index for the tier (the
     _kmeans2_index_path convention on the flat trained codebook): the
     corpus assignment written once as the cell-partitioned layout
     (similarity.build_trained_index), served directory-pruned by every
     consumer — the write-time posture ivf_topk_trained's docstring
     names, now also what the registered row exercises."""
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _KMEANS_INDEX_PATHS.get(key)
-    if path is None:
+    def build() -> str:
         cents = _kmeans_cents(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_ann_flat",
-            spark.sparkContext.applicationId,
-            sf_dir.strip("/").replace("/", "_"),
-        )
+        path = session_dir("ann_flat", sf_dir.strip("/").replace("/", "_"))
         similarity.build_trained_index(emb, cents, path, scale=KMEANS_SCALE)
-        _KMEANS_INDEX_PATHS[key] = path
-    return path
+        return path
+
+    return session_pass(spark, "kmeans_index", sf_dir, build)
 
 
 # final-centroid argmin assignment, shared by every consumer of the
@@ -1902,33 +1863,27 @@ def _kmeans2_ctes(
     return ",\n    ".join(parts)
 
 
-_KMEANS2_CACHE: dict[tuple[str, str], tuple[list[list[int]], "DataFrame"]] = {}
-
-
 def _kmeans2_codebook_df(spark: SparkSession, sf_dir: str):
-    """Session-cached two-level codebook (cents1, PERSISTED codebook
+    """Session-shared two-level codebook (cents1, PERSISTED codebook
     DataFrame): one training run feeds the assignment spec and any probe
     consumer. The codebook stays a DataFrame end-to-end — the trainer
     returns it persisted + materialized, and the distributed serve path
     (cogroup assignment / broadcast-join probe) never collects a row of
     it (r11 verdict #1)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KMEANS2_CACHE:
-        from crdb_changefeed_publisher_spark.operators.linalg import (
-            kmeans_train_two_level,
-        )
+
+    def build():
+        from crdb_changefeed_publisher_spark.operators.linalg import kmeans_train_two_level
 
         # level-1 cells come from the fused session training pass (r14):
         # one corpus pipeline feeds both this trainer and _kmeans_cents.
-        _train_flat_and_level1(spark, sf_dir)
+        lvl1 = _train_flat_and_level1(spark, sf_dir)[1]
         emb = load_table(spark, sf_dir, "embeddings")
-        cents1, codebook = kmeans_train_two_level(
+        return kmeans_train_two_level(
             emb, cell_target=KMEANS_CELL_TARGET, n_iters=KMEANS_ITERS,
-            scale=KMEANS_SCALE, n=_emb_count(spark, sf_dir),
-            cents1=_KMEANS1_CACHE[key],
+            scale=KMEANS_SCALE, n=_emb_count(spark, sf_dir), cents1=lvl1,
         )
-        _KMEANS2_CACHE[key] = (cents1, codebook)
-    return _KMEANS2_CACHE[key]
+
+    return session_pass(spark, "kmeans2_train", sf_dir, build)
 
 
 def _ivf_two_level_oracle(
@@ -1999,34 +1954,24 @@ def _ivf_two_level_oracle(
     """
 
 
-_KMEANS2_INDEX_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _kmeans2_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Session-cached PERSISTED two-level index for the tier: the trained
+    """Session-shared PERSISTED two-level index for the tier: the trained
     codebook's corpus assignment written once as the (cell, sub) layout
     (similarity.build_two_level_index — r12 verdict #1), then served from
     disk by every consumer. This is the 100 TB posture the registered row
     exercises: the one corpus-sized exchange is paid at WRITE time; the
     query path reads directory-pruned scans."""
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _KMEANS2_INDEX_PATHS.get(key)
-    if path is None:
+    def build() -> str:
         cents1, codebook = _kmeans2_codebook_df(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_ann2l",
-            spark.sparkContext.applicationId,
-            sf_dir.strip("/").replace("/", "_"),
-        )
+        path = session_dir("ann2l", sf_dir.strip("/").replace("/", "_"))
         similarity.build_two_level_index(
             emb, cents1, codebook, path, scale=KMEANS_SCALE
         )
-        _KMEANS2_INDEX_PATHS[key] = path
-    return path
+        return path
+
+    return session_pass(spark, "kmeans2_index", sf_dir, build)
 
 
 @query(

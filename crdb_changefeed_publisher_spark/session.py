@@ -10,13 +10,18 @@ config block is written for cluster scale, not just local mode:
   not a target.
 - Arrow enabled so any Pandas-UDF path is batch-vectorized, never row-wise.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+``session_pass`` builds a shared intermediate once per session,
+``clear_passes`` releases it, and ``session_dir`` places session-long files.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Hashable
 
-from pyspark.sql import SparkSession
+from pyspark import SparkFiles
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -67,3 +72,31 @@ def get_spark(app_name: str = "crdb_changefeed_publisher_spark") -> SparkSession
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_PASSES: dict[tuple, Any] = {}
+
+
+def session_pass(spark: SparkSession, name: str, key: Hashable, build: Callable[[], Any]) -> Any:
+    """What ``build()`` returns, built on the first request per (session,
+    name, key) and shared by every later one."""
+    k = (spark.sparkContext.applicationId, name, key)
+    if k not in _PASSES:
+        _PASSES[k] = build()
+    return _PASSES[k]
+
+
+def clear_passes(name: str | None = None) -> None:
+    """Forget the passes called ``name`` (every pass when None) and
+    unpersist the DataFrames they held, also those inside a tuple."""
+    for k in [k for k in _PASSES if name in (None, k[1])]:
+        held = _PASSES.pop(k)
+        for v in held if isinstance(held, tuple) else (held,):
+            if isinstance(v, DataFrame):
+                v.unpersist()
+
+
+def session_dir(*parts: str) -> str:
+    """A path under the session's scratch root, which Spark deletes when
+    the session stops."""
+    return os.path.join(SparkFiles.getRootDirectory(), *parts)

@@ -18,25 +18,7 @@ from __future__ import annotations
 
 import json
 import os
-from decimal import Decimal
-from typing import Iterable, Protocol
-
-
-def parse_hlc(ts: str) -> tuple[Decimal, int]:
-    """Parse a CRDB HLC timestamp string ``<wall>[.<frac>][,<logical>]`` into
-    a sortable (decimal wall time, logical counter) pair.
-
-    HLC strings must never be compared lexicographically: ``'9.x' > '10.x'``
-    and ``'ts,9' > 'ts,10'`` as strings. The pipeline persists cursors in feed
-    order (reference main.rs:229-235), so this is for consumers that need to
-    compare two persisted cursors correctly."""
-    head, _, logical = ts.partition(",")
-    return Decimal(head), int(logical) if logical else 0
-
-
-def max_hlc(cursors: Iterable[str]) -> str:
-    """The latest of several HLC timestamp strings under HLC order."""
-    return max(cursors, key=parse_hlc)
+from typing import Protocol
 
 
 class CursorStore(Protocol):
@@ -115,6 +97,4 @@ def make_cursor_store(kind: str, *, path: str | None = None,
     if kind == "file":
         assert path is not None
         return FileCursorStore(path)
-    if kind == "memory":
-        return MemoryCursorStore()
     raise ValueError(f"unknown cursor store type: {kind}")

@@ -34,6 +34,9 @@ def test_spark_extensions_parse():
     assert args.read_partitions == 8 and args.epoch_rows == 500000
     assert parse_args(["--table", "foo"]).read_partitions is None
     assert args.idempotent and args.fan_out_tables and args.once
+    with pytest.raises(SystemExit) as exc:  # no store: it would die with the process
+        parse_args(["--table", "foo", "--cursor-store", "memory"])
+    assert exc.value.code == 2
 
 
 def test_replay_only_flags_rejected_on_a_live_feed(monkeypatch, capsys):
@@ -48,6 +51,27 @@ def test_replay_only_flags_rejected_on_a_live_feed(monkeypatch, capsys):
     assert main(["--table", "foo", "--epoch-rows", "10"]) == 2
     assert main(["--table", "foo", "--read-partitions", "4"]) == 2
     assert "require --replay" in capsys.readouterr().err
+
+
+def test_cursor_frequency_parsed_once_and_checked_before_spark(monkeypatch, capsys):
+    """--cursor-frequency takes <number>(ms|s|m|h) as the trigger cadence
+    in seconds; any other value exits 2 before a Spark session starts
+    instead of falling back to 10 s or failing after start-up."""
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("main reached get_spark")
+
+    monkeypatch.setattr("crdb_changefeed_publisher_spark.session.get_spark", no_spark)
+    assert main(["--table", "foo", "--cursor-frequency", "10x"]) == 2
+    err = capsys.readouterr().err
+    assert "--cursor-frequency" in err and len(err.strip().splitlines()) == 1
+
+    from crdb_changefeed_publisher_spark.cli import frequency_seconds
+
+    assert frequency_seconds("1m") == 60
+    assert frequency_seconds("500ms") == 0.5
+    assert frequency_seconds("2h") == 7200
+    assert frequency_seconds("10s") == 10
 
 
 def test_replay_once_bounds_epochs_and_mirrors_cursor(spark, tmp_path, monkeypatch):

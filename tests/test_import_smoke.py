@@ -160,3 +160,34 @@ def test_no_unused_imports():
                     rel = os.path.relpath(path, REPO_ROOT)
                     found += [f"{rel}:{ln}: {name}" for ln, name in _unused_imports(path)]
     assert not found, "unused imports:\n" + "\n".join(found)
+
+
+def _session_lifetime_escapes(path: str) -> list[tuple[int, str]]:
+    """Reads of `applicationId`, `tempfile.gettempdir()` calls and
+    `tempfile.mkdtemp` calls without a `dir`: the ways a module keys state
+    on the session, or leaves files behind it, outside session.py."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+            found.append((node.lineno, "applicationId"))
+        elif isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            has_dir = len(node.args) >= 3 or any(k.arg == "dir" for k in node.keywords)
+            if name == "gettempdir" or (name == "mkdtemp" and not has_dir):
+                found.append((node.lineno, f"{name}()"))
+    return found
+
+
+def test_session_state_lives_in_session_py():
+    """Static, Spark-free: per-session state and scratch go through
+    session.py (session_pass, session_dir), so no other package module
+    reads the applicationId or makes a temp dir outside the session's."""
+    found = []
+    for mod, path in sorted(_package_modules().items()):
+        if mod != f"{PKG}.session":
+            rel = os.path.relpath(path, REPO_ROOT)
+            found += [f"{rel}:{ln}: {what}" for ln, what in _session_lifetime_escapes(path)]
+    assert not found, "session state outside session.py:\n" + "\n".join(found)

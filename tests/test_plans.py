@@ -99,6 +99,44 @@ def test_session_caches_are_shared_and_keyed(spark, sf_dir):
         assert "InMemoryTableScan" in plan, q
 
 
+def test_session_pass_builds_once_per_key_and_releases_on_clear(spark, sf_dir):
+    """session_pass runs build once per (name, key) in a session; a second
+    key builds again; clear_passes(name) unpersists the frames the pass
+    held and the next request rebuilds. The trained ANN index lives in the
+    session's dir, which Spark deletes when the session stops."""
+    import os
+
+    from pyspark import SparkFiles, StorageLevel
+
+    from crdb_changefeed_publisher_spark.plans.llm import _kmeans_index_path
+    from crdb_changefeed_publisher_spark.session import clear_passes, session_pass
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3).persist()
+
+    first = session_pass(spark, "test_pass", "a", build)
+    assert first.count() == 3
+    assert session_pass(spark, "test_pass", "a", build) is first
+    assert len(builds) == 1
+    second = session_pass(spark, "test_pass", "b", build)
+    assert second is not first and len(builds) == 2
+    assert first.storageLevel != StorageLevel.NONE
+
+    clear_passes("test_pass")
+    assert first.storageLevel == StorageLevel.NONE
+    assert second.storageLevel == StorageLevel.NONE
+    again = session_pass(spark, "test_pass", "a", build)
+    assert again is not first and len(builds) == 3
+    clear_passes("test_pass")
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    path = os.path.realpath(_kmeans_index_path(spark, sf_dir))
+    assert os.path.commonpath([root, path]) == root and os.path.isdir(path)
+
+
 def test_plan_digest_ceilings_for_shape_critical_queries(spark, sf_dir):
     """Regression gate on PLAN SHAPE, not timing: for queries whose whole
     value is their shuffle/broadcast structure, pin a ceiling on exchange

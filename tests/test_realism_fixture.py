@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 
 from crdb_changefeed_publisher_spark.plans import realism
+from crdb_changefeed_publisher_spark.session import clear_passes
 
 
 @pytest.fixture(scope="module")
@@ -92,7 +93,7 @@ def test_pairs_cache_materializes_and_reads_back(spark, monkeypatch):
     path = realism._pairs_cache_path(tier, n, fp)
     assert realism._pairs_cache_trusted(path), path
 
-    realism._REALISM_PAIRS_CACHE.clear()
+    clear_passes("realism_pairs")
 
     def boom(*a, **k):  # the read-back path must never rebuild
         raise AssertionError("cache miss: pair table was rebuilt")
@@ -213,12 +214,11 @@ def test_pairs_cache_stale_without_success_marker(spark):
 
     os.remove(os.path.join(path, "_SUCCESS"))
     assert not realism._pairs_cache_trusted(path)
-    realism._REALISM_PAIRS_CACHE.clear()
+    clear_passes("realism_pairs")
     rebuilt = _pairs_key(realism.realism_pairs(spark, n_docs=5000).collect())
     assert realism._pairs_cache_trusted(path)
     assert rebuilt == before
 
     # wrong-fingerprint dirs are never selected
     assert realism._pairs_cache_path(tier, n, fp + 1) != path
-    shutil.rmtree(f"{path}.tmp-{spark.sparkContext.applicationId}",
-                  ignore_errors=True)
+    shutil.rmtree(f"{path}.tmp-{os.getpid()}", ignore_errors=True)

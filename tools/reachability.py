@@ -45,7 +45,11 @@ import pyspark  # noqa: E402
 
 import crdb_changefeed_publisher_spark as pkg  # noqa: E402
 from crdb_changefeed_publisher_spark import plans  # noqa: E402
-from crdb_changefeed_publisher_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from crdb_changefeed_publisher_spark.session import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    clear_passes,
+    get_spark,
+)
 
 PKG_DIR = os.path.dirname(os.path.abspath(pkg.__file__)) + os.sep
 PYSPARK_DIR = os.path.dirname(os.path.abspath(pyspark.__file__)) + os.sep
@@ -158,20 +162,9 @@ def is_glue(name: str) -> bool:
 
 
 def clear_session_caches(spark) -> None:
-    """Empty every module-level per-session cache (dicts keyed by
-    applicationId) so the next spec rebuilds what it consumes."""
-    for mod_name, mod in list(sys.modules.items()):
-        if not mod_name.startswith(pkg.__name__):
-            continue
-        for attr, val in list(vars(mod).items()):
-            if (
-                isinstance(val, dict)
-                and attr.startswith("_")
-                and attr.isupper()
-                and val
-                and all(isinstance(k, tuple) for k in val)
-            ):
-                val.clear()
+    """Release every session pass (session.clear_passes) and the Spark
+    cache, so the next spec rebuilds what it consumes."""
+    clear_passes()
     spark.catalog.clearCache()
 
 

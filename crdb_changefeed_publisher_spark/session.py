@@ -30,6 +30,17 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else half
+    the physical RAM in whole GB, at least 2g and at most 48g. The driver
+    holds each one-partition epoch it publishes, and a heap past the
+    machine's RAM gets the JVM OOM-killed."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(48, max(2, ram_gb // 2))}g"
+
+
 def get_spark(app_name: str = "crdb_changefeed_publisher_spark") -> SparkSession:
     """Build (or reuse) the session with scale-aware defaults."""
     # Arrow-batched UDFs allocate large transient numpy buffers (e.g. a
@@ -57,7 +68,7 @@ def get_spark(app_name: str = "crdb_changefeed_publisher_spark") -> SparkSession
         # reader rejects; read as raw nanos and normalize in tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # belt to the os.environ suspenders above: executorEnv reaches
         # python workers on a real cluster, where the driver's process
         # environment does not

@@ -7,10 +7,13 @@ Reference lifecycle parity (SURVEY.md §3.1):
 - per-row demux Row|Cursor              -> one select: a change row gets an
   (main.rs:211-235, read once)             envelope, a cursor row its
                                            resolved mark; one read per epoch
-- sequential confirmed publish          -> per-partition sequential publish
-  (main.rs:226-227)                        after repartition by key; the
-                                           publish tasks skip cursor rows
-                                           and hand their marks back
+- sequential confirmed publish          -> one input partition (the live
+  (main.rs:211-227)                        path): the driver publishes the
+                                           epoch serially in feed order as
+                                           partition 0; several: each task
+                                           publishes its key partition in
+                                           order. Both skip cursor rows and
+                                           hand their marks back
 - cursor UPSERT at resolved marks       -> Spark commit log (authoritative)
   (cursors.rs:45-57)                       + optional CursorStore mirror of
                                            the last mark in feed order
@@ -19,23 +22,63 @@ Delivery semantics: at-least-once, exactly like the reference (§2.2 of
 SURVEY.md): publishes happen during the batch; offsets commit after. A crash
 between them replays the batch => duplicates, never loss.
 
-Ordering: per-key order is preserved by repartitioning the batch on `key`
-and publishing each partition sequentially (reference preserves global order
-on one connection; Spark preserves it per key-partition, which is the
-guarantee consumers can actually use — and the one that scales).
+Ordering: a one-partition epoch keeps the reference's global feed order on
+one connection. A partitioned epoch keeps per-key order by repartitioning on
+`key` and publishing each partition sequentially, the guarantee consumers
+can actually use, and the one that scales.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crdb_changefeed_publisher_spark.streaming.cursors import CursorStore
 from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
 from crdb_changefeed_publisher_spark.streaming.queues import MessageQueue, make_queue
+
+
+def publish_arrow(
+    batches: Iterable[pa.RecordBatch], open_queue: Callable[[str | None, int], MessageQueue],
+    pid: int, table_col: str | None,
+) -> tuple[int, list[tuple[int, str]]]:
+    """Publish Arrow batches in arrival order as partition `pid`. A change
+    row (non-null envelope) goes to ``open_queue(table, pid)`` through
+    `publish_many`, grouped per table with each table's rows kept in order;
+    a cursor row is skipped and its non-null mark returned. Returns
+    (messages published, [(seq, mark)])."""
+    queues: dict[str | None, MessageQueue] = {}
+    n = 0
+    marks: list[tuple[int, str]] = []
+    try:
+        for b in batches:
+            change = pc.is_valid(b["envelope"])
+            if not pc.all(change).as_py():
+                cursors = b.filter(pc.and_(pc.invert(change), pc.is_valid(b["resolved"])))
+                marks.extend(zip(cursors["_seq"].to_pylist(), cursors["resolved"].to_pylist()))
+                b = b.filter(change)
+            if not b.num_rows:
+                continue
+            if table_col:
+                tables = b[table_col]
+                groups = [(t, b.filter(pc.equal(tables, t))) for t in pc.unique(tables).to_pylist()]
+            else:
+                groups = [(None, b)]
+            for t, grp in groups:
+                q = queues.get(t)
+                if q is None:
+                    q = queues[t] = open_queue(t, pid)
+                q.publish_many(grp["envelope"].to_pylist())
+                n += grp.num_rows
+    finally:
+        for q in queues.values():
+            q.close()
+    return n, marks
 
 
 def publish_batch(
@@ -47,17 +90,26 @@ def publish_batch(
     table_col: str | None = None,
     batch_id: int | None = None,
 ) -> list[str]:
-    """Publish one micro-batch with per-key ordering: repartition on key so
-    all messages for a key land in one partition, then each partition opens
-    its queue and publishes sequentially with confirm-on-write.
+    """Publish one micro-batch with per-key ordering, placed by the input's
+    partition count (a property of the input, so a replayed batch places
+    the same way):
+
+    - one partition (every simple-reader epoch): the driver collects the
+      batch as Arrow in one job, with no exchange and no Python worker, and
+      publishes it in feed order as partition 0, like the reference's one
+      sequential connection;
+    - several partitions (the partitioned replay reader): repartition on
+      key so all messages for a key land in one partition, sort each by
+      (key, _seq), a *provable* per-key order (the shuffle alone only
+      preserves arrival order per upstream partition), and publish each
+      partition from its task through `mapInArrow`.
 
     `batch` carries `key`, `_seq` (feed order), `envelope` and `resolved`.
     A row with a non-null envelope is a change and is published; a row with
     a null envelope is a resolved-cursor row, which is not published (a
     partition holding only such rows opens no queue) and whose non-null
-    `resolved` mark is handed back. Rows are sorted within each partition
-    by (key, _seq) — a *provable* per-key order (the shuffle alone only
-    preserves arrival order per upstream partition).
+    `resolved` mark is handed back. Each queue is closed (confirmed) before
+    this returns.
 
     `queue_kind` selects the sink per the QueueType registry: 'rabbitmq'
     (reference default, AMQP with publisher confirms) or 'dir' (fsync-confirm
@@ -65,10 +117,10 @@ def publish_batch(
 
     `batch_id` opts into the idempotent/exactly-once-ish layouts: DirQueue
     truncates its (batch, partition)-keyed file on a replay; RabbitMQQueue
-    stamps (x-batch-id, x-partition-id, x-seq) dedup headers. The `_seq`
-    sort makes the per-partition sequence deterministic across replays
-    (Spark re-runs a failed batch under the same batch_id with the same
-    content and partitioning).
+    stamps (x-batch-id, x-partition-id, x-seq) dedup headers. Feed order on
+    the driver and the `_seq` sort in the tasks make the per-partition
+    sequence deterministic across replays (Spark re-runs a failed batch
+    under the same batch_id with the same content and partitioning).
 
     `table_col` switches on MULTI-TABLE FAN-OUT (a Spark upgrade over the
     reference's one-table/one-queue design, src/cli.yml:6-9): each table's
@@ -83,76 +135,39 @@ def publish_batch(
     if queue_kind not in ("dir", "rabbitmq"):
         raise ValueError(f"unknown queue type: {queue_kind!r}; use 'dir' or 'rabbitmq'")
 
-    def publish_partition(pdfs):
-        # Arrow path: each partition arrives as pandas batches (no per-row
-        # JVM->Python pickling); messages bulk-write per batch via
-        # publish_many, order preserved (mapInPandas iterates a partition's
-        # batches in order, rows in order within each).
-        from pyspark import TaskContext
-
-        import pandas as pd
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-
-        def open_queue(table: str | None):
-            return make_queue(
-                queue_kind,
-                path=os.path.join(out_dir, table) if (table and out_dir) else out_dir,
-                partition_id=pid,
-                amqp_addr=amqp_addr,
-                queue=f"{amqp_queue or 'rabbitmq'}.{table}"
-                if table
-                else (amqp_queue or "rabbitmq"),
-                batch_id=batch_id,
-            )
-
-        queues: dict[str | None, MessageQueue] = {}
-        n = 0
-        seqs: list[int] = []
-        marks: list[str] = []
-        for pdf in pdfs:
-            is_change = pdf["envelope"].notna()
-            if not is_change.all():
-                cursors = pdf[~is_change & pdf["resolved"].notna()]
-                seqs.extend(cursors["_seq"].tolist())
-                marks.extend(cursors["resolved"].tolist())
-                pdf = pdf[is_change]
-            if pdf.empty:
-                continue
-            if table_col:
-                groups = pdf.groupby(table_col, sort=False)
-            else:
-                groups = [(None, pdf)]
-            for t, grp in groups:
-                q = queues.get(t)
-                if q is None:
-                    q = queues[t] = open_queue(t)
-                q.publish_many([s.encode() for s in grp["envelope"]])
-                n += len(grp)
-        for q in queues.values():
-            q.close()
-        # one row carries the count; one row per resolved mark after it
-        yield pd.DataFrame(
-            {
-                "n": [n] + [0] * len(marks),
-                "seq": pd.array([None] + seqs, dtype="Int64"),
-                "resolved": [None] + marks,
-            }
+    def open_queue(table: str | None, pid: int) -> MessageQueue:
+        return make_queue(
+            queue_kind,
+            path=os.path.join(out_dir, table) if (table and out_dir) else out_dir,
+            partition_id=pid,
+            amqp_addr=amqp_addr,
+            queue=f"{amqp_queue or 'rabbitmq'}.{table}" if table else (amqp_queue or "rabbitmq"),
+            batch_id=batch_id,
         )
 
-    cols = ["key", "envelope", "_seq", "resolved"]
-    if table_col:
-        cols.append(table_col)
-        shuffled = batch.repartition(F.col(table_col), F.col("key")).select(*cols)
-        sort_cols = [table_col, "key", "_seq"]
+    keys = [table_col, "key"] if table_col else ["key"]
+    selected = batch.select(*keys, F.col("envelope").cast("binary"), "_seq", "resolved")
+    # planning only: no job runs, and toArrow reuses the plan
+    if selected._jdf.queryExecution().toRdd().getNumPartitions() == 1:
+        n, marks = publish_arrow(selected.toArrow().to_batches(), open_queue, 0, table_col)
     else:
-        shuffled = batch.repartition(F.col("key")).select(*cols)
-        sort_cols = ["key", "_seq"]
-    shuffled = shuffled.sortWithinPartitions(*sort_cols)
-    rows = shuffled.mapInPandas(publish_partition, "n long, seq long, resolved string").collect()
-    MESSAGES_SENT.inc(sum(r.n for r in rows))
-    marks = sorted((r for r in rows if r.resolved is not None), key=lambda r: r.seq)
-    return [r.resolved for r in marks]
+        def publish_partition(batches):
+            from pyspark import TaskContext
+
+            n, marks = publish_arrow(batches, open_queue, TaskContext.get().partitionId(), table_col)
+            # one row carries the count; one row per resolved mark after it
+            yield pa.RecordBatch.from_pydict(
+                {"n": [n] + [0] * len(marks), "seq": [None] + [s for s, _ in marks],
+                 "resolved": [None] + [m for _, m in marks]},
+                schema=pa.schema([("n", pa.int64()), ("seq", pa.int64()), ("resolved", pa.string())]),
+            )
+
+        shuffled = selected.repartition(*keys).sortWithinPartitions(*keys, "_seq")
+        rows = shuffled.mapInArrow(publish_partition, "n long, seq long, resolved string").collect()
+        n = sum(r.n for r in rows)
+        marks = [(r.seq, r.resolved) for r in rows if r.resolved is not None]
+    MESSAGES_SENT.inc(n)
+    return [m for _, m in sorted(marks)]
 
 
 def make_foreach_batch(

@@ -148,6 +148,22 @@ def test_lsh_sizing_rules_are_executable():
     assert banding_chunk_bits_for(10) == 4            # floor
 
 
+def test_driver_memory_default_is_half_the_ram(monkeypatch):
+    """The driver heap defaults to half the RAM, clamped to 2..48 GB;
+    SPARK_GRAFT_DRIVER_MEM wins. No JVM starts."""
+    from crdb_changefeed_publisher_spark import session
+
+    page = 4096
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    for ram_gb, heap in ((1, "2g"), (5, "2g"), (15, "7g"), (64, "32g"), (256, "48g")):
+        pages = ram_gb * 2**30 // page
+        monkeypatch.setattr(session.os, "sysconf",
+                            lambda name, pages=pages: page if name == "SC_PAGE_SIZE" else pages)
+        assert session.driver_memory() == heap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert session.driver_memory() == "6g"
+
+
 def test_bench_weather_verdict_thresholds():
     """bench.py's weather_suspect flag (r9 verdict #1): the measured
     clean windows (r8 driver run, r9 judge re-run) must read clean, the

@@ -308,40 +308,112 @@ def test_fused_publish_matches_two_pass(spark, tmp_path):
     assert sorted(published(plain)) == sorted(published(fanned)) == envelopes
 
 
+def test_driver_and_task_placements_publish_the_same(spark, tmp_path):
+    """One decoded batch published from one input partition (the driver,
+    feed order, partition 0) and from three (key shuffle, one task per
+    partition through mapInArrow), with and without fan-out: the same
+    envelopes per table byte for byte, per-key feed order along every queue
+    file, the same marks and mirrored cursor. The driver writes each
+    table's envelopes in feed order."""
+    marks = {2: "10.0,0", 21: "95.0,0", 40: "100.0,0", 59: "9.0,0"}
+    rows = [
+        cursor_row({"resolved": marks[i]}) if i in marks
+        else ("orders" if i % 2 else "lineitem", f"[{i % 7}]".encode(),
+              json.dumps({"after": {"a": i}}).encode())
+        for i in range(60)
+    ]
+    in_feed_order: dict[str, list[bytes]] = {}
+    for t, k, v in rows:
+        if t is not None:
+            in_feed_order.setdefault(t, []).append(
+                b'{"table":"%s","key":"%s","value":%s}' % (t.encode(), k, v))
+
+    def queue_files(out_dir):
+        """{table: {queue file: that table's envelopes in file order}}"""
+        out: dict[str, dict[str, list[bytes]]] = {}
+        for dirpath, _, names in os.walk(out_dir):
+            for name in names:
+                path = os.path.join(dirpath, name)
+                with open(path, "rb") as f:
+                    for line in f.read().splitlines():
+                        out.setdefault(json.loads(line)["table"], {}).setdefault(
+                            os.path.relpath(path, out_dir), []).append(line)
+        return out
+
+    for fan_out in (False, True):
+        runs = {}
+        for partitions in (1, 3):
+            out = str(tmp_path / f"{fan_out}-{partitions}")
+            assert run_batch(spark, rows, out, partitions=partitions, fan_out_tables=fan_out) == (
+                ["10.0,0", "95.0,0", "100.0,0", "9.0,0"], "9.0,0", 56)
+            runs[partitions] = queue_files(out)
+            for files in runs[partitions].values():
+                for lines in files.values():
+                    by_key: dict[str, list[int]] = {}
+                    for d in map(json.loads, lines):
+                        by_key.setdefault(d["key"], []).append(d["value"]["after"]["a"])
+                    assert all(v == sorted(v) for v in by_key.values())
+        for t, expected in in_feed_order.items():
+            assert sorted(sum(runs[3][t].values(), [])) == sorted(expected)
+            name = os.path.join(t, "partition-00000.jsonl") if fan_out else "partition-00000.jsonl"
+            assert runs[1][t] == {name: expected}
+            assert not fan_out or all(f.startswith(t + os.sep) for f in runs[3][t])
+
+
 ALL_RESOLVED = [cursor_row({"resolved": f"{v}.0,0"}) for v in (10, 11, 9)]
 
 
 @pytest.mark.parametrize(
-    "rows, idempotent, expected",
+    "rows, idempotent, expected, partitions",
     [
-        (ALL_RESOLVED, False, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0)),
-        (ALL_RESOLVED, True, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0)),
-        ([], False, ([], None, 0)),
+        (ALL_RESOLVED, False, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0), 3),
+        (ALL_RESOLVED, True, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0), 3),
+        ([], False, ([], None, 0), 3),
+        (ALL_RESOLVED, False, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0), 1),
+        (ALL_RESOLVED, True, (["10.0,0", "11.0,0", "9.0,0"], "9.0,0", 0), 1),
+        ([], False, ([], None, 0), 1),
     ],
-    ids=["all-resolved", "all-resolved-idempotent", "empty"],
+    ids=["all-resolved", "all-resolved-idempotent", "empty",
+         "all-resolved-driver", "all-resolved-idempotent-driver", "empty-driver"],
 )
-def test_batch_without_changes_opens_no_queue(spark, tmp_path, rows, idempotent, expected):
+def test_batch_without_changes_opens_no_queue(spark, tmp_path, rows, idempotent, expected,
+                                              partitions):
     """An all-resolved batch mirrors its last mark and an empty one sets no
     cursor; neither publishes or creates a queue file (not even an empty
     batch-keyed one)."""
     out = str(tmp_path / "out")
-    assert run_batch(spark, rows, out, idempotent=idempotent) == expected
+    assert run_batch(spark, rows, out, partitions, idempotent=idempotent) == expected
     assert not os.path.exists(out)
 
 
-def test_cursor_row_without_resolved_is_skipped(spark, tmp_path):
+@pytest.mark.parametrize("partitions", [3, 1], ids=["tasks", "driver"])
+def test_cursor_row_without_resolved_is_skipped(spark, tmp_path, partitions):
     rows = [change_row("t", 1), cursor_row({"resolved": "5.0,0"}), change_row("t", 2),
             cursor_row({"other": "6.0,0"})]
     out = str(tmp_path / "out")
-    assert run_batch(spark, rows, out) == (["5.0,0"], "5.0,0", 2)
+    assert run_batch(spark, rows, out, partitions) == (["5.0,0"], "5.0,0", 2)
     assert len(published(out)) == 2
 
 
-def test_change_row_with_null_key_raises(spark, tmp_path):
+@pytest.mark.parametrize("partitions", [3, 1], ids=["tasks", "driver"])
+def test_change_row_with_null_key_raises(spark, tmp_path, partitions):
     rows = [change_row("t", 1), cursor_row({"resolved": "5.0,0"}),
             ("t", None, json.dumps({"after": {"a": 3}}).encode())]
     with pytest.raises(Exception, match="malformed change row"):
-        run_batch(spark, rows, str(tmp_path / "out"))
+        run_batch(spark, rows, str(tmp_path / "out"), partitions)
+
+
+def test_idempotent_replay_of_a_one_partition_batch_truncates(spark, tmp_path):
+    """The driver publishes a one-partition batch as partition 0: a replay
+    under the same batch id rewrites its one batch-keyed file."""
+    rows = [change_row("t", i) for i in range(5)] + [cursor_row({"resolved": "5.0,0"})]
+    out = str(tmp_path / "out")
+    for _ in range(2):
+        assert run_batch(spark, rows, out, partitions=1, batch_id=7, idempotent=True) == (
+            ["5.0,0"], "5.0,0", 5)
+    assert os.listdir(out) == ["batch-00000007-partition-00000.jsonl"]
+    msgs = published(out)
+    assert len(msgs) == len(set(msgs)) == 5
 
 
 def test_foreach_batch_reads_the_batch_once(spark, tmp_path):
@@ -366,6 +438,33 @@ def test_foreach_batch_reads_the_batch_once(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert evaluated.value == 200
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_simple_reader_epoch_runs_one_job_without_shuffle(spark, tmp_path):
+    """A simple-reader epoch has one input partition, so its publish is one
+    driver-side Arrow collect: one job under the query's job group, which
+    writes no shuffle bytes."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
+
+    register(spark)
+    feed = str(tmp_path / "feed.jsonl")
+    with open(feed, "w", encoding="utf-8") as f:
+        for i in range(30):
+            if i % 10 == 9:
+                f.write(json.dumps([None, None, json.dumps({"resolved": f"{i}.0,0"})]) + "\n")
+            else:
+                f.write(json.dumps(["t", f"[{i}]", json.dumps({"after": {"a": i}})]) + "\n")
+    stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
+              .option("batch_limit", "100").load())
+    q = run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), drain_all=True)
+    assert len(DirQueue.read_all(str(tmp_path / "out"))) == 27
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [30]
+    sc = spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 1
+    store = sc._jsc.sc().statusStore()
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
 
 
 def test_metrics_endpoint(tmp_path):

@@ -30,15 +30,26 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# cgroup v2, then v1: a container's memory limit, when it is below the RAM
+CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
 def driver_memory() -> str:
     """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else half
-    the physical RAM in whole GB, at least 2g and at most 48g. The driver
-    holds each one-partition epoch it publishes, and a heap past the
-    machine's RAM gets the JVM OOM-killed."""
+    the memory this process may use (the physical RAM, or a lower cgroup
+    limit) in whole GB, at least 2g and at most 48g. The driver holds each
+    epoch it publishes itself, and a heap past that memory gets the JVM
+    OOM-killed."""
     if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
         return os.environ["SPARK_GRAFT_DRIVER_MEM"]
-    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
-    return f"{min(48, max(2, ram_gb // 2))}g"
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                ram = min(ram, int(f.read()))
+        except (OSError, ValueError):  # no such file, or "max" (no limit)
+            pass
+    return f"{min(48, max(2, ram // 2**31))}g"
 
 
 def get_spark(app_name: str = "crdb_changefeed_publisher_spark") -> SparkSession:

@@ -29,11 +29,13 @@ from __future__ import annotations
 import bisect
 import json
 import os
+import pickle
 import re
 from dataclasses import dataclass
 from enum import Enum
 from typing import Iterator, Protocol
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -324,6 +326,26 @@ class FeedRangePartition(InputPartition):
     start_line: int
     end_line: int
     start_byte: int
+
+
+def reads_feed_ranges(df: DataFrame) -> bool:
+    """Whether `df` scans `FeedRangePartition`s, the partitioned reader's
+    line ranges, whose rows no `batch_limit` bounds. Follows the planned
+    RDD's first parents down to the scan and unpickles the Python input
+    partitions it finds there; plans only, starts no job."""
+    rdd = df._jdf.queryExecution().toRdd()
+    while rdd.dependencies().size():
+        rdd = rdd.dependencies().apply(0).rdd()
+    for part in rdd.partitions():
+        if part.getClass().getSimpleName() != "DataSourceRDDPartition":
+            return False
+        inputs = part.inputPartitions()
+        for ip in (inputs.apply(i) for i in range(inputs.size())):
+            if ip.getClass().getSimpleName().startswith("Python") and isinstance(
+                pickle.loads(bytes(ip.pickedPartition())), FeedRangePartition
+            ):
+                return True
+    return False
 
 
 class ChangefeedPartitionedStreamReader(DataSourceStreamReader):

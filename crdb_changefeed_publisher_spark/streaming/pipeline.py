@@ -7,13 +7,13 @@ Reference lifecycle parity (SURVEY.md §3.1):
 - per-row demux Row|Cursor              -> one select: a change row gets an
   (main.rs:211-235, read once)             envelope, a cursor row its
                                            resolved mark; one read per epoch
-- sequential confirmed publish          -> one input partition (the live
-  (main.rs:211-227)                        path): the driver publishes the
-                                           epoch serially in feed order as
-                                           partition 0; several: each task
-                                           publishes its key partition in
-                                           order. Both skip cursor rows and
-                                           hand their marks back
+- sequential confirmed publish          -> a simple-reader (live) epoch to
+  (main.rs:211-227)                        the dir queue: the driver
+                                           publishes it serially in feed
+                                           order as partition 0; otherwise
+                                           each task publishes its key
+                                           partition in order. Both skip
+                                           cursor rows, return their marks
 - cursor UPSERT at resolved marks       -> Spark commit log (authoritative)
   (cursors.rs:45-57)                       + optional CursorStore mirror of
                                            the last mark in feed order
@@ -22,15 +22,16 @@ Delivery semantics: at-least-once, exactly like the reference (§2.2 of
 SURVEY.md): publishes happen during the batch; offsets commit after. A crash
 between them replays the batch => duplicates, never loss.
 
-Ordering: a one-partition epoch keeps the reference's global feed order on
-one connection. A partitioned epoch keeps per-key order by repartitioning on
-`key` and publishing each partition sequentially, the guarantee consumers
+Ordering: a driver-published epoch keeps the reference's global feed order
+on one connection. A partitioned epoch keeps per-key order by repartitioning
+on `key` and publishing each partition sequentially, the guarantee consumers
 can actually use, and the one that scales.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 from collections.abc import Callable, Iterable
 
 import pyarrow as pa
@@ -38,6 +39,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crdb_changefeed_publisher_spark.sources.crdb_changefeed import reads_feed_ranges
 from crdb_changefeed_publisher_spark.streaming.cursors import CursorStore
 from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
 from crdb_changefeed_publisher_spark.streaming.queues import MessageQueue, make_queue
@@ -49,9 +51,9 @@ def publish_arrow(
 ) -> tuple[int, list[tuple[int, str]]]:
     """Publish Arrow batches in arrival order as partition `pid`. A change
     row (non-null envelope) goes to ``open_queue(table, pid)`` through
-    `publish_many`, grouped per table with each table's rows kept in order;
-    a cursor row is skipped and its non-null mark returned. Returns
-    (messages published, [(seq, mark)])."""
+    `publish_many`, grouped per table in order; a cursor row is skipped and
+    its non-null mark returned. Closes every queue it opened (a publish
+    error outranks a close error); returns (published, [(seq, mark)])."""
     queues: dict[str | None, MessageQueue] = {}
     n = 0
     marks: list[tuple[int, str]] = []
@@ -76,8 +78,14 @@ def publish_arrow(
                 q.publish_many(grp["envelope"].to_pylist())
                 n += grp.num_rows
     finally:
+        errors = []
         for q in queues.values():
-            q.close()
+            try:
+                q.close()
+            except Exception as e:
+                errors.append(e)
+        if errors and sys.exc_info()[0] is None:
+            raise errors[0]
     return n, marks
 
 
@@ -90,19 +98,20 @@ def publish_batch(
     table_col: str | None = None,
     batch_id: int | None = None,
 ) -> list[str]:
-    """Publish one micro-batch with per-key ordering, placed by the input's
-    partition count (a property of the input, so a replayed batch places
-    the same way):
+    """Publish one micro-batch with per-key ordering, placed by the input
+    (so a replayed batch places the same way):
 
-    - one partition (every simple-reader epoch): the driver collects the
-      batch as Arrow in one job, with no exchange and no Python worker, and
-      publishes it in feed order as partition 0, like the reference's one
-      sequential connection;
-    - several partitions (the partitioned replay reader): repartition on
-      key so all messages for a key land in one partition, sort each by
-      (key, _seq), a *provable* per-key order (the shuffle alone only
-      preserves arrival order per upstream partition), and publish each
-      partition from its task through `mapInArrow`.
+    - a dir queue fed one partition that is not a partitioned-reader range
+      (every simple-reader epoch, at most `batch_limit` rows): the driver
+      collects it as Arrow in one job, with no exchange or Python worker,
+      and publishes it in feed order as partition 0, like the reference's
+      one connection; a publish error fails the epoch, with no task retry;
+    - otherwise (a partitioned-reader epoch, which no row limit bounds, or
+      AMQP, whose per-message confirms gain from parallel connections):
+      repartition on key, sort each partition by (key, _seq) for a
+      *provable* per-key order (a shuffle keeps arrival order only per
+      upstream partition), and publish it from its task through
+      `mapInArrow`; only counts and marks reach the driver.
 
     `batch` carries `key`, `_seq` (feed order), `envelope` and `resolved`.
     A row with a non-null envelope is a change and is published; a row with
@@ -148,7 +157,8 @@ def publish_batch(
     keys = [table_col, "key"] if table_col else ["key"]
     selected = batch.select(*keys, F.col("envelope").cast("binary"), "_seq", "resolved")
     # planning only: no job runs, and toArrow reuses the plan
-    if selected._jdf.queryExecution().toRdd().getNumPartitions() == 1:
+    one_partition = selected._jdf.queryExecution().toRdd().getNumPartitions() == 1
+    if queue_kind == "dir" and one_partition and not reads_feed_ranges(selected):
         n, marks = publish_arrow(selected.toArrow().to_batches(), open_queue, 0, table_col)
     else:
         def publish_partition(batches):

@@ -88,9 +88,8 @@ class RabbitMQQueue:
     DirQueue's batch-keyed truncation, which a broker cannot do): every
     message carries headers (x-batch-id, x-partition-id, x-seq). Spark
     replays a failed batch under the same batch_id with deterministic
-    content and partitioning, and the publish path keeps a deterministic
-    order (feed order on the driver, (key, seq) in a task), so a replayed
-    message carries the SAME header triple — consumers (or a
+    content and partitioning, and the publish path sorts by (key, seq), so
+    a replayed message carries the SAME header triple — consumers (or a
     dedup proxy) discard duplicates on it. Without batch_id:
     reference-parity at-least-once."""
 

@@ -6,6 +6,7 @@ queue_declare before first publish, default exchange + routing_key=queue)."""
 
 from __future__ import annotations
 
+import contextlib
 import sys
 import types
 
@@ -164,3 +165,15 @@ def test_rabbitmq_batch_keyed_headers_are_replay_stable(fake_pika):
     q.publish(b"m")
     q.close()
     assert fake_pika.queues["alo"][0]["headers"] is None
+
+
+def test_amqp_epoch_publishes_from_tasks(spark, fake_pika):
+    """AMQP waits for a confirm per message, so even a one-partition epoch
+    publishes from tasks, whose connections confirm in parallel: the stub
+    broker, which only the driver process can import, receives nothing."""
+    from test_streaming import change_row, run_batch
+
+    with contextlib.suppress(Exception):  # the tasks find no stub pika
+        run_batch(spark, [change_row("t", i) for i in range(5)], None, partitions=1,
+                  queue_kind="rabbitmq", amqp_addr="amqp://stub")
+    assert fake_pika.queues == {}

@@ -148,18 +148,28 @@ def test_lsh_sizing_rules_are_executable():
     assert banding_chunk_bits_for(10) == 4            # floor
 
 
-def test_driver_memory_default_is_half_the_ram(monkeypatch):
-    """The driver heap defaults to half the RAM, clamped to 2..48 GB;
-    SPARK_GRAFT_DRIVER_MEM wins. No JVM starts."""
+def test_driver_memory_default_is_half_the_ram(monkeypatch, tmp_path):
+    """The driver heap defaults to half the RAM, or of a lower cgroup
+    memory limit, clamped to 2..48 GB; SPARK_GRAFT_DRIVER_MEM wins. No JVM
+    starts."""
     from crdb_changefeed_publisher_spark import session
 
     page = 4096
+    v2, v1 = tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes"
+    monkeypatch.setattr(session, "CGROUP_MEMORY_LIMITS", (str(v2), str(v1)))
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     for ram_gb, heap in ((1, "2g"), (5, "2g"), (15, "7g"), (64, "32g"), (256, "48g")):
         pages = ram_gb * 2**30 // page
         monkeypatch.setattr(session.os, "sysconf",
                             lambda name, pages=pages: page if name == "SC_PAGE_SIZE" else pages)
         assert session.driver_memory() == heap
+    v2.write_text("max\n")  # cgroup v2 without a limit
+    v1.write_text(f"{2**63 - 4096}\n")  # cgroup v1 without a limit
+    assert session.driver_memory() == "48g"
+    v1.write_text(f"{12 * 2**30}\n")
+    assert session.driver_memory() == "6g"
+    v2.write_text(f"{9 * 2**30}\n")
+    assert session.driver_memory() == "4g"
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
     assert session.driver_memory() == "6g"
 

@@ -467,6 +467,34 @@ def test_simple_reader_epoch_runs_one_job_without_shuffle(spark, tmp_path):
     assert sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
 
 
+def test_one_range_replay_epoch_is_not_collected_to_the_driver(spark, tmp_path):
+    """A partitioned-reader epoch read as one range (read_partitions=1,
+    epoch_rows=0) holds the whole feed, with no batch_limit to bound it: it
+    publishes from tasks, so only counts and marks reach the driver, and a
+    driver result cap below the feed's envelope bytes does not fail it."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
+
+    register(spark)
+    feed = str(tmp_path / "feed.jsonl")
+    with open(feed, "w", encoding="utf-8") as f:
+        for i in range(2000):
+            f.write(json.dumps(["t", f"[{i}]", json.dumps({"after": {"a": i, "pad": "x" * 100}})])
+                    + "\n")
+        f.write(json.dumps([None, None, json.dumps({"resolved": "1999.0,0"})]) + "\n")
+    conf = spark.sparkContext._jsc.sc().conf()
+    cap = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", "64k")  # the envelopes total ~250 KB
+    try:
+        stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
+                  .option("read_partitions", "1").load())
+        store = MemoryCursorStore()
+        run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), store, drain_all=True)
+    finally:
+        conf.set("spark.driver.maxResultSize", cap)
+    assert len(published(str(tmp_path / "out"))) == 2000
+    assert store.get() == "1999.0,0"
+
+
 def test_metrics_endpoint(tmp_path):
     import urllib.request
 

@@ -29,7 +29,7 @@ UI_PORT = 4049
 
 
 def get_spark_with_ui() -> SparkSession:
-    from crdb_changefeed_publisher_spark.session import cpu_count
+    from crdb_changefeed_publisher_spark.session import cpu_count, driver_memory
 
     cpus = cpu_count()
     return (
@@ -40,7 +40,7 @@ def get_spark_with_ui() -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(UI_PORT))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
 

@@ -50,24 +50,15 @@ Protocol (a deliberately minimal manifest-commit table format):
   fresh *.tmp-* files (a live write_batch's mid-commit data — first
   attempt or replay — lives exactly there). `assume_quiesced=True`
   reclaims those too.
-* `delete_where` is the MERGE-ON-READ row-level delete: instead of
-  rewriting every file containing a matching row (copy-on-write — the
-  `merge_upsert` path), it writes per-file DELETION VECTORS (parquet
-  files of (file, pos) row ordinals, built executor-side) and attaches
-  them to the affected entries' manifest records; every read path
-  subtracts DV positions via an anti-join on parquet's
-  (_metadata.file_name, _metadata.row_index). At 100 TB this is the
-  difference between a GDPR delete rewriting terabytes and writing a
-  few KB: write cost tracks the DELETED ROW COUNT, not the bytes of
-  the files they live in. Compaction / OPTIMIZE / merge MATERIALIZE
-  the vectors (rewritten files drop the rows physically), restoring
-  pure-scan reads — the Delta deletion-vector lifecycle.
+* `as_of_batch`, `read_since` and `table_changes` read the manifest
+  history: the table as of a batch, the rows appended since a batch,
+  and the row diff between two states.
 
 Everything is plain JSON + parquet + atomic rename; no services. The
 APPEND path assumes one streaming query per table root (as Spark's own
 checkpoint dir already requires): a replayed batch re-commits its own
-manifest idempotently, so rename-replace is correct there. MAINTENANCE
-ops are safe to run concurrently with each other and with the appender:
+manifest idempotently, so rename-replace is correct there. Compactions
+are safe to run concurrently with each other and with the appender:
 each snapshot generation commits via an atomic create-exclusive (CAS on
 the generation number — `_atomic_create_json`), the loser raises
 CommitConflictError having committed nothing, and every attempt's output
@@ -87,8 +78,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
-
-from crdb_changefeed_publisher_spark.streaming import table_stats
 
 
 def _data_dir(root: str) -> str:
@@ -111,8 +100,7 @@ def _atomic_write_json(path: str, obj: dict) -> None:
 class CommitConflictError(RuntimeError):
     """Another maintainer committed the same snapshot generation first.
 
-    Raised by the maintenance ops (compact_table / optimize_zorder /
-    delete_where / merge_upsert) when their optimistic commit loses the
+    Raised by compact_table when its optimistic commit loses the
     race: the op read generation N, computed against it, and found
     N+1 already published at commit time. Nothing was committed and no
     committed data was touched — re-running the op re-reads the new
@@ -130,8 +118,8 @@ def _atomic_create_json(path: str, obj: dict) -> None:
 
     The durable temp is named per ATTEMPT, not per pid: two maintainer
     THREADS share a pid, and a shared tmp name lets the loser truncate
-    the winner's bytes between its write and its link (found by the
-    concurrency soak, tools/table_race_soak.py)."""
+    the winner's bytes between its write and its link (see
+    tests/test_table_sink.py::test_same_process_racing_publishes_use_distinct_tmps)."""
     tmp = f"{path}.tmp-{_attempt_token()}"
     with open(tmp, "w") as fh:
         json.dump(obj, fh, indent=1, sort_keys=True)
@@ -166,7 +154,7 @@ def with_commit_retries(op, attempts: int = 3):
                 raise
 
 
-_PART_SCHEMA = "file string, n_rows long, n_bytes long, meta string"
+_PART_SCHEMA = "file string, n_rows long, n_bytes long"
 
 # maintenance-attempt sequence: output data files carry a per-attempt
 # token (pid + counter) so two maintainers racing toward the same
@@ -180,17 +168,37 @@ def _attempt_token() -> str:
     return f"{os.getpid():x}a{next(_ATTEMPT_SEQ):03d}"
 
 
-def _part_writer(data: str, name_fmt: str, bloom_cols: list[str] | None = None,
-                 constraints: list[tuple] | None = None):
+def nan_safe_write_statistics(t: pa.Table) -> bool | list[str]:
+    """`write_statistics` argument that keeps a parquet file honest under
+    Spark's NaN ordering. pyarrow EXCLUDES NaN from footer min/max, but
+    Spark orders NaN above every double — so Spark's own row-group
+    pushdown silently drops NaN rows from pyarrow-written files
+    (measured: a [NaN, 3.0] file with footer max=3.0 returns nothing for
+    ``x > 100`` with pushdown on, the NaN row with it off). Omitting
+    stats for exactly the float columns that contain NaN removes the
+    lying bound at the source: every engine then scans those files
+    instead of mis-pruning them. Returns True (all stats) when no float
+    column holds a NaN."""
+    import pyarrow.compute as pc
+
+    bad = set()
+    for i, f in enumerate(t.schema):
+        if pa.types.is_floating(f.type):
+            if pc.any(pc.is_nan(t.column(i))).as_py():
+                bad.add(f.name)
+    if not bad:
+        return True
+    return [f.name for f in t.schema if f.name not in bad]
+
+
+def _part_writer(data: str, name_fmt: str):
     """Executor-side parquet part writer (Arrow in, Arrow out — NOT
     mapInPandas: the pandas round trip represents both NULL and NaN as
     float NaN, so a NaN VALUE in a double column comes back as a null;
     measured before the switch). Writes this task's rows to
     ``name_fmt.format(pid=partition_id)`` via tmp + fsync + atomic
     rename (a replayed task overwrites its own previous attempt), and
-    yields one manifest row carrying the footer-derived column stats for
-    data skipping — computed right here, while the footer is page-cache
-    hot."""
+    yields one (file, n_rows, n_bytes) manifest row."""
 
     def write_parts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -203,31 +211,19 @@ def _part_writer(data: str, name_fmt: str, bloom_cols: list[str] | None = None,
         final = os.path.join(data, name)
         tmp = final + f".tmp-{os.getpid()}"
         t = pa.Table.from_batches(got)
-        if constraints:
-            # CHECK at the commit boundary: a raise fails the task, the
-            # manifest is never published, the table is untouched
-            table_stats.check_constraints(t, constraints)
-        pq.write_table(t, tmp,
-                       write_statistics=table_stats.nan_safe_write_statistics(t))
+        pq.write_table(t, tmp, write_statistics=nan_safe_write_statistics(t))
         with open(tmp, "rb") as fh:
             os.fsync(fh.fileno())
         os.replace(tmp, final)
-        meta = table_stats.footer_meta(final)
-        if bloom_cols:
-            meta["blooms"] = table_stats.file_blooms(t, bloom_cols)
         yield pa.RecordBatch.from_pydict(
             {"file": [name], "n_rows": [t.num_rows],
-             "n_bytes": [os.path.getsize(final)], "meta": [json.dumps(meta)]}
+             "n_bytes": [os.path.getsize(final)]}
         )
 
     return write_parts
 
 
-def write_batch(
-    batch_df: DataFrame, batch_id: int, root: str,
-    bloom_cols: list[str] | None = None,
-    constraints: list[tuple] | None = None,
-) -> int:
+def write_batch(batch_df: DataFrame, batch_id: int, root: str) -> int:
     """foreachBatch body: write this micro-batch's rows as batch-keyed
     parquet files + one manifest. Returns the committed row count
     (0 for a superseded replay — see below).
@@ -260,13 +256,11 @@ def write_batch(
     manifest_rows = batch_df.mapInArrow(
         _part_writer(
             data,
-            f"batch-{batch_id:08d}-{_attempt_token()}-part-{{pid:05d}}.parquet",
-            bloom_cols, constraints),
+            f"batch-{batch_id:08d}-{_attempt_token()}-part-{{pid:05d}}.parquet"),
         _PART_SCHEMA,
     ).collect()
     files = sorted(
-        ({"file": r.file, "n_rows": int(r.n_rows), "n_bytes": int(r.n_bytes),
-          **json.loads(r.meta)}
+        ({"file": r.file, "n_rows": int(r.n_rows), "n_bytes": int(r.n_bytes)}
          for r in manifest_rows),
         key=lambda d: d["file"],
     )
@@ -310,7 +304,7 @@ def _latest_covers(root: str) -> int:
 
 def _committed_state(root: str) -> tuple[int, int, int, list[dict]]:
     """(snapshot_generation, covered_batch, high_water_batch, committed
-    file ENTRIES — the manifest dicts, stats included). generation /
+    file ENTRIES — the (file, n_rows, n_bytes) manifest dicts). generation /
     covered_batch / high_water are -1 when absent. high_water is the
     highest COMMITTED batch id — the snapshot's `covers` or any batch
     manifest above it — i.e. the id a subsequent snapshot must cover,
@@ -353,103 +347,24 @@ def committed_files(root: str) -> list[str]:
     return [os.path.join(_data_dir(root), e["file"]) for e in entries]
 
 
-def prune_plan(root: str, where: list[tuple]) -> dict:
-    """Manifest-only scan plan for a conjunction of ``(col, op, literal)``
-    predicates: which committed files a reader must open, and how many
-    the per-file stats proved irrelevant. No data file is touched — this
-    is the Delta/Iceberg data-skipping step, sized by the manifest (KB),
-    not the table. `skipped` includes files that predate the predicate
-    column entirely (schema drift: the column reads all-null there)."""
-    _, _, _, entries = _committed_state(root)
-    kept, skipped = table_stats.prune(entries, where)
-    return {
-        "files": [os.path.join(_data_dir(root), e["file"]) for e in kept],
-        "total": len(entries),
-        "skipped": skipped,
-    }
-
-
-# Above this many deleted rows the DV anti-join abandons the broadcast
-# hint and lets the planner shuffle — a corpus whose deletions rival its
-# size should be compacted (materialized), not broadcast.
-_DV_BROADCAST_MAX = 2_000_000
-
-
 def _scan_entries(
     spark: SparkSession, root: str, entries: list[dict]
-) -> DataFrame:
-    """Scan a committed entry list with deletion vectors applied: the
-    mergeSchema parquet scan, minus every (file, pos) recorded in the
-    entries' DV references — an anti-join on the scan-provided
-    (_metadata.file_name, _metadata.row_index), so deleted rows are
-    subtracted WITHOUT rewriting data files (merge-on-read). The DV side
-    is manifest-sized (sum of per-entry `n`), broadcast while small;
-    data rows never shuffle either way."""
-    from pyspark.sql import functions as F
-
-    data = _data_dir(root)
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(data, e["file"]) for e in entries]
-    )
-    dv_files = sorted(
-        {d["file"] for e in entries for d in e.get("dvs") or []}
-    )
-    if not dv_files:
-        return df
-    n_deleted = sum(d["n"] for e in entries for d in e.get("dvs") or [])
-    dv = spark.read.parquet(*[os.path.join(data, f) for f in dv_files]).select(
-        F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-    )
-    if n_deleted <= _DV_BROADCAST_MAX:
-        dv = F.broadcast(dv)
-    cols = df.columns
-    return (
-        df.withColumn("__dv_file", F.col("_metadata.file_name"))
-        .withColumn("__dv_pos", F.col("_metadata.row_index"))
-        .join(dv, ["__dv_file", "__dv_pos"], "left_anti")
-        .select(*cols)
-    )
-
-
-def _load_entries(
-    spark: SparkSession, root: str, entries: list[dict],
-    where: list[tuple] | None,
 ) -> DataFrame | None:
-    """Shared pruned loader behind every read path: drop entries whose
-    stats prove no match, scan the survivors with mergeSchema (deletion
-    vectors applied), re-apply the exact predicate. None when nothing
-    can match. Manifest stats remain sound under DVs: they describe the
-    PHYSICAL file, a superset of the live rows, so pruning stays a
-    superset filter."""
-    if where:
-        entries, _ = table_stats.prune(entries, where)
+    """mergeSchema parquet scan of a resolved manifest entry list — the
+    one loader behind every read path. None when the list is empty (no
+    schema to synthesize)."""
     if not entries:
         return None
-    df = _scan_entries(spark, root, entries)
-    if where:
-        if any(c not in df.columns for c, _, _ in where):
-            return None  # every surviving file lacks the column: no row matches
-        df = df.filter(table_stats.residual_condition(where))
-    return df
+    data = _data_dir(root)
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(data, e["file"]) for e in entries]
+    )
 
 
-def read_committed(
-    spark: SparkSession, root: str, where: list[tuple] | None = None
-) -> DataFrame | None:
+def read_committed(spark: SparkSession, root: str) -> DataFrame | None:
     """The exactly-once view: scan ONLY manifest-committed files (orphans
     from crashed attempts are invisible). Returns None for an empty
     table (no schema to synthesize).
-
-    With ``where`` (a conjunction of ``(col, op, literal)``, ops
-    ``= < <= > >=``), files whose manifest stats PROVE no row can match
-    are never opened (see table_stats.py for the soundness corners:
-    NaN, type tags, truncated string bounds), and the exact predicate is
-    re-applied Spark-side — stats pruning is a superset filter, so the
-    result equals ``read_committed(...).filter(...)`` always, just
-    cheaper. Returns None when every file is pruned (same contract as an
-    empty table). At 100 TB this is the difference between opening 3
-    files and listing a million: the scan cost tracks the PREDICATE's
-    selectivity, not the table size.
 
     Reads with mergeSchema so a table whose batches gained columns over
     time (the cdc_schema_evolution scenario arriving at the sink) surfaces
@@ -457,11 +372,9 @@ def read_committed(
     takes the schema of one arbitrary file and silently drops the new
     columns from every other. Schema merging is distributed (executors
     read footers in parallel), so this costs one footer pass, not a
-    driver-side loop; a format that wanted to avoid even that would record
-    the schema in each manifest and pre-merge driver-side — noted as the
-    upgrade path, not needed at this table's file counts."""
+    driver-side loop."""
     _, _, _, entries = _committed_state(root)
-    return _load_entries(spark, root, entries, where)
+    return _scan_entries(spark, root, entries)
 
 
 def _rewrite_bin(job: tuple) -> dict:
@@ -472,32 +385,24 @@ def _rewrite_bin(job: tuple) -> dict:
     instead of serially through the driver. Requires the table root on
     storage every executor can reach — the same shared-filesystem
     assumption the manifest protocol itself makes."""
-    data, prefix, idx, names_dvs, bloom_cols = job
+    data, prefix, idx, names = job
     t = pa.concat_tables(
-        [
-            _apply_dvs_pa(pq.read_table(os.path.join(data, f)), data, f, dvs)
-            for f, dvs in names_dvs
-        ],
+        [pq.read_table(os.path.join(data, f)) for f in names],
         promote_options="default",
     )
     name = f"{prefix}-{idx:05d}.parquet"
     final = os.path.join(data, name)
     tmp = final + f".tmp-{os.getpid()}"
-    pq.write_table(t, tmp,
-                   write_statistics=table_stats.nan_safe_write_statistics(t))
+    pq.write_table(t, tmp, write_statistics=nan_safe_write_statistics(t))
     with open(tmp, "rb") as fh:
         os.fsync(fh.fileno())
     os.replace(tmp, final)
-    meta = table_stats.footer_meta(final)
-    if bloom_cols:
-        meta["blooms"] = table_stats.file_blooms(t, bloom_cols)
     return {"file": name, "n_rows": t.num_rows,
-            "n_bytes": os.path.getsize(final), **meta}
+            "n_bytes": os.path.getsize(final)}
 
 
 def compact_table(
-    spark: SparkSession, root: str, target_bytes: int = 128 << 20,
-    bloom_cols: list[str] | None = None,
+    spark: SparkSession, root: str, target_bytes: int = 128 << 20
 ) -> dict:
     """Compact the committed file set with the FFD planner and publish a
     snapshot manifest atomically. Returns a summary dict. Single-writer
@@ -525,18 +430,12 @@ def compact_table(
     bins = ffd_bins(sized, target_bytes)
     out_files, rewritten, jobs = [], 0, []
     for i, b in enumerate(bins):
-        if len(b) == 1 and not by_name[b[0][0]].get("dvs"):
+        if len(b) == 1:
             # singleton bin: the file survives as-is, so its manifest entry
-            # (stats included) carries forward verbatim into the snapshot.
-            # A file carrying a deletion vector always rewrites, even as a
-            # singleton — compaction is where DVs MATERIALIZE.
+            # carries forward verbatim into the snapshot
             out_files.append(dict(by_name[b[0][0]]))
             continue
-        jobs.append((
-            data, prefix, i,
-            [(f, by_name[f].get("dvs") or []) for f, _ in b],
-            bloom_cols,
-        ))
+        jobs.append((data, prefix, i, [f for f, _ in b]))
         rewritten += len(b)
     if jobs:
         # one Spark job, one task per bin — the driver only plans bins and
@@ -555,18 +454,12 @@ def compact_table(
 
 
 def _publish_snapshot(
-    root: str, new_gen: int, high_water: int, out_files: list[dict],
-    op: str = "compact", prune_covered: bool = True,
+    root: str, new_gen: int, high_water: int, out_files: list[dict]
 ) -> None:
-    """Atomically publish a maintenance snapshot, then prune the batch
+    """Atomically publish a compaction snapshot, then prune the batch
     manifests it supersedes (snapshot is durable first, so a crash
     between the two is harmless — the snapshot already supersedes
-    them). ``prune_covered=False`` keeps the covered batch manifests:
-    correct — and required — for DV-only ops (delete_where), which
-    supersede no data files, so pruning would needlessly destroy
-    batch-axis time travel and force every lagging incremental
-    consumer into a full rebase (the Delta deletion-vector lifecycle:
-    DELETE preserves log history; only compaction retires it).
+    them).
 
     CONCURRENT-MAINTAINER SAFETY (r8 verdict #4): the snapshot commits
     with an atomic create-exclusive, so of two maintainers that both
@@ -579,95 +472,14 @@ def _publish_snapshot(
         {
             "generation": new_gen,
             "covers": high_water,
-            "op": op,
             "files": sorted(out_files, key=lambda d: d["file"]),
         },
     )
-    if not prune_covered:
-        return
     commits = _commits_dir(root)
     for name in os.listdir(commits):
         if name.startswith("batch-") and name.endswith(".json"):
             if int(name[len("batch-"):-len(".json")]) <= high_water:
                 os.remove(os.path.join(commits, name))
-
-
-def optimize_zorder(
-    spark: SparkSession,
-    root: str,
-    col_a,
-    col_b,
-    target_bytes: int = 128 << 20,
-    bits: int = 16,
-    num_files: int | None = None,
-    bloom_cols: list[str] | None = None,
-) -> dict:
-    """OPTIMIZE ... ZORDER BY (col_a, col_b): rewrite the ENTIRE
-    committed set clustered on the interleaved key (operators/layout.py::
-    zvalue) and publish the result as a compaction snapshot. Where
-    `compact_table` repacks whole files (layout-preserving bin packing),
-    this is the layout-CHANGING maintenance pass: rows are globally
-    range-partitioned by z-value and sorted within each file, so every
-    file owns a rectangle in (col_a, col_b) space and the manifest
-    data-skipping stats (table_stats.py) prune on EITHER column — a
-    linear sort clusters only its leading key. The Delta OPTIMIZE
-    ZORDER BY recipe, expressed as one Spark job: repartitionByRange
-    keeps the shuffle to a single pass, file count is total_bytes /
-    target_bytes, and the rewritten files' stats come from their own
-    footers like any other write.
-
-    Concurrency contract == compact_table: single-writer vs other
-    maintenance ops; streaming appends landing during the rewrite stay
-    visible (their batch ids exceed the published `covers`). A crash
-    before the snapshot rename leaves only orphan data files for vacuum."""
-    from pyspark.sql import functions as F
-
-    from crdb_changefeed_publisher_spark.operators.layout import zvalue
-
-    # col_a / col_b: stored column names, or Column EXPRESSIONS deriving a
-    # range-compressed integer from stored columns (e.g. a parsed CDC key)
-    # — clustering by a derived key still tightens the stored columns'
-    # per-file bounds, which is what the manifest stats prune on.
-    gen, _covers, high_water, entries = _committed_state(root)
-    if not entries:
-        return {"generation": gen, "covers": high_water, "files_now": 0,
-                "n_rows": 0}
-    df = read_committed(spark, root)
-    total = sum(int(e["n_bytes"]) for e in entries)
-    n_files = num_files if num_files is not None else max(1, -(-total // target_bytes))
-    new_gen = gen + 1
-    clustered = (
-        df.withColumn(
-            "_z",
-            zvalue(
-                F.col(col_a) if isinstance(col_a, str) else col_a,
-                F.col(col_b) if isinstance(col_b, str) else col_b,
-                bits,
-            ),
-        )
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    out_files = [
-        {"file": r.file, "n_rows": int(r.n_rows), "n_bytes": int(r.n_bytes),
-         **json.loads(r.meta)}
-        for r in clustered.mapInArrow(
-            _part_writer(
-                _data_dir(root),
-                f"compact-{new_gen:08d}-{_attempt_token()}-{{pid:05d}}.parquet",
-                bloom_cols,
-            ),
-            _PART_SCHEMA,
-        ).collect()
-    ]
-    _publish_snapshot(root, new_gen, high_water, out_files, op="zorder")
-    return {
-        "generation": new_gen,
-        "covers": high_water,
-        "files_now": len(out_files),
-        "n_rows": sum(f["n_rows"] for f in out_files),
-    }
 
 
 def vacuum(
@@ -705,9 +517,6 @@ def vacuum(
         return []
     gen, _, high_water, entries = _committed_state(root)
     keep_set = {e["file"] for e in entries}
-    # deletion-vector files referenced by any committed entry are part of
-    # the readable state exactly like data files
-    keep_set |= {d["file"] for e in entries for d in e.get("dvs") or []}
     now = time.time()
     gone = []
     for name in sorted(os.listdir(data)):
@@ -727,10 +536,9 @@ def vacuum(
                         continue
                 except OSError:
                     continue
-            elif name.startswith(("dv-", "compact-")):
-                # an in-flight maintenance op (delete_where's DVs,
-                # compact/zorder/merge rewrites) writes files for
-                # generation committed+1 BEFORE publishing its snapshot
+            elif name.startswith("compact-"):
+                # an in-flight compaction writes files for generation
+                # committed+1 BEFORE publishing its snapshot
                 try:
                     op_gen = int(name.split("-")[1])
                 except (IndexError, ValueError):
@@ -758,188 +566,6 @@ def vacuum(
     return gone
 
 
-def _spark_semantics_mask(t: pa.Table, where: list[tuple]):
-    """Boolean numpy mask of rows matching a (col, op, lit) conjunction,
-    with SPARK's comparison semantics — so a DV delete agrees row-for-row
-    with `read_committed().filter(...)`: NaN orders ABOVE every value
-    (`>`/`>=` on a float column must match NaN rows; `<`/`<=`/`=` must
-    not), and a null in any compared column fails the conjunction. NaN
-    literals are refused (can_match never prunes on them either)."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    mask = None
-    for col, op, lit in where:
-        if isinstance(lit, float) and lit != lit:
-            raise ValueError("NaN literals are not supported in delete_where")
-        arr = t.column(col)
-        fn = {
-            "=": pc.equal, "<": pc.less, "<=": pc.less_equal,
-            ">": pc.greater, ">=": pc.greater_equal,
-        }[op]
-        piece = fn(arr, lit)
-        if pa.types.is_floating(arr.type) and op in (">", ">="):
-            # both sides null exactly where arr is null -> plain or_ is safe
-            piece = pc.or_(piece, pc.is_nan(arr))
-        piece = pc.fill_null(piece, False)
-        np_piece = piece.to_numpy(zero_copy_only=False).astype(bool)
-        mask = np_piece if mask is None else (mask & np_piece)
-    return mask
-
-
-def _existing_dv_positions(data: str, name: str, dvs: list[dict]):
-    """Already-deleted row ordinals of data file `name`, unioned across
-    its DV references."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    out = []
-    for d in dvs or []:
-        dvt = pq.read_table(os.path.join(data, d["file"]), columns=["file", "pos"])
-        sel = pc.equal(dvt.column("file"), name)
-        out.append(
-            pc.filter(dvt.column("pos"), sel).to_numpy(zero_copy_only=False)
-        )
-    if not out:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(out).astype(np.int64)
-
-
-def _apply_dvs_pa(t: pa.Table, data: str, name: str, dvs: list[dict]) -> pa.Table:
-    """pyarrow-side DV application for rewrite tasks (compaction/merge
-    materialization): drop the recorded ordinals of `name` from `t`."""
-    import numpy as np
-
-    pos = _existing_dv_positions(data, name, dvs)
-    if not len(pos):
-        return t
-    keep = np.ones(t.num_rows, dtype=bool)
-    keep[pos] = False
-    return t.filter(pa.array(keep))
-
-
-def _delete_scan(job: tuple) -> dict | None:
-    """Executor task of delete_where: evaluate the predicate over ONE
-    candidate data file (predicate columns only — never the full row
-    width), subtract positions already covered by existing DVs, and
-    write this file's new deletion vector as a (file, pos) parquet via
-    tmp + fsync + atomic rename (a retried task overwrites its own tmp).
-    Returns the manifest DV reference, or None when no live row
-    matches."""
-    import numpy as np
-
-    data, prefix, idx, name, dvs, where = job
-    path = os.path.join(data, name)
-    pred_cols = sorted({c for c, _, _ in where})
-    schema_names = set(pq.ParquetFile(path).schema_arrow.names)
-    if any(c not in schema_names for c in pred_cols):
-        return None  # pre-drift file: column reads all-null, matches nothing
-    t = pq.read_table(path, columns=pred_cols)
-    mask = _spark_semantics_mask(t, where)
-    already = _existing_dv_positions(data, name, dvs)
-    if len(already):
-        mask[already] = False
-    pos = np.nonzero(mask)[0].astype(np.int64)
-    if not len(pos):
-        return None
-    dv_name = f"{prefix}-{idx:05d}.parquet"
-    final = os.path.join(data, dv_name)
-    tmp = final + f".tmp-{os.getpid()}"
-    pq.write_table(
-        pa.table({"file": pa.array([name] * len(pos)), "pos": pa.array(pos)}),
-        tmp,
-    )
-    with open(tmp, "rb") as fh:
-        os.fsync(fh.fileno())
-    os.replace(tmp, final)
-    return {"file": name, "dv": dv_name, "n": int(len(pos))}
-
-
-def delete_where(
-    spark: SparkSession, root: str, where: list[tuple]
-) -> dict:
-    """DELETE FROM ... WHERE, merge-on-read: mark matching rows deleted
-    via per-file deletion vectors instead of rewriting the files
-    (contrast `merge_upsert`, the copy-on-write path keyed by exact
-    keys). Three costs, none proportional to table bytes:
-
-    * candidate files come from MANIFEST stats/bloom pruning alone
-      (`table_stats.prune`) — a predicate outside every file's bounds
-      touches nothing and publishes nothing;
-    * each candidate is scanned once, PREDICATE COLUMNS ONLY, in one
-      Spark job (one task per file); matching row ordinals are written
-      as that file's DV — KB for a point delete, never a file rewrite;
-    * the snapshot publish is the usual atomic manifest rename: entries
-      for files that gained a DV carry the reference (appended to any
-      existing DVs — stacked deletes union at read time and later
-      deletes see earlier ones, so a row deletes once); every other
-      entry, stats and blooms included, carries forward verbatim.
-
-    Readers subtract DVs via the (_metadata.file_name, row_index)
-    anti-join in `_scan_entries`; `compact_table` / `optimize_zorder` /
-    `merge_upsert` MATERIALIZE them (and `vacuum` then reclaims the DV
-    files). Snapshot `covers` semantics match the other maintenance ops,
-    so concurrent streaming appends above the high-water mark stay
-    visible and unaffected — but unlike them the publish RETAINS the
-    covered batch manifests (a DV-only snapshot supersedes no data
-    files): pre-delete batch states stay time-travelable and lagging
-    read_since cursors stay valid, the Delta DV lifecycle where DELETE
-    preserves log history and only compaction retires it."""
-    for _, op, _ in where:
-        if op not in table_stats.OPS:
-            raise ValueError(f"unsupported op {op!r}; use one of {table_stats.OPS}")
-    gen, _covers, high_water, entries = _committed_state(root)
-    candidates, skipped = table_stats.prune(entries, where)
-    new_gen = gen + 1
-    data = _data_dir(root)
-    dv_prefix = f"dv-{new_gen:08d}-{_attempt_token()}"
-    jobs = [
-        (data, dv_prefix, i, e["file"], e.get("dvs") or [], where)
-        for i, e in enumerate(candidates)
-    ]
-    refs: list[dict] = []
-    if jobs:
-        refs = [
-            r
-            for r in spark.sparkContext.parallelize(jobs, len(jobs))
-            .map(_delete_scan)
-            .collect()
-            if r is not None
-        ]
-    if not refs:
-        return {
-            "generation": gen, "covers": high_water, "files_scanned": len(jobs),
-            "files_skipped": skipped, "files_with_deletes": 0, "n_deleted": 0,
-        }
-    by_file = {r["file"]: r for r in refs}
-    out_entries = []
-    for e in entries:
-        r = by_file.get(e["file"])
-        if r is None:
-            out_entries.append(e)
-        else:
-            e2 = dict(e)
-            e2["dvs"] = list(e.get("dvs") or []) + [
-                {"file": r["dv"], "n": r["n"]}
-            ]
-            out_entries.append(e2)
-    # DV-only publish: no data file is superseded, so the covered batch
-    # manifests stay — pre-delete batch states remain time-travelable
-    # and lagging read_since cursors stay valid (r8 ADVICE: pruning here
-    # destroyed batch-axis history for a one-row delete)
-    _publish_snapshot(
-        root, new_gen, high_water, out_entries, op="delete", prune_covered=False
-    )
-    return {
-        "generation": new_gen,
-        "covers": high_water,
-        "files_scanned": len(jobs),
-        "files_skipped": skipped,
-        "files_with_deletes": len(refs),
-        "n_deleted": sum(r["n"] for r in refs),
-    }
-
-
 def _entries_as_of(
     root: str, batch_id: int, max_gen: int | None = None
 ) -> list[dict] | None:
@@ -947,9 +573,9 @@ def _entries_as_of(
     `batch_id` — the resolution step behind as_of_batch / table_changes.
     `max_gen` additionally caps the snapshot GENERATION considered: the
     batch axis addresses appends, the generation axis addresses
-    maintenance ops (delete_where / compact / merge re-publish the SAME
-    batch high-water under a new generation, so pre/post-maintenance
-    states are distinguishable only by generation). None when the commit
+    compactions (a re-compaction re-publishes the SAME batch high-water
+    under a new generation, so pre/post-compaction states are
+    distinguishable only by generation). None when the commit
     dir does not exist; raises for states a later compaction made
     unreconstructible (the retention contract)."""
     commits = _commits_dir(root)
@@ -983,9 +609,8 @@ def _entries_as_of(
     # generation (a later-generation snapshot at the same covers still
     # prunes), so the guard ignores max_gen: a needed batch is "pruned"
     # when absent AND some snapshot's covers reaches it. A batch that is
-    # STILL PRESENT is reconstructible even below a snapshot's covers —
-    # delete_where retains its covered manifests (DV-only publish, r8
-    # ADVICE), so pre-delete batch states resolve through them.
+    # STILL PRESENT is reconstructible even below a snapshot's covers (a
+    # crash between a snapshot's publish and its pruning leaves them).
     have = {int(m["batch_id"]) for m in batches}
     max_pruned = max((int(s["covers"]) for s in snaps), default=-1)
     missing = [
@@ -1015,8 +640,7 @@ def _entries_as_of(
 
 
 def as_of_batch(
-    spark: SparkSession, root: str, batch_id: int,
-    where: list[tuple] | None = None,
+    spark: SparkSession, root: str, batch_id: int
 ) -> DataFrame | None:
     """Time-travel read: the table as it stood after batch `batch_id`
     committed — the latest snapshot at or below that batch plus the batch
@@ -1031,13 +655,7 @@ def as_of_batch(
     entries = _entries_as_of(root, batch_id)
     if entries is None:
         return None
-    return _load_entries(spark, root, entries, where)
-
-
-def _dv_key(e: dict) -> tuple:
-    """Identity of an entry's deletion-vector state: same file + same DV
-    references means the entry's LIVE ROWS are byte-identical."""
-    return (e["file"], tuple(sorted(d["file"] for d in e.get("dvs") or [])))
+    return _scan_entries(spark, root, entries)
 
 
 def table_changes(
@@ -1049,27 +667,23 @@ def table_changes(
     """Row-level CHANGE FEED between two committed states: what a reader
     of ``as_of_batch(to_batch)`` sees that ``as_of_batch(from_batch)``
     did not (``_change_type='insert'``) and vice versa (``'delete'``) —
-    the generalized CDC-out surface of the table sink (read_since covers
-    the append-only fast path; this one also surfaces DELETE_WHERE /
-    merge tombstone effects).
+    the CDC-out surface of the table sink over any two states, where
+    read_since covers only consecutive appends.
 
-    The scale property is MANIFEST PRUNING OF THE DIFF ITSELF: entries
-    carried between the two states with identical (file, DV set) hold
-    identical live rows BY CONSTRUCTION, so they cancel without being
-    read — only files added, removed, rewritten, or with grown deletion
-    vectors are scanned, and the exceptAll runs over just those. A
-    point delete on a 100 TB table diffs by scanning the one file the
-    DV touched, not the table. Compaction between the two states
-    rewrites bytes without changing rows: its files do scan (names
-    differ), but the multiset difference correctly comes out EMPTY —
-    asserted in tests.
+    The scale property is MANIFEST PRUNING OF THE DIFF ITSELF: data file
+    names are never reused (every attempt carries its own token), so an
+    entry carried between the two states holds identical rows BY
+    CONSTRUCTION and cancels without being read — only files added,
+    removed or rewritten are scanned, and the exceptAll runs over just
+    those. Compaction between the two states rewrites bytes without
+    changing rows: its files do scan (names differ), but the multiset
+    difference correctly comes out EMPTY — asserted in tests.
 
     A state is a batch id (the APPEND axis: as_of_batch semantics under
     the latest generation), or a ``(batch_id, generation)`` pair — the
-    generation cap is what addresses the two sides of a maintenance op,
+    generation cap is what addresses the two sides of a compaction,
     which re-publishes the SAME batch high-water under a new generation:
-    ``(covers, gen-1) -> (covers, gen)`` diffs exactly a delete_where's
-    effect.
+    ``(covers, gen-1) -> (covers, gen)`` diffs exactly its effect.
 
     Returns (changes_df | None, stats); stats reports how much the
     manifest diff pruned. Inherits as_of_batch's retention contract
@@ -1093,10 +707,10 @@ def table_changes(
 
     from_entries = resolve(from_state)
     to_entries = resolve(to_state)
-    from_keys = {_dv_key(e) for e in from_entries}
-    to_keys = {_dv_key(e) for e in to_entries}
-    from_changed = [e for e in from_entries if _dv_key(e) not in to_keys]
-    to_changed = [e for e in to_entries if _dv_key(e) not in from_keys]
+    from_keys = {e["file"] for e in from_entries}
+    to_keys = {e["file"] for e in to_entries}
+    from_changed = [e for e in from_entries if e["file"] not in to_keys]
+    to_changed = [e for e in to_entries if e["file"] not in from_keys]
     stats = {
         "files_from": len(from_entries),
         "files_to": len(to_entries),
@@ -1105,10 +719,8 @@ def table_changes(
     }
     if not from_changed and not to_changed:
         return None, stats
-    old = (
-        _scan_entries(spark, root, from_changed) if from_changed else None
-    )
-    new = _scan_entries(spark, root, to_changed) if to_changed else None
+    old = _scan_entries(spark, root, from_changed)
+    new = _scan_entries(spark, root, to_changed)
     from pyspark.sql import functions as F
 
     if old is None:
@@ -1134,8 +746,7 @@ def table_changes(
 
 
 def read_since(
-    spark: SparkSession, root: str, after_batch: int,
-    where: list[tuple] | None = None,
+    spark: SparkSession, root: str, after_batch: int
 ) -> tuple[DataFrame | None, int]:
     """Incremental changelog read for an APPEND-ONLY table: the rows that
     committed in batches (after_batch, high_water], plus the new
@@ -1151,12 +762,7 @@ def read_since(
     Raises if any needed delta batch manifest was PRUNED by a
     compaction: those deltas were folded into a snapshot and are no
     longer separable — the consumer must rebase (read_committed) or keep
-    up with compaction cadence (the retention contract). A DV-only
-    delete_where snapshot does NOT invalidate cursors: it supersedes no
-    data files, so its covered batch manifests survive (r8 ADVICE) and a
-    lagging consumer keeps tailing — though on a table that sees
-    delete_where, appends are only half the feed; pair with
-    table_changes for the delete effects."""
+    up with compaction cadence (the retention contract)."""
     gen, covers, high_water, _ = _committed_state(root)
     commits = _commits_dir(root)
     entries: list[dict] = []
@@ -1182,206 +788,7 @@ def read_since(
             f"delta batch manifests {missing[:5]} were compacted into it; "
             "rebase from read_committed() or raise compaction cadence"
         )
-    return _load_entries(spark, root, entries, where), high_water
-
-
-def _files_touching_keys(
-    entries: list[dict], key_col: str, keys: list,
-) -> tuple[list[dict], list[dict]]:
-    """(affected, untouched) committed entries for a key set, decided
-    from MANIFEST metadata only: an entry is untouched when every key is
-    provably absent — outside its [min, max] bounds, or rejected by its
-    per-file bloom (zero false negatives). Probes are (files x keys)
-    driver-side, so keys ship collected; callers bound that (merge caps
-    it and falls back to bounds-only / all-affected)."""
-    affected, untouched = [], []
-    for e in entries:
-        if any(table_stats.can_match(e, key_col, "=", k) for k in keys):
-            affected.append(e)
-        else:
-            untouched.append(e)
-    return affected, untouched
-
-
-def merge_upsert(
-    spark: SparkSession,
-    root: str,
-    updates: DataFrame,
-    key_col: str,
-    delete_col: str | None = None,
-    target_bytes: int = 128 << 20,
-    bloom_cols: list[str] | None = None,
-    max_probe_keys: int = 200_000,
-) -> dict:
-    """MERGE INTO, copy-on-write: apply `updates` (one row per key —
-    last-writer-wins resolution is the caller's job, asserted here) to
-    the committed table, rewriting ONLY the files that can contain a
-    matched key and publishing the result as one atomic snapshot. The
-    lakehouse-apply materialization of the CDC loop: where
-    `latest_changes` (operators/changefeed.py) is the VIRTUAL upsert view
-    over the append-only log, merge_upsert makes the applied state
-    physical — the reference's apply-loop domain (src/main.rs), ending in a queryable table instead of a queue.
-
-    The write amplification IS the data-skipping story: affected files
-    are found from manifest bounds + per-file blooms alone
-    (`_files_touching_keys` — no data file is opened to decide), so a
-    point-keyed delta against a z-ordered or bloom-indexed table
-    rewrites a handful of files, not the table. Unmatched rows in
-    affected files are preserved byte-exactly (Arrow path end to end);
-    untouched files carry their manifest entries (stats, blooms) forward
-    verbatim.
-
-    With `delete_col`, update rows where that boolean column is true are
-    TOMBSTONES: the key's rows are removed and the tombstone row is not
-    inserted. New keys (matching no file) insert. More than
-    `max_probe_keys` distinct keys degrades gracefully: every file is
-    treated as affected (a full COW rewrite — correct, just not
-    targeted).
-
-    Snapshot semantics match the other maintenance ops: `covers` = the
-    current high water, concurrent appends above it stay visible, batch
-    manifests at or below it are pruned (a replayed pre-merge batch
-    re-commits as superseded — invisible, exactly-once preserved)."""
-    from pyspark.sql import functions as F
-
-    gen, _covers, high_water, entries = _committed_state(root)
-    new_gen = gen + 1
-    data = _data_dir(root)
-    os.makedirs(data, exist_ok=True)
-    os.makedirs(_commits_dir(root), exist_ok=True)
-
-    # one aggregation pass for all three counts (two separate jobs doubled
-    # the pre-merge planning latency on wide update sets — r8 verdict #3).
-    # count_distinct ignores NULL keys, so NULLs are counted explicitly
-    # and rejected with their own error (r9 ADVICE: a NULL-key update row
-    # previously failed the n_updates != n_keys guard with a misleading
-    # 'resolve duplicates' message)
-    n_updates, n_keys, n_null_keys = updates.agg(
-        F.count(F.lit(1)),
-        F.count_distinct(F.col(key_col)),
-        F.count_if(F.col(key_col).isNull()),
-    ).first()
-    if n_null_keys:
-        raise ValueError(
-            f"updates carry {n_null_keys} row(s) with a NULL {key_col!r} "
-            "merge key: a NULL key matches no base row and no other "
-            "update; drop or key those rows upstream"
-        )
-    if n_updates != n_keys:
-        raise ValueError(
-            f"updates carry {n_updates} rows over {n_keys} keys: resolve "
-            "last-writer-wins upstream (e.g. latest_changes) before merging"
-        )
-
-    if n_keys <= max_probe_keys:
-        keys = [r[0] for r in updates.select(key_col).collect()]
-        affected, untouched = _files_touching_keys(entries, key_col, keys)
-    else:
-        affected, untouched = entries, []
-
-    if delete_col is not None:
-        inserts = updates.filter(~F.coalesce(F.col(delete_col), F.lit(False)))
-        inserts = inserts.drop(delete_col)
-    else:
-        inserts = updates
-    if affected:
-        # DV-aware scan: rows already deleted in an affected file must not
-        # resurrect through the rewrite (merge MATERIALIZES its files' DVs)
-        base = _scan_entries(spark, root, affected)
-        kept = base.join(
-            updates.select(F.col(key_col).alias("__mk")),
-            on=base[key_col] == F.col("__mk"),
-            how="left_anti",
-        )
-        merged = kept.unionByName(inserts, allowMissingColumns=True)
-    else:
-        merged = inserts
-
-    total = sum(int(e["n_bytes"]) for e in affected) or 1
-    n_files = max(1, -(-total // target_bytes))
-    out_files = [
-        {"file": r.file, "n_rows": int(r.n_rows), "n_bytes": int(r.n_bytes),
-         **json.loads(r.meta)}
-        for r in merged.repartition(n_files).mapInArrow(
-            _part_writer(
-                data,
-                f"compact-{new_gen:08d}-{_attempt_token()}-{{pid:05d}}.parquet",
-                bloom_cols),
-            _PART_SCHEMA,
-        ).collect()
-    ]
-    _publish_snapshot(root, new_gen, high_water, untouched + out_files,
-                      op="merge")
-    return {
-        "generation": new_gen,
-        "covers": high_water,
-        "files_rewritten": len(affected),
-        "files_untouched": len(untouched),
-        "files_written": len(out_files),
-        "n_updates": n_updates,
-    }
-
-
-def describe_table(root: str) -> dict:
-    """DESCRIBE DETAIL from manifests alone — no data file opened: row /
-    byte / file counts, snapshot generation and high-water batch, and a
-    per-column profile folded across every committed file's stats:
-    global [min, max] (None when any file CONTAINING the column lacks
-    usable stats for it — absent stats means unknown, never a guess),
-    null count (files that predate the column count as all-null — the
-    schema-drift reading), and n_files_with. The KB-sized answer to
-    "what is in this table" that at 100 TB must not cost a scan."""
-    gen, covers, high_water, entries = _committed_state(root)
-    names: list[str] = []
-    for e in entries:
-        for c in e.get("cols") or []:
-            if c not in names:
-                names.append(c)
-    cols: dict[str, dict] = {}
-    for c in names:
-        lo = hi = None
-        nulls = 0
-        kind = None
-        n_with = 0
-        bounded = True
-        for e in entries:
-            rows = int(e["n_rows"] or 0)
-            if c not in (e.get("cols") or []):
-                nulls += rows  # pre-drift file: the column reads all-null
-                continue
-            n_with += 1
-            ent = (e.get("stats") or {}).get(c)
-            if ent is None:
-                bounded = False
-                continue
-            kind = kind or ent["kind"]
-            nulls += ent["nulls"]
-            if ent["min"] is not None:
-                lo = ent["min"] if lo is None else min(lo, ent["min"])
-            if ent["max"] is not None:
-                hi = ent["max"] if hi is None else max(hi, ent["max"])
-        cols[c] = {
-            "kind": kind,
-            "min": lo if bounded else None,
-            "max": hi if bounded else None,
-            "nulls": nulls,
-            "n_files_with": n_with,
-        }
-    return {
-        "generation": gen,
-        "covers": covers,
-        "high_water_batch": high_water,
-        "n_files": len(entries),
-        # physical rows in committed files; live rows = n_rows - n_deleted_rows
-        # (per-column stats likewise describe the physical files — sound
-        # upper bounds for pruning under deletion vectors)
-        "n_rows": sum(int(e["n_rows"] or 0) for e in entries),
-        "n_deleted_rows": sum(
-            d["n"] for e in entries for d in e.get("dvs") or []
-        ),
-        "n_bytes": sum(int(e["n_bytes"]) for e in entries),
-        "columns": cols,
-    }
+    return _scan_entries(spark, root, entries), high_water
 
 
 def table_history(root: str) -> list[dict]:
@@ -1402,11 +809,11 @@ def table_history(root: str) -> list[dict]:
                 s = json.load(fh)
             out.append(
                 {
-                    "kind": s.get("op", "compact"),
+                    "kind": "compact",
                     "id": int(s["generation"]),
                     "covers": int(s["covers"]),
                     "n_files": len(s["files"]),
-                    "n_rows": sum(f["n_rows"] or 0 for f in s["files"]) or None,
+                    "n_rows": sum(f["n_rows"] for f in s["files"]),
                     "n_bytes": sum(f["n_bytes"] for f in s["files"]),
                 }
             )

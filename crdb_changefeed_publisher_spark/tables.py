@@ -26,11 +26,11 @@ TABLE_NAMES = [
 ]
 
 
-# name -> saved-table identifier. When set (tools/bucket_bench.py, scale
-# tests), load_table serves the bucketed catalog table instead of the plain
-# parquet path, so the SAME registered query plans run against bucketed
-# storage — co-located, exchange-free fact-fact joins — without forking the
-# query definitions.
+# name -> saved-table identifier. When set (the scale tests), load_table
+# serves the bucketed catalog table instead of the plain parquet path, so
+# the SAME registered query plans run against bucketed storage —
+# co-located, exchange-free fact-fact joins — without forking the query
+# definitions.
 _BUCKETED_OVERRIDES: dict[str, str] = {}
 
 

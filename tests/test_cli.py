@@ -100,3 +100,27 @@ def test_replay_once_bounds_epochs_and_mirrors_cursor(spark, tmp_path, monkeypat
     assert len(batch_ids) == 4, sorted(os.listdir(out))
     with open(cursor, encoding="utf-8") as f:
         assert json.load(f)["cursor"] == "30.0,0"
+
+
+@pytest.mark.parametrize("value", ["10", "s", "-1s", "1.5.0s", "10 s", "10S"])
+def test_cursor_frequency_rejects_malformed_values(value):
+    from crdb_changefeed_publisher_spark.cli import frequency_seconds
+
+    with pytest.raises(ValueError, match="--cursor-frequency"):
+        frequency_seconds(value)
+
+
+def test_dir_queue_without_out_dir_exits_before_spark(monkeypatch, capsys):
+    def no_spark(*args, **kwargs):
+        raise AssertionError("main reached get_spark")
+
+    monkeypatch.setattr("crdb_changefeed_publisher_spark.session.get_spark", no_spark)
+    assert main(["--table", "foo", "--queue", "dir"]) == 2
+    assert "--out-dir" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("flag", ["--queue", "--cursor-store"])
+def test_unknown_queue_or_cursor_store_kind_is_a_usage_error(flag):
+    with pytest.raises(SystemExit) as exc:
+        parse_args(["--table", "foo", flag, "kafka"])
+    assert exc.value.code == 2

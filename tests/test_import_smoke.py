@@ -54,12 +54,12 @@ PKG = "crdb_changefeed_publisher_spark"
 # The live entry points: the CDC publisher CLI, the query registry (its
 # package __init__ imports every spec module) and the changefeed source.
 ENTRY_POINTS = (f"{PKG}.cli", f"{PKG}.plans", f"{PKG}.sources.crdb_changefeed")
-# Outside the closure and due for deletion in the next change (ROADMAP
-# direction 3): the table sink carries 50 tests, more than one change
-# retires alongside the rest of the cut. The test requires an exact match,
-# so this set can only shrink: a module that joins the closure, is deleted
-# or newly falls outside it fails the test until the set is updated.
-PENDING_DELETION = {f"{PKG}.streaming.table_sink", f"{PKG}.streaming.table_stats"}
+# Outside the closure and due for deletion in its own feature slice
+# (ROADMAP direction 4), together with the tests that cover it. The test
+# requires an exact match, so this set can only shrink: a module that
+# joins the closure, is deleted or newly falls outside it fails the test
+# until the set is updated.
+PENDING_DELETION = {f"{PKG}.streaming.table_sink"}
 
 
 def _package_modules() -> dict[str, str]:

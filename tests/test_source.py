@@ -481,3 +481,43 @@ def test_epoch_rows_bounds_clean_start_and_restarts(spark, tmp_path):
         run(crash_second_batch)
     assert run() == [10, 10]  # replays [80, 90), then [90, 100)
     assert keys() == sorted(changes(0, 100) + changes(80, 90))
+
+
+def test_line_index_first_line_at_maps_bytes_to_line_starts(tmp_path, monkeypatch):
+    """first_line_at(b) is the first line starting at or after byte b: a
+    byte inside a line maps to the next line, a line start to itself, and
+    a byte past the indexed lines to the frontier."""
+    monkeypatch.setattr(crdb_changefeed, "INDEX_STRIDE", 3)
+    lines = [b"a\n", b"bbbb\n", b"cc\n", b"d\n", b"eeeeee\n", b"f\n", b"gg\n"]
+    path = tmp_path / "feed.jsonl"
+    path.write_bytes(b"".join(lines))
+    starts = [sum(len(x) for x in lines[:i]) for i in range(len(lines))]
+    idx = crdb_changefeed.LineIndex()
+    with open(path, "rb") as f:
+        idx.scan(f)
+        assert idx.n_lines == len(lines) and idx.stride_bytes == [0, starts[3], starts[6]]
+        for i, s in enumerate(starts):
+            assert idx.first_line_at(f, s) == (i, s)
+            if i + 1 < len(starts):
+                assert idx.first_line_at(f, s + 1) == (i + 1, starts[i + 1])
+        assert idx.first_line_at(f, idx.end_byte + 10) == (len(lines), idx.end_byte)
+
+
+def test_line_index_counts_an_unterminated_last_line(tmp_path):
+    path = tmp_path / "feed.jsonl"
+    path.write_bytes(b"one\ntwo\nthree")
+    idx = crdb_changefeed.LineIndex()
+    got: list[bytes] = []
+    with open(path, "rb") as f:
+        idx.scan(f, out=got)
+    assert got == [b"one\n", b"two\n", b"three"]
+    assert idx.n_lines == 3 and idx.end_byte == 13 and idx.lines_read == 3
+
+
+def test_replay_fetch_past_the_end_returns_no_rows(tmp_path):
+    feed = str(tmp_path / "feed.jsonl")
+    write_feed(feed, 10, 5)
+    conn = JsonlReplayConnection(feed)
+    assert len(conn.fetch(8, None, 5)) == 2  # the last two lines only
+    assert conn.fetch(10, None, 5) == []
+    assert conn.fetch(25, None, 5) == []

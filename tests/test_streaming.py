@@ -515,3 +515,196 @@ def test_dir_queue_partition_files_ordered(tmp_path):
     q.close()
     assert DirQueue.read_all(str(tmp_path / "q")) == [b"a", b"b"]
     assert os.listdir(str(tmp_path / "q")) == ["partition-00003.jsonl"]
+
+
+def test_memory_cursor_store_starts_empty_and_keeps_the_last_set():
+    store = MemoryCursorStore()
+    assert store.get() is None
+    store.set("1.0,0")
+    store.set("2.0,0")
+    assert store.get() == "2.0,0"
+
+
+def test_file_cursor_store_missing_file_reads_none(tmp_path):
+    store = FileCursorStore(str(tmp_path / "nested" / "dir" / "cursor.json"))
+    assert os.path.isdir(str(tmp_path / "nested" / "dir"))  # parent made up front
+    assert store.get() is None
+
+
+@pytest.mark.parametrize("contents", ["", "{not json", '{"key": "key"}'],
+                         ids=["empty", "corrupt", "no_cursor_field"])
+def test_file_cursor_store_unreadable_contents_read_none(tmp_path, contents):
+    """A cursor file that is empty, torn or lacks the cursor field reads
+    as no cursor (a cursor-less start) instead of failing the publisher."""
+    path = tmp_path / "cursor.json"
+    path.write_text(contents, encoding="utf-8")
+    assert FileCursorStore(str(path)).get() is None
+
+
+def test_file_cursor_store_set_replaces_and_survives_reopen(tmp_path):
+    """set() is the UPSERT of the reference's single-key row: the last
+    value wins, a new store on the same path reads it, and the tmp file
+    of the atomic replace is gone."""
+    path = str(tmp_path / "cursor.json")
+    store = FileCursorStore(path)
+    store.set("1595866288.0,0")
+    store.set("1595866299.5,1")
+    assert FileCursorStore(path).get() == "1595866299.5,1"
+    with open(path, encoding="utf-8") as f:
+        assert json.load(f) == {"key": "key", "cursor": "1595866299.5,1"}
+    assert os.listdir(str(tmp_path)) == ["cursor.json"]
+
+
+def test_make_cursor_store_registry(tmp_path):
+    from crdb_changefeed_publisher_spark.streaming.cursors import make_cursor_store
+
+    store = make_cursor_store("file", path=str(tmp_path / "c.json"))
+    assert isinstance(store, FileCursorStore)
+    with pytest.raises(ValueError, match="unknown cursor store type"):
+        make_cursor_store("memory")
+
+
+def test_cockroachdb_cursor_store_issues_the_reference_sql(monkeypatch):
+    """The cockroachdb store creates its table on connect, reads the single
+    'key' row, and UPSERTs the cursor as a bound parameter (src/cursors.rs)."""
+    import sys
+    import types
+
+    from crdb_changefeed_publisher_spark.streaming.cursors import (
+        JdbcCursorStore,
+        make_cursor_store,
+    )
+
+    class FakeConn:
+        def __init__(self):
+            self.statements, self.row = [], None
+
+        def execute(self, sql, params=None):
+            self.statements.append((sql, params))
+            if sql.startswith("UPSERT"):
+                self.row = (params[0],)
+            return self
+
+        def fetchone(self):
+            return self.row
+
+    conns = []
+
+    def connect(url, autocommit):
+        assert url == "postgresql://crdb:26257/db" and autocommit
+        conns.append(FakeConn())
+        return conns[-1]
+
+    monkeypatch.setitem(sys.modules, "psycopg", types.SimpleNamespace(connect=connect))
+    store = make_cursor_store("cockroachdb", database_url="postgresql://crdb:26257/db")
+    assert isinstance(store, JdbcCursorStore)
+    assert store.get() is None
+    store.set("1595866288.0,0")
+    assert store.get() == "1595866288.0,0"
+    sql = [s for s, _ in conns[0].statements]
+    assert sql[0] == JdbcCursorStore.DDL
+    assert sql.count(JdbcCursorStore.GET) == 2
+    assert (JdbcCursorStore.SET, ("1595866288.0,0",)) in conns[0].statements
+
+
+def test_cockroachdb_cursor_store_without_psycopg_raises(monkeypatch):
+    import sys
+
+    from crdb_changefeed_publisher_spark.streaming.cursors import JdbcCursorStore
+
+    monkeypatch.setitem(sys.modules, "psycopg", None)  # import raises ImportError
+    with pytest.raises(RuntimeError, match="psycopg is not installed"):
+        JdbcCursorStore("postgresql://crdb:26257/db")
+
+
+def test_dir_queue_default_mode_appends_across_reopens(tmp_path):
+    """Without a batch id the dir queue appends (reference at-least-once):
+    a second open of the same partition keeps what the first published."""
+    out = str(tmp_path / "q")
+    for batch in ([b"a", b"b"], [b"c"]):
+        q = DirQueue(out, partition_id=0)
+        q.publish_many(batch)
+        q.close()
+    assert DirQueue.read_all(out) == [b"a", b"b", b"c"]
+
+
+def test_dir_queue_empty_publish_writes_no_lines(tmp_path):
+    out = str(tmp_path / "q")
+    q = DirQueue(out, partition_id=0, batch_id=4)
+    q.publish_many([])
+    q.close()
+    assert os.listdir(out) == ["batch-00000004-partition-00000.jsonl"]
+    assert DirQueue.read_all(out) == []
+
+
+def test_dir_queue_read_all_orders_by_batch_then_partition(tmp_path):
+    out = str(tmp_path / "q")
+    for batch_id, pid, msg in [(1, 2, b"1.2"), (0, 1, b"0.1"), (1, 0, b"1.0"), (0, 0, b"0.0")]:
+        q = DirQueue(out, partition_id=pid, batch_id=batch_id)
+        q.publish_many([msg])
+        q.close()
+    assert DirQueue.read_all(out) == [b"0.0", b"0.1", b"1.0", b"1.2"]
+
+
+def test_make_queue_dir_and_unknown_kind(tmp_path):
+    from crdb_changefeed_publisher_spark.streaming.queues import make_queue
+
+    q = make_queue("dir", path=str(tmp_path / "q"), partition_id=2, batch_id=9)
+    assert isinstance(q, DirQueue)
+    q.publish_many([b"m"])
+    q.close()
+    assert os.listdir(str(tmp_path / "q")) == ["batch-00000009-partition-00002.jsonl"]
+    with pytest.raises(ValueError, match="unknown queue type"):
+        make_queue("kafka")
+
+
+def test_counter_exposition_is_prometheus_text():
+    from crdb_changefeed_publisher_spark.streaming.metrics import Counter
+
+    c = Counter("cdc_rows", "Rows seen.")
+    c.inc()
+    c.inc(4)
+    assert c.exposition() == (
+        "# HELP cdc_rows Rows seen.\n# TYPE cdc_rows counter\ncdc_rows 5\n"
+    )
+
+
+def test_counter_inc_is_thread_safe():
+    import threading
+
+    from crdb_changefeed_publisher_spark.streaming.metrics import Counter
+
+    c = Counter("n", "n")
+    threads = [
+        threading.Thread(target=lambda: [c.inc() for _ in range(2000)]) for _ in range(4)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert c.value == 8000
+
+
+def test_metrics_endpoint_serves_only_metrics_path(monkeypatch):
+    """PROMETHEUS_ADDR picks the bind address; /metrics exposes exactly the
+    counters passed in, and any other path is a 404."""
+    import urllib.error
+    import urllib.request
+
+    from crdb_changefeed_publisher_spark.streaming.metrics import Counter
+
+    monkeypatch.setenv("PROMETHEUS_ADDR", "127.0.0.1:0")  # any free port
+    c = Counter("published_total", "Published.")
+    c.inc(2)
+    server = serve_metrics(counters=[c])
+    try:
+        host, port = server.server_address[:2]
+        assert host == "127.0.0.1"
+        body = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics").read().decode()
+        assert body == c.exposition()
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(f"http://127.0.0.1:{port}/")
+        assert err.value.code == 404
+    finally:
+        server.shutdown()
+        server.server_close()

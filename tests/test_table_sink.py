@@ -442,122 +442,13 @@ def test_read_since_tailing_maintains_exact_matview(spark, sf_dir, tmp_path):
         assert abs(view[k][1] - full[k][1]) < 1e-6
 
 
-def test_stats_pruned_read_equals_full_read(spark, sf_dir, tmp_path):
-    """Data skipping: manifests carry footer min/max per file; a
-    predicate read opens only files whose bounds can match, and the
-    result is value-identical to filter-after-full-scan."""
-    root = str(tmp_path / "tbl")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value", "event_type"
-    )
-    # three batches with DISJOINT event_id ranges -> per-file bounds
-    # separate them even though every file has the same schema
-    ids = sorted(r.event_id for r in ev.select("event_id").collect())
-    cuts = [ids[len(ids) // 3], ids[2 * len(ids) // 3]]
-    table_sink.write_batch(
-        ev.filter(F.col("event_id") < cuts[0]).repartition(2), 0, root)
-    table_sink.write_batch(
-        ev.filter((F.col("event_id") >= cuts[0]) & (F.col("event_id") < cuts[1]))
-        .repartition(2), 1, root)
-    table_sink.write_batch(
-        ev.filter(F.col("event_id") >= cuts[1]).repartition(2), 2, root)
-
-    where = [("event_id", ">=", int(cuts[1]))]
-    plan = table_sink.prune_plan(root, where)
-    assert plan["total"] == 6 and plan["skipped"] == 4  # two batches skipped
-
-    got = sorted(
-        r.event_id
-        for r in table_sink.read_committed(spark, root, where=where).collect()
-    )
-    want = sorted(
-        r.event_id
-        for r in table_sink.read_committed(spark, root)
-        .filter(F.col("event_id") >= int(cuts[1])).collect()
-    )
-    assert got == want and len(got) > 0
-
-    # string bounds prune too (event_type is low-cardinality: no file
-    # lacks it -> nothing skipped, but equality must stay value-exact)
-    w2 = [("event_type", "=", "purchase")]
-    got2 = table_sink.read_committed(spark, root, where=w2).count()
-    want2 = table_sink.read_committed(spark, root).filter(
-        F.col("event_type") == "purchase").count()
-    assert got2 == want2 > 0
-
-
-def test_stats_prune_missing_column_and_all_null(spark, tmp_path):
-    """Schema drift strengthens skipping: files written BEFORE a column
-    existed are pruned for any predicate on it; an all-null file is
-    provably unmatchable by a null-rejecting predicate."""
-    root = str(tmp_path / "tbl")
-    old = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string")
-    drifted = spark.createDataFrame(
-        [(3, "c", 10.0), (4, "d", 20.0)], "id int, s string, score double")
-    allnull = spark.createDataFrame(
-        [(5, "e", None), (6, "f", None)], "id int, s string, score double")
-    table_sink.write_batch(old.coalesce(1), 0, root)
-    table_sink.write_batch(drifted.coalesce(1), 1, root)
-    table_sink.write_batch(allnull.coalesce(1), 2, root)
-
-    plan = table_sink.prune_plan(root, [("score", ">=", 5.0)])
-    assert plan["total"] == 3 and plan["skipped"] == 2  # pre-drift + all-null
-    df = table_sink.read_committed(spark, root, where=[("score", ">=", 5.0)])
-    assert sorted(r.id for r in df.collect()) == [3, 4]
-
-    # predicate on a column NO file has: every file pruned, None returned
-    assert table_sink.read_committed(spark, root, where=[("nope", "=", 1)]) is None
-
-
-def test_stats_survive_compaction(spark, sf_dir, tmp_path):
-    """Compaction recomputes bounds for rewritten bins and carries
-    singleton entries forward verbatim — pruning keeps working (and the
-    result stays exact) across the snapshot boundary."""
-    root = str(tmp_path / "tbl")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    ids = sorted(r.event_id for r in ev.select("event_id").collect())
-    cut = ids[len(ids) // 2]
-    lo, hi = ev.filter(F.col("event_id") < cut), ev.filter(F.col("event_id") >= cut)
-    table_sink.write_batch(lo.repartition(2), 0, root)
-    # compact the lo half into ONE rewritten file (its stats are the
-    # executor-recomputed footer bounds, not carried manifest entries)
-    res = table_sink.compact_table(spark, root, target_bytes=1 << 30)
-    assert res["files_rewritten"] == 2 and res["files_now"] == 1
-    # then append the hi half: a batch manifest ABOVE the snapshot
-    table_sink.write_batch(hi.repartition(1), 1, root)
-
-    with open(os.path.join(root, "_commits", "snapshot-00000000.json")) as fh:
-        snap = json.load(fh)
-    assert all("stats" in f and "cols" in f for f in snap["files"])
-
-    # both directions prune exactly one side, values stay exact
-    for where, want_df in (
-        ([("event_id", "<", int(cut))], lo),
-        ([("event_id", ">=", int(cut))], hi),
-    ):
-        plan = table_sink.prune_plan(root, where)
-        assert plan["skipped"] == 1 and plan["total"] == 2
-        got = sorted(
-            r.event_id
-            for r in table_sink.read_committed(spark, root, where=where).collect()
-        )
-        assert got == sorted(r.event_id for r in want_df.collect())
-
-    # a re-compaction that rewrites nothing (target below every file)
-    # carries ALL entries forward verbatim — stats survive unchanged
-    res2 = table_sink.compact_table(spark, root, target_bytes=1)
-    assert res2["files_rewritten"] == 0
-    plan2 = table_sink.prune_plan(root, [("event_id", "<", int(cut))])
-    assert plan2["skipped"] == 1 and plan2["total"] == 2
-
-
 def test_stats_nan_never_prunes_upper_bound(spark, tmp_path):
     """Spark orders NaN above every float, but parquet footers exclude
-    NaN from min/max — a lying upper bound. The sink writes NaN-holding
-    float columns WITHOUT footer stats (so even Spark's own row-group
-    pushdown cannot mis-prune them), and the manifest layer refuses
-    max-based pruning for float kinds; the NaN row must survive a
-    `> huge` read through every layer."""
+    NaN from min/max — a lying upper bound that Spark's own row-group
+    pushdown would then use to drop NaN rows. The sink writes NaN-holding
+    float columns WITHOUT footer stats, both in write_batch's part writer
+    and in compaction's bin rewrite; the NaN row must survive a
+    `> huge` read before and after compaction."""
     import math
     root = str(tmp_path / "tbl")
     nan = spark.createDataFrame(
@@ -566,415 +457,19 @@ def test_stats_nan_never_prunes_upper_bound(spark, tmp_path):
     table_sink.write_batch(nan.coalesce(1), 0, root)
     table_sink.write_batch(clean.coalesce(1), 1, root)
 
-    # NaN > 100.0 is TRUE under Spark ordering: the NaN row must appear,
-    # and the pruned read must equal the unpruned + filter path
-    plan = table_sink.prune_plan(root, [("x", ">", 100.0)])
-    assert plan["skipped"] == 0
-    rows = table_sink.read_committed(
-        spark, root, where=[("x", ">", 100.0)]).collect()
+    def over_100():
+        return table_sink.read_committed(spark, root).filter(
+            F.col("x") > 100.0).collect()
+
+    # NaN > 100.0 is TRUE under Spark ordering: the NaN row must appear
+    rows = over_100()
     assert [r.id for r in rows] == [1] and math.isnan(rows[0].x)
-    full = table_sink.read_committed(spark, root).filter(
-        F.col("x") > 100.0).collect()
-    assert sorted(r.id for r in full) == sorted(r.id for r in rows)
 
-    # lower-bound pruning on the clean file is still allowed and exact
-    plan2 = table_sink.prune_plan(root, [("x", "<", 1.0)])
-    assert plan2["skipped"] == 1  # clean file's min=5.0 proves empty
-    df2 = table_sink.read_committed(spark, root, where=[("x", "<", 1.0)])
-    assert df2 is None or df2.count() == 0
-
-
-def test_optimize_zorder_improves_data_skipping_on_both_dims(spark, tmp_path):
-    """OPTIMIZE ZORDER BY composed with manifest data skipping: after the
-    clustered rewrite, predicates on EITHER dimension prune files; a
-    linear sort by x clusters only x (y-predicates open everything).
-    Rows are preserved exactly through the rewrite."""
-    from pyspark.sql import functions as F
-
-    n, dim = 1 << 12, 64  # x, y uniform in [0, 64)
-    base = spark.range(n).select(
-        F.col("id").alias("rid"),
-        (F.col("id") % dim).alias("x"),
-        ((F.col("id") * 2654435761) % dim).alias("y"),
-    )
-
-    def build(root, mode):
-        if mode == "zorder":
-            table_sink.write_batch(base.repartition(8), 0, root)
-            res = table_sink.optimize_zorder(
-                spark, root, "x", "y", bits=6, num_files=8)
-            assert res["n_rows"] == n and res["files_now"] == 8
-        else:  # linear sort by x, same file count as the z table
-            table_sink.write_batch(
-                base.repartitionByRange(8, "x").sortWithinPartitions("x"),
-                0, root)
-
-    zroot, lroot = str(tmp_path / "z"), str(tmp_path / "lin")
-    build(zroot, "zorder")
-    build(lroot, "linear")
-
-    # exact preservation through the clustered rewrite
-    got = sorted(r.rid for r in table_sink.read_committed(spark, zroot).collect())
-    assert got == list(range(n))
-
-    quarter = dim // 4
-    for col in ("x", "y"):
-        w = [(col, "<", quarter)]
-        zplan = table_sink.prune_plan(zroot, w)
-        assert zplan["skipped"] > 0, f"z-order must prune on {col}"
-        zread = table_sink.read_committed(spark, zroot, where=w)
-        assert zread.count() == base.filter(F.col(col) < quarter).count()
-    # the linear layout prunes x but NOT y — that asymmetry is the point
-    assert table_sink.prune_plan(lroot, [("x", "<", quarter)])["skipped"] > 0
-    assert table_sink.prune_plan(lroot, [("y", "<", quarter)])["skipped"] == 0
-
-    # maintenance op composes with later appends (ids above covers)
-    extra = spark.range(n, n + 10).select(
-        F.col("id").alias("rid"),
-        F.lit(0).cast("long").alias("x"), F.lit(0).cast("long").alias("y"))
-    table_sink.write_batch(extra, 1, zroot)
-    assert table_sink.read_committed(spark, zroot).count() == n + 10
-
-
-def test_where_pruning_on_time_travel_and_incremental_reads(spark, tmp_path):
-    """The same data-skipping predicate path serves as_of_batch and
-    read_since: a tailing consumer or time traveler with a selective
-    predicate opens only matching delta files."""
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    for b in range(4):  # batch b holds ids [100b, 100b+100)
-        df = spark.range(100 * b, 100 * b + 100).select(F.col("id"))
-        table_sink.write_batch(df.coalesce(1), b, root)
-
-    tt = table_sink.as_of_batch(spark, root, 2, where=[("id", ">=", 250)])
-    assert sorted(r.id for r in tt.collect()) == list(range(250, 300))
-    assert table_sink.as_of_batch(spark, root, 1, where=[("id", ">=", 250)]) is None
-
-    df, hw = table_sink.read_since(spark, root, 0, where=[("id", "<", 150)])
-    assert hw == 3
-    assert sorted(r.id for r in df.collect()) == list(range(100, 150))
-    none_df, _ = table_sink.read_since(spark, root, 1, where=[("id", "<", 150)])
-    assert none_df is None  # batches 2-3 provably out of range
-
-
-def test_manifest_bloom_matches_spark_bloom_build(spark):
-    """The Python manifest bloom must be BIT-IDENTICAL to the Spark/SQL
-    construction (operators/bloom.py) — same portable sha2 hash, same
-    affine positions, same signed packing."""
-    from crdb_changefeed_publisher_spark.operators import bloom as bl
-    from crdb_changefeed_publisher_spark.streaming import table_stats
-
-    vals = [f"key-{i}" for i in range(200)] + [str(i * 37) for i in range(50)]
-    df = spark.createDataFrame([(v,) for v in vals], "k string")
-    want = bl.bloom_build(df, "k", m_bits=1 << 12, k=5)
-    got = table_stats.bloom_words_py(vals, 1 << 12, k=5)
-    assert got == want
-
-
-def test_manifest_bloom_point_lookup_skipping(spark, tmp_path):
-    """Point lookups on an UNCLUSTERED high-cardinality key: min/max
-    bounds overlap across every file, but manifest blooms prune all
-    files that cannot hold the key — and an absent key opens nothing."""
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    # 4 batches of hex-hashed ids: every file's lexicographic [min, max]
-    # spans nearly the whole domain, so bounds never prune
-    for b in range(4):
-        df = spark.range(b * 500, b * 500 + 500).select(
-            F.sha2(F.col("id").cast("string"), 256).substr(1, 16).alias("k"),
-            F.col("id").alias("v"),
-        )
-        table_sink.write_batch(df.coalesce(1), b, root, bloom_cols=["k"])
-
-    probe = spark.range(700, 701).select(
-        F.sha2(F.col("id").cast("string"), 256).substr(1, 16).alias("k")
-    ).collect()[0].k
-    where = [("k", "=", probe)]
-    plan = table_sink.prune_plan(root, where)
-    assert plan["skipped"] >= 3, plan  # bounds alone would skip 0
-    got = table_sink.read_committed(spark, root, where=where).collect()
-    assert len(got) == 1 and got[0].v == 700
-
-    absent = "0" * 16
-    plan2 = table_sink.prune_plan(root, [("k", "=", absent)])
-    # zero false negatives is the guarantee; typically all 4 prune here
-    df2 = table_sink.read_committed(spark, root, where=[("k", "=", absent)])
-    assert df2 is None or df2.count() == 0
-    assert plan2["skipped"] >= 3
-
-    # kind guard: '05'-style cross-kind probes must never bloom-prune
-    iroot = str(tmp_path / "int")
-    idf = spark.createDataFrame([(5, "five")], "c long, s string")
-    table_sink.write_batch(idf.coalesce(1), 0, iroot, bloom_cols=["c"])
-    got = table_sink.read_committed(spark, iroot, where=[("c", "=", "05")])
-    # Spark casts '05' -> 5: the row matches, so pruning must keep it
-    assert got is not None and got.count() == 1
-
-
-def test_manifest_bloom_survives_compaction_and_zorder(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    for b in range(3):
-        df = spark.range(b * 100, b * 100 + 100).select(
-            F.sha2(F.col("id").cast("string"), 256).substr(1, 16).alias("k"),
-            (F.col("id") % 64).alias("x"), (F.col("id") % 7).alias("y"),
-        )
-        table_sink.write_batch(df.coalesce(1), b, root, bloom_cols=["k"])
-    table_sink.optimize_zorder(
-        spark, root, "x", "y", bits=6, num_files=2, bloom_cols=["k"])
-
-    probe = spark.range(150, 151).select(
-        F.sha2(F.col("id").cast("string"), 256).substr(1, 16).alias("k")
-    ).collect()[0].k
-    got = table_sink.read_committed(spark, root, where=[("k", "=", probe)])
-    assert got.count() == 1
-    with open(os.path.join(root, "_commits", "snapshot-00000000.json")) as fh:
-        snap = json.load(fh)
-    assert all("blooms" in f and "k" in f["blooms"] for f in snap["files"])
-
-
-def test_merge_upsert_copy_on_write_targets_only_affected_files(spark, tmp_path):
-    """MERGE INTO: updates + deletes + new keys applied in one atomic
-    snapshot; files the manifest metadata proves unaffected are carried
-    forward VERBATIM (same file names), and the merged state equals the
-    dict-semantics oracle."""
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    # 4 disjoint key-range files -> bounds alone can target the rewrite
-    for b in range(4):
-        df = spark.range(b * 100, b * 100 + 100).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
-        table_sink.write_batch(df.coalesce(1), b, root)
-
-    updates = spark.createDataFrame(
-        [(5, -1, False), (7, -2, False), (150, 0, True), (1000, 42, False)],
-        "k long, v long, is_del boolean",
-    )
-    before = set(os.path.basename(f) for f in table_sink.committed_files(root))
-    res = table_sink.merge_upsert(spark, root, updates, "k", delete_col="is_del")
-    # files for batches 2 (300s) and 3: untouched (keys 5,7 hit batch 0;
-    # 150 hits batch 1; 1000 hits nothing)
-    assert res["files_rewritten"] == 2 and res["files_untouched"] == 2, res
-    after = set(os.path.basename(f) for f in table_sink.committed_files(root))
-    assert len(before & after) == 2  # the two untouched files survive by name
-
-    want = {k: k * 10 for k in range(400)}
-    want[5], want[7] = -1, -2
-    del want[150]
-    want[1000] = 42
-    got = {r.k: r.v for r in table_sink.read_committed(spark, root).collect()}
-    assert got == want
-
-    # the merge snapshot composes with data skipping and later appends
-    assert table_sink.read_committed(
-        spark, root, where=[("k", "=", 1000)]).collect()[0].v == 42
-    table_sink.write_batch(
-        spark.createDataFrame([(2000, 1)], "k long, v long"), 4, root)
-    assert table_sink.read_committed(spark, root).count() == len(want) + 1
-
-    # duplicate keys in updates must be refused (LWW is the caller's job)
-    with pytest.raises(ValueError, match="resolve"):
-        table_sink.merge_upsert(
-            spark, root,
-            spark.createDataFrame([(1, 1), (1, 2)], "k long, v long"), "k")
-
-    # a NULL merge key gets its own error, not the misleading duplicate
-    # message (count_distinct ignores NULLs — r9 ADVICE)
-    with pytest.raises(ValueError, match="NULL 'k' merge key"):
-        table_sink.merge_upsert(
-            spark, root,
-            spark.createDataFrame([(None, 1), (9, 2)], "k long, v long"), "k")
-
-
-def test_merge_upsert_uses_blooms_on_unclustered_keys(spark, tmp_path):
-    """With overlapping bounds everywhere, only manifest blooms keep the
-    rewrite targeted."""
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    for b in range(4):
-        df = spark.range(b * 500, b * 500 + 500).select(
-            F.sha2(F.col("id").cast("string"), 256).substr(1, 16).alias("k"),
-            F.col("id").alias("v"))
-        table_sink.write_batch(df.coalesce(1), b, root, bloom_cols=["k"])
-
-    probe = spark.range(700, 701).select(
-        F.sha2(F.col("id").cast("string"), 256).substr(1, 16).alias("k")
-    ).collect()[0].k
-    updates = spark.createDataFrame([(probe, -700)], "k string, v long")
-    res = table_sink.merge_upsert(
-        spark, root, updates, "k", bloom_cols=["k"])
-    assert res["files_untouched"] >= 3, res
-    got = {r.k: r.v for r in table_sink.read_committed(spark, root).collect()}
-    assert len(got) == 2000 and got[probe] == -700
-
-
-def test_streaming_cdc_merge_apply_kill_resume(spark, tmp_path):
-    """The full CDC APPLY materialization: an upsert/delete stream is
-    resolved last-writer-wins per micro-batch, then merge_upsert'd into
-    a physical table — through an injected kill AFTER a merge committed
-    but before Spark's offset commit. merge_upsert is idempotent by
-    VALUE (re-applying the same resolved delta reaches the same state),
-    so the replayed batch converges and the final table equals the
-    dict-semantics apply of the whole feed."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    root = str(tmp_path / "tbl")
-
-    # feed: versions 0..999 over 50 keys; key k deleted when the last
-    # write for it has version % 7 == 0
-    n, keys = 1000, 50
-    feed = spark.range(n).select(
-        F.col("id").alias("ver"),
-        (F.col("id") % keys).alias("k"),
-        (F.col("id") * 3).alias("v"),
-        ((F.col("id") % 7) == 0).alias("is_del"),
-    )
-    feed.orderBy("ver").coalesce(1).write.parquet(src + "/p0")
-    # four more waves as separate files -> multiple micro-batches
-    for w in range(1, 5):
-        spark.range(n * w, n * (w + 1)).select(
-            F.col("id").alias("ver"),
-            (F.col("id") % keys).alias("k"),
-            (F.col("id") * 3).alias("v"),
-            ((F.col("id") % 7) == 0).alias("is_del"),
-        ).coalesce(1).write.parquet(src + f"/p{w}")
-
-    killed = {"done": False}
-
-    def apply(batch_df, batch_id):
-        # LWW within the batch on the feed's version column
-        w = Window.partitionBy("k").orderBy(F.col("ver").desc())
-        resolved = (
-            batch_df.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") == 1)
-            .drop("_r", "ver")
-        )
-        table_sink.merge_upsert(spark, root, resolved, "k",
-                                delete_col="is_del")
-        if batch_id == 1 and not killed["done"]:
-            killed["done"] = True
-            raise RuntimeError("injected kill after merge commit")
-
-    def start():
-        sdf = (
-            spark.readStream.schema("ver long, k long, v long, is_del boolean")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/p*")
-        )
-        return (
-            sdf.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = start()
-    with pytest.raises(Exception):
-        q.awaitTermination()
-    q2 = start()
-    assert q2.awaitTermination(600)
-
-    # dict-semantics oracle over the full feed in version order
-    want = {}
-    for ver in range(5 * n):
-        k = ver % keys
-        if ver % 7 == 0:
-            want.pop(k, None)
-        else:
-            want[k] = ver * 3
-    got = {r.k: r.v for r in table_sink.read_committed(spark, root).collect()}
-    assert got == want
-
-
-def test_history_op_kinds_and_vacuum_after_merge(spark, tmp_path):
-    """The commit log distinguishes compact / zorder / merge snapshots,
-    and vacuum reclaims the pre-merge originals of rewritten files while
-    untouched files stay."""
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    for b in range(2):  # disjoint ranges: merge will touch only file 0
-        df = spark.range(b * 100, b * 100 + 100).select(
-            F.col("id").alias("k"), F.col("id").alias("v"))
-        table_sink.write_batch(df.coalesce(1), b, root)
-    table_sink.merge_upsert(
-        spark, root,
-        spark.createDataFrame([(5, -5)], "k long, v long"), "k")
-    table_sink.optimize_zorder(
-        spark, root, "k", "v", bits=8, num_files=1)
-
-    kinds = [h["kind"] for h in table_sink.table_history(root)]
-    assert kinds.count("merge") == 1 and kinds.count("zorder") == 1
-
-    gone = table_sink.vacuum(root, assume_quiesced=True, retention_secs=0.0)
-    # batch 0's original was rewritten by the merge; batch 1's file was
-    # carried into the merge snapshot by name, then superseded by zorder
-    assert any(n.startswith("batch-00000000") for n in gone)
-    got = {r.k: r.v for r in table_sink.read_committed(spark, root).collect()}
-    want = {k: k for k in range(200)}
-    want[5] = -5
-    assert got == want
-
-
-def test_describe_table_from_manifests_only(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    table_sink.write_batch(
-        spark.range(100).select(F.col("id").alias("k")), 0, root)
-    table_sink.write_batch(
-        spark.range(100, 200).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("v")), 1, root)
-    d = table_sink.describe_table(root)
-    assert d["n_rows"] == 200 and d["high_water_batch"] == 1
-    assert d["columns"]["k"]["min"] == 0 and d["columns"]["k"]["max"] == 199
-    # v exists only in batch 1: bounds fold over files containing it, and
-    # batch 0's 100 rows count as all-null for it (the schema-drift read)
-    assert d["columns"]["v"]["min"] == 200 and d["columns"]["v"]["max"] == 398
-    assert d["columns"]["v"]["nulls"] == 100
-    assert d["columns"]["v"]["n_files_with"] < d["n_files"]
-
-
-def test_write_time_check_constraints_refuse_atomically(spark, tmp_path):
-    """Delta-style CHECK constraints at the commit boundary: a violating
-    batch raises, publishes NO manifest, and leaves the committed table
-    untouched (partial part files are vacuumable orphans); the corrected
-    batch commits under the same id."""
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "tbl")
-    cons = [("v", "not_null"), ("v", "range", 0, 100),
-            ("tag", "isin", ["a", "b"])]
-    ok = spark.createDataFrame([(1, 5, "a"), (2, 100, "b")],
-                               "k long, v long, tag string")
-    table_sink.write_batch(ok, 0, root, constraints=cons)
-
-    bad_range = spark.createDataFrame([(3, 101, "a")], "k long, v long, tag string")
-    bad_null = spark.createDataFrame([(3, None, "a")], "k long, v long, tag string")
-    bad_isin = spark.createDataFrame([(3, 5, "z")], "k long, v long, tag string")
-    for bad in (bad_range, bad_null, bad_isin):
-        with pytest.raises(Exception):
-            table_sink.write_batch(bad.repartition(2), 1, root,
-                                   constraints=cons)
-        assert table_sink.read_committed(spark, root).count() == 2
-
-    # nulls satisfy range/isin (SQL CHECK semantics) when not_null is off
-    nullok = spark.createDataFrame([(3, None, None)], "k long, v long, tag string")
-    table_sink.write_batch(nullok, 1, root,
-                           constraints=[("v", "range", 0, 100),
-                                        ("tag", "isin", ["a", "b"])])
-    assert table_sink.read_committed(spark, root).count() == 3
-    # the refused attempts' orphans are reclaimable
-    table_sink.vacuum(root, assume_quiesced=True, retention_secs=0.0)
-    assert table_sink.read_committed(spark, root).count() == 3
+    # compaction rewrites both files as one: the NaN row still survives
+    res = table_sink.compact_table(spark, root, target_bytes=1 << 30)
+    assert res["files_rewritten"] == 2 and res["files_now"] == 1
+    rows = over_100()
+    assert [r.id for r in rows] == [1] and math.isnan(rows[0].x)
 
 
 # --- table_changes: manifest-pruned row-level diff ---------------------------
@@ -1000,40 +495,6 @@ def test_table_changes_appends_and_pruning(spark, sf_dir, tmp_path):
     assert none_diff is None and s0["files_scanned"] == 0
 
 
-def test_table_changes_sees_deletes_and_scans_only_touched_files(
-    spark, sf_dir, tmp_path
-):
-    """A DV point delete surfaces exactly the deleted rows as 'delete'
-    rows, scanning only the file pair whose DV state changed."""
-    root = str(tmp_path / "tbl")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    # two well-separated files so stats prune cleanly; a first compaction
-    # pins generation 0 (snapshots are never pruned, so generation-axis
-    # history starts at the first snapshot — the retention contract)
-    lo = ev.filter(F.col("event_id") < 50)
-    hi = ev.filter((F.col("event_id") >= 50) & (F.col("event_id") < 100))
-    assert hi.count() > 0  # ranges exist at every fixture SF
-    table_sink.write_batch(lo.coalesce(1), 0, root)
-    table_sink.write_batch(hi.coalesce(1), 1, root)
-    table_sink.compact_table(spark, root, target_bytes=1)  # singleton bins
-    res = table_sink.delete_where(spark, root, [("event_id", "<", 10)])
-    assert res["n_deleted"] > 0 and res["files_with_deletes"] == 1
-    # maintenance keeps the batch high-water; the two sides of the delete
-    # are addressed on the GENERATION axis
-    diff, stats = table_sink.table_changes(
-        spark, root,
-        (res["covers"], res["generation"] - 1),
-        (res["covers"], res["generation"]),
-    )
-    got = sorted((r.event_id, r._change_type) for r in diff.collect())
-    assert all(t == "delete" and eid < 10 for eid, t in got)
-    assert len(got) == res["n_deleted"]
-    # only the DV-touched file scanned — on BOTH sides of the diff (old
-    # DV state vs new), the untouched file carries
-    assert stats["files_scanned"] == 2
-    assert stats["files_carried"] == 1
-
-
 def test_table_changes_pre_snapshot_history_raises(spark, sf_dir, tmp_path):
     """Generation-axis states BEFORE the first snapshot are gone once the
     snapshot prunes their batch manifests: table_changes refuses rather
@@ -1050,16 +511,14 @@ def test_table_changes_pre_snapshot_history_raises(spark, sf_dir, tmp_path):
 
 
 def test_table_changes_layout_rewrite_is_row_silent(spark, sf_dir, tmp_path):
-    """A layout maintenance pass (OPTIMIZE ZORDER after the first
-    compaction) rewrites every byte but no row: all files scan (names
-    differ) and the multiset diff is EMPTY."""
+    """A layout rewrite (a second compaction at a larger target after a
+    first that kept every file) rewrites every byte but no row: all
+    files scan (names differ) and the multiset diff is EMPTY."""
     root = str(tmp_path / "tbl")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     table_sink.write_batch(ev.limit(80).repartition(4), 0, root)
-    table_sink.compact_table(spark, root, target_bytes=1 << 30)
-    summary = table_sink.optimize_zorder(
-        spark, root, "event_id", "user_id", num_files=2
-    )
+    table_sink.compact_table(spark, root, target_bytes=1)  # singleton bins
+    summary = table_sink.compact_table(spark, root, target_bytes=1 << 30)
     diff, stats = table_sink.table_changes(
         spark, root,
         (summary["covers"], summary["generation"] - 1),
@@ -1069,34 +528,45 @@ def test_table_changes_layout_rewrite_is_row_silent(spark, sf_dir, tmp_path):
     assert diff is not None and diff.count() == 0
 
 
+def test_table_changes_absent_root_raises(spark, tmp_path):
+    """Diffing against a mistyped/absent table root is an error, not an
+    all-inserts diff (r8 ADVICE): _entries_as_of's None (no commit log)
+    must not be conflated with a legitimately empty state."""
+    import pytest
+
+    with pytest.raises(ValueError, match="no commit log"):
+        table_sink.table_changes(
+            spark, str(tmp_path / "nope"), 0, 1)
+
+
 # --- concurrent maintainers: optimistic commit (CAS on generation) -----------
 
 
 def test_racing_maintainers_cas_no_row_lost_or_duplicated(
     spark, tmp_path, monkeypatch
 ):
-    """Two maintainers race from the same committed generation — a
-    compaction and a merge (r8 verdict #4). The merge wins the commit;
-    the compaction's publish must REFUSE (CommitConflictError), leave
-    the winner's result untouched byte-for-byte, and succeed when
-    recomputed on top of it (with_commit_retries). No committed row may
-    be lost or duplicated at any point, and the loser's orphaned output
-    files are reclaimable, like any crashed attempt's."""
+    """Two maintainers race from the same committed generation — two
+    compactions with different targets. The pair-packing one wins the
+    commit; the single-file one's publish must REFUSE
+    (CommitConflictError), leave the winner's result untouched, and
+    succeed when recomputed on top of it (with_commit_retries). No
+    committed row may be lost or duplicated at any point, and the
+    loser's orphaned output files are reclaimable, like any crashed
+    attempt's."""
     root = str(tmp_path / "tbl")
-    for b in range(3):
+    for b in range(4):
         df = spark.range(b * 100, (b + 1) * 100).select(
             F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
         table_sink.write_batch(df.coalesce(1), b, root)
+    want = {k: k * 3 for k in range(400)}
+    # room for two of the four batch files per bin, never three
+    pair_target = 2 * max(
+        os.path.getsize(p) for p in table_sink.committed_files(root))
 
-    updates = spark.createDataFrame(
-        [(50, 999), (1000, 1000)], "k long, v long")
-    want = {k: k * 3 for k in range(300)}
-    want[50] = 999
-    want[1000] = 1000
-
-    # deterministic interleave: when the compaction reads the committed
-    # state, the merge runs to completion FIRST — the compaction then
-    # computes against a stale generation and must lose the commit race
+    # deterministic interleave: when the big compaction reads the
+    # committed state, the pair compaction runs to completion FIRST — the
+    # big one then computes against a stale generation and must lose the
+    # commit race
     orig_state = table_sink._committed_state
     fired = {"done": False}
 
@@ -1104,21 +574,24 @@ def test_racing_maintainers_cas_no_row_lost_or_duplicated(
         st = orig_state(r)
         if not fired["done"]:
             fired["done"] = True
-            table_sink.merge_upsert(spark, root, updates, "k")
+            res = table_sink.compact_table(spark, root, target_bytes=pair_target)
+            assert res["files_rewritten"] == 4 and res["files_now"] == 2
         return st
 
     monkeypatch.setattr(table_sink, "_committed_state", stale_read)
     with pytest.raises(table_sink.CommitConflictError, match="concurrent"):
         table_sink.compact_table(spark, root, target_bytes=1 << 30)
 
-    # the winner's state is intact: exactly the merged rows, once each
+    # the winner's state is intact: exactly the committed rows, once each
+    assert len(table_sink.committed_files(root)) == 2
     got = {r.k: r.v for r in table_sink.read_committed(spark, root).collect()}
     assert got == want
 
     # retry recomputes against the winner's generation and lands
     res = table_sink.with_commit_retries(
         lambda: table_sink.compact_table(spark, root, target_bytes=1 << 30))
-    assert res["generation"] == 1  # merge took 0, retried compact takes 1
+    assert res["generation"] == 1  # pairs took 0, retried compact takes 1
+    assert res["files_rewritten"] == 2 and res["files_now"] == 1
     got = {r.k: r.v for r in table_sink.read_committed(spark, root).collect()}
     assert got == want
 
@@ -1307,8 +780,8 @@ def test_same_process_racing_publishes_use_distinct_tmps(tmp_path):
     published bytes are intact. Pre-fix, _atomic_create_json keyed its
     durable temp by PID alone — threads SHARE a pid, so a loser could
     truncate the winner's bytes between write and link, and the loser's
-    cleanup crashed on the already-moved temp (found by
-    tools/table_race_soak.py at 1M rows)."""
+    cleanup crashed on the already-moved temp (found by a 1M-row
+    concurrency soak)."""
     import threading
 
     path = str(tmp_path / "snapshot-00000001.json")
@@ -1336,3 +809,62 @@ def test_same_process_racing_publishes_use_distinct_tmps(tmp_path):
     with open(path) as fh:
         assert json.load(fh)["who"] == wins[0][1]  # intact winner bytes
     assert not [n for n in os.listdir(tmp_path) if ".tmp-" in n]  # no litter
+
+
+@pytest.mark.parametrize(
+    "columns, expected",
+    [
+        ({"id": [1, 2], "s": ["a", None]}, True),
+        ({"id": [1, 2], "x": [1.5, None]}, True),
+        ({"id": [1, 2], "x": [float("nan"), 3.0], "y": [1.0, 2.0]}, ["id", "y"]),
+        ({"x": [float("nan"), 3.0], "y": [1.0, float("nan")], "s": ["a", "b"]}, ["s"]),
+    ],
+    ids=["no_floats", "float_without_nan", "one_nan_column", "every_float_has_nan"],
+)
+def test_nan_safe_write_statistics_omits_only_nan_float_columns(columns, expected):
+    import pyarrow as pa
+
+    assert table_sink.nan_safe_write_statistics(pa.table(columns)) == expected
+
+
+def test_nan_safe_write_statistics_covers_float32():
+    import pyarrow as pa
+
+    t = pa.table({"k": pa.array([1, 2]), "f": pa.array([float("nan"), 1.0], pa.float32())})
+    assert table_sink.nan_safe_write_statistics(t) == ["k"]
+
+
+def test_with_commit_retries_retries_conflicts_only():
+    """A lost commit race reruns the op up to `attempts` times and then
+    re-raises; any other error fails the op on its first try."""
+    calls = []
+
+    def flaky():
+        calls.append(1)
+        if len(calls) < 3:
+            raise table_sink.CommitConflictError("lost the race")
+        return "won"
+
+    assert table_sink.with_commit_retries(flaky) == "won" and len(calls) == 3
+
+    calls.clear()
+    with pytest.raises(table_sink.CommitConflictError):
+        table_sink.with_commit_retries(flaky, attempts=2)
+    assert len(calls) == 2
+
+    def broken():
+        calls.append(1)
+        raise OSError("disk full")
+
+    calls.clear()
+    with pytest.raises(OSError):
+        table_sink.with_commit_retries(broken)
+    assert len(calls) == 1
+
+
+def test_absent_root_has_no_committed_state(spark, tmp_path):
+    root = str(tmp_path / "never_written")
+    assert table_sink.committed_files(root) == []
+    assert table_sink.table_history(root) == []
+    assert table_sink.read_committed(spark, root) is None
+    assert table_sink.vacuum(root, retention_secs=0.0) == []

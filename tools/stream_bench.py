@@ -13,7 +13,9 @@ Prints ONE JSON line: {"metric": "cdc_stream_rows_per_sec", ...}. Beside
 the rows/s it carries the micro-batch phases: the median over the epochs
 that read rows of each phase in the query's progress reports
 (``phase_ms_median``), the number of those epochs, and the Spark jobs the
-query ran per epoch.
+query ran per epoch. ``--batch-limit`` bounds every epoch in both modes:
+it is the simple reader's ``batch_limit`` and the partitioned reader's
+``epoch_rows``.
 
 Usage: python tools/stream_bench.py [--rows 50000] [--batch-limit 10000]
 """
@@ -122,8 +124,12 @@ def main() -> None:
         if not args.partitioned:
             # batch_limit selects the simple reader
             reader = reader.option("batch_limit", str(args.batch_limit))
-        elif args.read_partitions > 0:
-            reader = reader.option("read_partitions", str(args.read_partitions))
+        else:
+            # the same row bound cuts the partitioned reader's epochs, so
+            # both modes take their medians over several epochs
+            reader = reader.option("epoch_rows", str(args.batch_limit))
+            if args.read_partitions > 0:
+                reader = reader.option("read_partitions", str(args.read_partitions))
         stream = reader.load()
         out_dir = os.path.join(work, "out")
         t0 = time.time()

@@ -318,34 +318,39 @@ class ChangefeedSimpleStreamReader(SimpleDataSourceStreamReader):
 
 @dataclass
 class FeedRangePartition(InputPartition):
-    """A contiguous line range of the recorded feed, with the byte offset of
-    its first line so the executor seeks straight there. Picklable (ships
+    """A contiguous line range of the recorded feed, with the byte offsets
+    of its first line and of the line after its last, so the executor seeks
+    straight there and the planner knows its size. Picklable (ships
     driver -> executor)."""
 
     path: str
     start_line: int
     end_line: int
     start_byte: int
+    end_byte: int
 
 
-def reads_feed_ranges(df: DataFrame) -> bool:
-    """Whether `df` scans `FeedRangePartition`s, the partitioned reader's
-    line ranges, whose rows no `batch_limit` bounds. Follows the planned
-    RDD's first parents down to the scan and unpickles the Python input
-    partitions it finds there; plans only, starts no job."""
+def planned_feed_bytes(df: DataFrame) -> int | None:
+    """The summed byte span of the `FeedRangePartition`s `df` scans (the
+    partitioned reader's epoch, planned before any row is read), or None
+    when its scan is not feed ranges. Follows the planned RDD's first
+    parents down to the scan and unpickles the Python input partitions it
+    finds there; plans only, starts no job."""
     rdd = df._jdf.queryExecution().toRdd()
     while rdd.dependencies().size():
         rdd = rdd.dependencies().apply(0).rdd()
+    spans = []
     for part in rdd.partitions():
         if part.getClass().getSimpleName() != "DataSourceRDDPartition":
-            return False
+            return None
         inputs = part.inputPartitions()
         for ip in (inputs.apply(i) for i in range(inputs.size())):
-            if ip.getClass().getSimpleName().startswith("Python") and isinstance(
-                pickle.loads(bytes(ip.pickedPartition())), FeedRangePartition
-            ):
-                return True
-    return False
+            p = ip.getClass().getSimpleName().startswith("Python") and pickle.loads(
+                bytes(ip.pickedPartition()))
+            if not isinstance(p, FeedRangePartition):
+                return None
+            spans.append(p.end_byte - p.start_byte)
+    return sum(spans) if spans else None
 
 
 class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
@@ -454,7 +459,7 @@ class ChangefeedPartitionedStreamReader(DataSourceStreamReader):
             cuts += [idx.first_line_at(f, sb + (eb - sb) * i // n) for i in range(1, n)]
             cuts.append((e, eb))
         return [
-            FeedRangePartition(self.path, lo[0], hi[0], lo[1])
+            FeedRangePartition(self.path, lo[0], hi[0], lo[1], hi[1])
             for lo, hi in zip(cuts, cuts[1:])
         ]
 

@@ -7,12 +7,14 @@ Reference lifecycle parity (SURVEY.md §3.1):
 - per-row demux Row|Cursor              -> one select: a change row gets an
   (main.rs:211-235, read once)             envelope, a cursor row its
                                            resolved mark; one read per epoch
-- sequential confirmed publish          -> a simple-reader (live) epoch to
-  (main.rs:211-227)                        the dir queue: the driver
-                                           publishes it serially in feed
-                                           order as partition 0; otherwise
-                                           each task publishes its key
-                                           partition in order. Both skip
+- sequential confirmed publish          -> a dir-queue epoch that is one
+  (main.rs:211-227)                        simple-reader partition, or feed
+                                           ranges whose planned bytes fit
+                                           half the driver's result cap:
+                                           the driver publishes it serially
+                                           in feed order as partition 0;
+                                           otherwise each task publishes its
+                                           key partition in order. Both skip
                                            cursor rows, return their marks
 - cursor UPSERT at resolved marks       -> Spark commit log (authoritative)
   (cursors.rs:45-57)                       + optional CursorStore mirror of
@@ -23,9 +25,10 @@ SURVEY.md): publishes happen during the batch; offsets commit after. A crash
 between them replays the batch => duplicates, never loss.
 
 Ordering: a driver-published epoch keeps the reference's global feed order
-on one connection. A partitioned epoch keeps per-key order by repartitioning
-on `key` and publishing each partition sequentially, the guarantee consumers
-can actually use, and the one that scales.
+on one connection: `toArrow()` returns batches in partition order, and feed
+ranges are planned in feed order. A task-published epoch keeps per-key order
+by repartitioning on `key` and publishing each partition sequentially, the
+guarantee consumers can actually use, and the one that scales.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crdb_changefeed_publisher_spark.sources.crdb_changefeed import reads_feed_ranges
+from crdb_changefeed_publisher_spark.sources.crdb_changefeed import planned_feed_bytes
 from crdb_changefeed_publisher_spark.streaming.cursors import CursorStore
 from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
 from crdb_changefeed_publisher_spark.streaming.queues import MessageQueue, make_queue
@@ -98,20 +101,24 @@ def publish_batch(
     table_col: str | None = None,
     batch_id: int | None = None,
 ) -> list[str]:
-    """Publish one micro-batch with per-key ordering, placed by the input
-    (so a replayed batch places the same way):
+    """Publish one micro-batch with per-key ordering, placed by what its
+    plan proves about its size before any job starts:
 
-    - a dir queue fed one partition that is not a partitioned-reader range
-      (every simple-reader epoch, at most `batch_limit` rows): the driver
-      collects it as Arrow in one job, with no exchange or Python worker,
-      and publishes it in feed order as partition 0, like the reference's
-      one connection; a publish error fails the epoch, with no task retry;
-    - otherwise (a partitioned-reader epoch, which no row limit bounds, or
-      AMQP, whose per-message confirms gain from parallel connections):
-      repartition on key, sort each partition by (key, _seq) for a
-      *provable* per-key order (a shuffle keeps arrival order only per
-      upstream partition), and publish it from its task through
-      `mapInArrow`; only counts and marks reach the driver.
+    - a dir-queue epoch that is one partition but not a partitioned-reader
+      range (every simple-reader epoch, at most `batch_limit` rows), or
+      ranges of any width whose planned bytes are at most half of
+      `spark.driver.maxResultSize` (the half covers the columns collected
+      beside the envelope): the driver collects it as Arrow in one job, with
+      no exchange or Python worker, and publishes it in feed order as
+      partition 0, like the reference's one connection; a publish error
+      fails the epoch, with no task retry;
+    - otherwise (larger ranges, ranges under a cap of 0, which bounds
+      nothing, other multi-partition input, or AMQP, whose per-message
+      confirms gain from parallel connections): repartition on key, sort
+      each partition by (key, _seq) for a *provable* per-key order (a
+      shuffle keeps arrival order only per upstream partition), and publish
+      it from its task through `mapInArrow`; only counts and marks reach
+      the driver.
 
     `batch` carries `key`, `_seq` (feed order), `envelope` and `resolved`.
     A row with a non-null envelope is a change and is published; a row with
@@ -129,7 +136,10 @@ def publish_batch(
     stamps (x-batch-id, x-partition-id, x-seq) dedup headers. Feed order on
     the driver and the `_seq` sort in the tasks make the per-partition
     sequence deterministic across replays (Spark re-runs a failed batch
-    under the same batch_id with the same content and partitioning).
+    under the same batch_id with the same content and partitioning). The
+    placement reads the plan and the session's result cap: a replay under
+    a changed cap may place differently, which keeps at-least-once
+    delivery but not this layout.
 
     `table_col` switches on MULTI-TABLE FAN-OUT (a Spark upgrade over the
     reference's one-table/one-queue design, src/cli.yml:6-9): each table's
@@ -156,9 +166,16 @@ def publish_batch(
 
     keys = [table_col, "key"] if table_col else ["key"]
     selected = batch.select(*keys, F.col("envelope").cast("binary"), "_seq", "resolved")
-    # planning only: no job runs, and toArrow reuses the plan
-    one_partition = selected._jdf.queryExecution().toRdd().getNumPartitions() == 1
-    if queue_kind == "dir" and one_partition and not reads_feed_ranges(selected):
+
+    def fits_driver() -> bool:  # planning only: no job runs, and toArrow reuses the plan
+        feed_bytes = planned_feed_bytes(selected)
+        if feed_bytes is None:
+            return selected._jdf.queryExecution().toRdd().getNumPartitions() == 1
+        cap = selected.sparkSession.sparkContext._jsc.sc().conf().getSizeAsBytes(
+            "spark.driver.maxResultSize", "1g")
+        return 0 < cap and 2 * feed_bytes <= cap
+
+    if queue_kind == "dir" and fits_driver():
         n, marks = publish_arrow(selected.toArrow().to_batches(), open_queue, 0, table_col)
     else:
         def publish_partition(batches):

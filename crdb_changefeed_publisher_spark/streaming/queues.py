@@ -65,9 +65,13 @@ class DirQueue:
             self._f.write(b"\n".join(messages) + b"\n")
 
     def close(self) -> None:
-        self._f.flush()
-        os.fsync(self._f.fileno())
-        self._f.close()
+        # a failed flush or fsync (ENOSPC, EIO) still fails the publish, but
+        # does not leak the descriptor into the long-lived driver process
+        try:
+            self._f.flush()
+            os.fsync(self._f.fileno())
+        finally:
+            self._f.close()
 
     @staticmethod
     def read_all(path: str) -> list[bytes]:

@@ -325,6 +325,42 @@ def test_partitioned_range_planner_balances_bytes_under_skew(tmp_path, monkeypat
         assert len(r.index.stride_bytes) == 400 // 4 + 1
 
 
+def test_range_byte_spans_tile_the_epoch(tmp_path, monkeypatch):
+    """The planned byte spans that place an epoch's publish are exact: each
+    range ends at the byte where the next starts and at the offset of its
+    end line, and the spans sum to the bytes between the batch's (clamped)
+    start and its end, for batches across index strides, with and without
+    a GC floor above the batch start."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
+        ChangefeedPartitionedStreamReader,
+    )
+
+    feed = str(tmp_path / "feed.jsonl")
+    with open(feed, "w", encoding="utf-8") as f:
+        for i in range(120):
+            f.write(json.dumps(["t", f"[{i}]", json.dumps({"after": {"v": "x" * (i * 7 % 90)}})])
+                    + "\n")
+    with open(feed, "rb") as f:
+        offs = [0]  # true byte offset of every line start, then EOF
+        while f.readline():
+            offs.append(f.tell())
+
+    monkeypatch.setattr(crdb_changefeed, "INDEX_STRIDE", 4)
+    for floor in (0, 37):
+        for n in (1, 3, 7):
+            r = ChangefeedPartitionedStreamReader(
+                {"replay": feed, "read_partitions": str(n), "gc_floor": str(floor)})
+            r.latestOffset()
+            for s, e in [(0, 120), (3, 5), (10, 90), (36, 41), (50, 51), (119, 120)]:
+                parts = r.partitions({"pos": s}, {"pos": e})
+                lo = min(max(s, floor), e)
+                assert (parts[0].start_byte, parts[-1].end_byte) == (offs[lo], offs[e])
+                for a, b in zip(parts, parts[1:]):
+                    assert a.end_byte == b.start_byte, (floor, n, s, e)
+                assert all(p.end_byte == offs[p.end_line] for p in parts), (floor, n, s, e)
+                assert sum(p.end_byte - p.start_byte for p in parts) == offs[e] - offs[lo]
+
+
 def test_partitioned_is_default_for_recorded_feeds():
     """A file-backed feed uses the executor-parallel reader unless
     batch_limit (a simple-reader knob) is set; live mode is always serial

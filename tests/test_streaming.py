@@ -117,17 +117,27 @@ def test_per_key_publish_order(spark, tmp_path):
         assert versions == sorted(versions), f"key {key} out of order: {versions}"
 
 
-def test_midrun_kill_resume_at_least_once(spark, tmp_path):
+# A driver result cap below twice the bytes of any epoch the crash tests
+# plan (~42 KB each), so their range epochs take the task path
+TASK_CAP = "32k"
+
+
+@pytest.mark.parametrize("mode, cap", [("simple", None), ("partitioned", None),
+                                       ("partitioned", TASK_CAP)],
+                         ids=["simple", "partitioned-driver", "partitioned-tasks"])
+def test_midrun_kill_resume_at_least_once(spark, tmp_path, mode, cap):
     """Crash injected AFTER an epoch publishes but BEFORE Spark commits it
     (the reference's at-least-once window between MQ publish and cursor
     persist, src/main.rs:226-235): on resume, exactly that epoch replays —
     every change delivered at least once, the crashed epoch delivered
-    twice, nothing else duplicated. Both reader modes."""
+    twice, nothing else duplicated. Both reader modes, and the range
+    epochs both from the driver and, under a low result cap, from tasks."""
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
     from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
 
     register(spark)
-    for mode in ("simple", "partitioned"):
+    old_cap = set_result_cap(spark, cap)
+    try:
         feed = str(tmp_path / f"feed_{mode}.jsonl")
         out, ckpt = str(tmp_path / f"out_{mode}"), str(tmp_path / f"ckpt_{mode}")
 
@@ -174,19 +184,33 @@ def test_midrun_kill_resume_at_least_once(spark, tmp_path):
         dup_window = len(DirQueue.read_all(out)) - published_clean
         assert dup_window > 0, f"{mode}: crashed epoch published nothing"
 
-        run_pipeline(reader(), out, ckpt, drain_all=True)
+        resumed = run_pipeline(reader(), out, ckpt, drain_all=True)
+        assert (query_jobs(spark, resumed)[1] > 0) == (cap is not None), mode  # tasks shuffle
         msgs = DirQueue.read_all(out)
         keys = [json.loads(m)["key"] for m in msgs]
         assert len(set(keys)) == n_changes, mode  # everything delivered
         assert len(msgs) - len(set(keys)) == dup_window, mode  # only the crashed epoch twice
+    finally:
+        set_result_cap(spark, old_cap)
 
 
-def test_midrun_kill_resume_idempotent_sink_no_duplicates(spark, tmp_path):
+@pytest.mark.parametrize("cap", [None, TASK_CAP], ids=["driver", "tasks"])
+def test_midrun_kill_resume_idempotent_sink_no_duplicates(spark, tmp_path, cap):
     """Same crash window as above, but with the batch-keyed idempotent
     sink: Spark replays the crashed epoch under the SAME batch id, the
     sink truncates-and-rewrites that batch's files, and the end state has
     ZERO duplicates — the exactly-once-ish recipe verified under an actual
-    mid-run failure."""
+    mid-run failure, with the epochs published from the driver and, under
+    a low result cap, from tasks."""
+    old_cap = set_result_cap(spark, cap)
+    try:
+        resumed = crash_and_resume_idempotent(spark, tmp_path)
+        assert (query_jobs(spark, resumed)[1] > 0) == (cap is not None)  # tasks shuffle
+    finally:
+        set_result_cap(spark, old_cap)
+
+
+def crash_and_resume_idempotent(spark, tmp_path):
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
     from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
 
@@ -236,11 +260,12 @@ def test_midrun_kill_resume_idempotent_sink_no_duplicates(spark, tmp_path):
     assert crashed
     assert len(DirQueue.read_all(out)) > published_clean  # epoch published pre-crash
 
-    run_pipeline(reader(), out, ckpt, drain_all=True, idempotent=True)
+    resumed = run_pipeline(reader(), out, ckpt, drain_all=True, idempotent=True)
     msgs = DirQueue.read_all(out)
     keys = [json.loads(m)["key"] for m in msgs]
     assert len(set(keys)) == n_changes
     assert len(msgs) == n_changes  # replay overwrote, not appended
+    return resumed
 
 
 def change_row(table: str, i: int) -> tuple:
@@ -308,6 +333,29 @@ def test_fused_publish_matches_two_pass(spark, tmp_path):
     assert sorted(published(plain)) == sorted(published(fanned)) == envelopes
 
 
+def queue_files(out_dir):
+    """{table: {queue file: that table's envelopes in file order}}"""
+    out: dict[str, dict[str, list[bytes]]] = {}
+    for dirpath, _, names in os.walk(out_dir):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as f:
+                for line in f.read().splitlines():
+                    out.setdefault(json.loads(line)["table"], {}).setdefault(
+                        os.path.relpath(path, out_dir), []).append(line)
+    return out
+
+
+def assert_per_key_order(files_by_table) -> None:
+    """Along every queue file, each key's `after.a` versions ascend."""
+    for files in files_by_table.values():
+        for lines in files.values():
+            by_key: dict[str, list[int]] = {}
+            for d in map(json.loads, lines):
+                by_key.setdefault(d["key"], []).append(d["value"]["after"]["a"])
+            assert all(v == sorted(v) for v in by_key.values())
+
+
 def test_driver_and_task_placements_publish_the_same(spark, tmp_path):
     """One decoded batch published from one input partition (the driver,
     feed order, partition 0) and from three (key shuffle, one task per
@@ -328,18 +376,6 @@ def test_driver_and_task_placements_publish_the_same(spark, tmp_path):
             in_feed_order.setdefault(t, []).append(
                 b'{"table":"%s","key":"%s","value":%s}' % (t.encode(), k, v))
 
-    def queue_files(out_dir):
-        """{table: {queue file: that table's envelopes in file order}}"""
-        out: dict[str, dict[str, list[bytes]]] = {}
-        for dirpath, _, names in os.walk(out_dir):
-            for name in names:
-                path = os.path.join(dirpath, name)
-                with open(path, "rb") as f:
-                    for line in f.read().splitlines():
-                        out.setdefault(json.loads(line)["table"], {}).setdefault(
-                            os.path.relpath(path, out_dir), []).append(line)
-        return out
-
     for fan_out in (False, True):
         runs = {}
         for partitions in (1, 3):
@@ -347,17 +383,60 @@ def test_driver_and_task_placements_publish_the_same(spark, tmp_path):
             assert run_batch(spark, rows, out, partitions=partitions, fan_out_tables=fan_out) == (
                 ["10.0,0", "95.0,0", "100.0,0", "9.0,0"], "9.0,0", 56)
             runs[partitions] = queue_files(out)
-            for files in runs[partitions].values():
-                for lines in files.values():
-                    by_key: dict[str, list[int]] = {}
-                    for d in map(json.loads, lines):
-                        by_key.setdefault(d["key"], []).append(d["value"]["after"]["a"])
-                    assert all(v == sorted(v) for v in by_key.values())
+            assert_per_key_order(runs[partitions])
         for t, expected in in_feed_order.items():
             assert sorted(sum(runs[3][t].values(), [])) == sorted(expected)
             name = os.path.join(t, "partition-00000.jsonl") if fan_out else "partition-00000.jsonl"
             assert runs[1][t] == {name: expected}
             assert not fan_out or all(f.startswith(t + os.sep) for f in runs[3][t])
+
+
+@pytest.mark.parametrize("fan_out", [False, True], ids=["one-queue", "fan-out"])
+def test_range_epoch_publishes_the_same_from_driver_and_tasks(spark, tmp_path, fan_out):
+    """One recorded feed read as 3 ranges, drained twice: under the default
+    result cap (the driver publishes the epoch in feed order as partition
+    0) and under a cap below twice its planned bytes (key shuffle, one
+    mapInArrow task per partition). A hot key has versions in every range.
+    Both drains give the same envelopes per table byte for byte, per-key
+    version order along every queue file, and the same marks and mirrored
+    cursor; the driver writes each table's envelopes in feed order."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
+
+    register(spark)
+    feed = str(tmp_path / "feed.jsonl")
+    # feed order, string max and numeric max of the marks all disagree
+    marks = {99: "10.0,0", 299: "9.0,0", 449: "100.0,0", 599: "50.0,0"}
+    in_feed_order: dict[str, list[bytes]] = {}
+    with open(feed, "w", encoding="utf-8") as f:
+        for i in range(600):
+            if i in marks:
+                f.write(json.dumps([None, None, json.dumps({"resolved": marks[i]})]) + "\n")
+                continue
+            t, k, v = ("orders" if i % 2 else "lineitem", f"[{0 if i % 3 == 0 else i % 41 + 1}]",
+                       json.dumps({"after": {"a": i}}))
+            f.write(json.dumps([t, k, v]) + "\n")
+            in_feed_order.setdefault(t, []).append(
+                b'{"table":"%s","key":"%s","value":%s}' % (t.encode(), k.encode(), v.encode()))
+    runs = {}
+    for side, cap in (("driver", None), ("tasks", TASK_CAP)):
+        out, store, seen = str(tmp_path / side), MemoryCursorStore(), []
+        old_cap = set_result_cap(spark, cap)
+        try:
+            stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
+                      .option("read_partitions", "3").load())
+            q = run_pipeline(stream, out, str(tmp_path / f"ckpt-{side}"), store,
+                             fan_out_tables=fan_out, drain_all=True,
+                             on_batch=lambda _b, _n, resolved: seen.extend(resolved))
+        finally:
+            set_result_cap(spark, old_cap)
+        assert (query_jobs(spark, q)[1] > 0) == (side == "tasks")
+        assert (seen, store.get()) == (["10.0,0", "9.0,0", "100.0,0", "50.0,0"], "50.0,0")
+        runs[side] = queue_files(out)
+        assert_per_key_order(runs[side])
+    for t, expected in in_feed_order.items():
+        assert sorted(sum(runs["tasks"][t].values(), [])) == sorted(expected)
+        name = os.path.join(t, "partition-00000.jsonl") if fan_out else "partition-00000.jsonl"
+        assert runs["driver"][t] == {name: expected}
 
 
 ALL_RESOLVED = [cursor_row({"resolved": f"{v}.0,0"}) for v in (10, 11, 9)]
@@ -467,32 +546,102 @@ def test_simple_reader_epoch_runs_one_job_without_shuffle(spark, tmp_path):
     assert sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
 
 
-def test_one_range_replay_epoch_is_not_collected_to_the_driver(spark, tmp_path):
-    """A partitioned-reader epoch read as one range (read_partitions=1,
-    epoch_rows=0) holds the whole feed, with no batch_limit to bound it: it
-    publishes from tasks, so only counts and marks reach the driver, and a
-    driver result cap below the feed's envelope bytes does not fail it."""
+def write_range_feed(feed: str, n: int, tables=("t",), pad: int = 0) -> None:
+    """`n` change rows over `tables` in turn, then one resolved mark."""
+    with open(feed, "w", encoding="utf-8") as f:
+        for i in range(n):
+            after = {"a": i, "pad": "x" * pad} if pad else {"a": i}
+            f.write(json.dumps([tables[i % len(tables)], f"[{i}]", json.dumps({"after": after})])
+                    + "\n")
+        f.write(json.dumps([None, None, json.dumps({"resolved": f"{n - 1}.0,0"})]) + "\n")
+
+
+def set_result_cap(spark, cap: str | None) -> str:
+    """Set spark.driver.maxResultSize (None leaves it alone); returns the
+    value it replaces, for the caller's finally to restore."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    old = conf.get("spark.driver.maxResultSize", "1g")
+    if cap is not None:
+        conf.set("spark.driver.maxResultSize", cap)
+    return old
+
+
+def query_jobs(spark, q) -> tuple[int, int]:
+    """(jobs, shuffle write bytes) of every epoch `q` ran, read from its job
+    group."""
+    sc = spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    store = sc._jsc.sc().statusStore()
+    stages = [s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds]
+    return len(jobs), sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages)
+
+
+def test_range_replay_epoch_under_the_cap_runs_one_job_without_shuffle(spark, tmp_path):
+    """A partitioned-reader epoch of 4 ranges whose planned bytes fit half
+    the driver's result cap is collected as Arrow and published from the
+    driver: one job under the query's job group, no shuffle bytes, and one
+    queue file per table."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
+
+    register(spark)
+    feed, out = str(tmp_path / "feed.jsonl"), str(tmp_path / "out")
+    write_range_feed(feed, 400, tables=("orders", "lineitem"))
+    stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
+              .option("read_partitions", "4").load())
+    store = MemoryCursorStore()
+    q = run_pipeline(stream, out, str(tmp_path / "ckpt"), store, fan_out_tables=True,
+                     drain_all=True)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [401]
+    assert query_jobs(spark, q) == (1, 0)
+    assert sorted(os.path.relpath(os.path.join(d, n), out) for d, _, names in os.walk(out)
+                  for n in names) == [os.path.join(t, "partition-00000.jsonl")
+                                      for t in ("lineitem", "orders")]
+    assert len(published(out)) == 400
+    assert store.get() == "399.0,0"
+
+
+@pytest.mark.parametrize("read_partitions", [1, 4], ids=["one-range", "four-ranges"])
+def test_one_range_replay_epoch_is_not_collected_to_the_driver(spark, tmp_path, read_partitions):
+    """A partitioned-reader epoch (epoch_rows=0) holds the whole feed: under
+    a driver result cap below twice its planned bytes it publishes from
+    tasks, so only counts and marks reach the driver and the cap does not
+    fail it, however many ranges it is read as."""
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
 
     register(spark)
     feed = str(tmp_path / "feed.jsonl")
-    with open(feed, "w", encoding="utf-8") as f:
-        for i in range(2000):
-            f.write(json.dumps(["t", f"[{i}]", json.dumps({"after": {"a": i, "pad": "x" * 100}})])
-                    + "\n")
-        f.write(json.dumps([None, None, json.dumps({"resolved": "1999.0,0"})]) + "\n")
-    conf = spark.sparkContext._jsc.sc().conf()
-    cap = conf.get("spark.driver.maxResultSize", "1g")
-    conf.set("spark.driver.maxResultSize", "64k")  # the envelopes total ~250 KB
+    write_range_feed(feed, 2000, pad=100)
+    cap = set_result_cap(spark, "64k")  # the envelopes total ~250 KB
     try:
         stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
-                  .option("read_partitions", "1").load())
+                  .option("read_partitions", str(read_partitions)).load())
         store = MemoryCursorStore()
         run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), store, drain_all=True)
     finally:
-        conf.set("spark.driver.maxResultSize", cap)
+        set_result_cap(spark, cap)
     assert len(published(str(tmp_path / "out"))) == 2000
     assert store.get() == "1999.0,0"
+
+
+def test_unlimited_result_cap_sends_a_range_epoch_to_tasks(spark, tmp_path):
+    """spark.driver.maxResultSize=0 lifts the cap, so no bound on the
+    collect is known: even a small range epoch takes the key shuffle and
+    publishes from tasks."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
+
+    register(spark)
+    feed = str(tmp_path / "feed.jsonl")
+    write_range_feed(feed, 200)
+    cap = set_result_cap(spark, "0")
+    try:
+        stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
+                  .option("read_partitions", "2").load())
+        q = run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), drain_all=True)
+    finally:
+        set_result_cap(spark, cap)
+    jobs, shuffled = query_jobs(spark, q)
+    assert jobs == 2 and shuffled > 0
+    assert len(published(str(tmp_path / "out"))) == 200
 
 
 def test_metrics_endpoint(tmp_path):
@@ -635,6 +784,21 @@ def test_dir_queue_empty_publish_writes_no_lines(tmp_path):
     q.close()
     assert os.listdir(out) == ["batch-00000004-partition-00000.jsonl"]
     assert DirQueue.read_all(out) == []
+
+
+def test_dir_queue_close_releases_its_file_when_fsync_fails(tmp_path, monkeypatch):
+    """A failed fsync (a full or failing disk) still fails the close, and
+    the file is closed anyway, so no descriptor outlives the attempt."""
+    q = DirQueue(str(tmp_path / "q"), partition_id=0)
+    q.publish_many([b"a"])
+
+    def failing_fsync(fd):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(os, "fsync", failing_fsync)
+    with pytest.raises(OSError, match="No space left"):
+        q.close()
+    assert q._f.closed
 
 
 def test_dir_queue_read_all_orders_by_batch_then_partition(tmp_path):

@@ -330,16 +330,16 @@ class FeedRangePartition(InputPartition):
     end_byte: int
 
 
-def planned_feed_bytes(df: DataFrame) -> int | None:
-    """The summed byte span of the `FeedRangePartition`s `df` scans (the
-    partitioned reader's epoch, planned before any row is read), or None
-    when its scan is not feed ranges. Follows the planned RDD's first
-    parents down to the scan and unpickles the Python input partitions it
-    finds there; plans only, starts no job."""
+def planned_feed_ranges(df: DataFrame) -> list[FeedRangePartition] | None:
+    """The `FeedRangePartition`s `df` scans (the partitioned reader's epoch,
+    planned before any row is read), or None when its scan is not feed
+    ranges. Follows the planned RDD's first parents down to the scan and
+    unpickles the Python input partitions it finds there; plans only,
+    starts no job."""
     rdd = df._jdf.queryExecution().toRdd()
     while rdd.dependencies().size():
         rdd = rdd.dependencies().apply(0).rdd()
-    spans = []
+    ranges = []
     for part in rdd.partitions():
         if part.getClass().getSimpleName() != "DataSourceRDDPartition":
             return None
@@ -349,8 +349,8 @@ def planned_feed_bytes(df: DataFrame) -> int | None:
                 bytes(ip.pickedPartition()))
             if not isinstance(p, FeedRangePartition):
                 return None
-            spans.append(p.end_byte - p.start_byte)
-    return sum(spans) if spans else None
+            ranges.append(p)
+    return ranges or None
 
 
 class ChangefeedPartitionedStreamReader(DataSourceStreamReader):

@@ -9,8 +9,8 @@ Reference lifecycle parity (SURVEY.md §3.1):
                                            resolved mark; one read per epoch
 - sequential confirmed publish          -> a dir-queue epoch that is one
   (main.rs:211-227)                        simple-reader partition, or feed
-                                           ranges whose planned bytes fit
-                                           half the driver's result cap:
+                                           ranges whose planned collect
+                                           fits the driver's result cap:
                                            the driver publishes it serially
                                            in feed order as partition 0;
                                            otherwise each task publishes its
@@ -42,7 +42,10 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crdb_changefeed_publisher_spark.sources.crdb_changefeed import planned_feed_bytes
+from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
+    FeedRangePartition,
+    planned_feed_ranges,
+)
 from crdb_changefeed_publisher_spark.streaming.cursors import CursorStore
 from crdb_changefeed_publisher_spark.streaming.metrics import MESSAGES_SENT
 from crdb_changefeed_publisher_spark.streaming.queues import MessageQueue, make_queue
@@ -92,6 +95,18 @@ def publish_arrow(
     return n, marks
 
 
+def collect_bound(ranges: list[FeedRangePartition]) -> int:
+    """Bytes that collecting a range epoch's publish input can reach, from
+    its plan: twice a feed line covers the row's table and key (in their
+    columns and in the envelope) and its value; 32 B a line covers the
+    envelope text, Arrow offsets, `_seq` and validity bits (at most 32.6 B
+    less the value's length, and a value is at least `{}`); 16 KiB a range
+    covers each task result's Arrow schema and metrics (about 3 KB
+    measured). docs/RESULTS.md "What a range epoch's collect weighs"."""
+    return sum(2 * (r.end_byte - r.start_byte) + 32 * (r.end_line - r.start_line) + (16 << 10)
+               for r in ranges)
+
+
 def publish_batch(
     batch: DataFrame,
     queue_kind: str = "dir",
@@ -106,11 +121,10 @@ def publish_batch(
 
     - a dir-queue epoch that is one partition but not a partitioned-reader
       range (every simple-reader epoch, at most `batch_limit` rows), or
-      ranges of any width whose planned bytes are at most half of
-      `spark.driver.maxResultSize` (the half covers the columns collected
-      beside the envelope): the driver collects it as Arrow in one job, with
-      no exchange or Python worker, and publishes it in feed order as
-      partition 0, like the reference's one connection; a publish error
+      ranges of any width whose `collect_bound` is at most
+      `spark.driver.maxResultSize`: the driver collects it as Arrow in one
+      job, with no exchange or Python worker, and publishes it in feed order
+      as partition 0, like the reference's one connection; a publish error
       fails the epoch, with no task retry;
     - otherwise (larger ranges, ranges under a cap of 0, which bounds
       nothing, other multi-partition input, or AMQP, whose per-message
@@ -138,8 +152,10 @@ def publish_batch(
     sequence deterministic across replays (Spark re-runs a failed batch
     under the same batch_id with the same content and partitioning). The
     placement reads the plan and the session's result cap: a replay under
-    a changed cap may place differently, which keeps at-least-once
-    delivery but not this layout.
+    a changed cap (or code) may place differently, which keeps
+    at-least-once delivery but not this layout, since it rewrites only its
+    own partition files; drain or clear an in-flight idempotent batch
+    before changing either.
 
     `table_col` switches on MULTI-TABLE FAN-OUT (a Spark upgrade over the
     reference's one-table/one-queue design, src/cli.yml:6-9): each table's
@@ -168,12 +184,12 @@ def publish_batch(
     selected = batch.select(*keys, F.col("envelope").cast("binary"), "_seq", "resolved")
 
     def fits_driver() -> bool:  # planning only: no job runs, and toArrow reuses the plan
-        feed_bytes = planned_feed_bytes(selected)
-        if feed_bytes is None:
+        ranges = planned_feed_ranges(selected)
+        if ranges is None:
             return selected._jdf.queryExecution().toRdd().getNumPartitions() == 1
         cap = selected.sparkSession.sparkContext._jsc.sc().conf().getSizeAsBytes(
             "spark.driver.maxResultSize", "1g")
-        return 0 < cap and 2 * feed_bytes <= cap
+        return 0 < cap and collect_bound(ranges) <= cap
 
     if queue_kind == "dir" and fits_driver():
         n, marks = publish_arrow(selected.toArrow().to_batches(), open_queue, 0, table_col)

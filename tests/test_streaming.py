@@ -117,8 +117,8 @@ def test_per_key_publish_order(spark, tmp_path):
         assert versions == sorted(versions), f"key {key} out of order: {versions}"
 
 
-# A driver result cap below twice the bytes of any epoch the crash tests
-# plan (~42 KB each), so their range epochs take the task path
+# A driver result cap below the collect bound of any epoch the crash tests
+# plan (~42 KB of feed each), so their range epochs take the task path
 TASK_CAP = "32k"
 
 
@@ -395,7 +395,7 @@ def test_driver_and_task_placements_publish_the_same(spark, tmp_path):
 def test_range_epoch_publishes_the_same_from_driver_and_tasks(spark, tmp_path, fan_out):
     """One recorded feed read as 3 ranges, drained twice: under the default
     result cap (the driver publishes the epoch in feed order as partition
-    0) and under a cap below twice its planned bytes (key shuffle, one
+    0) and under a cap below its collect bound (key shuffle, one
     mapInArrow task per partition). A hot key has versions in every range.
     Both drains give the same envelopes per table byte for byte, per-key
     version order along every queue file, and the same marks and mirrored
@@ -538,12 +538,7 @@ def test_simple_reader_epoch_runs_one_job_without_shuffle(spark, tmp_path):
     q = run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), drain_all=True)
     assert len(DirQueue.read_all(str(tmp_path / "out"))) == 27
     assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [30]
-    sc = spark.sparkContext
-    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert len(jobs) == 1
-    store = sc._jsc.sc().statusStore()
-    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
-    assert sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
+    assert query_jobs(spark, q) == (1, 0)
 
 
 def write_range_feed(feed: str, n: int, tables=("t",), pad: int = 0) -> None:
@@ -577,8 +572,8 @@ def query_jobs(spark, q) -> tuple[int, int]:
 
 
 def test_range_replay_epoch_under_the_cap_runs_one_job_without_shuffle(spark, tmp_path):
-    """A partitioned-reader epoch of 4 ranges whose planned bytes fit half
-    the driver's result cap is collected as Arrow and published from the
+    """A partitioned-reader epoch of 4 ranges whose collect bound fits the
+    driver's result cap is collected as Arrow and published from the
     driver: one job under the query's job group, no shuffle bytes, and one
     queue file per table."""
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
@@ -600,48 +595,74 @@ def test_range_replay_epoch_under_the_cap_runs_one_job_without_shuffle(spark, tm
     assert store.get() == "399.0,0"
 
 
-@pytest.mark.parametrize("read_partitions", [1, 4], ids=["one-range", "four-ranges"])
-def test_one_range_replay_epoch_is_not_collected_to_the_driver(spark, tmp_path, read_partitions):
+@pytest.mark.parametrize("read_partitions, cap", [(1, "64k"), (4, "64k"), (4, "0")],
+                         ids=["one-range", "four-ranges", "four-ranges-uncapped"])
+def test_one_range_replay_epoch_is_not_collected_to_the_driver(spark, tmp_path,
+                                                               read_partitions, cap):
     """A partitioned-reader epoch (epoch_rows=0) holds the whole feed: under
-    a driver result cap below twice its planned bytes it publishes from
-    tasks, so only counts and marks reach the driver and the cap does not
-    fail it, however many ranges it is read as."""
+    a driver result cap below its collect bound, or a cap of 0 (unlimited,
+    so no bound is known), it publishes from tasks through the key shuffle,
+    so only counts and marks reach the driver and the cap does not fail it,
+    however many ranges it is read as."""
     from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
 
     register(spark)
     feed = str(tmp_path / "feed.jsonl")
     write_range_feed(feed, 2000, pad=100)
-    cap = set_result_cap(spark, "64k")  # the envelopes total ~250 KB
+    old_cap = set_result_cap(spark, cap)  # the envelopes total ~250 KB
     try:
         stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
                   .option("read_partitions", str(read_partitions)).load())
         store = MemoryCursorStore()
-        run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), store, drain_all=True)
+        q = run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), store,
+                         drain_all=True)
     finally:
-        set_result_cap(spark, cap)
+        set_result_cap(spark, old_cap)
+    jobs, shuffled = query_jobs(spark, q)
+    assert jobs == 2 and shuffled > 0
     assert len(published(str(tmp_path / "out"))) == 2000
     assert store.get() == "1999.0,0"
 
 
-def test_unlimited_result_cap_sends_a_range_epoch_to_tasks(spark, tmp_path):
-    """spark.driver.maxResultSize=0 lifts the cap, so no bound on the
-    collect is known: even a small range epoch takes the key shuffle and
-    publishes from tasks."""
-    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import register
+@pytest.mark.parametrize("value, separators", [('{"after": null}', None), ("{}", (",", ":"))],
+                         ids=["deletes", "empty-compact"])
+def test_thin_row_range_epoch_places_by_its_collect_bound(spark, tmp_path, value, separators):
+    """Thin fan-out rows (short keys, delete-only or empty values, the
+    latter in compact feed lines, the tightest case for the bound) collect
+    to more than twice their feed bytes, so feed bytes alone do not bound
+    the collect. Under a cap just above twice the feed bytes the epoch
+    publishes from tasks instead of failing its collect on every replay;
+    under a cap of exactly its `collect_bound` it publishes from the driver,
+    and the collect fits."""
+    from crdb_changefeed_publisher_spark.sources.crdb_changefeed import (
+        ChangefeedPartitionedStreamReader,
+        register,
+    )
+    from crdb_changefeed_publisher_spark.streaming.pipeline import collect_bound
 
     register(spark)
     feed = str(tmp_path / "feed.jsonl")
-    write_range_feed(feed, 200)
-    cap = set_result_cap(spark, "0")
-    try:
-        stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
-                  .option("read_partitions", "2").load())
-        q = run_pipeline(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), drain_all=True)
-    finally:
-        set_result_cap(spark, cap)
-    jobs, shuffled = query_jobs(spark, q)
-    assert jobs == 2 and shuffled > 0
-    assert len(published(str(tmp_path / "out"))) == 200
+    with open(feed, "w", encoding="utf-8") as f:
+        for i in range(2000):
+            f.write(json.dumps(["ab"[i % 2], f"[{i}]", value], separators=separators) + "\n")
+        f.write(json.dumps([None, None, json.dumps({"resolved": "1999.0,0"})]) + "\n")
+    reader = ChangefeedPartitionedStreamReader({"replay": feed, "read_partitions": "4"})
+    reader.latestOffset()
+    bound = collect_bound(reader.partitions({"pos": 0}, {"pos": 2001}))
+    for side, cap in (("tasks", 2 * os.path.getsize(feed) + 1024), ("driver", bound)):
+        out, store = str(tmp_path / side), MemoryCursorStore()
+        old_cap = set_result_cap(spark, str(cap))
+        try:
+            stream = (spark.readStream.format("crdb_changefeed").option("replay", feed)
+                      .option("read_partitions", "4").load())
+            q = run_pipeline(stream, out, str(tmp_path / f"ckpt-{side}"), store,
+                             fan_out_tables=True, drain_all=True)
+        finally:
+            set_result_cap(spark, old_cap)
+        jobs, shuffled = query_jobs(spark, q)
+        assert (jobs, shuffled > 0) == ((2, True) if side == "tasks" else (1, False)), side
+        assert len(published(out)) == 2000, side
+        assert store.get() == "1999.0,0", side
 
 
 def test_metrics_endpoint(tmp_path):
